@@ -4,11 +4,17 @@ Every implemented operator from SURVEY.md §2 (plus the large-scale pipeline
 extensions) registers here as a named query over the TESTDATA tables, with —
 whenever SQL-expressible — an equivalent DuckDB oracle. ``__spark_entry__.py``
 re-exports the merged registry.
+
+Order: the SKOPE API spine (``skope_*`` and the W1-W4 window queries) comes
+first, then every other query in registration order. The external
+correctness gate replays the first 50 names, so the spine is always in it.
 """
 
 from __future__ import annotations
 
 from skope_api_spark.contract.registry import ORACLES, QUERIES
+
+SPINE_PREFIXES = ("skope_", "w1_", "w2_", "w3_", "w4_")
 
 
 def _load_all() -> None:
@@ -26,688 +32,15 @@ def _load_all() -> None:
     )
 
 
-# The driver's correctness gate checks the FIRST 50 registry entries in
-# insertion order, so the must-prove set — the SURVEY §2 analytical core
-# (skope datacube + window operators) plus the LLM-pipeline extensions
-# (text, dedup, similarity, asof) — is pinned to positions 0-49 here.
-# Everything after position 49 is the relational/battery surface that is
-# regression-covered by scripts/check_correctness.py (full-registry replay)
-# and pytest.
-_GATE_PRIORITY: tuple[str, ...] = (
-    # --- r17 window (50) --- (VERDICT r16 items 1/5; STALE-GREEN
-    # rotation under the post-closure policy, module-granular staleness
-    # at r17 HEAD — 223 stale after this round's optimization commits).
-    # Composition:
-    #   STANDING KEEPS (4): the policy canaries.
-    #   VERDICT r16 item-5 PINS (2): dedup_minhash_near_duplicates +
-    #     dedup_simhash_near_duplicates — the ≥2-band guard and
-    #     single-SQL signatures have had no driver-oracle exposure
-    #     since they landed (rotated out of the r16 sample).
-    #   R17-TOUCHED (7): every query whose implementation this round's
-    #     optimization commits changed (tfidf single-tf-evaluation, ER
-    #     observe-witness, exact_cosine_pairs pin, fold guards) plus
-    #     their family consumers.
-    #   R16 QUEUE HEADS (4): the three fills that ceded mid-r16 plus
-    #     q14 (queued since r16).
-    #   STALE-GREEN FILL (33): the most-stale greens by margin
-    #     (scripts/gate_staleness.py, module-granular — the same
-    #     measure tests/test_gate_policy.py enforces).
-    "mm_media_sniff_quarantine",
-    "text_unicode_normalize",
-    "ts_gap_fill_interpolate",
-    "skope_reference_raster_zonal",
-    "dedup_minhash_near_duplicates",
-    "dedup_simhash_near_duplicates",
-    "text_tfidf_top_terms",
-    "sim_exact_cosine_pairs",
-    "er_customer_record_clusters",
-    "dedup_duplicate_clusters",
-    "pipeline_clean_corpus_stats",
-    "pipeline_keep_best_rep",
-    "sim_recall_report",
-    "q19_disjunctive_predicates",
-    "q1_pricing_summary",
-    "q5_local_supplier_volume",
-    "q14_promo_revenue_share",
-    "dedup_remove_duplicate_spans",
-    "sample_pack_training_sequences",
-    "text_bm25_topk",
-    "sketch_kmv_distinct_suppliers",
-    "semi_join_customers_with_high_value_orders",
-    "rollup_order_totals",
-    "q6_forecast_revenue",
-    "setop_nation_keys",
-    "scalar_functions_sweep",
-    "approx_count_distinct_suppliers",
-    "sample_dsir_selection",
-    "moving_median_smoother",
-    "sessionize_native_session_window",
-    "pipeline_curation_manifest",
-    "asof_forward_click_to_purchase",
-    "layout_zorder_events",
-    "w2_trailing_moving_average",
-    "w4_reference_interval_zscore",
-    "stats_bootstrap_means_totalprice",
-    "ts_holt_forecast_daily_users",
-    "join_bloom_pruned_revenue",
-    "sim_embedding_covariance",
-    "text_linear_quality_score",
-    "sample_unimax_mixing",
-    "dq_benford_first_digit",
-    "stats_ks_price_by_segment",
-    "ts_mann_kendall_monthly_revenue",
-    "dedup_exact_documents",
-    "sample_stratified_by_lang",
-    "sample_cap_per_source",
-    "text_repetition_stats",
-    "text_unigram_logprob",
-    "sessionize_events",
-    # --- end r17 window (50) ---
-    # r16 window (VERDICT r15 items 1/4 — first STALE-GREEN rotation
-    # under the post-closure policy recorded below at the r15 block).
-    # Composition (the driver gates the first 50 names; later duplicate
-    # mentions in this tuple are inert — _reorder is first-occurrence-
-    # wins):
-    #   PINNED-until-green: cohort_ltv_curve_quarterly — the r15 red,
-    #     now converted to integer-exact (2a+n) DIV (2n) HALF_UP
-    #     rounding on both engines (relational.py; regression pin in
-    #     tests/test_ltv_rounding.py). Stays pinned until a driver
-    #     window records hash green, the rfm_customer_segments r8
-    #     discipline.
-    #   FIRST-EXPOSURE: sim_hard_negatives_bucketed — registry #263,
-    #     added after the r15 window was pinned; the only query with
-    #     zero driver exposure.
-    #   STANDING KEEPS: mm_media_sniff_quarantine (Arrow-binary
-    #     canary), text_unicode_normalize (mapInPandas text surface),
-    #     ts_gap_fill_interpolate (span-guard carrier),
-    #     skope_reference_raster_zonal (real-raster-bytes rep).
-    #   STALE-GREEN FILL (44): the most-stale greens by
-    #     `scripts/gate_staleness.py --precise` at r16 HEAD — queries
-    #     whose implementation (function span via git log -L, plus
-    #     imported operator modules at module granularity) changed
-    #     after their last driver-window green. Every r15-window query
-    #     not re-listed here recorded its green in CORRECTNESS_r15 and
-    #     cedes; every family keeps at least one gated rep below.
-    "cohort_ltv_curve_quarterly",
-    "sim_hard_negatives_bucketed",
-    "mm_media_sniff_quarantine",
-    "text_unicode_normalize",
-    "ts_gap_fill_interpolate",
-    "skope_reference_raster_zonal",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_simhash_signatures",
-    "sim_embedding_near_dup_16planes",
-    "sim_embedding_near_dup_multiprobe",
-    "sim_ivf_topk",
-    "sim_recall_report",
-    "sim_semantic_dedup",
-    "dedup_minhash_cross_corpus",
-    "text_bottomk_fingerprint",
-    "mm_binary_stats",
-    "text_chunk_documents",
-    "text_langid_token_profile",
-    "text_line_filter_c4",
-    "text_tfidf_top_terms",
-    "text_token_counts",
-    "sim_sq8_topk",
-    "regexp_battery",
-    "lag_lead_deltas",
-    "ranking_suite",
-    "running_cumulative_sum",
-    "value_window_suite",
-    "statistical_aggregates",
-    "anti_join_customers_without_orders",
-    "array_agg_battery",
-    "correlated_subquery_above_avg",
-    "cube_lineitem_flags",
-    "date_functions_sweep",
-    "distinct_agg_suppliers_per_brand",
-    "exists_late_shipment_priority",
-    "grouping_sets_order_matrix",
-    "having_large_order_customers",
-    "histogram_order_prices",
-    "json_scalars_events",
-    "left_join_order_counts",
-    "null_semantics_battery",
-    "order_count_distribution",
-    "pivot_orders_by_priority",
-    "q3_shipping_priority",
-    # (q14_promo_revenue_share ceded its slot to stats_gini — the one
-    # red of the full exact-precision sf1 sweep, converted below)
-    "stats_gini_order_revenue",
-    # r16 tie-audit conversions (integer-exact rounding landed this
-    # round; their pre-conversion greens are definitionally stale, so
-    # they take the tail fill slots — q6_forecast_revenue /
-    # quantile_stats_orders keep their r15 greens and rotate next).
-    # Mid-round extension: the FIRST sf1 tie audit + sf1 exact recheck
-    # converted four more (ts_seasonal full integer rewrite after the
-    # sf1 sum-order-straddle red; feature_loo / pagerank / spatial
-    # after sf1-only diverging repr-ties). All five gate this window;
-    # the three least-stale ordinary fills by gate_staleness --precise
-    # (q19_disjunctive_predicates, q1_pricing_summary,
-    # q5_local_supplier_volume — all r15-green, regression-covered by
-    # the full replay) cede their slots and rotate next:
-    "ts_seasonal_decompose_orders",
-    "text_readability_scores",
-    "feature_loo_target_encode",
-    "graph_pagerank_copurchase",
-    "spatial_nearest_site",
-    # --- end r16 window (50) --- (the three ceded fills head the r17
-    # rotation queue:)
-    "q19_disjunctive_predicates",
-    "q1_pricing_summary",
-    "q5_local_supplier_volume",
-    "q14_promo_revenue_share",
-    # r13 rotation (VERDICT r12 items 1/7/8, executing the recorded r13
-    # gate-order plan): twenty r12-driver-VERIFIED, family-redundant
-    # entries cede their slots to twenty first-timers — the two largest
-    # never-driver-checked blocks (all 8 stats_* inference/report
-    # surfaces, the 8 remaining text_*), the PQ/ADC architecture's only
-    # oracle surfaces (sim_pq_topk / sim_pq_rerank_topk), the
-    # never-checked token-budget mixer (which also becomes the sample
-    # family's gated rep), and the NEW skope_reference_raster_zonal —
-    # the reference's actual shipped raster bytes decoded on executors
-    # and zonal-aggregated, oracled by the analytic laws the raster
-    # parity suite pins to those bytes (VERDICT item 8 stretch).
-    # Per VERDICT item 7, mm_media_sniff_quarantine stays gated as the
-    # standing Arrow-binary canary (mm_geotiff_header_sniff cedes; the
-    # new raster query covers the geotiff ingest surface with REAL
-    # bytes). The two VALUE-class pins cede after their third recorded
-    # green (the r11 decision). text_unicode_normalize (the mapInPandas
-    # text surface) and ts_gap_fill_interpolate (the span-guard carrier)
-    # stay as the r12 block's reps. Every ceded query remains covered by
-    # the full check_correctness replay and its family keeps gated
-    # representatives (text: unicode_normalize/quality/bpe_train + 8 new;
-    # ts: gap_fill/theil_sen; mm: media_sniff_quarantine; sample:
-    # token_budget_mixing; skope: catalog/polygon/batched/raster;
-    # relational: q9/q15):
-    #   ts_value_percentiles_by_type     -> stats_welch_ttest_segment
-    #   ts_rolling_correlation_events    -> stats_ols_price_by_flag
-    #   text_redact_pii                  -> stats_contingency_type_hour
-    #   text_repetition_stats            -> stats_two_proportion_ab
-    #   text_char_entropy          -> stats_return_rate_wilson_by_flag_status
-    #   text_readability_scores    -> stats_hhi_supplier_concentration
-    #   text_zipf_slope            -> stats_discount_elasticity_by_brand
-    #   text_unigram_logprob             -> stats_langid_confusion_report
-    #   text_vocabulary_richness         -> text_decontaminate_probe_overlap
-    #   ts_mom_yoy_revenue_growth        -> text_boilerplate_ngrams
-    #   ts_rolling_distinct_users_24h    -> text_domain_profile
-    #   ts_dau_wau_mau_stickiness        -> text_bigram_logprob
-    #   ts_level_shift_monthly_revenue   -> text_bpe_encode_profile
-    #   ts_seasonal_anomaly_flags        -> text_keyness_llr
-    #   ts_cumulative_unique_users_daily -> text_ctfidf_top_terms_per_source
-    #   ts_hampel_filter_events          -> text_js_divergence_langs
-    #   mm_geotiff_header_sniff          -> sim_pq_topk
-    #   sample_hash_split                -> sim_pq_rerank_topk
-    #   skope_summary_stats              -> sample_token_budget_mixing
-    #   top_parts_by_revenue             -> skope_reference_raster_zonal
-    #
-    # GATE-ORDER PLAN, r14: after this window the never-driver-checked
-    # residue is ~44 queries; largest blocks sim_* (3 remaining:
-    # exact_cosine_pairs, ivf_kmeans_topk, hard_negatives), sample_*
-    # (3 remaining: weighted_by_tokens, temperature_mixing,
-    # ht_total_estimate — plus pack_documents_token_budget), graph_*
-    # (3: transition_matrix, degree_assortativity, adamic_adar_links),
-    # scalar batteries (bitwise, try_arithmetic, pipe-syntax,
-    # conditional_agg, grouping_sets, unpivot), merge/CDC one-offs
-    # (pit_join, cdc_apply, snapshot_diff, json_quarantine,
-    # interval_join, session_bounce_rate), and report-style one-offs
-    # (~18: pareto/sla/abc/mix-shift/cohort-ltv/share-of-region/...).
-    # Next rotation: cede the 16+ r13 stats_*/text_* greens (keep one
-    # stats rep, one new-text rep) to a sim_*/sample_*/graph_*/report
-    # first-timer block of ~18.
-    #
-    # r14 rotation (VERDICT r13 items 1/2, executing the recorded r14
-    # gate-order plan below — pre-cleared under a plain SparkSession at
-    # r13 close-out, PERF.md): the 19 r13 first-timers cede once green
-    # (every family keeps gated reps: stats -> auc_by_source; text ->
-    # unicode_normalize/bpe_train/quality_stats; sim -> cosine/lsh/
-    # decontaminate/near_dup_bucketed; sample -> the three NEW sample_*
-    # first-timers below), skope_reference_raster_zonal stays one extra
-    # window as the real-raster Arrow canary, and
-    # ts_theil_sen_monthly_revenue (driver-green since r7; the ts
-    # family gains gap_fill plus four first-timers this window) frees
-    # the twentieth slot:
-    #   stats_welch_ttest_segment        -> q13_customer_order_distribution
-    #   stats_ols_price_by_flag          -> dedup_containment_pairs
-    #   stats_contingency_type_hour      -> graph_adamic_adar_links
-    #   stats_two_proportion_ab          -> graph_degree_assortativity
-    #   stats_return_rate_wilson_by_flag_status -> graph_transition_matrix
-    #   stats_hhi_supplier_concentration -> dq_duplicate_payment_candidates
-    #   stats_discount_elasticity_by_brand -> dq_k_anonymity_customers
-    #   stats_langid_confusion_report    -> dq_single_source_risk_parts
-    #   text_decontaminate_probe_overlap -> sample_ht_total_estimate
-    #   text_boilerplate_ngrams          -> sample_temperature_mixing
-    #   text_domain_profile              -> sample_weighted_by_tokens
-    #   text_bigram_logprob              -> ts_daily_value_bands
-    #   text_bpe_encode_profile          -> ts_load_profile_dow_hour
-    #   text_keyness_llr                 -> ts_new_vs_returning_revenue
-    #   text_ctfidf_top_terms_per_source -> ts_seasonal_naive_backtest
-    #   text_js_divergence_langs         -> scalar_bitwise_battery
-    #   sim_pq_topk                      -> scalar_try_arithmetic_battery
-    #   sim_pq_rerank_topk               -> cdc_apply_customers
-    #   sample_token_budget_mixing       -> pit_join_orders_customers
-    #   ts_theil_sen_monthly_revenue     -> interval_join_click_purchase
-    # r15 rotation (VERDICT r14 item 1, executing the recorded r15
-    # gate-order plan below): the EXACT 27-query never-driver-checked
-    # residue rotates in, reaching 262/262 cumulative driver exposure.
-    # Ceded: the 20 r14 first-timers (all driver-green in
-    # CORRECTNESS_r14), skope_reference_raster_zonal (second green
-    # recorded r14), and six multi-green family redundants
-    # (sketch_kmv_overlap_langs, feature_rank_normalize_price,
-    # session_top_paths, skew_hot_key_report,
-    # range_join_overlapping_sessions, spatial_join_points_polygons).
-    # Every family keeps a gated anchor: graph/dq/sample/ts/scalar/
-    # cdc-pit-interval reps remain via the full check_correctness
-    # replay plus the standing canaries (mm_media_sniff_quarantine —
-    # Arrow-binary; skope_catalog/polygon/batched — datacube spine;
-    # dedup_minhash/simhash, sim_cosine/lsh — scale flagships).
-    # All 27 were pre-cleared under a plain SparkSession at r14
-    # close-out AND judge-replayed 27/27 green (VERDICT r14).
-    "abc_inventory_classification",
-    "cohort_ltv_curve_quarterly",
-    "conditional_agg_battery",
-    "customer_revenue_concentration",
-    "dedup_duplicate_spans",
-    "dedup_jaccard_prefix_join",
-    "grouping_sets_order_mix",
-    "json_quarantine_ingest",
-    "mix_shift_price_bands_yearly",
-    "net_ip_block_enrichment",
-    "pack_documents_token_budget",
-    "pareto_revenue_concentration",
-    "pipeline_keep_best_rep",
-    "rec_item_item_neighbors",
-    "rfm_repeat_purchase_latency",
-    "session_bounce_rate",
-    "share_of_region_revenue",
-    "sim_exact_cosine_pairs",
-    "sim_hard_negatives",
-    "sim_ivf_kmeans_topk",
-    "sla_shipping_lead_time_report",
-    "snapshot_diff_customers",
-    "spatial_nearest_site",
-    "sql_pipe_syntax_priority_rollup",
-    "top_movers_monthly_priority",
-    "topn_parts_per_brand",
-    "unpivot_priority_price_stats",
-    # r10 rotation (VERDICT r9 item 1): fourteen r9-driver-VERIFIED,
-    # family-redundant entries cede their slots to the judge's
-    # risk-triaged never-driver-checked list — led by the two remaining
-    # VALUE-class double-hash surfaces (ts_value_percentiles_by_type,
-    # ts_rolling_correlation_events), then sketch/stats/feature/battery
-    # first-timers. Every ceded query remains covered by the full
-    # check_correctness replay and its family keeps gated
-    # representatives (dq_psi_order_totals_by_segment is NOT ceded — it
-    # is the dq family's only gated rep; hist_equi_depth_price cedes
-    # because its family sibling hist_equi_width_price rotates in):
-    #   sketch_gk_quantiles_price        -> ts_value_percentiles_by_type
-    #   quantile_approx_accuracy         -> ts_rolling_correlation_events
-    #   stats_moments_battery            -> sketch_cms_token_counts
-    #   sql_recursive_reachability       -> sketch_kmv_overlap_langs
-    #   json_variant_battery             -> stats_weighted_quantiles_price_by_qty
-    #   string_collation_battery         -> stats_calibration_chars_vs_lang
-    #   pipeline_curation_manifest       -> feature_rank_normalize_price
-    #   ts_seasonal_decompose_orders     -> hist_equi_width_price
-    #   spatial_grid_density_clusters    -> stats_gini_order_revenue
-    #   stats_kaplan_meier_user_lifetime -> ts_autocorrelation_daily_revenue
-    #   feature_winsorize_price          -> hof_array_sweep
-    #   feature_robust_scale_price       -> map_functions_battery
-    #   stats_robust_price_summary       -> date_interval_edges_battery
-    #   hist_equi_depth_price            -> sql_udf_margin_classifier
-    #
-    # r11 rotation (VERDICT r10 items 1-2, executing the recorded r11
-    # gate-order plan): eighteen r10-driver-VERIFIED, family-redundant
-    # entries cede their slots to (a) the full never-driver-checked
-    # TPC-H q-shape suite — q2/q4/q7/q8/q10/q11/q12/q16/q17/q18/q20/q22
-    # (q6/q14 already driver-checked in prior rounds) — the queries a
-    # reference user hits first, and (b) three dq_* and three sample_*
-    # first-timers so both families get real gate exposure beyond their
-    # single anchors. Per VERDICT item 6, ts_value_percentiles_by_type
-    # and ts_rolling_correlation_events stay PINNED one more window
-    # (highest-entropy VALUE-class hash surfaces, first exposure r10);
-    # dq_psi_order_totals_by_segment stays as the dq anchor. Every
-    # ceded query remains covered by the full check_correctness replay
-    # and its family keeps gated representatives (stats: auc_by_source;
-    # sketch: kmv; ts: percentiles/rolling_corr/theil_sen; dedup:
-    # exact/minhash/simhash; sim: cosine/lsh/decontaminate/bucketed;
-    # text: quality_stats/bpe_train; sample: 3 new first-timers):
-    #   sketch_cms_token_counts          -> q2_min_cost_supplier
-    #   stats_weighted_quantiles_price_by_qty -> q4_order_priority_check
-    #   stats_calibration_chars_vs_lang  -> q7_nation_volume_shipping
-    #   hist_equi_width_price            -> q8_market_share
-    #   stats_gini_order_revenue         -> q10_returned_item_customers
-    #   ts_autocorrelation_daily_revenue -> q11_important_part_value
-    #   hof_array_sweep                  -> q12_priority_line_counts
-    #   map_functions_battery            -> q16_supplier_diversity
-    #   date_interval_edges_battery      -> q17_small_quantity_revenue
-    #   sql_udf_margin_classifier        -> q18_large_volume_customers
-    #   graph_triangle_top_nodes         -> q20_part_supplier_shortlist
-    #   rfm_customer_segments            -> q22_dormant_rich_customers
-    #   text_linear_quality_score        -> dq_constraint_report_orders
-    #   funnel_time_to_convert_quantiles -> dq_column_profile_orders
-    #   stats_auc_chars_vs_lang          -> dq_sequence_gaps_orderkeys
-    #   sample_unimax_mixing             -> sample_stratified_by_lang
-    #   sim_embedding_covariance         -> sample_hash_split
-    #   dedup_duplicate_clusters         -> sample_cap_per_source
-    #
-    # r12 rotation (VERDICT r11 items 1-2, executing the recorded r12
-    # gate-order plan): twenty r11-driver-VERIFIED, family-redundant
-    # entries cede their slots to the two largest never-driver-checked
-    # blocks — (a) eight text_* first-timers (led by the judge-named
-    # text_redact_pii / text_repetition_stats / text_unicode_normalize —
-    # the mapInPandas one — text_char_entropy / text_readability_scores),
-    # (b) eight ts_* report first-timers (led by ts_gap_fill_interpolate,
-    # which carries the r11 span guard, ts_mom_yoy_revenue_growth,
-    # ts_rolling_distinct_users_24h, ts_dau_wau_mau_stickiness), plus
-    # (c) both mm_* sniff queries — the registry's only
-    # Arrow-mapInPandas-over-binary surfaces (VERDICT item 2) — and two
-    # family swaps that gate a first-timer while keeping the family
-    # represented (sessionize_events -> session_top_paths,
-    # skew_salted_event_rollup -> skew_hot_key_report). All 12 q-shapes
-    # cede (exact-decimal, low re-check value once green; q9/q15 stay as
-    # the gated q-shape reps). Per VERDICT item 6, the two VALUE-class
-    # pins ts_value_percentiles_by_type / ts_rolling_correlation_events
-    # stay PINNED one final (third) window; after a third green they can
-    # safely cede in r13. Every ceded query remains covered by the full
-    # check_correctness replay and its family keeps gated
-    # representatives (dq: psi anchor; sample: hash_split; dedup:
-    # minhash/simhash; session: top_paths; skew: hot_key_report):
-    #   q2_min_cost_supplier        -> text_redact_pii
-    #   q4_order_priority_check     -> text_repetition_stats
-    #   q7_nation_volume_shipping   -> text_unicode_normalize
-    #   q8_market_share             -> text_char_entropy
-    #   q10_returned_item_customers -> text_readability_scores
-    #   q11_important_part_value    -> text_zipf_slope
-    #   q12_priority_line_counts    -> text_unigram_logprob
-    #   q16_supplier_diversity      -> text_vocabulary_richness
-    #   q17_small_quantity_revenue  -> ts_gap_fill_interpolate
-    #   q18_large_volume_customers  -> ts_mom_yoy_revenue_growth
-    #   q20_part_supplier_shortlist -> ts_rolling_distinct_users_24h
-    #   q22_dormant_rich_customers  -> ts_dau_wau_mau_stickiness
-    #   dq_constraint_report_orders -> ts_level_shift_monthly_revenue
-    #   dq_column_profile_orders    -> ts_seasonal_anomaly_flags
-    #   dq_sequence_gaps_orderkeys  -> ts_cumulative_unique_users_daily
-    #   sample_stratified_by_lang   -> ts_hampel_filter_events
-    #   sample_cap_per_source       -> mm_media_sniff_quarantine
-    #   dedup_exact_documents       -> mm_geotiff_header_sniff
-    #   sessionize_events           -> session_top_paths
-    #   skew_salted_event_rollup    -> skew_hot_key_report
-    #
-    # GATE-ORDER PLAN, r13: after this window the never-driver-checked
-    # residue is ~64 queries, largest blocks stats_* (8), sim_* (5),
-    # text_* (8 remaining: decontaminate_probe/boilerplate/domain_profile/
-    # bigram/bpe_encode/keyness/ctfidf/js_divergence), sample_* (4,
-    # incl. the never-checked token-budget/temperature mixers), graph_*
-    # (3), report-style one-offs (~20). Next rotation: cede the 16 r12
-    # text_*/ts_* greens (keep one text + one ts rep each) plus the two
-    # VALUE-class pins (third green recorded) to a stats_*/sim_*/
-    # sample_*/report first-timer block.
-    #
-    # GATE-ORDER PLAN, r14 (recorded at r13 HEAD): after the r13 window
-    # the never-driver-checked residue is 47 (45 pre-r13 + the two
-    # queries ADDED in r13: q13_customer_order_distribution and
-    # dedup_containment_pairs). Next rotation: cede the 20 r13
-    # first-timers once green (keep skope_reference_raster_zonal one
-    # extra window as the real-raster Arrow canary alongside the
-    # standing mm_* canary), and rotate in a 20-block:
-    #   q13_customer_order_distribution, dedup_containment_pairs (the
-    #     r13 additions — first exposure),
-    #   graph_adamic_adar_links, graph_degree_assortativity,
-    #     graph_transition_matrix (the whole remaining graph block),
-    #   dq_duplicate_payment_candidates, dq_k_anonymity_customers,
-    #     dq_single_source_risk_parts (remaining dq block),
-    #   sample_ht_total_estimate, sample_temperature_mixing,
-    #     sample_weighted_by_tokens (remaining sample block),
-    #   ts_daily_value_bands, ts_load_profile_dow_hour,
-    #     ts_new_vs_returning_revenue, ts_seasonal_naive_backtest
-    #     (remaining ts block),
-    #   scalar_bitwise_battery, scalar_try_arithmetic_battery,
-    #   cdc_apply_customers, pit_join_orders_customers,
-    #     interval_join_click_purchase (temporal-join one-offs).
-    # Leaves ~27 report-style one-offs + dedup/sim family siblings for
-    # r15; cumulative driver-checked target after r14: >=233/262.
-    # [EXECUTED in r14 — see the r14 rotation block at the top of this
-    # tuple for the cede mapping actually applied.]
-    #
-    # GATE-ORDER PLAN, r15 (recorded at r14 HEAD; VERDICT r13 item 2):
-    # after the r14 window the never-driver-checked residue is EXACTLY
-    # these 27 (derived from CORRECTNESS_r01–r13 green rows plus the 20
-    # r14 first-timers, against the 262-name registry):
-    #   abc_inventory_classification, cohort_ltv_curve_quarterly,
-    #   conditional_agg_battery, customer_revenue_concentration,
-    #   dedup_duplicate_spans, dedup_jaccard_prefix_join,
-    #   grouping_sets_order_mix, json_quarantine_ingest,
-    #   mix_shift_price_bands_yearly, net_ip_block_enrichment,
-    #   pack_documents_token_budget, pareto_revenue_concentration,
-    #   pipeline_keep_best_rep, rec_item_item_neighbors,
-    #   rfm_repeat_purchase_latency, session_bounce_rate,
-    #   share_of_region_revenue, sim_exact_cosine_pairs,
-    #   sim_hard_negatives, sim_ivf_kmeans_topk,
-    #   sla_shipping_lead_time_report, snapshot_diff_customers,
-    #   spatial_nearest_site, sql_pipe_syntax_priority_rollup,
-    #   top_movers_monthly_priority, topn_parts_per_brand,
-    #   unpivot_priority_price_stats
-    # Next rotation: cede the 20 r14 first-timers once green PLUS
-    # skope_reference_raster_zonal (second green recorded) and six more
-    # multi-green family redundants (sketch_kmv_overlap_langs,
-    # feature_rank_normalize_price, session_top_paths,
-    # skew_hot_key_report, range_join_overlapping_sessions,
-    # spatial_join_points_polygons — every family keeps an anchor), and
-    # rotate in ALL 27 — reaching 262/262 cumulative driver exposure.
-    # [EXECUTED in r15 — see the r15 rotation block at the top of this
-    # tuple. sketch_kmv_overlap_langs, feature_rank_normalize_price,
-    # session_top_paths, skew_hot_key_report ceded from this block;
-    # text_unicode_normalize / ts_gap_fill_interpolate /
-    # mm_media_sniff_quarantine stay as standing reps/canaries.]
-    #
-    # GATE-ORDER POLICY, post-closure (recorded at r15 HEAD; VERDICT
-    # r14 item 2): once CORRECTNESS_r15 lands green, every registry
-    # query has at least one driver-window green (262/262 cumulative).
-    # From r16 onward the window cycles STALE greens — queries whose
-    # last gate exposure predates the most recent git change to the
-    # files implementing them (derive: git log --since=<last-green
-    # round's date> over skope_api_spark/**, map changed files to
-    # queries via contract module imports, rotate in any green-but-
-    # stale query; `scripts/gate_staleness.py` computes the list).
-    # Standing keeps: mm_media_sniff_quarantine (Arrow-binary canary),
-    # one skope_* real-raster query, the VALUE-class double-hash pins,
-    # and one rep per family. First stale-green rotation list for r16
-    # (computed at r15 HEAD — queries whose implementation files
-    # changed in r14/r15 after their last gate green):
-    #   sim_recall_report (similarity.py hardneg rows r14/r15),
-    #   mm_audio_wav_stats (wav.py cap reorder r15),
-    #   text_redact_pii (text.py PII boundary r14),
-    #   text_c4_line_filter (line cutter r14),
-    #   dedup_remove_duplicate_spans family rep if spans code moves,
-    #   sim_hard_negatives_bucketed (NEW r15 — first exposure),
-    #   plus any query whose module is touched between now and the r16
-    #   window; remainder of the 50 stays as the r15 block until each
-    #   records a green, then cedes by the same staleness rule.
-    "text_unicode_normalize",
-    "ts_gap_fill_interpolate",
-    "mm_media_sniff_quarantine",
-    # r09 rotation (VERDICT r8 item 4): fourteen r8-driver-VERIFIED,
-    # family-redundant entries cede their slots to (a) the ten
-    # never-driver-checked, engine-version-sensitive surfaces the judge
-    # named, and (b) the four queries whose quantile boundaries were
-    # converted to integer-exact form this round and need driver
-    # evidence of the change (hist_equi_depth_price, also converted,
-    # was already gated). rfm_customer_segments stays PINNED until its
-    # r8 hash red is driver-green. Every ceded query remains covered by
-    # the full check_correctness replay and its family keeps gated
-    # representatives:
-    #   skope_point_extraction      -> sketch_gk_quantiles_price
-    #   stats_ks_price_by_segment   -> quantile_approx_accuracy
-    #   graph_khop_distances        -> stats_moments_battery
-    #   skope_bbox_zonal_area       -> sql_recursive_reachability
-    #   basket_association_rules    -> json_variant_battery
-    #   hh_misra_gries_report       -> string_collation_battery
-    #   w1_centered_moving_average  -> pipeline_curation_manifest
-    #   cohort_retention_events     -> ts_seasonal_decompose_orders
-    #   dq_benford_first_digit      -> spatial_grid_density_clusters
-    #   q21_waiting_supplier        -> stats_kaplan_meier_user_lifetime
-    #   scd2_merge_customers        -> dq_psi_order_totals_by_segment
-    #   ts_mann_kendall_monthly_revenue -> feature_winsorize_price
-    #   sample_dsir_selection       -> feature_robust_scale_price
-    #   feature_loo_target_encode   -> stats_robust_price_summary
-    "dq_psi_order_totals_by_segment",
-    # r08 rotation (VERDICT r7 item 3): eleven r7-driver-VERIFIED,
-    # family-redundant entries cede their slots to never-driver-checked
-    # flagships — the five the judge named plus six cross-family report/
-    # pipeline queries and top_parts_by_revenue (which carries this
-    # round's BIGINT money-ticks change and should get driver evidence).
-    # sim_embedding_covariance stays PINNED until its r7 hash red is
-    # driver-green; q9/q15 stay because their money sums changed this
-    # round. Every ceded query remains covered by the full
-    # check_correctness replay and its family keeps gated
-    # representatives:
-    #   skope_zonal_mean              -> stats_ks_price_by_segment
-    #   dedup_remove_duplicate_spans  -> basket_association_rules
-    #   sample_pack_training_sequences-> hh_misra_gries_report
-    #   text_bm25_topk                -> graph_triangle_top_nodes
-    #   graph_pagerank_copurchase     -> rfm_customer_segments
-    #   sim_sq8_topk                  -> hist_equi_depth_price
-    #   fuzzy_join_part_terms         -> funnel_conversion_events
-    #   w4_fixed_interval_zscore      -> dq_benford_first_digit
-    #   ts_holt_forecast_daily_users  -> cohort_retention_events
-    #   stats_bootstrap_means_totalprice -> feature_loo_target_encode
-    #   sql_recursive_reachability    -> top_parts_by_revenue
-    # r07 session-4c rotation: tfidf cedes to the sliced-AUC flagship
-    # (text keeps quality/bm25/linear/bpe/keyness gated; tfidf stays in
-    # the full replay) — stats_auc_by_source carries the session's
-    # prefix-sum determinism fix as driver-side evidence:
-    #   text_tfidf_top_terms -> stats_auc_by_source
-    # r07 session-4b rotation: two r06-driver-VERIFIED entries whose
-    # families keep deep gated coverage cede to the session's two
-    # strongest cross-family flagships (full replay still covers both):
-    #   sim_recall_report -> er_customer_record_clusters
-    #   mm_binary_stats   -> sql_recursive_reachability
-    # r07 session-4 rotation: five r06-driver-VERIFIED family redundants
-    # cede their slots to this session's new flagships; every ceded query
-    # stays covered by the full check_correctness replay and each family
-    # keeps gated representatives (similarity: cosine/lsh/bucketed/recall/
-    # sq8; text: quality/tfidf/bm25/linear/bpe; skope service: batched;
-    # joins: q9/q15/q21/spatial):
-    #   sim_ivf_topk              -> sim_embedding_decontaminate
-    #   skope_multi_series_fanout -> ts_mann_kendall_monthly_revenue
-    #   layout_zorder_events      -> sample_unimax_mixing
-    #   text_line_filter_c4       -> sample_dsir_selection
-    #   join_bloom_pruned_revenue -> ts_theil_sen_monthly_revenue
-    # SKOPE datacube core (S/P/J/A/W rows of SURVEY §2)
-    # r07 session-3 rotation: four r06-driver-VERIFIED, family-redundant
-    # entries cede their slots to this session's new flagships, so the
-    # round's driver gate verifies four first-timers while every family
-    # keeps a gated representative (zonal: mean/summary/polygon; windows:
-    # w1/w3/w4; similarity: cosine/lsh/ivf/bucketed/recall; text:
-    # quality/tfidf/chunk/c4/bm25/linear). Ceded queries stay covered by
-    # the full check_correctness replay:
-    #   skope_zonal_median_monthly  -> graph_khop_distances
-    #   w2_trailing_moving_average  -> ts_holt_forecast_daily_users
-    #   sim_semantic_dedup          -> sim_embedding_covariance
-    #   text_langid_token_profile   -> stats_bootstrap_means_totalprice
-    # r07 gate rotation (VERDICT r06 item 6): five redundant skope_*/w4
-    # variants and two same-family asof/sim slots cede their positions to
-    # never-driver-checked registry entries. Every ceded query stays
-    # regression-covered by the full check_correctness replay, and each
-    # family keeps at least one driver-gated representative:
-    #   skope_monthly_to_annual_resample -> dedup_remove_duplicate_spans
-    #   skope_area_weighted_mean         -> sample_pack_training_sequences
-    #   skope_point_with_uncertainty     -> text_linear_quality_score
-    #   skope_nan_poisoning_smoothers    -> scd2_merge_customers
-    #   w4_reference_interval_zscore     -> q21_waiting_supplier
-    #   sim_embedding_near_dup_16planes  -> q9_product_type_profit (r07)
-    #   asof_forward_click_to_purchase   -> q15_top_supplier (r07)
-    # r07 session-2 rotation: the round's new flagships take the slots of
-    # four skope_* window variants whose semantics stay driver-gated via
-    # their w1-w4 core twins, and of the multiprobe near-dup variant whose
-    # bucketed sibling stays gated. All ceded queries remain covered by the
-    # full check_correctness replay:
-    #   skope_trailing_ma                -> text_bm25_topk
-    #   skope_centered_ma                -> graph_pagerank_copurchase
-    #   skope_rolling_zscore             -> sim_sq8_topk
-    #   skope_fixed_zscore               -> fuzzy_join_part_terms
-    #   sim_embedding_near_dup_multiprobe -> mv_incremental_rollup
-    # r09 late rotation: funnel_conversion_events (r8-driver-verified)
-    # cedes to its family sibling funnel_time_to_convert_quantiles,
-    # which carries this round's LAST quantile-boundary conversion
-    # (integer-ms brackets, minutes ×1e4 by BIGINT div) and has never
-    # been driver-checked — same pattern as top_parts_by_revenue in r8:
-    #   funnel_conversion_events -> funnel_time_to_convert_quantiles
-    "skope_catalog_metadata_join",
-    "skope_polygon_zonal_stats",
-    "skope_batched_multi_query",
-    # W1-W4 window core + window extensions
-    "w3_rolling_zscore",
-    # r06: moving_median_smoother (extension smoother, not reference core)
-    # cedes its slot to the bucketed range join; full replay still covers
-    # it. r15: range_join_overlapping_sessions (multi-green) cedes to the
-    # residue block above; the range-join family keeps
-    # interval_join_click_purchase driver history (r14 green) and the
-    # full-replay coverage.
-    # r04: four window-battery slots (value_window_suite, ranking_suite,
-    # lag_lead_deltas, running_cumulative_sum) ceded to the round's
-    # flagship pipeline operators; the battery stays regression-covered
-    # by the full check_correctness replay
-    # r07 session-3b rotation: two more r06-driver-verified family
-    # redundants cede to the session's hardest new flagships (both
-    # families keep >=4 gated representatives):
-    #   dedup_minhash_cross_corpus -> text_bpe_train_merges
-    #   text_chunk_documents       -> stats_auc_chars_vs_lang
-    "text_bpe_train_merges",
-    # r06: sessionize_native_session_window's and text_bottomk_fingerprint's
-    # slots ceded to the round's flagships (C4 line filter, bloom-pruned
-    # join); both stay regression-covered by the full check_correctness
-    # replay. r12: sessionize_events itself (9× driver-green) cedes to
-    # family sibling session_top_paths (first-timer, gated above).
-    # text / multimodal battery (r07 session 2: text_token_counts cedes
-    # its slot to the grid spatial join — the geo-domain scale flagship;
-    # token counting stays regression-covered by the full replay)
-    "text_quality_stats",
-    # r15: spatial_join_points_polygons (multi-green) cedes to the
-    # residue block above; spatial family keeps spatial_nearest_site
-    # (gated above, first exposure) and the full-replay coverage.
-    "stats_auc_by_source",
-    # r14: ts_theil_sen_monthly_revenue (driver-green since r7) ceded
-    # its slot to interval_join_click_purchase, gated above; the ts
-    # family keeps ts_gap_fill_interpolate plus four r14 first-timers
-    # dedup scale paths (r12: dedup_exact_documents, 10× driver-green,
-    # cedes to mm_geotiff_header_sniff; minhash/simhash stay gated)
-    "dedup_minhash_near_duplicates",
-    "dedup_simhash_near_duplicates",
-    "pipeline_clean_corpus_stats",
-    # similarity / ANN
-    "sim_cosine_topk",
-    "sim_lsh_bucket_topk",
-    "sim_embedding_decontaminate",
-    "sim_embedding_near_dup_bucketed",
-    "q9_product_type_profit",
-    "mv_incremental_rollup",
-    "er_customer_record_clusters",
-    # as-of joins, skew (KMV's slot went to multiprobe in r03; the HLL
-    # sketch's slot goes to the recall contract in r04 — both sketches stay
-    # regression-covered by the full check_correctness replay)
-    # r12: skew_salted_event_rollup (10× driver-green) cedes to family
-    # sibling skew_hot_key_report (first-timer, gated above)
-    "asof_join_purchase_to_click",
-    "q15_top_supplier",
-)
-
-
-def _reorder() -> None:
-    missing = [n for n in _GATE_PRIORITY if n not in QUERIES]
-    if missing:
-        raise RuntimeError(f"gate-priority queries not registered: {missing}")
-    order = list(_GATE_PRIORITY) + [
-        n for n in QUERIES if n not in set(_GATE_PRIORITY)
-    ]
-    snapshot = dict(QUERIES)
+def _spine_first() -> None:
+    registered = dict(QUERIES)
     QUERIES.clear()
-    for name in order:
-        QUERIES[name] = snapshot[name]
+    # sorted() is stable: the spine moves to the front, all else keeps its order
+    for name in sorted(registered, key=lambda n: not n.startswith(SPINE_PREFIXES)):
+        QUERIES[name] = registered[name]
 
 
 _load_all()
-_reorder()
+_spine_first()
 
 __all__ = ["QUERIES", "ORACLES"]

@@ -12,6 +12,7 @@ driver's correctness gate.
 from __future__ import annotations
 
 import math
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -761,8 +762,11 @@ def skope_multi_series_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("series_name", "band")
 
 
-# --- REAL reference-raster ingest through the driver gate (r13) --------------
-_REF_DATA = "/root/reference/timeseries/data"
+# --- dev-raster ingest through the correctness gate --------------------------
+# The five dev rasters, written from the FIXTURES.md §1 laws by
+# ``sources.geotiff.write_baseline_tiff``; the laws equal the reference's
+# shipped raster bytes cell for cell.
+_REF_DATA = str(Path(__file__).resolve().parent.parent / "data")
 _REF_RASTER_PAIRS = [
     (ANNUAL, F32, "year"),
     (ANNUAL, "uint16_variable", "year"),
@@ -811,15 +815,15 @@ ORDER BY dataset_id, variable_id, band
 """,
 )
 def skope_reference_raster_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1 on the reference's OWN shipped bytes: decode all five real dev
-    rasters (``timeseries/data/*.tif`` — the files the reference's API
-    serves via rasterio, core/services.py:150-151) inside executor tasks
-    with the pure-stdlib baseline TIFF reader (mapInPandas over the file
-    list, one raster per task, no bytes through the driver), then zonal
-    per-band mean / n_valid / n_cells. The oracle regenerates every slice
-    from the analytic fixture laws — the cell-for-cell law↔bytes identity
-    is pinned by tests/test_reference_rasters.py, so a driver-gate green
-    here means the REAL raster bytes round-trip the whole engine."""
+    """S1 on raster bytes: decode all five dev rasters (``_REF_DATA`` —
+    the GeoTIFFs the reference's API serves via rasterio,
+    core/services.py:150-151) inside executor tasks with the pure-stdlib
+    baseline TIFF reader (mapInPandas over the file list, one raster per
+    task, no bytes through the driver), then zonal per-band mean /
+    n_valid / n_cells. The oracle regenerates every slice from the
+    analytic fixture laws — the cell-for-cell law↔bytes identity is
+    pinned by tests/test_reference_rasters.py, so a gate green here
+    means the raster bytes round-trip the whole engine."""
     from datetime import date as _date
 
     from skope_api_spark.sources.geotiff import geotiff_cells

@@ -19,6 +19,17 @@ class TestRegistry:
         for name, sql in oracles.items():
             assert sql.strip().upper().startswith(("SELECT", "WITH")), name
 
+    def test_api_spine_leads_the_gate_window(self):
+        """The external correctness gate replays the first 50 registry
+        names; the SKOPE API spine (18 skope_* + 5 W1-W4 queries) leads."""
+        from skope_api_spark.contract import QUERIES, SPINE_PREFIXES
+
+        names = list(QUERIES)
+        spine = [n for n in names if n.startswith(SPINE_PREFIXES)]
+        assert len(QUERIES) == 263
+        assert len(spine) == 23
+        assert names[:23] == spine
+
     def test_no_duplicate_registration_on_reimport(self):
         import importlib
 

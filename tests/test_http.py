@@ -3,10 +3,13 @@
 from __future__ import annotations
 
 import json
+from datetime import date
 
+import numpy as np
 import pytest
 
 from skope_api_spark.api import http as H
+from skope_api_spark.api import models as M
 from skope_api_spark.api.service import TimeseriesService
 
 POINT = {"type": "Point", "coordinates": [-123.0, 45.0]}
@@ -172,33 +175,86 @@ class TestMalformedPayloads422:
         assert "transforms" in body["detail"][0]["msg"]
 
 
+# The four request payloads the reference ships under
+# `timeseries/data/requests/`, rebuilt from FIXTURES.md §3 and the shapes
+# the tests below pin (point (−120, 42.5) is row 2, col 3 of the dev grid).
+CELL_2_3 = {"type": "Point", "coordinates": [-120.0, 42.5]}
+YEARLY = {  # legacy shape: bare-int years, `transforms`, `resolution`
+    "dataset_id": "annual_5x5x5_dataset",
+    "variable_id": "float32_variable",
+    "selected_area": CELL_2_3,
+    "zonal_statistic": "mean",
+    "resolution": "year",
+    "time_range": {"gte": 2, "lte": 6},
+    "transforms": [
+        {"type": "MovingAverageSmoother", "method": "centered", "width": 1}
+    ],
+}
+YEARLY_PROD = {**YEARLY, "dataset_id": "lbda-v2"}
+MONTHLY = {
+    "dataset_id": "monthly_5x5x60_dataset",
+    "variable_id": "float32_variable",
+    "selected_area": CELL_2_3,
+    "zonal_statistic": "mean",
+    "transform": {"type": "NoTransform"},
+    "time_range": {"gte": "0001-02-01", "lte": "0003-01-01"},
+    "requested_series_options": [
+        {"name": "original", "smoother": {"type": "NoSmoother"}},
+        {
+            "name": "transformed",
+            "smoother": {
+                "type": "MovingAverageSmoother",
+                "method": "trailing",
+                "width": 7,
+            },
+        },
+    ],
+}
+TIMESERIES_V1 = {
+    "datasetId": "annual_5x5x5_dataset",
+    "variableName": "uint16_variable",
+    "boundaryGeometry": POINT,
+    "start": 1,
+    "end": 5,
+}
+
+
+def cell_2_3(b: int) -> float:
+    """float32_variable law f32(b*100 + r*10 + c*1.1) at row 2, col 3."""
+    return float(np.float32(b * 100 + 2 * 10 + 3 * 1.1))
+
+
 class TestReferenceRequestFixtures:
-    """VERDICT r11 item 3: replay the reference's LITERAL shipped request
-    fixtures (`/root/reference/timeseries/data/requests/*.json`) through
-    the façade and pin the golden outcomes the reference's own code
-    yields for them against its dev catalog
+    """Replay the reference's four request fixture shapes through the
+    façade and pin the golden outcomes the reference's own code yields
+    for them against its dev catalog
     (`timeseries/app/tests/routers/test_datasets.py:68-88`'s band·100(+
     cell offset) law, `schemas/dataset.py:49-72`'s containment errors,
     `routers/v1/api.py:11-30`'s response shape)."""
 
-    BASE = "/root/reference/timeseries/data/requests"
-
-    def _load(self, name):
-        import os
-
-        path = f"{self.BASE}/{name}.json"
-        if not os.path.exists(path):
-            pytest.skip("reference request fixtures not present")
-        with open(path) as fh:
-            return json.load(fh)
+    def test_yearly_legacy_transforms_parse(self):
+        """The legacy `transforms` list becomes `original` plus one
+        `transform_<i>` series per smoother; bare-int years become dates."""
+        req = M.TimeseriesV2Request(**M.legacy_payload_to_v2(YEARLY))
+        assert req.time_range == M.OptionalTimeRangeModel(
+            gte=date(2, 1, 1), lte=date(6, 1, 1)
+        )
+        names = [s.name for s in req.requested_series_options]
+        assert names == ["original", "transform_0"]
+        sm = req.requested_series_options[1].smoother
+        assert (sm.type, sm.method, sm.width) == (
+            "MovingAverageSmoother",
+            "centered",
+            1,
+        )
 
     def test_yearly_int_year_coercion_and_containment_422(self, service):
-        """yearly.json uses BARE-INT years (`gte: 2, lte: 6`). The int→
+        """yearly uses BARE-INT years (`gte: 2, lte: 6`). The int→
         0002-01-01 coercion must parse, and then — exactly like the
         reference's `find_band_range` (`schemas/dataset.py:56-63`) —
         lte=0006 beyond the annual dataset's 0001..0005 range must raise
         TimeRangeContainmentError, not clip."""
-        status, body = H.handle_timeseries_v2(service, self._load("yearly"))
+        status, body = H.handle_timeseries_v2(service, YEARLY)
         assert status == 422
         err = body["detail"][0]
         assert err["type"] == "TimeRangeContainmentError"
@@ -206,49 +262,62 @@ class TestReferenceRequestFixtures:
         assert "datetime.date(2, 1, 1)" in err["msg"]
         assert "datetime.date(6, 1, 1)" in err["msg"]
 
+    def test_yearly_span_clipped_variant_succeeds(self, service):
+        """With lte clipped to the dataset's last year the same legacy
+        payload succeeds, and the centered width-1 moving average is the
+        identity."""
+        payload = {**YEARLY, "time_range": {"gte": 2, "lte": 5}}
+        status, body = H.handle_timeseries_v2(service, payload)
+        assert status == 200
+        assert body["n_cells"] == 1
+        by_name = {s["name"]: s for s in body["series"]}
+        want = [cell_2_3(b) for b in range(2, 6)]
+        assert by_name["original"]["values"] == want
+        assert by_name["transform_0"]["values"] == want
+        assert by_name["transform_0"]["time_range"] == {
+            "gte": "0002-01-01",
+            "lte": "0005-01-01",
+        }
+
     def test_yearly_prod_dataset_absent_in_dev_catalog_422(self, service):
-        """yearly_prod.json targets the production `lbda-v2` dataset,
-        which the dev catalog (deploy/metadata/dev.yml mirror) does not
-        carry — a clean DatasetNotFoundError 422, not a 500."""
-        status, body = H.handle_timeseries_v2(
-            service, self._load("yearly_prod")
-        )
+        """yearly_prod targets the production `lbda-v2` dataset, which the
+        dev catalog (deploy/metadata/dev.yml mirror) does not carry — a
+        clean DatasetNotFoundError 422, not a 500."""
+        status, body = H.handle_timeseries_v2(service, YEARLY_PROD)
         assert status == 422
         assert body["detail"][0]["type"] == "DatasetNotFoundError"
         assert "lbda-v2" in body["detail"][0]["msg"]
 
     def test_monthly_two_series_golden_values(self, service):
-        """monthly.json: point (−120, 42.5) → cell value law
-        b*100 + 23.3 (FIXTURES.md §1); original series spans the
-        requested 0001-02..0003-01 (bands 2..25); the trailing-width-7
-        series starts at band 8 (first band with 7 predecessors in the
-        DATA, current row excluded — W2 semantics) and keeps the
-        requested lte."""
-        status, body = H.handle_timeseries_v2(service, self._load("monthly"))
+        """monthly: point (−120, 42.5) → cell value law
+        f32(b*100 + 23.3) (FIXTURES.md §1); original series spans the
+        requested 0001-02..0003-01 (bands 2..25) with exact float32
+        values; the trailing-width-7 series starts at band 8 (first band
+        with 7 predecessors in the DATA, current row excluded — W2
+        semantics) and keeps the requested lte."""
+        status, body = H.handle_timeseries_v2(service, MONTHLY)
         assert status == 200
+        assert body["n_cells"] == 1
         series = {s["name"]: s for s in body["series"]}
         assert set(series) == {"original", "transformed"}
 
         orig = series["original"]
         assert orig["time_range"] == {"gte": "0001-02-01", "lte": "0003-01-01"}
-        assert orig["values"] == pytest.approx(
-            [b * 100 + 23.3 for b in range(2, 26)], rel=1e-5
-        )
+        assert orig["values"] == [cell_2_3(b) for b in range(2, 26)]
 
         tma = series["transformed"]
         assert tma["time_range"] == {"gte": "0001-08-01", "lte": "0003-01-01"}
-        # trailing mean of bands b-7..b-1 under the linear law = (b-4)
-        assert tma["values"] == pytest.approx(
-            [(b - 4) * 100 + 23.3 for b in range(8, 26)], rel=1e-5
-        )
+        want = [
+            float(np.mean([cell_2_3(x) for x in range(b - 7, b)]))
+            for b in range(8, 26)
+        ]
+        assert tma["values"] == pytest.approx(want, rel=1e-12)
 
     def test_timeseriesv1_bare_int_start_end(self, service):
-        """timeseriesv1.json: v1 shape with BARE-INT start/end (1, 5) —
-        the int→str→date chain must coerce, and the uint16 variable obeys
+        """timeseriesv1: v1 shape with BARE-INT start/end (1, 5) — the
+        int→str→date chain must coerce, and the uint16 variable obeys
         the b*100 law at (−123, 45) (r=0, c=0 cell)."""
-        status, body = H.handle_timeseries_v1(
-            service, self._load("timeseriesv1")
-        )
+        status, body = H.handle_timeseries_v1(service, TIMESERIES_V1)
         assert status == 200
         assert body["datasetId"] == "annual_5x5x5_dataset"
         assert body["variableName"] == "uint16_variable"

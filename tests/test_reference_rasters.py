@@ -1,34 +1,33 @@
-"""The reference's REAL shipped rasters, decoded and ingested end-to-end.
+"""The dev rasters, decoded and ingested end-to-end.
 
-Earlier rounds tested the GeoTIFF ETL seam with fake readers and modeled
-the dev cubes analytically (FIXTURES.md laws). This suite closes the last
-gap: it decodes the ACTUAL raster bytes the reference ships
-(``/root/reference/timeseries/data/*.tif``) with the pure-stdlib baseline
-TIFF reader (``sources/geotiff.py:read_baseline_tiff``), asserts the laws
-hold in the real files, and proves the synthetic ``analytic_cube`` is
-cell-for-cell identical to a full ``ingest_geotiff`` run over the real
-rasters — so every golden test, oracle, and contract query that uses the
-analytic cube is transitively anchored to the reference's own bytes.
+The five GeoTIFFs under ``skope_api_spark/data/`` are written from the
+FIXTURES.md §1 laws and nodata sentinels by
+``sources.geotiff.write_baseline_tiff``; in r12 those laws were proven
+equal, cell for cell, to the reference's shipped raster bytes. This suite
+decodes them with the pure-stdlib baseline TIFF reader
+(``sources/geotiff.py:read_baseline_tiff``), asserts the laws and the
+nodata holes survive the sentinel round trip, and proves the synthetic
+``analytic_cube`` is cell-for-cell identical to a full ``ingest_geotiff``
+run over the rasters — the same files ``skope_reference_raster_zonal``
+serves through the correctness gate.
 
-The r12 parity fix this surfaced: the uint16 raster carries GDAL_NODATA
-65535 sentinels at (3,4) (all bands) and (2,4) (band 3) — the same holes
-as float32 — which earlier FIXTURES.md revisions recorded as "none".
+The r12 parity fix the reference's bytes surfaced: the uint16 raster
+carries GDAL_NODATA 65535 sentinels at (3,4) (all bands) and (2,4)
+(band 3) — the same holes as float32 — which earlier FIXTURES.md
+revisions recorded as "none".
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import glob
 import math
-import os
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from skope_api_spark.contract.skope import _REF_DATA as DATA
 from skope_api_spark.sources.geotiff import ingest_geotiff, read_baseline_tiff
-
-DATA = "/root/reference/timeseries/data"
 
 # (file stem, dataset_id, variable_id, resolution, n_bands, f32, null cells)
 RASTERS = [
@@ -44,11 +43,6 @@ RASTERS = [
     ("monthly_5x5x60_dataset_int16_variable", "monthly_5x5x60_dataset",
      "int16_variable", "month", 60, False, "none"),
 ]
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference rasters not present"
-)
-
 
 def _is_null(kind: str, b: int, r: int, c: int) -> bool:
     if kind == "f32holes":
@@ -72,7 +66,7 @@ class TestBaselineDecoder:
         RASTERS,
         ids=[r[0] for r in RASTERS],
     )
-    def test_real_raster_obeys_fixture_law(
+    def test_dev_raster_obeys_fixture_law(
         self, stem, dataset_id, variable_id, resolution, n_bands, f32, nulls
     ):
         with open(f"{DATA}/{stem}.tif", "rb") as fh:
@@ -110,21 +104,19 @@ class TestBaselineDecoder:
             list(read_baseline_tiff(bytes(lzw)))
 
 
-class TestIngestRealRasters:
+class TestIngestDevRasters:
     def test_ingest_matches_analytic_cube_cell_for_cell(self, spark, tmp_path):
-        """Full ETL over the reference's real rasters through the DEFAULT
-        reader (rasterio absent in this sandbox → stdlib baseline
-        fallback), then an exact anti-join comparison against the
-        synthetic analytic cube: zero rows differ in either direction, so
-        the analytic fixtures every oracle rests on ARE the reference's
-        shipped bytes."""
+        """Full ETL over the dev rasters through the DEFAULT reader
+        (stdlib baseline fallback when rasterio is absent), then an exact
+        anti-join comparison against the synthetic analytic cube: zero
+        rows differ in either direction."""
         from skope_api_spark.sources.cube import full_dev_cube
 
         files = [
             (f"{DATA}/{stem}.tif", ds, var, res, dt.date(1, 1, 1))
             for stem, ds, var, res, _, _, _ in RASTERS
         ]
-        path = str(tmp_path / "real_lake")
+        path = str(tmp_path / "dev_lake")
         ingest_geotiff(spark, files, path)
         ingested = spark.read.parquet(path)
 
@@ -149,7 +141,7 @@ class TestIngestRealRasters:
             )
 
         synthetic = canon(full_dev_cube(spark))
-        real = canon(ingested)
-        only_real = real.exceptAll(synthetic).count()
-        only_synth = synthetic.exceptAll(real).count()
-        assert (only_real, only_synth) == (0, 0)
+        decoded = canon(ingested)
+        only_decoded = decoded.exceptAll(synthetic).count()
+        only_synth = synthetic.exceptAll(decoded).count()
+        assert (only_decoded, only_synth) == (0, 0)
