@@ -5,12 +5,17 @@ Mirrors the reference lifecycle (SURVEY.md §3; reference
 (interval algebra) → extract (pruned scan + cell predicate) → zonal agg →
 transform → per-series smoothing → relabel/clip → summarize.
 
-Execution shape: ONE cached base-series subplan (the shared extraction,
-reference ``timeseries.py:402-415``), per-series window expressions unioned
-with a ``series_name`` column, ONE collect under a cancellable job group
-(cooperative timeout — reference's anyio ``fail_after`` → 504 becomes
-``TimeseriesTimeoutError``; the Spark jobs are actually cancelled, not
-orphaned).
+Execution shape: a request is ONE Spark aggregation and ONE collect. The
+plan is the cell selection, a band filter and the per-band zonal
+statistic. The band filter covers the padded extraction range and, for a
+fixed-reference z-score, the reference range too (an OR of disjoint
+intervals), so the reference never needs a second scan. The collect runs
+under a cancellable job group (cooperative timeout — the reference's anyio
+``fail_after`` → 504 becomes ``TimeseriesTimeoutError``; the Spark jobs
+are actually cancelled, not orphaned). Transform, smoothers, clipping and
+summaries then run on the driver over the ≤ n_bands collected rows with
+the numpy kernels of ``api/kernels.py``. ``execute_many`` runs the same
+chain on each request's slice of one batched aggregation.
 
 Known divergence from the reference (documented in SURVEY.md §2.5 W7): the
 reference hard-codes an annual PeriodIndex (``freq="A"``,
@@ -22,13 +27,18 @@ resolution.
 from __future__ import annotations
 
 import math
+import operator
 import threading
+import time
 import uuid
 from dataclasses import dataclass, field
+from functools import reduce
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from skope_api_spark.api import kernels
 from skope_api_spark.api import models as M
 from skope_api_spark.geometry import (
     DEFAULT_MAX_CELLS,
@@ -38,17 +48,19 @@ from skope_api_spark.geometry import (
     rasterize_all_touched,
     select_cells,
 )
-from skope_api_spark.operators import windows as wops
+from skope_api_spark.operators.batch import batch_mask_df
 from skope_api_spark.operators.zonal import zonal_series
 from skope_api_spark.plans.catalog import Catalog, DatasetMeta
 from skope_api_spark.plans.intervals import (
-    Adjustment,
     BandRange,
     TimeRange,
     band_range_for_time_range,
+    disjoint_band_ranges,
     extraction_band_range,
     normalize_time_range,
+    output_band_range,
 )
+from skope_api_spark.session import local_frame
 from skope_api_spark.sources.cube import analytic_cube, cell_area_m2
 
 
@@ -66,16 +78,6 @@ def _grid(meta: DatasetMeta) -> Grid:
         pixel_deg_lon=meta.pixel_deg_lon,
         pixel_deg_lat=meta.pixel_deg_lat,
     )
-
-
-def _shrink(r: BandRange | None, adj: Adjustment) -> BandRange | None:
-    """Bands still carrying full-window values after an op with ``adj``."""
-    if r is None:
-        return None
-    try:
-        return r.shift((-adj[0], -adj[1]))
-    except ValueError:
-        return None
 
 
 def collect_with_timeout(spark: SparkSession, df: DataFrame, timeout_ms: int):
@@ -123,8 +125,6 @@ def _summary(values: list[float | None]) -> tuple[float | None, float | None, fl
     """Driver-side summary of a returned series (reference
     timeseries.py:243-261): nan-skipping mean/median/POPULATION stddev;
     all-missing → None."""
-    import numpy as np
-
     xs = np.array([math.nan if v is None else v for v in values], dtype=float)
     if np.all(np.isnan(xs)):
         return None, None, None
@@ -133,6 +133,61 @@ def _summary(values: list[float | None]) -> tuple[float | None, float | None, fl
         float(np.nanmedian(xs)),
         float(np.nanstd(xs)),
     )
+
+
+def _values(rows: list, bands: BandRange) -> np.ndarray:
+    """The band-ordered ``rows``' values inside ``bands``, NULL → NaN."""
+    return np.array(
+        [math.nan if r.value is None else r.value for r in rows if bands.gte <= r.band <= bands.lte],
+        dtype=float,
+    )
+
+
+def _transform(
+    t, x: np.ndarray, extract: BandRange, reference: np.ndarray | None
+) -> tuple[np.ndarray, BandRange | None]:
+    """Returns (transformed series, bands with valid post-transform values)."""
+    if isinstance(t, M.NoTransform):
+        return x, extract
+    if isinstance(t, M.ZScoreMovingInterval):
+        valid = output_band_range(extract, extract, t.adjustment())
+        return kernels.rolling_zscore(x, t.width), valid
+    if isinstance(t, M.ZScoreFixedInterval):
+        # scipy.zscore over the extracted interval (reference
+        # timeseries.py:163-167 applies it to the full padded slice), or
+        # vs the reference interval's slice (services.py:131-147)
+        return kernels.fixed_zscore(x, x if reference is None else reference), extract
+    raise TypeError(f"unknown transform {type(t).__name__}")
+
+
+def _smooth(smoother, x: np.ndarray) -> np.ndarray:
+    if isinstance(smoother, M.NoSmoother):
+        return x
+    if isinstance(smoother, M.MovingAverageSmoother):
+        fn = (
+            kernels.centered_moving_average
+            if smoother.method == "centered"
+            else kernels.trailing_moving_average
+        )
+        return fn(x, smoother.width)
+    raise TypeError(f"unknown smoother {type(smoother).__name__}")
+
+
+@dataclass
+class _Plan:
+    """One request bound to its dataset: grid, band ranges and cells."""
+
+    grid: Grid
+    requested: BandRange
+    extract: BandRange
+    reference: BandRange | None  # a fixed-reference z-score's bands
+    cells: list[tuple[int, int]]
+
+    def bands(self) -> list[BandRange]:
+        """The disjoint band intervals the one scan must read."""
+        return disjoint_band_ranges(
+            [r for r in (self.extract, self.reference) if r is not None]
+        )
 
 
 @dataclass
@@ -148,10 +203,8 @@ class TimeseriesService:
 
     # -- lifecycle -----------------------------------------------------------
 
-    def _plan(self, req: M.TimeseriesV2Request):
-        """Bind catalog + compute requested/extraction band ranges."""
-        meta = self.catalog.variable(req.dataset_id, req.variable_id)
-        grid = _grid(meta)
+    def _plan(self, req: M.TimeseriesV2Request, meta: DatasetMeta) -> _Plan:
+        """Compute the band ranges and the validated cell selection."""
         requested_time = normalize_time_range(
             req.time_range.gte, req.time_range.lte, meta.time_range
         )
@@ -166,7 +219,17 @@ class TimeseriesService:
                 s.smoother.adjustment() for s in req.requested_series_options
             ),
         )
-        return meta, grid, requested, extract
+        t = req.transform
+        reference = None
+        if isinstance(t, M.ZScoreFixedInterval) and t.time_range is not None:
+            reference = band_range_for_time_range(
+                TimeRange(t.time_range.gte, t.time_range.lte),
+                meta.time_range,
+                meta.resolution,
+            )
+        grid = _grid(meta)
+        cells = self._selection_cells(req, grid)
+        return _Plan(grid, requested, extract, reference, cells)
 
     def _selection_cells(
         self, req: M.TimeseriesV2Request, grid: Grid
@@ -182,79 +245,50 @@ class TimeseriesService:
             return [(min(r, grid.rows - 1), min(c, grid.cols - 1))]
         return rasterize_all_touched(grid, req.selected_area, max_cells=self.max_cells)
 
-    @staticmethod
-    def _area_m2(grid: Grid, cells: list[tuple[int, int]]) -> float:
-        return sum(
-            cell_area_m2(grid.origin_lat - r * grid.px_lat, grid.px_lat, grid.px_lon)
-            for r, _ in cells
-        )
-
-    def _series_parts(
-        self,
-        req: M.TimeseriesV2Request,
-        meta: DatasetMeta,
-        grid: Grid,
-        cube: DataFrame,
-        base: DataFrame,
-        extract: BandRange,
-        requested: BandRange,
-    ) -> list[DataFrame]:
-        """Transform + per-series smoothing + clip; one tagged frame per
-        requested series (W1/W2/W7 + A7)."""
-        transformed, post_transform = self._apply_transform(
-            req, meta, grid, cube, base, extract, requested
-        )
-        parts: list[DataFrame] = []
-        for opt in req.requested_series_options:
-            sm = self._apply_smoother(transformed, opt.smoother)
-            out_range = _shrink(post_transform, opt.smoother.adjustment())
-            if out_range is not None:
-                try:
-                    out_range = out_range.intersect(requested)
-                except ValueError:  # disjoint → empty series (edge request)
-                    out_range = None
-            if out_range is None:
-                continue
-            parts.append(
-                sm.where(F.col("band").between(out_range.gte, out_range.lte))
-                .withColumn("series_name", F.lit(opt.name))
-                .select("series_name", "band", "time", "value")
-            )
-        return parts
+    def _select(self, cube: DataFrame, cells: list[tuple[int, int]]) -> DataFrame:
+        if len(cells) == 1:
+            (r, c) = cells[0]  # point: pushdown equality, no join
+            return cube.where((F.col("row") == r) & (F.col("col") == c))
+        return select_cells(cube, mask_df(self.spark, cells))
 
     def _assemble(
-        self,
-        req: M.TimeseriesV2Request,
-        requested: BandRange,
-        result_rows: list,
-        base_rows: list,
-        n_cells: int,
-        area_m2: float,
-        t0: float,
+        self, req: M.TimeseriesV2Request, plan: _Plan, rows: list, t0: float
     ) -> M.TimeseriesV2Response:
-        import time as _time
+        """Run the chain on the collected per-band rows; build the response."""
+        rows = sorted(rows, key=lambda r: r.band)
+        requested, extract = plan.requested, plan.extract
+        base = [r for r in rows if extract.gte <= r.band <= extract.lte]
+        ref = None if plan.reference is None else _values(rows, plan.reference)
+        transformed, valid = _transform(req.transform, _values(rows, extract), extract, ref)
 
         series_out: list[M.SeriesResult] = []
         stats_out: list[M.SummaryStatRow] = []
-
         if not isinstance(req.transform, M.NoTransform):
             # A6 — stats of the UNtransformed series over the requested range
             orig_vals = [
-                r.value for r in base_rows if requested.gte <= r.band <= requested.lte
+                r.value for r in base if requested.gte <= r.band <= requested.lte
             ]
             mean, median, stdev = _summary(orig_vals)
             stats_out.append(
                 M.SummaryStatRow(name="Original", mean=mean, median=median, stdev=stdev)
             )
 
-        by_series: dict[str, list] = {}
-        for row in result_rows:
-            by_series.setdefault(row.series_name, []).append(row)
         for opt in req.requested_series_options:
-            rows = sorted(by_series.get(opt.name, []), key=lambda r: r.band)
-            values = [r.value for r in rows]
+            out = (
+                None
+                if valid is None
+                else output_band_range(valid, requested, opt.smoother.adjustment())
+            )
+            keep = [
+                i for i, r in enumerate(base)
+                if out is not None and out.gte <= r.band <= out.lte
+            ]
+            smoothed = _smooth(opt.smoother, transformed)[keep].tolist()
+            values = [None if math.isnan(v) else v for v in smoothed]
             tr = (
-                M.TimeRangeModel(gte=rows[0].time, lte=rows[-1].time) if rows else None
+                M.TimeRangeModel(gte=base[keep[0]].time, lte=base[keep[-1]].time)
+                if keep
+                else None
             )
             series_out.append(
                 M.SeriesResult(name=opt.name, time_range=tr, values=values)
@@ -264,89 +298,59 @@ class TimeseriesService:
                 M.SummaryStatRow(name=opt.name, mean=mean, median=median, stdev=stdev)
             )
 
+        grid = plan.grid
         return M.TimeseriesV2Response(
             dataset_id=req.dataset_id,
             variable_id=req.variable_id,
-            n_cells=n_cells,
-            area_m2=area_m2,
+            n_cells=len(plan.cells),
+            area_m2=sum(
+                cell_area_m2(grid.origin_lat - r * grid.px_lat, grid.px_lat, grid.px_lon)
+                for r, _ in plan.cells
+            ),
             series=series_out,
             summary_stats=stats_out,
-            processing_time_ms=int((_time.perf_counter() - t0) * 1000),
+            processing_time_ms=int((time.perf_counter() - t0) * 1000),
         )
 
     def execute(self, req: M.TimeseriesV2Request) -> M.TimeseriesV2Response:
-        import time as _time
-
-        t0 = _time.perf_counter()
-        meta, grid, requested, extract = self._plan(req)
-
-        # -- extraction: cell predicate + band pruning ----------------------
+        t0 = time.perf_counter()
+        meta = self.catalog.variable(req.dataset_id, req.variable_id)
         cube = self.cube(meta, req.variable_id)
-        sel = self._selection_cells(req, grid)
-        if len(sel) == 1:
-            (r, c) = sel[0]  # point: pushdown equality, no join
-            cells = cube.where((F.col("row") == r) & (F.col("col") == c))
-        else:
-            cells = select_cells(cube, mask_df(self.spark, sel))
-        n_cells, area_m2 = len(sel), self._area_m2(grid, sel)
-        cells = cells.where(F.col("band").between(extract.gte, extract.lte))
-
-        base = (
-            zonal_series(cells, req.zonal_statistic)
-            .select("band", "time", "value")
-            .cache()
+        plan = self._plan(req, meta)
+        in_bands = reduce(
+            operator.or_, (F.col("band").between(b.gte, b.lte) for b in plan.bands())
         )
-
-        # ONE collect: the base series rides along under a sentinel name, so
-        # a request is a single Spark job (the reference's one-read model)
-        parts = self._series_parts(req, meta, grid, cube, base, extract, requested)
-        parts.append(
-            base.withColumn("series_name", F.lit("__base")).select(
-                "series_name", "band", "time", "value"
-            )
-        )
-        fanout = parts[0]
-        for p in parts[1:]:
-            fanout = fanout.unionByName(p)
-        all_rows = collect_with_timeout(
-            self.spark, fanout.orderBy("series_name", "band"), req.max_processing_time
-        )
-        base_rows = [r for r in all_rows if r.series_name == "__base"]
-        result_rows = [r for r in all_rows if r.series_name != "__base"]
-        base.unpersist()
-        resp = self._assemble(
-            req, requested, result_rows, base_rows, n_cells, area_m2, t0
-        )
+        base = zonal_series(
+            self._select(cube, plan.cells).where(in_bands), req.zonal_statistic
+        ).select("band", "time", "value")
+        rows = collect_with_timeout(self.spark, base, req.max_processing_time)
+        resp = self._assemble(req, plan, rows, t0)
         if req.include_uncertainty:
-            resp.uncertainty = self._uncertainty_series(req, meta, grid, requested)
+            resp.uncertainty = self._uncertainty_series(req, meta, plan)
         return resp
 
     def _uncertainty_series(
-        self,
-        req: M.TimeseriesV2Request,
-        meta: DatasetMeta,
-        grid: Grid,
-        requested: BandRange,
+        self, req: M.TimeseriesV2Request, meta: DatasetMeta, plan: _Plan
     ) -> M.SeriesResult | None:
         """S6 — zonal series of the companion uncertainty slice over the
-        same cells, clipped to the requested range (no padding: transforms
-        and smoothers never apply to the uncertainty channel)."""
+        request's cells, clipped to the requested range (no padding:
+        transforms and smoothers never apply to the uncertainty channel)."""
         try:
             ucube = self.cube(meta, req.variable_id + "_uncertainty")
         except KeyError:
             return None  # dataset has no uncertainty companion
-        ucells = self._same_cells(req, grid, ucube).where(
+        requested = plan.requested
+        ucells = self._select(ucube, plan.cells).where(
             F.col("band").between(requested.gte, requested.lte)
         )
         rows = collect_with_timeout(
             self.spark,
-            zonal_series(ucells, req.zonal_statistic)
-            .select("band", "time", "value")
-            .orderBy("band"),
+            zonal_series(ucells, req.zonal_statistic).select("band", "time", "value"),
             req.max_processing_time,
         )
         if not rows:
             return None
+        rows.sort(key=lambda r: r.band)
         return M.SeriesResult(
             name="uncertainty",
             time_range=M.TimeRangeModel(gte=rows[0].time, lte=rows[-1].time),
@@ -357,16 +361,16 @@ class TimeseriesService:
         self, reqs: list[M.TimeseriesV2Request]
     ) -> list[M.TimeseriesV2Response]:
         """Batched execution: requests sharing (dataset, variable, statistic)
-        compile into ONE scan + ONE zonal aggregation via a query_id-tagged
-        broadcast mask join (operators.batch pattern) — the 100 TB serving
-        shape: thousands of requests, a handful of jobs.
+        compile into ONE scan + ONE zonal aggregation + ONE collect via a
+        query_id-tagged broadcast mask join (operators.batch pattern) — the
+        100 TB serving shape: thousands of requests, a handful of jobs.
 
-        Per-request transforms/smoothers still run as (tiny) window plans
-        over the shared cached base, unioned into one collect per group.
+        Each request's bands join through a broadcast ranges dim of
+        disjoint intervals (its extraction plus any reference range), and
+        its slice of the collected rows runs the same driver chain as
+        ``execute``.
         """
-        import time as _time
-
-        t0 = _time.perf_counter()
+        t0 = time.perf_counter()
         results: list[M.TimeseriesV2Response | None] = [None] * len(reqs)
 
         groups: dict[tuple, list[int]] = {}
@@ -376,26 +380,16 @@ class TimeseriesService:
 
         for (dataset_id, variable_id, stat), idxs in groups.items():
             meta = self.catalog.variable(dataset_id, variable_id)
-            grid = _grid(meta)
             cube = self.cube(meta, variable_id)
+            plans = {i: self._plan(reqs[i], meta) for i in idxs}
 
-            plans: dict[int, tuple] = {}
-            mask_rows: list[tuple[str, int, int]] = []
-            range_rows: list[tuple[str, int, int]] = []
-            for i in idxs:
-                req = reqs[i]
-                _, _, requested, extract = self._plan(req)
-                sel = self._selection_cells(req, grid)
-                qid = f"q{i}"
-                plans[i] = (requested, extract, sel, qid)
-                mask_rows.extend((qid, r, c) for r, c in sel)
-                range_rows.append((qid, extract.gte, extract.lte))
-
-            mask = self.spark.createDataFrame(
-                mask_rows, "query_id string, row int, col int"
+            mask = batch_mask_df(
+                self.spark, {f"q{i}": p.cells for i, p in plans.items()}
             )
-            ranges = self.spark.createDataFrame(
-                range_rows, "query_id string, bgte int, blte int"
+            ranges = local_frame(
+                self.spark,
+                [(f"q{i}", b.gte, b.lte) for i, p in plans.items() for b in p.bands()],
+                "query_id string, bgte int, blte int",
             )
             # one scan: inner broadcast mask join (fan-out per membership),
             # then per-query band clipping via the broadcast ranges dim
@@ -404,50 +398,15 @@ class TimeseriesService:
                 .join(F.broadcast(ranges), "query_id")
                 .where(F.col("band").between(F.col("bgte"), F.col("blte")))
             )
-            base_all = (
-                zonal_series(tagged, stat, keys=("query_id", "band", "time"))
-                .select("query_id", "band", "time", "value")
-                .cache()
-            )
-
-            parts: list[DataFrame] = []
-            for i in idxs:
-                req = reqs[i]
-                requested, extract, sel, qid = plans[i]
-                base_i = base_all.where(F.col("query_id") == qid).select(
-                    "band", "time", "value"
-                )
-                for p in self._series_parts(
-                    req, meta, grid, cube, base_i, extract, requested
-                ):
-                    parts.append(p.withColumn("query_id", F.lit(qid)))
-
+            base_all = zonal_series(
+                tagged, stat, keys=("query_id", "band", "time")
+            ).select("query_id", "band", "time", "value")
             timeout = max(reqs[i].max_processing_time for i in idxs)
-            result_rows: list = []
-            if parts:
-                fanout = parts[0]
-                for p in parts[1:]:
-                    fanout = fanout.unionByName(p)
-                result_rows = collect_with_timeout(self.spark, fanout, timeout)
-            base_rows_all = collect_with_timeout(self.spark, base_all, timeout)
-            base_all.unpersist()
-
+            by_query: dict[str, list] = {f"q{i}": [] for i in idxs}
+            for row in collect_with_timeout(self.spark, base_all, timeout):
+                by_query[row.query_id].append(row)
             for i in idxs:
-                requested, extract, sel, qid = plans[i]
-                rr = [r for r in result_rows if r.query_id == qid]
-                br = sorted(
-                    (r for r in base_rows_all if r.query_id == qid),
-                    key=lambda r: r.band,
-                )
-                results[i] = self._assemble(
-                    reqs[i],
-                    requested,
-                    rr,
-                    br,
-                    len(sel),
-                    self._area_m2(grid, sel),
-                    t0,
-                )
+                results[i] = self._assemble(reqs[i], plans[i], by_query[f"q{i}"], t0)
         return results  # type: ignore[return-value]
 
     def execute_v1(self, req: M.TimeseriesV1Request) -> dict:
@@ -478,83 +437,6 @@ class TimeseriesService:
             }
             for m in self.catalog.datasets.values()
         ]
-
-    # -- internals -----------------------------------------------------------
-
-    def _apply_transform(
-        self,
-        req: M.TimeseriesV2Request,
-        meta: DatasetMeta,
-        grid: Grid,
-        cube: DataFrame,
-        base: DataFrame,
-        extract: BandRange,
-        requested: BandRange,
-    ) -> tuple[DataFrame, BandRange | None]:
-        """Returns (transformed series, bands with valid post-transform values)."""
-        t = req.transform
-        if isinstance(t, M.NoTransform):
-            return base, extract
-        if isinstance(t, M.ZScoreMovingInterval):
-            out = wops.rolling_zscore(
-                base, "value", order_by=("band",), width=t.width, out_col="__z"
-            ).select("band", "time", F.col("__z").alias("value"))
-            return out, _shrink(extract, t.adjustment())
-        if isinstance(t, M.ZScoreFixedInterval):
-            if t.time_range is None:
-                # scipy.zscore over the extracted interval (reference
-                # timeseries.py:163-167 applies it to the full padded slice)
-                out = wops.fixed_interval_zscore(
-                    base, "value", out_col="__z"
-                ).select("band", "time", F.col("__z").alias("value"))
-                return out, extract
-            ref_tr = TimeRange(t.time_range.gte, t.time_range.lte)
-            ref_bands = band_range_for_time_range(
-                ref_tr, meta.time_range, meta.resolution
-            )
-            # second slice over the same cells (reference services.py:131-147);
-            # reuses the same cell predicate, only the band filter changes
-            ref_cells = self._same_cells(req, grid, cube).where(
-                F.col("band").between(ref_bands.gte, ref_bands.lte)
-            )
-            ref_series = zonal_series(ref_cells, req.zonal_statistic).select(
-                "band", "value"
-            )
-            out = wops.fixed_reference_zscore(
-                base, ref_series, "value", out_col="__z"
-            ).select("band", "time", F.col("__z").alias("value"))
-            return out, extract
-        raise TypeError(f"unknown transform {type(t).__name__}")
-
-    def _same_cells(
-        self, req: M.TimeseriesV2Request, grid: Grid, cube: DataFrame
-    ) -> DataFrame:
-        area_type = req.selected_area.get("type")
-        if area_type == "Point" or (
-            area_type == "Feature"
-            and req.selected_area.get("geometry", {}).get("type") == "Point"
-        ):
-            return cube.where(point_predicate(grid, req.selected_area))
-        cells = rasterize_all_touched(grid, req.selected_area, max_cells=self.max_cells)
-        return select_cells(cube, mask_df(self.spark, cells))
-
-    def _apply_smoother(self, series: DataFrame, smoother) -> DataFrame:
-        if isinstance(smoother, M.NoSmoother):
-            return series
-        if isinstance(smoother, M.MovingAverageSmoother):
-            fn = (
-                wops.centered_moving_average
-                if smoother.method == "centered"
-                else wops.trailing_moving_average
-            )
-            return fn(
-                series,
-                "value",
-                order_by=("band",),
-                width=smoother.width,
-                out_col="__sm",
-            ).select("band", "time", F.col("__sm").alias("value"))
-        raise TypeError(f"unknown smoother {type(smoother).__name__}")
 
 
 def _point_coords(geojson: dict) -> tuple[float, float]:

@@ -33,6 +33,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from skope_api_spark.session import local_frame
+
 DEFAULT_MAX_CELLS = 500_000  # reference config.py:33
 
 
@@ -270,7 +272,8 @@ def point_predicate(grid: Grid, geojson: dict):
 
 
 def mask_df(spark: SparkSession, cells: list[tuple[int, int]]) -> DataFrame:
-    return spark.createDataFrame(cells, "row int, col int")
+    """The selected (row, col) cells as a broadcastable frame (via Arrow)."""
+    return local_frame(spark, cells, "row int, col int")
 
 
 def select_cells(cube: DataFrame, mask: DataFrame) -> DataFrame:

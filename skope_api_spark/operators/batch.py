@@ -19,13 +19,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skope_api_spark.operators.zonal import zonal_series
+from skope_api_spark.session import local_frame
 
 
 def batch_mask_df(
     spark: SparkSession, masks: Mapping[str, Sequence[tuple[int, int]]]
 ) -> DataFrame:
     rows = [(qid, r, c) for qid, cells in masks.items() for (r, c) in cells]
-    return spark.createDataFrame(rows, "query_id string, row int, col int")
+    return local_frame(spark, rows, "query_id string, row int, col int")
 
 
 def batched_zonal_series(

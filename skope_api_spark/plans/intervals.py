@@ -180,6 +180,19 @@ def extraction_band_range(
     return out.intersect(available)
 
 
+def disjoint_band_ranges(ranges: list[BandRange]) -> list[BandRange]:
+    """The set union of ``ranges`` as sorted, disjoint intervals: overlapping
+    or adjacent ranges merge, so a band filter built from the result reads
+    each band once (a range join against it never emits a band twice)."""
+    out: list[BandRange] = []
+    for r in sorted(ranges):
+        if out and r.gte <= out[-1].lte + 1:
+            out[-1] = out[-1].union(r)
+        else:
+            out.append(r)
+    return out
+
+
 def output_band_range(
     extracted: BandRange,
     requested: BandRange,

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -136,3 +136,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small DataFrame from driver-side tuples, built from pandas through
+    Arrow (``get_spark`` enables it): the JVM decodes the Arrow batch, so
+    scanning the frame needs no Python worker, unlike ``createDataFrame``
+    on a list of tuples."""
+    import pandas as pd
+
+    names = [f.split()[0] for f in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)

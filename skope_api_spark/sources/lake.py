@@ -12,6 +12,7 @@ filter prunes row groups inside it.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,14 +25,23 @@ from skope_api_spark.plans.catalog import DatasetMeta
 class LakeTimeseriesService(TimeseriesService):
     """Service variant reading the ingested cube lake instead of
     regenerating fixtures. ``lake_path`` is the ``ingest_to_parquet``
-    output root."""
+    output root.
+
+    The lake is opened (``spark.read.parquet``) once per service, on its
+    first request, and every later request plans against that DataFrame.
+    Its file listing is therefore fixed when the lake is opened: a lake
+    re-ingested after that needs a new service."""
 
     lake_path: str = ""
 
-    def cube(self, meta: DatasetMeta, variable_id: str) -> DataFrame:
+    @cached_property
+    def lake(self) -> DataFrame:
         if not self.lake_path:
             raise ValueError("LakeTimeseriesService requires lake_path")
-        return self._spark_read().where(
+        return self._spark_read()
+
+    def cube(self, meta: DatasetMeta, variable_id: str) -> DataFrame:
+        return self.lake.where(
             (F.col("dataset_id") == meta.dataset_id)
             & (F.col("variable_id") == variable_id)
         )

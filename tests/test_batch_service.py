@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 from datetime import date
 
 import pytest
@@ -69,6 +70,35 @@ class TestExecuteMany:
         assert len(batched) == len(individual) == 4
         for b, s in zip(batched, individual):
             assert _strip_time(b) == _strip_time(s)
+
+    def test_overlapping_reference_range_alone_and_batched(self, service):
+        """A fixed-reference z-score whose reference range overlaps its
+        extraction: the batch reads the union of the two once, so no band
+        joins twice and no zonal value is double-counted."""
+        req = M.TimeseriesV2Request(
+            dataset_id="annual_5x5x5_dataset",
+            variable_id="float32_variable",
+            selected_area=SQUARE,
+            time_range=M.OptionalTimeRangeModel(gte=date(2, 1, 1), lte=date(5, 1, 1)),
+            transform=M.ZScoreFixedInterval(
+                time_range=M.TimeRangeModel(gte=date(1, 1, 1), lte=date(3, 1, 1))
+            ),
+        )
+        other = M.TimeseriesV2Request(
+            dataset_id="annual_5x5x5_dataset",
+            variable_id="float32_variable",
+            selected_area=POINT,
+        )
+        alone = service.execute(req)
+        batched = service.execute_many([other, req])
+        assert _strip_time(batched[1]) == _strip_time(alone)
+        assert _strip_time(batched[0]) == _strip_time(service.execute(other))
+        # cells (1,1),(1,2),(2,1),(2,2): band means step by 100, so the
+        # reference (bands 1-3) has mean m2 and sigma 100·sqrt(2/3)
+        assert alone.n_cells == 4
+        assert alone.series[0].values == pytest.approx(
+            [(b - 2) / math.sqrt(2 / 3) for b in range(2, 6)], rel=1e-5, abs=1e-5
+        )
 
     def test_many_points_one_group(self, service):
         """6 distinct points in one (dataset, variable, stat) group: each

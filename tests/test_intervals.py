@@ -19,6 +19,7 @@ from skope_api_spark.plans.intervals import (
     TimeRangeContainmentError,
     band_range_for_time_range,
     centered_adjustment,
+    disjoint_band_ranges,
     extraction_band_range,
     normalize_time_range,
     output_band_range,
@@ -42,6 +43,13 @@ class TestBandRange:
     def test_union_is_hull(self):
         # Reference semantics: hull, not set union (common.py:35-46)
         assert BandRange(1, 2).union(BandRange(7, 9)) == BandRange(1, 9)
+
+    def test_disjoint_ranges_merge_overlaps_and_neighbours(self):
+        assert disjoint_band_ranges(
+            [BandRange(8, 9), BandRange(1, 3), BandRange(2, 5), BandRange(6, 6)]
+        ) == [BandRange(1, 6), BandRange(8, 9)]
+        assert disjoint_band_ranges([BandRange(4, 7)]) == [BandRange(4, 7)]
+        assert disjoint_band_ranges([]) == []
 
     def test_shift_and_len(self):
         assert BandRange(3, 6).shift((-2, 1)) == BandRange(1, 7)

@@ -49,3 +49,17 @@ class TestLakeService:
         plan = cube._jdf.queryExecution().executedPlan().toString()
         pf = plan.split("PartitionFilters")[1][:300]
         assert "dataset_id" in pf and "variable_id" in pf
+
+    def test_lake_is_opened_once_per_service(self, spark, lake, monkeypatch):
+        svc = lake_service(spark, lake)
+        reads = []
+        real = svc._spark_read
+
+        def spy():
+            reads.append(1)
+            return real()
+
+        monkeypatch.setattr(svc, "_spark_read", spy)
+        svc.execute(req())
+        svc.execute(req(zonal_statistic="median"))
+        assert len(reads) == 1

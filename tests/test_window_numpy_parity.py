@@ -138,6 +138,123 @@ def test_reference_interval_zscore(spark):
         assert out[band] == pytest.approx((xs[band - 1] - m) / s, rel=1e-12)
 
 
+# -- driver kernels (api/kernels.py) vs the Spark operators ------------------
+
+WIDTHS = range(1, 22)
+
+
+def _kernel_series() -> dict[int, np.ndarray]:
+    """Random series with NaN holes, one shorter than most windows, and
+    constant runs of values binary floating point cannot represent (a
+    two-pass numpy std of such a run is a few ulps, not 0).
+
+    Random values separate the runs: a window mixing 0.1 and float32(0.1)
+    (1.5e-9 apart) has a z-score conditioned at ~1e-8 relative, where
+    Spark's one-pass (Welford) sigma and the kernels' two-pass sigma
+    legitimately differ in the ninth digit."""
+    runs = np.concatenate([
+        np.full(25, 23.3),
+        _rand_series(12, n=10),
+        np.full(25, 0.1),
+        _rand_series(14, n=10),
+        np.full(25, float(np.float32(0.1))),
+    ])
+    runs[25 + 10 + 5] = np.nan  # a hole inside the 0.1 run
+    return {
+        0: _rand_series(9),
+        1: _rand_series(10, nan_frac=0.4),
+        2: _rand_series(11, n=60, nan_frac=0.05),
+        3: _rand_series(13, n=5),  # shorter than most windows
+        4: runs,
+    }
+
+
+REF_BANDS = 7  # the first 7 bands: all 23.3 in series 4 → sigma 0
+
+
+@pytest.fixture(scope="module")
+def spark_windows(spark):
+    """Every Spark window operator at every width over every series, in
+    one collect: {(sid, column): [value by band]}."""
+    series = _kernel_series()
+    rows = [
+        (sid, i + 1, None if np.isnan(v) else float(v))
+        for sid, xs in series.items()
+        for i, v in enumerate(xs)
+    ]
+    df = spark.createDataFrame(rows, "sid int, band int, value double")
+    kw = dict(order_by=("band",), partition_by=("sid",))
+    for w in WIDTHS:
+        if w % 2:
+            df = wops.centered_moving_average(df, "value", width=w, out_col=f"c{w}", **kw)
+        df = wops.trailing_moving_average(df, "value", width=w, out_col=f"t{w}", **kw)
+        df = wops.rolling_zscore(df, "value", width=w, out_col=f"z{w}", **kw)
+    df = wops.fixed_interval_zscore(df, "value", partition_by=("sid",), out_col="fz")
+    df = wops.fixed_reference_zscore(
+        df, df.where(F.col("band") <= REF_BANDS).select("sid", "value"),
+        "value", join_on=("sid",), out_col="rz",
+    )
+    out: dict[tuple[int, str], list] = {}
+    for r in sorted(df.collect(), key=lambda r: (r.sid, r.band)):
+        for col, v in r.asDict().items():
+            out.setdefault((r.sid, col), []).append(v)
+    return series, out
+
+
+def _assert_matches(got: list, want: np.ndarray, rel: float) -> None:
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        if np.isnan(w):
+            assert g is None
+        else:
+            assert g == pytest.approx(w, rel=rel, abs=rel)
+
+
+class TestDriverKernelParity:
+    def test_moving_averages(self, spark_windows):
+        from skope_api_spark.api import kernels
+
+        series, out = spark_windows
+        for sid, xs in series.items():
+            for w in WIDTHS:
+                if w % 2:
+                    _assert_matches(
+                        out[(sid, f"c{w}")], kernels.centered_moving_average(xs, w), 1e-12
+                    )
+                _assert_matches(
+                    out[(sid, f"t{w}")], kernels.trailing_moving_average(xs, w), 1e-12
+                )
+
+    def test_rolling_zscore(self, spark_windows):
+        from skope_api_spark.api import kernels
+
+        series, out = spark_windows
+        for sid, xs in series.items():
+            for w in WIDTHS:
+                _assert_matches(out[(sid, f"z{w}")], kernels.rolling_zscore(xs, w), 1e-9)
+
+    def test_fixed_zscores(self, spark_windows):
+        from skope_api_spark.api import kernels
+
+        series, out = spark_windows
+        for sid, xs in series.items():
+            _assert_matches(out[(sid, "fz")], kernels.fixed_zscore(xs, xs), 1e-9)
+            _assert_matches(
+                out[(sid, "rz")], kernels.fixed_zscore(xs, xs[:REF_BANDS]), 1e-9
+            )
+
+    def test_constant_runs_have_exactly_zero_sigma(self):
+        """numpy's std of a constant non-representable run is not 0; the
+        kernels still treat it as sigma == 0 (NULL), like Spark."""
+        from skope_api_spark.api import kernels
+
+        for v, n in ((23.3, 7), (0.1, 3)):
+            run = np.full(n, v)
+            assert np.nanstd(run) > 0
+            assert np.isnan(kernels.rolling_zscore(np.append(run, v + 1), n)[-1])
+            assert np.isnan(kernels.fixed_zscore(run, run)).all()
+
+
 class TestGapFillInterpolate:
     def test_interior_gaps_linear_edges_null(self, spark):
         from datetime import datetime
