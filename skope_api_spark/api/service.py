@@ -5,17 +5,24 @@ Mirrors the reference lifecycle (SURVEY.md §3; reference
 (interval algebra) → extract (pruned scan + cell predicate) → zonal agg →
 transform → per-series smoothing → relabel/clip → summarize.
 
-Execution shape: a request is ONE Spark aggregation and ONE collect. The
-plan is the cell selection, a band filter and the per-band zonal
-statistic. The band filter covers the padded extraction range and, for a
-fixed-reference z-score, the reference range too (an OR of disjoint
-intervals), so the reference never needs a second scan. The collect runs
-under a cancellable job group (cooperative timeout — the reference's anyio
-``fail_after`` → 504 becomes ``TimeseriesTimeoutError``; the Spark jobs
-are actually cancelled, not orphaned). Transform, smoothers, clipping and
-summaries then run on the driver over the ≤ n_bands collected rows with
-the numpy kernels of ``api/kernels.py``. ``execute_many`` runs the same
-chain on each request's slice of one batched aggregation.
+One lifecycle: ``execute(req)`` is ``_run([req])[0]``, ``execute_many`` is
+``_run(reqs)``, and neither calls the other (the traced benchmark wraps
+both as one span; nesting them would count a request twice). Per
+(dataset, variable, statistic) group, ``_run`` plans every request and
+runs ONE Spark aggregation and ONE collect (``_zonal``): a scan filtered
+by the OR of the disjoint band intervals the group needs (padded
+extractions and fixed z-score reference ranges) and by its cell bounding
+box, then a literal cell predicate for a lone one-cell request or else
+one broadcast ``(query_id, row, col, bgte, blte)`` mask join. Each
+request's slice runs transform, smoothers, clipping and summaries on the
+driver (``api/kernels.py``); requests with ``include_uncertainty`` share
+one more aggregation over the ``_uncertainty`` cube.
+
+The collect runs under a cancellable job group (cooperative timeout — the
+reference's anyio ``fail_after`` → 504 becomes ``TimeseriesTimeoutError``;
+the Spark jobs are cancelled, not orphaned). A group's deadline is its
+largest ``max_processing_time``, or none if any member has 0 ("no
+deadline"), so no request inherits a neighbour's deadline.
 
 Known divergence from the reference (documented in SURVEY.md §2.5 W7): the
 reference hard-codes an annual PeriodIndex (``freq="A"``,
@@ -27,12 +34,10 @@ resolution.
 from __future__ import annotations
 
 import math
-import operator
 import threading
 import time
 import uuid
 from dataclasses import dataclass, field
-from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -44,11 +49,9 @@ from skope_api_spark.geometry import (
     DEFAULT_MAX_CELLS,
     Grid,
     mask_df,
-    point_predicate,
+    point_cell,
     rasterize_all_touched,
-    select_cells,
 )
-from skope_api_spark.operators.batch import batch_mask_df
 from skope_api_spark.operators.zonal import zonal_series
 from skope_api_spark.plans.catalog import Catalog, DatasetMeta
 from skope_api_spark.plans.intervals import (
@@ -60,7 +63,6 @@ from skope_api_spark.plans.intervals import (
     normalize_time_range,
     output_band_range,
 )
-from skope_api_spark.session import local_frame
 from skope_api_spark.sources.cube import analytic_cube, cell_area_m2
 
 
@@ -227,35 +229,19 @@ class TimeseriesService:
                 meta.time_range,
                 meta.resolution,
             )
-        grid = _grid(meta)
-        cells = self._selection_cells(req, grid)
+        grid, area = _grid(meta), req.selected_area
+        geom = area.get("geometry", {}) if area.get("type") == "Feature" else area
+        cells = (
+            [point_cell(grid, area)]
+            if geom.get("type") == "Point"
+            else rasterize_all_touched(grid, area, max_cells=self.max_cells)
+        )
         return _Plan(grid, requested, extract, reference, cells)
-
-    def _selection_cells(
-        self, req: M.TimeseriesV2Request, grid: Grid
-    ) -> list[tuple[int, int]]:
-        """The selected (row, col) set for any geometry (validated)."""
-        area_type = req.selected_area.get("type")
-        if area_type == "Point" or (
-            area_type == "Feature"
-            and req.selected_area.get("geometry", {}).get("type") == "Point"
-        ):
-            point_predicate(grid, req.selected_area)  # bounds validation
-            r, c = grid.cell_index(*_point_coords(req.selected_area))
-            return [(min(r, grid.rows - 1), min(c, grid.cols - 1))]
-        return rasterize_all_touched(grid, req.selected_area, max_cells=self.max_cells)
-
-    def _select(self, cube: DataFrame, cells: list[tuple[int, int]]) -> DataFrame:
-        if len(cells) == 1:
-            (r, c) = cells[0]  # point: pushdown equality, no join
-            return cube.where((F.col("row") == r) & (F.col("col") == c))
-        return select_cells(cube, mask_df(self.spark, cells))
 
     def _assemble(
         self, req: M.TimeseriesV2Request, plan: _Plan, rows: list, t0: float
     ) -> M.TimeseriesV2Response:
-        """Run the chain on the collected per-band rows; build the response."""
-        rows = sorted(rows, key=lambda r: r.band)
+        """Run the chain on the band-ordered per-band rows; build the response."""
         requested, extract = plan.requested, plan.extract
         base = [r for r in rows if extract.gte <= r.band <= extract.lte]
         ref = None if plan.reference is None else _values(rows, plan.reference)
@@ -313,66 +299,16 @@ class TimeseriesService:
         )
 
     def execute(self, req: M.TimeseriesV2Request) -> M.TimeseriesV2Response:
-        t0 = time.perf_counter()
-        meta = self.catalog.variable(req.dataset_id, req.variable_id)
-        cube = self.cube(meta, req.variable_id)
-        plan = self._plan(req, meta)
-        in_bands = reduce(
-            operator.or_, (F.col("band").between(b.gte, b.lte) for b in plan.bands())
-        )
-        base = zonal_series(
-            self._select(cube, plan.cells).where(in_bands), req.zonal_statistic
-        ).select("band", "time", "value")
-        rows = collect_with_timeout(self.spark, base, req.max_processing_time)
-        resp = self._assemble(req, plan, rows, t0)
-        if req.include_uncertainty:
-            resp.uncertainty = self._uncertainty_series(req, meta, plan)
-        return resp
+        return self._run([req])[0]
 
-    def _uncertainty_series(
-        self, req: M.TimeseriesV2Request, meta: DatasetMeta, plan: _Plan
-    ) -> M.SeriesResult | None:
-        """S6 — zonal series of the companion uncertainty slice over the
-        request's cells, clipped to the requested range (no padding:
-        transforms and smoothers never apply to the uncertainty channel)."""
-        try:
-            ucube = self.cube(meta, req.variable_id + "_uncertainty")
-        except KeyError:
-            return None  # dataset has no uncertainty companion
-        requested = plan.requested
-        ucells = self._select(ucube, plan.cells).where(
-            F.col("band").between(requested.gte, requested.lte)
-        )
-        rows = collect_with_timeout(
-            self.spark,
-            zonal_series(ucells, req.zonal_statistic).select("band", "time", "value"),
-            req.max_processing_time,
-        )
-        if not rows:
-            return None
-        rows.sort(key=lambda r: r.band)
-        return M.SeriesResult(
-            name="uncertainty",
-            time_range=M.TimeRangeModel(gte=rows[0].time, lte=rows[-1].time),
-            values=[r.value for r in rows],
-        )
+    def execute_many(self, reqs: list[M.TimeseriesV2Request]) -> list[M.TimeseriesV2Response]:
+        """Batched execution — the 100 TB serving shape: thousands of
+        requests, one aggregation per (dataset, variable, statistic)."""
+        return self._run(reqs)
 
-    def execute_many(
-        self, reqs: list[M.TimeseriesV2Request]
-    ) -> list[M.TimeseriesV2Response]:
-        """Batched execution: requests sharing (dataset, variable, statistic)
-        compile into ONE scan + ONE zonal aggregation + ONE collect via a
-        query_id-tagged broadcast mask join (operators.batch pattern) — the
-        100 TB serving shape: thousands of requests, a handful of jobs.
-
-        Each request's bands join through a broadcast ranges dim of
-        disjoint intervals (its extraction plus any reference range), and
-        its slice of the collected rows runs the same driver chain as
-        ``execute``.
-        """
+    def _run(self, reqs: list[M.TimeseriesV2Request]) -> list[M.TimeseriesV2Response]:
         t0 = time.perf_counter()
         results: list[M.TimeseriesV2Response | None] = [None] * len(reqs)
-
         groups: dict[tuple, list[int]] = {}
         for i, req in enumerate(reqs):
             key = (req.dataset_id, req.variable_id, req.zonal_statistic)
@@ -382,32 +318,80 @@ class TimeseriesService:
             meta = self.catalog.variable(dataset_id, variable_id)
             cube = self.cube(meta, variable_id)
             plans = {i: self._plan(reqs[i], meta) for i in idxs}
+            budgets = [reqs[i].max_processing_time for i in idxs]
+            timeout = max(budgets) if min(budgets) > 0 else 0  # 0: no deadline
+            picks = [(p.cells, p.bands()) for p in plans.values()]
+            for i, rows in zip(idxs, self._zonal(cube, stat, picks, timeout)):
+                results[i] = self._assemble(reqs[i], plans[i], rows, t0)
 
-            mask = batch_mask_df(
-                self.spark, {f"q{i}": p.cells for i, p in plans.items()}
-            )
-            ranges = local_frame(
-                self.spark,
-                [(f"q{i}", b.gte, b.lte) for i, p in plans.items() for b in p.bands()],
-                "query_id string, bgte int, blte int",
-            )
-            # one scan: inner broadcast mask join (fan-out per membership),
-            # then per-query band clipping via the broadcast ranges dim
-            tagged = (
-                cube.join(F.broadcast(mask), ["row", "col"])
-                .join(F.broadcast(ranges), "query_id")
-                .where(F.col("band").between(F.col("bgte"), F.col("blte")))
-            )
-            base_all = zonal_series(
-                tagged, stat, keys=("query_id", "band", "time")
-            ).select("query_id", "band", "time", "value")
-            timeout = max(reqs[i].max_processing_time for i in idxs)
-            by_query: dict[str, list] = {f"q{i}": [] for i in idxs}
-            for row in collect_with_timeout(self.spark, base_all, timeout):
-                by_query[row.query_id].append(row)
-            for i in idxs:
-                results[i] = self._assemble(reqs[i], plans[i], by_query[f"q{i}"], t0)
+            unc = [i for i in idxs if reqs[i].include_uncertainty]
+            if not unc:
+                continue
+            try:
+                ucube = self.cube(meta, variable_id + "_uncertainty")
+            except KeyError:
+                continue  # dataset has no uncertainty companion
+            # S6 — no padding: transforms and smoothers never apply to the
+            # uncertainty channel, so each request reads its requested range
+            picks = [(plans[i].cells, [plans[i].requested]) for i in unc]
+            for i, rows in zip(unc, self._zonal(ucube, stat, picks, timeout)):
+                if rows:
+                    results[i].uncertainty = M.SeriesResult(
+                        name="uncertainty",
+                        time_range=M.TimeRangeModel(gte=rows[0].time, lte=rows[-1].time),
+                        values=[r.value for r in rows],
+                    )
         return results  # type: ignore[return-value]
+
+    def _zonal(
+        self,
+        cube: DataFrame,
+        stat: str,
+        picks: list[tuple[list[tuple[int, int]], list[BandRange]]],
+        timeout_ms: int,
+    ) -> list[list]:
+        """One scan, one zonal aggregation and one collect for every pick
+        (its (row, col) cells and disjoint band intervals); returns each
+        pick's per-band rows in band order.
+
+        The scan is filtered by the union of the picks' bands and their
+        cells' bounding box, which the Parquet reader prunes with. A lone
+        one-cell pick is a literal ``row = r AND col = c`` predicate;
+        anything else is ONE broadcast join of a ``(query_id, row, col,
+        bgte, blte)`` mask, clipped by ``band BETWEEN bgte AND blte``
+        (inner, not semi: a cell may belong to several picks)."""
+        cells = [rc for cs, _ in picks for rc in cs]
+        bands = disjoint_band_ranges([b for _, bs in picks for b in bs])
+        # predicates are SQL strings: one py4j call each, where a Column
+        # costs a round trip (~1 ms) per operator
+        in_bands = " OR ".join(f"band BETWEEN {b.gte} AND {b.lte}" for b in bands)
+        if len(cells) == 1:  # one pick of one cell (a pick is never empty)
+            (r, c), = cells
+            selected = cube.where(f"({in_bands}) AND row = {r} AND col = {c}")
+            selected = selected.withColumn("query_id", F.lit(0))
+        else:
+            rs, cs = zip(*cells)
+            mask = mask_df(
+                self.spark,
+                [(q, r, c, b.gte, b.lte)
+                 for q, (qcells, qbands) in enumerate(picks)
+                 for r, c in qcells for b in qbands],
+                "query_id int, row int, col int, bgte int, blte int",
+            )
+            selected = (
+                cube.where(
+                    f"({in_bands}) AND row BETWEEN {min(rs)} AND {max(rs)} "
+                    f"AND col BETWEEN {min(cs)} AND {max(cs)}"
+                )
+                .join(F.broadcast(mask), ["row", "col"])
+                .where("band BETWEEN bgte AND blte")
+            )
+        keys = ("query_id", "band", "time")
+        series = zonal_series(selected, stat, keys=keys).select(*keys, "value")
+        out: list[list] = [[] for _ in picks]
+        for row in collect_with_timeout(self.spark, series, timeout_ms):
+            out[row.query_id].append(row)
+        return [sorted(rows, key=lambda r: r.band) for rows in out]
 
     def execute_v1(self, req: M.TimeseriesV1Request) -> dict:
         """P9 — legacy adapter: run v2, reshape (reference routers/v1)."""
@@ -438,9 +422,3 @@ class TimeseriesService:
             for m in self.catalog.datasets.values()
         ]
 
-
-def _point_coords(geojson: dict) -> tuple[float, float]:
-    if geojson.get("type") == "Feature":
-        geojson = geojson["geometry"]
-    lon, lat = geojson["coordinates"][:2]
-    return lon, lat

@@ -253,11 +253,13 @@ def rasterize_all_touched(
     return sorted(cells)
 
 
-def point_predicate(grid: Grid, geojson: dict):
-    """Point → (row, col) equality predicate (P5); bounds-checked (P7)."""
+def point_cell(grid: Grid, geojson: dict) -> tuple[int, int]:
+    """Point (or Point Feature) → its (row, col) cell (P5), bounds-checked
+    (P7). Points on the far edge land on the last cell (``covers`` is
+    inclusive)."""
     t = geojson.get("type")
     if t == "Feature":
-        return point_predicate(grid, geojson["geometry"])
+        return point_cell(grid, geojson["geometry"])
     if t != "Point":
         raise InvalidGeometryError(f"expected Point, got {t!r}")
     lon, lat = geojson["coordinates"][:2]
@@ -266,14 +268,22 @@ def point_predicate(grid: Grid, geojson: dict):
             f"point ({lon}, {lat}) outside dataset bounds"
         )
     row, col = grid.cell_index(lon, lat)
-    # points on the far edge land on the last cell (covers() is inclusive)
-    row, col = min(row, grid.rows - 1), min(col, grid.cols - 1)
+    return min(row, grid.rows - 1), min(col, grid.cols - 1)
+
+
+def point_predicate(grid: Grid, geojson: dict):
+    """Point → (row, col) equality predicate: pure pushdown, no join."""
+    row, col = point_cell(grid, geojson)
     return (F.col("row") == row) & (F.col("col") == col)
 
 
-def mask_df(spark: SparkSession, cells: list[tuple[int, int]]) -> DataFrame:
-    """The selected (row, col) cells as a broadcastable frame (via Arrow)."""
-    return local_frame(spark, cells, "row int, col int")
+def mask_df(
+    spark: SparkSession, rows: list[tuple], schema: str = "row int, col int"
+) -> DataFrame:
+    """Selected cells as a broadcastable frame (via Arrow): (row, col)
+    pairs, or rows of any ``schema`` that carries ``row`` and ``col`` (a
+    batch tags each cell with its ``query_id``)."""
+    return local_frame(spark, rows, schema)
 
 
 def select_cells(cube: DataFrame, mask: DataFrame) -> DataFrame:

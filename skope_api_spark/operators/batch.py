@@ -15,18 +15,11 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from skope_api_spark.geometry import mask_df
 from skope_api_spark.operators.zonal import zonal_series
-from skope_api_spark.session import local_frame
-
-
-def batch_mask_df(
-    spark: SparkSession, masks: Mapping[str, Sequence[tuple[int, int]]]
-) -> DataFrame:
-    rows = [(qid, r, c) for qid, cells in masks.items() for (r, c) in cells]
-    return local_frame(spark, rows, "query_id string, row int, col int")
 
 
 def batched_zonal_series(
@@ -38,6 +31,10 @@ def batched_zonal_series(
 ) -> DataFrame:
     """All queries' zonal series in one job: (query_id, *series_keys,
     value, n_cells, n_valid)."""
-    mask = batch_mask_df(cube.sparkSession, masks)
+    mask = mask_df(
+        cube.sparkSession,
+        [(qid, r, c) for qid, cells in masks.items() for (r, c) in cells],
+        "query_id string, row int, col int",
+    )
     tagged = cube.join(F.broadcast(mask), ["row", "col"])  # inner, fan-out
     return zonal_series(tagged, stat, keys=("query_id", *series_keys))

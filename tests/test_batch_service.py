@@ -8,7 +8,8 @@ from datetime import date
 import pytest
 
 from skope_api_spark.api import models as M
-from skope_api_spark.api.service import TimeseriesService
+from skope_api_spark.api import service as service_mod
+from skope_api_spark.api.service import TimeseriesService, TimeseriesTimeoutError
 
 POINT = {"type": "Point", "coordinates": [-123.0, 45.0]}
 SQUARE = {
@@ -43,6 +44,7 @@ class TestExecuteMany:
                 variable_id="float32_variable",
                 selected_area=SQUARE,
                 time_range=M.OptionalTimeRangeModel(gte=date(1, 1, 1), lte=date(4, 1, 1)),
+                include_uncertainty=True,
                 requested_series_options=[
                     M.SeriesOptions(name="raw", smoother=M.NoSmoother()),
                     M.SeriesOptions(
@@ -63,6 +65,7 @@ class TestExecuteMany:
                 variable_id="uint16_variable",
                 selected_area=SQUARE,
                 zonal_statistic="median",
+                include_uncertainty=True,  # no companion cube: None both ways
             ),
         ]
         batched = service.execute_many(reqs)
@@ -70,6 +73,36 @@ class TestExecuteMany:
         assert len(batched) == len(individual) == 4
         for b, s in zip(batched, individual):
             assert _strip_time(b) == _strip_time(s)
+        assert batched[1].uncertainty is not None
+        assert len(batched[1].uncertainty.values) == 4
+        assert batched[3].uncertainty is None
+
+    def test_no_deadline_member_keeps_the_group_unbounded(self, service, monkeypatch):
+        """max_processing_time=0 means no deadline; a neighbour's 1 ms
+        budget must not become the group's deadline."""
+        budgets = []
+        real = service_mod.collect_with_timeout
+
+        def spy(spark, df, timeout_ms):
+            budgets.append(timeout_ms)
+            return real(spark, df, timeout_ms)
+
+        monkeypatch.setattr(service_mod, "collect_with_timeout", spy)
+        reqs = [
+            M.TimeseriesV2Request(
+                dataset_id="annual_5x5x5_dataset",
+                variable_id="float32_variable",
+                selected_area=area,
+                max_processing_time=ms,
+            )
+            for area, ms in ((POINT, 0), (SQUARE, 1))
+        ]
+        out = service.execute_many(reqs)
+        assert budgets == [0]
+        assert [r.n_cells for r in out] == [1, 4]
+        # with every member bounded, the group takes the largest budget
+        with pytest.raises(TimeseriesTimeoutError):
+            service.execute_many([reqs[1], reqs[1].model_copy(update={"max_processing_time": 2})])
 
     def test_overlapping_reference_range_alone_and_batched(self, service):
         """A fixed-reference z-score whose reference range overlaps its

@@ -16,6 +16,7 @@ from skope_api_spark.geometry import (
     SelectedAreaOutOfBoundsError,
     SelectedAreaPolygonIsTooLargeError,
     mask_df,
+    point_cell,
     point_predicate,
     rasterize_all_touched,
     select_cells,
@@ -41,6 +42,18 @@ class TestCellIndex:
     def test_point_predicate_bounds(self, spark):
         with pytest.raises(SelectedAreaOutOfBoundsError):
             point_predicate(GRID, {"type": "Point", "coordinates": [-130.0, 42.0]})
+        # far edges are inside (covers() is inclusive) and clamp to the last cell
+        for lon, lat, cell in [(-118.0, 40.0, (4, 4)), (-118.0, 45.0, (0, 4)),
+                               (-123.0, 40.0, (4, 0)), (-120.0, 42.5, (2, 3))]:
+            point = {"type": "Point", "coordinates": [lon, lat]}
+            assert point_cell(GRID, point) == cell
+            assert point_cell(GRID, {"type": "Feature", "geometry": point}) == cell
+        for lon, lat in [(-118.0 + 1e-9, 42.0), (-120.0, 40.0 - 1e-9),
+                         (-123.0 - 1e-9, 42.0), (-120.0, 45.0 + 1e-9)]:
+            with pytest.raises(SelectedAreaOutOfBoundsError):
+                point_cell(GRID, {"type": "Point", "coordinates": [lon, lat]})
+        with pytest.raises(InvalidGeometryError):
+            point_cell(GRID, {"type": "LineString", "coordinates": [[-120, 42], [-119, 43]]})
 
     def test_point_on_far_edge_clamps(self, spark):
         pred = point_predicate(GRID, {"type": "Point", "coordinates": [-118.0, 40.0]})

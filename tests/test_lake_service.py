@@ -63,3 +63,25 @@ class TestLakeService:
         svc.execute(req())
         svc.execute(req(zonal_statistic="median"))
         assert len(reads) == 1
+
+    def test_batched_scan_pushes_the_band_filter(self, spark, lake, monkeypatch):
+        from skope_api_spark.api import service as service_mod
+
+        collected = []
+        real = service_mod.collect_with_timeout
+
+        def spy(spark, df, timeout_ms):
+            collected.append(df)
+            return real(spark, df, timeout_ms)
+
+        monkeypatch.setattr(service_mod, "collect_with_timeout", spy)
+        square = {
+            "type": "Polygon",
+            "coordinates": [[[-121.9, 43.9], [-120.1, 43.9], [-120.1, 42.1],
+                             [-121.9, 42.1], [-121.9, 43.9]]],
+        }
+        lake_service(spark, lake).execute_many([req(), req(selected_area=square)])
+        (df,) = collected
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        pushed = plan.split("PushedFilters")[1][:300]
+        assert "GreaterThanOrEqual(band," in pushed and "LessThanOrEqual(ban" in pushed

@@ -1,6 +1,7 @@
-"""Request plan shape: one Spark aggregation and one collect per request,
-and the layer entry points the traced benchmark (``perfbench/spans.py``)
-wraps stay module globals of ``api/service.py``."""
+"""Request plan shape: one Spark aggregation and one collect per request
+(and per batched group, over one broadcast mask), and the layer entry
+points the traced benchmark (``perfbench/spans.py``) wraps stay module
+globals of ``api/service.py``."""
 
 from __future__ import annotations
 
@@ -12,6 +13,8 @@ import pytest
 from skope_api_spark.api import models as M
 from skope_api_spark.api import service as service_mod
 from skope_api_spark.api.service import TimeseriesService
+from skope_api_spark.sources.cube import ingest_to_parquet
+from skope_api_spark.sources.lake import lake_service
 
 POINT = {"type": "Point", "coordinates": [-120.0, 42.5]}
 SQUARE = {
@@ -49,6 +52,15 @@ def service(spark):
     return TimeseriesService(spark)
 
 
+@pytest.fixture(scope="module")
+def lake_svc(spark, tmp_path_factory):
+    """A Parquet-lake service: its cube is a plain file scan, so every
+    exchange in a request's plan is the service's own."""
+    path = str(tmp_path_factory.mktemp("plan_lake") / "cube")
+    ingest_to_parquet(spark, path)
+    return lake_service(spark, path)
+
+
 def _req(**kw) -> M.TimeseriesV2Request:
     return M.TimeseriesV2Request(
         dataset_id="annual_5x5x5_dataset", variable_id="float32_variable", **kw
@@ -62,8 +74,8 @@ def _plan_nodes(df) -> set[str]:
     return {m.group(1) for m in re.finditer(r"^[\s:+\-|]*([A-Za-z]+)", text, re.M)}
 
 
-@pytest.mark.parametrize("name", sorted(REQUESTS))
-def test_one_collect_of_one_aggregation(service, monkeypatch, name):
+def _spy_collects(monkeypatch) -> list:
+    """The list every DataFrame handed to ``collect_with_timeout`` goes to."""
     collected = []
     real = service_mod.collect_with_timeout
 
@@ -72,12 +84,44 @@ def test_one_collect_of_one_aggregation(service, monkeypatch, name):
         return real(spark, df, timeout_ms)
 
     monkeypatch.setattr(service_mod, "collect_with_timeout", spy)
+    return collected
+
+
+def _broadcasts(df) -> int:
+    """BroadcastExchange nodes of the physical plan (the initial one, when
+    adaptive execution has re-planned it into query stages)."""
+    text = df._jdf.queryExecution().executedPlan().toString()
+    return text.split("== Initial Plan ==")[-1].count("BroadcastExchange")
+
+
+@pytest.mark.parametrize("name", sorted(REQUESTS))
+def test_one_collect_of_one_aggregation(service, monkeypatch, name):
+    collected = _spy_collects(monkeypatch)
     resp = service.execute(_req(**REQUESTS[name]))
     assert resp.series and resp.series[0].values
     assert len(collected) == 1
     nodes = _plan_nodes(collected[0])
     assert "Aggregate" in nodes or "HashAggregate" in nodes
     assert not nodes & {"Window", "Sort", "Union", "InMemoryRelation", "InMemoryTableScan"}
+
+
+def test_batched_group_is_one_aggregation_over_one_broadcast(lake_svc, monkeypatch):
+    reqs = [_req(**REQUESTS["point"]), _req(**REQUESTS["polygon_rolling_z"])]
+    collected = _spy_collects(monkeypatch)
+    assert [r.n_cells for r in lake_svc.execute_many(reqs)] == [1, 4]
+    assert len(collected) == 1
+    (df,) = collected
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"^[\s:+\-|]*Aggregate ", optimized, re.M)) == 1
+    assert _broadcasts(df) == 1
+    assert not _plan_nodes(df) & {"Window", "Sort", "Union", "InMemoryRelation", "InMemoryTableScan"}
+
+
+def test_lone_point_has_no_broadcast(lake_svc, monkeypatch):
+    collected = _spy_collects(monkeypatch)
+    lake_svc.execute(_req(**REQUESTS["point"]))
+    (df,) = collected
+    assert _broadcasts(df) == 0
 
 
 def test_uncertainty_reuses_the_selection(service, monkeypatch):
