@@ -3,24 +3,32 @@
 
 Prints exactly ONE JSON line on stdout:
   {"metric": "headline_total", "value": <sum warm sec>, "unit": "sec",
-   "queries": {"q1_pricing_summary": sec, ...},
-   "queries_cold": {...}, "sf": 0.1}
+   "queries": {"q1_pricing_summary": sec, ...}, "queries_cold": {...},
+   "queries_min": {...}, "queries_max": {...},
+   "value_ext": ..., "queries_ext": {...}, "queries_ext_cold": {...},
+   "queries_ext_min": {...}, "queries_ext_max": {...},
+   "unstable": [name, ...], "cpus": N, "head": "<sha>" | null,
+   "host": {...}, "sf": 0.1}
 
 Each query is materialized with the noop sink (full execution, no
 driver-side collect cost — we're timing the engine, not Python pickling).
 
-Each query runs 1 cold + N warm times (round 4, N=3 since r8 for the
-headline and r17 for the ext group): the first (cold) run absorbs
-one-time whole-stage-codegen JIT — ~10 s for the very wide hash plans
-(minhash/simhash), pure noise for regression tracking — and the MEDIAN
-of the warm runs is the steady-state number the totals sum. Cold times
-are kept as a separate column so codegen-cost regressions stay visible.
+Each query runs 1 cold + N warm times (N = $SPARK_GRAFT_BENCH_RUNS,
+default 3): the first (cold) run absorbs one-time whole-stage-codegen
+JIT — ~10 s for the very wide hash plans (minhash/simhash) — and the
+MEDIAN of the warm runs is the steady-state number the totals sum. Cold
+times are kept as a separate column so codegen-cost regressions stay
+visible. The warm min and max show each row's spread, and ``unstable``
+names the rows whose own samples say the run was disturbed (see
+``unstable()``); compare only rows that are not in it. ``cpus`` is the
+parallelism of the session the queries ran on, ``head`` the commit.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -77,121 +85,51 @@ HEADLINE_EXT = [
 ]
 
 
-# Per-query quiet anchors for the contention self-labeler (r15, VERDICT
-# r14 item 4): when per-query ratios vs these inflate UNIFORMLY beyond
-# ~1.3x, the run gets contention_suspect=true — the all-boats-rise
-# hypervisor signature that cost manual arbitration in r12 and r14. A
-# non-uniform inflation (a few queries hot, the rest at par) is NOT
-# flagged: that shape is a code regression and must stay visible.
-#
-# RE-ANCHORED r16 (VERDICT r15 item 5): the r13 anchors sat ~1.25x below
-# every r15-observable run (median ratio 1.235 on a clean bracket — 0.065
-# from the 1.3 trigger), which would eventually misfire suspect=true on
-# clean runs. Policy executed: three consecutive suspect=false same-HEAD
-# brackets agreeing within 5% (16.582 / 16.444 / 16.107 s headline,
-# medians 1.165 / 1.186 / 1.124 vs r13) -> anchors = per-query MIN across
-# that bracket. Re-anchor again only under the same rule.
-QUIET_ANCHORS = {
-    "q1_pricing_summary": 0.593,
-    "q3_shipping_priority": 0.762,
-    "q5_local_supplier_volume": 0.937,
-    "top_parts_by_revenue": 0.955,
-    "distinct_agg_suppliers_per_brand": 0.819,
-    "w1_centered_moving_average": 0.359,
-    "w3_rolling_zscore": 0.397,
-    "sessionize_events": 0.582,
-    "range_frame_rolling_hour": 0.506,
-    "asof_join_purchase_to_click": 0.631,
-    "dedup_exact_documents": 0.277,
-    "dedup_minhash_near_duplicates": 2.553,
-    "dedup_simhash_near_duplicates": 2.418,
-    "sim_cosine_topk": 0.828,
-    "sim_lsh_bucket_topk": 1.409,
-    "text_quality_stats": 0.397,
-    "text_tfidf_top_terms": 0.814,
-    "graph_triangle_top_nodes": 3.559,
-    "graph_pagerank_copurchase": 2.927,
-    "stats_auc_chars_vs_lang": 0.64,
-    "hist_equi_depth_price": 3.854,
-    "text_bpe_train_merges": 1.787,
-    "text_bpe_encode_profile": 3.802,
-    "er_customer_record_clusters": 7.736,
-    "sim_pq_topk": 1.208,
-    "spatial_join_points_polygons": 1.069,
-    "stats_ks_price_by_segment": 1.986,
-}
+# A row is unstable when its warm samples disagree with each other by more
+# than this factor (max/min), or when their median is slower than the cold
+# run, which alone pays codegen: either way the run was disturbed, and its
+# number is not evidence of a change in the code.
+UNSTABLE_SPREAD = 1.5
 
 
-def contention_check(all_times: dict[str, float]) -> dict | None:
-    """Uniform-inflation detector vs the committed quiet anchors.
-
-    suspect=true iff the MEDIAN per-query ratio exceeds 1.3 AND >=80% of
-    anchored queries are over 1.2x — the all-boats-rise hypervisor
-    signature. Isolated hot queries keep suspect=false so real
-    regressions are never masked.
-
-    SEMANTICS (r16, ADVICE r15): suspect=true means "retry under quiet
-    conditions REQUIRED", never exoneration — a genuine global
-    regression (a session/config change inflating every query ~1.5x)
-    produces the same uniform shape. The disambiguator is persistence:
-    hypervisor windows pass, code regressions don't. When the LAST
-    `PERSISTENT_N` recorded driver rounds (BENCH_r*.json) were all
-    uniformly inflated too, the run additionally sets
-    persistent_uniform_inflation=true — treat THAT as a regression until
-    a quiet-host run proves otherwise (and if a quiet-host bracket
-    agrees with the anchors, re-anchor instead; see QUIET_ANCHORS note).
-    """
-    ratios = sorted(
-        t / QUIET_ANCHORS[n]
-        for n, t in all_times.items()
-        if QUIET_ANCHORS.get(n)
-    )
-    if len(ratios) < 8:
-        return None
-    med = ratios[len(ratios) // 2]
-    frac = sum(r > 1.2 for r in ratios) / len(ratios)
-    suspect = bool(med > 1.3 and frac >= 0.8)
-    out = {
-        "median_ratio_vs_quiet": round(med, 3),
-        "frac_over_1p2": round(frac, 2),
-        "suspect": suspect,
-    }
-    if suspect:
-        prior = _prior_round_median_ratios()
-        if len(prior) >= PERSISTENT_N and all(
-            r is not None and r > 1.3 for r in prior[-PERSISTENT_N:]
-        ):
-            out["persistent_uniform_inflation"] = True
-    return out
+def row_stats(cold: float, warm: list[float]) -> tuple[float, float, float]:
+    """(min, median, max) of a row's warm samples; of its cold run alone
+    when it has none (SPARK_GRAFT_BENCH_RUNS=0)."""
+    s = sorted(warm) or [cold]
+    return s[0], s[len(s) // 2], s[-1]
 
 
-PERSISTENT_N = 3
-
-
-def _prior_round_median_ratios() -> list:
-    """median_ratio_vs_quiet from the last recorded driver BENCH_r*.json
-    lines (None where a round predates the detector or didn't parse)."""
-    import glob
-    import re as _re
-
+def unstable(rows: dict[str, tuple[float, list[float]]]) -> list[str]:
+    """Names of the rows, given as ``name -> (cold, warm samples)``, whose
+    warm max/min exceeds UNSTABLE_SPREAD or whose warm median exceeds the
+    cold run. Each row is judged by its own samples only, so a slow row
+    never flags its neighbours, and a row with no warm sample is never
+    flagged."""
     out = []
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
-        try:
-            blob = open(path).read()
-        except OSError:
+    for name, (cold, warm) in rows.items():
+        if not warm:
             continue
-        m = _re.search(r'"median_ratio_vs_quiet":\s*([0-9.]+)', blob)
-        out.append(float(m.group(1)) if m else None)
+        lo, med, hi = row_stats(cold, warm)
+        if hi > UNSTABLE_SPREAD * lo or med > cold:
+            out.append(name)
     return out
+
+
+def git_head() -> str | None:
+    """The checkout's HEAD commit, or None outside a git checkout."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    if not os.path.exists(os.path.join(here, ".git")):
+        return None
+    r = subprocess.run(
+        ["git", "rev-parse", "HEAD"], cwd=here, capture_output=True, text=True
+    )
+    return r.stdout.strip() or None
 
 
 def host_telemetry() -> dict:
-    """Contention snapshot emitted with every bench line (r13, VERDICT r12
-    item 2): BENCH_r12 recorded a 46 s headline that was pure host noise
-    (three same-HEAD runs measured 15.1-17.3 s) and cost a full
-    arbitration pass to adjudicate. loadavg + competing heavy processes
-    make the next inflated artifact self-diagnosing."""
+    """Host load snapshot emitted with every bench line: loadavg, the
+    machine's CPU count and the number of OTHER java/python processes, so
+    an inflated run shows what it was competing with."""
     tele: dict = {}
     try:
         la1, la5, la15 = os.getloadavg()
@@ -199,9 +137,8 @@ def host_telemetry() -> dict:
     except OSError:
         pass
     tele["cpus"] = os.cpu_count()
-    # count OTHER java/python processes (potential CPU competitors for the
-    # 32-thread shuffle); exclude self and our own process subtree (the
-    # bench's JVM and any pyspark workers)
+    # count OTHER java/python processes (potential CPU competitors); exclude
+    # self and our own process subtree (the bench's JVM and pyspark workers)
     ppid_of: dict[int, int] = {}
     comm_of: dict[int, str] = {}
     try:
@@ -256,71 +193,51 @@ def main() -> int:
     warmup = qs.get("order_count_distribution") or next(iter(qs.values()))
     warmup(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    # r8 (VERDICT r7 "bench recording hygiene"): the recorded warm number
-    # is the MEDIAN of 3 post-cold runs — the shared host's ±30%
-    # run-to-run variance was costing round-over-round signal (r7's
-    # headline "regression" was mostly one contended recording). The cold
-    # column stays a single first run by construction (it exists to show
-    # one-time codegen cost, which only happens once).
     warm_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
-    def run_group(
-        names: list[str], runs: int
-    ) -> tuple[dict[str, float], dict[str, float]]:
-        warm: dict[str, float] = {}
-        cold: dict[str, float] = {}
+    def run_group(names: list[str]) -> dict[str, tuple[float, list[float]]]:
+        """name -> (cold seconds, warm samples) for each registered name."""
+        rows = {}
         for name in names:
             if name not in qs:
                 continue
             samples = []
-            for i in range(1 + runs):
+            for _ in range(1 + warm_runs):
                 t0 = time.perf_counter()
                 qs[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
-                dt = round(time.perf_counter() - t0, 3)
-                if i == 0:
-                    cold[name] = dt
-                else:
-                    samples.append(dt)
-            # SPARK_GRAFT_BENCH_RUNS=0 degrades to cold-only recording
-            # instead of crashing on an empty median
-            warm[name] = (
-                sorted(samples)[len(samples) // 2] if samples else cold[name]
-            )
-        return warm, cold
+                samples.append(round(time.perf_counter() - t0, 3))
+            rows[name] = (samples[0], samples[1:])
+        return rows
 
-    times, cold = run_group(HEADLINE, warm_runs)
-    # ext group: median-of-3 warm runs, SAME protocol as the headline
-    # (r17 measurement fix, VERDICT r16 items 1-2): the former single
-    # warm run made every ext number a one-sample draw, and whole-stage
-    # codegen JIT takes 3-5 runs to converge on slow hosts — BOTH r16
-    # "perf_weak" rows (graph_pagerank_copurchase 9.554 s, sim_pq_topk
-    # 2.736 s) were single ext runs that interleaved A/Bs measured at
-    # 3.07 s / ~1.9 s. Old single-run numbers stay recorded in
-    # BENCH_r16.json and earlier; the metric semantics are unchanged
-    # (per-query warm seconds; cold column still the first run). Cost:
-    # ~+2x ext wall per bracket (~+60 s at sf0.1), well inside the
-    # driver budget.
-    times_ext, cold_ext = run_group(HEADLINE_EXT, warm_runs)
+    def columns(rows: dict, prefix: str) -> dict:
+        stats = {n: row_stats(*r) for n, r in rows.items()}
+        return {
+            prefix: {n: s[1] for n, s in stats.items()},
+            f"{prefix}_cold": {n: r[0] for n, r in rows.items()},
+            f"{prefix}_min": {n: s[0] for n, s in stats.items()},
+            f"{prefix}_max": {n: s[2] for n, s in stats.items()},
+        }
+
+    headline = run_group(HEADLINE)
+    ext = run_group(HEADLINE_EXT)
 
     try:
         tele["loadavg_end"] = [round(x, 2) for x in os.getloadavg()]
     except OSError:
         pass
-    contention = contention_check({**times, **times_ext})
+    cols = {**columns(headline, "queries"), **columns(ext, "queries_ext")}
     out = {
         "host": tele,
-        "contention": contention,
-        "contention_suspect": bool(contention and contention["suspect"]),
         "metric": "headline_total",
-        "value": round(sum(times.values()), 3),
+        "value": round(sum(cols["queries"].values()), 3),
         "unit": "sec",
-        "queries": times,
-        "queries_cold": cold,
-        "value_ext": round(sum(times_ext.values()), 3),
-        "queries_ext": times_ext,
-        "queries_ext_cold": cold_ext,
+        "value_ext": round(sum(cols["queries_ext"].values()), 3),
+        **cols,
+        "unstable": unstable({**headline, **ext}),
+        "cpus": spark.sparkContext.defaultParallelism,
+        "head": git_head(),
         "sf": sf,
     }
     print(json.dumps(out))

@@ -8,9 +8,9 @@ code changes on its path. Running the two builds back-to-back on one
 boot in BOTH orders and taking the per-query geomean of the two ratios
 cancels order/warmth effects; only both-directions signals are real.
 
-Usage: python scripts/bench_ab.py [baseline-ref]
-       (default baseline: the newest `round N: verdict/...` commit,
-        i.e. the previous round's close-out state)
+Usage: python scripts/bench_ab.py BASELINE_REF
+       (the commit to compare HEAD against, usually the parent of the
+        change under test)
 
 Runs 4 benches (~25-40 min at sf0.1): HEAD, ref, ref, HEAD. Prints a
 markdown ratio table; queries with geomean > 1.25 are flagged REAL.
@@ -34,13 +34,6 @@ def sh(*args: str, cwd: str | None = None) -> str:
     return subprocess.run(
         args, cwd=cwd or REPO, check=True, capture_output=True, text=True
     ).stdout
-
-
-def default_baseline() -> str:
-    out = sh("git", "log", "--oneline", "--grep", "^round [0-9]*:", "-1")
-    if not out.strip():
-        raise SystemExit("no `round N:` commit found; pass a ref explicitly")
-    return out.split()[0]
 
 
 def run_bench(tree: str) -> dict:
@@ -74,8 +67,11 @@ def refuse_if_contended() -> None:
 
 
 def main() -> int:
+    if len(sys.argv) != 2:
+        print("usage: bench_ab.py BASELINE_REF", file=sys.stderr)
+        return 2
     refuse_if_contended()
-    ref = sys.argv[1] if len(sys.argv) > 1 else default_baseline()
+    ref = sys.argv[1]
     tree = tempfile.mkdtemp(prefix="bench_ab_")
     sh("git", "worktree", "add", "--detach", tree, ref)
     try:

@@ -120,11 +120,7 @@ def main() -> int:
     # shuffling sf1 shingle arrays
     from skope_api_spark.session import get_spark
 
-    spark = get_spark(
-        "groundtruth_sf1",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]",
-        shuffle_partitions=32,
-    )
+    spark = get_spark("groundtruth_sf1", shuffle_partitions=32)
     import __spark_entry__ as e
 
     qs = e.queries()

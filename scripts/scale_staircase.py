@@ -1,19 +1,21 @@
 #!/usr/bin/env python
-"""sf0.1 → sf1 wall-time staircase for the heaviest ext queries
-(VERDICT r13 item 7): measure each query's empirical scaling ratio so a
-superlinear curve is arbitrated BEFORE it is ever a 100 TB surprise.
+"""Wall-time staircase between two scale factors for the heaviest ext
+queries: measure each query's empirical scaling ratio so a superlinear
+curve is arbitrated BEFORE it is ever a 100 TB surprise.
 
-Each query runs twice per SF on one warm session (best-of-2 recorded);
-data grows 10×, so the implied empirical exponent is log10(t1/t01).
-O(n) → ratio ≈ 10 (exponent ≈ 1); O(n log n) → ratio ≈ 11-13;
-anything with exponent ≳ 1.3 needs a design explanation or a fix.
+Each query runs twice per SF on one warm session (best-of-2 recorded).
+The scale is the ratio of the two dirs' scale factors, and the implied
+empirical exponent is log(t_hi/t_lo) / log(scale): O(n) → exponent ≈ 1;
+O(n log n) → slightly above; anything ≳ 1.3 needs a design explanation
+or a fix. A second decade (e.g. sf1 → sf3) confirms an exponent is
+flat-or-falling beyond the first.
 
-Host telemetry (loadavg + competing processes) is recorded the same way
-bench.py records it — a contended host invalidates the run.
+Host telemetry is recorded with ``bench.host_telemetry()`` at the start
+and the end — a contended host invalidates the run.
 
-Usage: python scripts/scale_staircase.py [query ...]
-Env:   SPARK_GRAFT_SF01_DIR (default /root/testdata/sf0.1)
-       SPARK_GRAFT_SF1_DIR  (default /root/repo/.localdata/sf1)
+Usage: python scripts/scale_staircase.py LO_DIR HI_DIR [query ...]
+       Each dir's basename is its label and must be sfN (e.g. sf0.1, sf1),
+       with HI's N above LO's; anything else exits 2 with the usage line.
 """
 
 from __future__ import annotations
@@ -21,11 +23,16 @@ from __future__ import annotations
 import json
 import math
 import os
-import subprocess
+import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+USAGE = (
+    "usage: scale_staircase.py LO_DIR HI_DIR [query ...]\n"
+    "       dir basenames are sfN, with HI's N above LO's"
+)
 
 # The five heaviest ext-set queries by r13 bench wall-time whose cost is
 # dominated by a nontrivial distributed algorithm (wedge join, iterative
@@ -40,81 +47,29 @@ DEFAULT = (
 )
 
 
-def _host() -> dict:
-    try:
-        load = os.getloadavg()
-    except OSError:
-        load = (None, None, None)
-    try:
-        out = subprocess.run(
-            ["ps", "-eo", "comm"], capture_output=True, text=True, timeout=5
-        ).stdout
-        competing = sum(
-            1 for line in out.splitlines() if line.strip() in ("java", "python")
-        )
-    except Exception:  # noqa: BLE001
-        competing = None
-    return {"loadavg": list(load), "java_python_procs": competing}
+def sf_label(sf_dir: str) -> tuple[str, float] | None:
+    """(label, scale factor) from a dir whose basename is sfN, else None."""
+    label = os.path.basename(os.path.normpath(sf_dir))
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", label)
+    if not m or float(m.group(1)) <= 0:
+        return None
+    return label, float(m.group(1))
 
 
 def main() -> int:
-    names = sys.argv[1:] or list(DEFAULT)
-    # r15 (VERDICT r14 item 5): the step is configurable so a SECOND
-    # decade (e.g. sf1 -> sf3, scale 3) can confirm an exponent is
-    # flat-or-falling beyond the first. The exponent divides by
-    # log10(scale), so any step size reports on the same scale.
-    lo_name = os.environ.get("SPARK_GRAFT_STAIR_LO", "sf0.1")
-    hi_name = os.environ.get("SPARK_GRAFT_STAIR_HI", "sf1")
-    # r16 (ADVICE r15): label-aligned dir vars. STAIR_LO_DIR/HI_DIR are
-    # the canonical pair; the legacy SF01_DIR/SF1_DIR names remain as
-    # fallbacks but are misleading for a non-sf0.1->sf1 step. If a dir's
-    # basename looks like an sf name and disagrees with its label, abort
-    # rather than record a mislabeled datapoint.
-    lo_dir = os.environ.get(
-        "SPARK_GRAFT_STAIR_LO_DIR",
-        os.environ.get("SPARK_GRAFT_SF01_DIR", "/root/testdata/sf0.1"),
-    )
-    hi_dir = os.environ.get(
-        "SPARK_GRAFT_STAIR_HI_DIR",
-        os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/.localdata/sf1"),
-    )
-    for label, d in ((lo_name, lo_dir), (hi_name, hi_dir)):
-        base = os.path.basename(os.path.normpath(d))
-        if base.startswith("sf") and base != label:
-            print(
-                f"label/dir mismatch: {label!r} points at {d!r} "
-                f"(basename {base!r}) — set SPARK_GRAFT_STAIR_LO_DIR/"
-                "HI_DIR (or fix STAIR_LO/HI) so labels match the data",
-                file=sys.stderr,
-            )
-            return 2
-    # r16: derive the step size from the sfN labels when both parse —
-    # the env default of 10 silently mis-normalized an sf3->sf9 run
-    # (ratio 3, not 10), which inverts the sub/superlinear verdict. An
-    # explicit SPARK_GRAFT_STAIR_SCALE that contradicts the labels
-    # aborts rather than record a mislabeled exponent.
-    label_scale = None
-    try:
-        lo_sf = float(lo_name.removeprefix("sf"))
-        hi_sf = float(hi_name.removeprefix("sf"))
-        if lo_sf > 0:
-            label_scale = hi_sf / lo_sf
-    except ValueError:
-        pass
-    env_scale = os.environ.get("SPARK_GRAFT_STAIR_SCALE")
-    if env_scale is not None:
-        scale = float(env_scale)
-        if label_scale is not None and abs(scale - label_scale) > 1e-9:
-            print(
-                f"scale mismatch: SPARK_GRAFT_STAIR_SCALE={scale} but "
-                f"labels {lo_name}->{hi_name} imply {label_scale}",
-                file=sys.stderr,
-            )
-            return 2
-    elif label_scale is not None:
-        scale = label_scale
-    else:
-        scale = 10.0
+    if len(sys.argv) < 3:
+        print(USAGE, file=sys.stderr)
+        return 2
+    lo_dir, hi_dir = sys.argv[1:3]
+    names = sys.argv[3:] or list(DEFAULT)
+    lo, hi = sf_label(lo_dir), sf_label(hi_dir)
+    if lo is None or hi is None or hi[1] <= lo[1]:
+        print(USAGE, file=sys.stderr)
+        return 2
+    (lo_name, lo_sf), (hi_name, hi_sf) = lo, hi
+    scale = round(hi_sf / lo_sf, 6)
+
+    from bench import host_telemetry
     from skope_api_spark.session import get_spark
 
     spark = get_spark(
@@ -123,7 +78,7 @@ def main() -> int:
     import __spark_entry__ as e
 
     qs = e.queries()
-    host0 = _host()
+    host0 = host_telemetry()
     rows = []
     for name in names:
         times = {}
@@ -158,7 +113,7 @@ def main() -> int:
         )
     print(
         json.dumps(
-            {"staircase": rows, "host_start": host0, "host_end": _host()}
+            {"staircase": rows, "host_start": host0, "host_end": host_telemetry()}
         )
     )
     return 0

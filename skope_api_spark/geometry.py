@@ -5,12 +5,19 @@ The reference rasterizes the selected geometry over the raster grid with
 a numpy boolean mask (reference ``timeseries/app/schemas/geometry.py:87-94``
 point, ``:174-209`` polygon). Spark-first, the same semantics become:
 
-- **point** → affine-inverse cell index → equality predicate on the
-  materialized (row, col) columns — pure pushdown, no join (P5/S2);
+- **point** → affine-inverse cell index (``point_cell``) → equality
+  predicate on the materialized (row, col) columns — pure pushdown, no
+  join (P5/S2);
 - **polygon / multipolygon / feature collection** → driver-side
-  rasterization to the (tiny) set of touched (row, col) cells → broadcast
-  **left-semi join** against the cube (P6/J1). The mask is O(bbox cells),
-  never O(data).
+  rasterization to the (tiny) set of touched (row, col) cells
+  (``rasterize_all_touched``) → a broadcast mask frame (``mask_df``). The
+  mask is O(bbox cells), never O(data).
+
+The service (``api/service.py::_zonal``) turns a lone one-cell pick into
+a literal ``row = r AND col = c`` predicate and anything else into ONE
+tagged inner broadcast join of a ``(query_id, row, col, ...)`` mask, so a
+batch of picks shares one scan. The left-semi ``select_cells`` (J1) is
+kept only for the ``contract/skope.py`` registry query that pins it.
 
 rasterio/shapely are unavailable in this environment, so the rasterizer is
 implemented here in pure Python with the same ``all_touched=True`` contract:
@@ -293,15 +300,3 @@ def select_cells(cube: DataFrame, mask: DataFrame) -> DataFrame:
     left-semi keeps the cube un-shuffled (only the scan + local hash probe).
     """
     return cube.join(F.broadcast(mask), ["row", "col"], "left_semi")
-
-
-def select_polygon(
-    cube: DataFrame,
-    grid: Grid,
-    geojson: dict,
-    *,
-    max_cells: int = DEFAULT_MAX_CELLS,
-) -> DataFrame:
-    spark = cube.sparkSession
-    cells = rasterize_all_touched(grid, geojson, max_cells=max_cells)
-    return select_cells(cube, mask_df(spark, cells))

@@ -1,8 +1,9 @@
 """SparkSession factory.
 
-Local test runs use ``local[$SPARK_GRAFT_CPUS]`` (default 32) in a single
-JVM; the configuration below is nevertheless written for the real design
-point — a multi-executor cluster scanning ~100 TB:
+Local test runs use ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
+process may run on) in a single JVM; the configuration below is
+nevertheless written for the real design point — a multi-executor
+cluster scanning ~100 TB:
 
 - AQE on (runtime coalescing, skew-join splitting) so static
   ``shuffle.partitions`` only needs to be an upper bound.
@@ -21,7 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def default_driver_memory() -> str:
