@@ -9,14 +9,16 @@ One lifecycle: ``execute(req)`` is ``_run([req])[0]``, ``execute_many`` is
 ``_run(reqs)``, and neither calls the other (the traced benchmark wraps
 both as one span; nesting them would count a request twice). Per
 (dataset, variable, statistic) group, ``_run`` plans every request and
-runs ONE Spark aggregation and ONE collect (``_zonal``): a scan filtered
-by the OR of the disjoint band intervals the group needs (padded
+runs at most ONE Spark aggregation and ONE collect (``_zonal``): a scan
+filtered by the OR of the disjoint band intervals the group needs (padded
 extractions and fixed z-score reference ranges) and by its cell bounding
 box, then a literal cell predicate for a lone one-cell request or else
-one broadcast ``(query_id, row, col, bgte, blte)`` mask join. Each
-request's slice runs transform, smoothers, clipping and summaries on the
-driver (``api/kernels.py``); requests with ``include_uncertainty`` share
-one more aggregation over the ``_uncertainty`` cube.
+one broadcast ``(query_id, row, col, bgte, blte)`` mask join. A group
+whose every request picks one cell runs no aggregation: a lone cell's
+mean or median is its value. Each request's slice runs transform,
+smoothers, clipping and summaries on the driver (``api/kernels.py``);
+requests with ``include_uncertainty`` share one more scan over the
+``_uncertainty`` cube.
 
 The collect runs under a cancellable job group (cooperative timeout — the
 reference's anyio ``fail_after`` → 504 becomes ``TimeseriesTimeoutError``;
@@ -359,7 +361,9 @@ class TimeseriesService:
         one-cell pick is a literal ``row = r AND col = c`` predicate;
         anything else is ONE broadcast join of a ``(query_id, row, col,
         bgte, blte)`` mask, clipped by ``band BETWEEN bgte AND blte``
-        (inner, not semi: a cell may belong to several picks)."""
+        (inner, not semi: a cell may belong to several picks). When every
+        pick is one cell, the selected rows are the series: no
+        aggregation runs."""
         cells = [rc for cs, _ in picks for rc in cs]
         bands = disjoint_band_ranges([b for _, bs in picks for b in bs])
         # predicates are SQL strings: one py4j call each, where a Column
@@ -387,7 +391,13 @@ class TimeseriesService:
                 .where("band BETWEEN bgte AND blte")
             )
         keys = ("query_id", "band", "time")
-        series = zonal_series(selected, stat, keys=keys).select(*keys, "value")
+        if all(len(qcells) == 1 for qcells, _ in picks):
+            # the cube holds one row per (band, row, col), so a one-cell
+            # pick's mean or median IS that cell's value, NULL included:
+            # project it, with no aggregation and so no exchange
+            series = selected.select(*keys, F.col("value").cast("double").alias("value"))
+        else:
+            series = zonal_series(selected, stat, keys=keys).select(*keys, "value")
         out: list[list] = [[] for _ in picks]
         for row in collect_with_timeout(self.spark, series, timeout_ms):
             out[row.query_id].append(row)

@@ -4,8 +4,10 @@ The reference reads multi-band GeoTIFFs band-wise (S1, reference
 ``timeseries/app/schemas/geometry.py:90-94, 193``). Spark-first, the cube is
 a long Parquet table ``(dataset_id, variable_id, band, time, row, col, lon,
 lat, cell_area, value)`` partitioned by ``(dataset_id, variable_id)`` and
-sorted by ``(band, row, col)`` within files, so ``band BETWEEN`` predicates
-prune row groups and point/bbox filters push down (SURVEY.md §1.1, §4).
+clustered within files by 16x16-cell tile, then ``(band, row, col)``
+(``write_lake``), so the Parquet page indexes let a point or bbox filter
+plus a ``band BETWEEN`` predicate skip the pages of every other tile and
+band (SURVEY.md §1.1, §4).
 
 ``analytic_cube`` regenerates the reference's dev fixtures exactly from
 their analytic construction rule (value = band·100 + row·10 + col·1.1
@@ -45,6 +47,11 @@ from skope_api_spark.plans.intervals import MONTH
 WGS84_A_M = 6378137.0
 WGS84_E2 = 6.69437999014132e-3  # first eccentricity squared = f(2−f)
 WGS84_E = math.sqrt(WGS84_E2)
+
+# Edge, in cells, of the square tiles that cluster each lake slice: a
+# cell's rows for a band range lie inside one contiguous run of its
+# tile's rows.
+TILE_CELLS = 16
 
 
 def _authalic_q(sin_phi: float) -> float:
@@ -199,16 +206,44 @@ def full_dev_cube(spark: SparkSession) -> DataFrame:
 
 
 def ingest_to_parquet(spark: SparkSession, path: str) -> None:
-    """S1 ingestion: write the cube partitioned for pruning at scale.
+    """S1 ingestion: write the dev cube as the lake (``write_lake``).
 
-    Partition by (dataset_id, variable_id) — queries always pin both —
-    and sort by (band, row, col) within files so Parquet min/max stats
-    prune band ranges and spatial windows.
+    What prunes a request's scan: the (dataset_id, variable_id) partition
+    directories first, then, inside the one file of a slice, the Parquet
+    page indexes of the tile-major order, which skip every page outside
+    the request's tiles and band range.
     """
+    write_lake(full_dev_cube(spark), path)
+
+
+def write_lake(cube: DataFrame, path: str) -> None:
+    """Write a long cube as the lake, the one layout every ingest path
+    uses: partitioned by (dataset_id, variable_id), and each slice
+    clustered by ``TILE_CELLS``-square cell tiles, then (band, row, col).
+
+    Tiles follow each other row by row, the odd tile rows right to left,
+    so consecutive tiles are always neighbours: a Parquet page that
+    straddles two tiles then has min/max stats that bound just those two,
+    and a point reads the pages of its own tile's band run plus the two
+    pages where its tile starts and ends.
+
+    The partition columns lead the sort. The file writer sorts its input
+    by them unless that input's order already starts with them, and its
+    own sort drops any order under it.
+    """
+    tile_row = f"row DIV {TILE_CELLS}"
+    tile_col = f"col DIV {TILE_CELLS}"
     (
-        full_dev_cube(spark)
-        .repartition("dataset_id", "variable_id")
-        .sortWithinPartitions("band", "row", "col")
+        cube.repartition("dataset_id", "variable_id")
+        .sortWithinPartitions(
+            "dataset_id",
+            "variable_id",
+            F.expr(tile_row),
+            F.expr(f"IF({tile_row} % 2 = 0, {tile_col}, -{tile_col})"),
+            "band",
+            "row",
+            "col",
+        )
         .write.mode("overwrite")
         .partitionBy("dataset_id", "variable_id")
         .parquet(path)

@@ -391,16 +391,11 @@ def ingest_geotiff(
     *,
     reader: Callable | None = None,
 ) -> None:
-    """ETL entry point: decode → partitioned/sorted Parquet (same layout as
-    ``sources.cube.ingest_to_parquet``, so all pruning behavior carries)."""
-    (
-        geotiff_cells(spark, files, reader=reader)
-        .repartition("dataset_id", "variable_id")
-        .sortWithinPartitions("band", "row", "col")
-        .write.mode("overwrite")
-        .partitionBy("dataset_id", "variable_id")
-        .parquet(out_path)
-    )
+    """ETL entry point: decode → the lake layout (``sources.cube.write_lake``,
+    the writer ``ingest_to_parquet`` uses, so all pruning behavior carries)."""
+    from skope_api_spark.sources.cube import write_lake
+
+    write_lake(geotiff_cells(spark, files, reader=reader), out_path)
 
 
 def geotiff_band_header(width: int, height: int, band: int) -> bytes:

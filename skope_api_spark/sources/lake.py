@@ -2,16 +2,18 @@
 
 ``TimeseriesService.cube()`` defaults to regenerating the analytic dev
 cube; production serves from the ingested Parquet lake
-(``sources.cube.ingest_to_parquet`` layout: partitioned by
-(dataset_id, variable_id), sorted by (band, row, col)). This provider
-pins a slice with partition-pruning predicates, so every request's scan
-reads exactly one (dataset, variable) partition and the ``band BETWEEN``
-filter prunes row groups inside it.
+(``sources.cube.write_lake`` layout: partitioned by (dataset_id,
+variable_id), each slice clustered by 16x16-cell tile, then (band, row,
+col)). What prunes a request's scan, in order: the partition filters of
+this provider's slice, so the scan lists one (dataset, variable)
+directory; then the Parquet page indexes of that slice's file, which the
+service's ``band BETWEEN`` and ``row``/``col`` predicates use to skip
+every page outside the request's tiles and band range.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +35,9 @@ class LakeTimeseriesService(TimeseriesService):
     re-ingested after that needs a new service."""
 
     lake_path: str = ""
+    _slices: dict[tuple[str, str], DataFrame] = field(
+        default_factory=dict, init=False, repr=False
+    )
 
     @cached_property
     def lake(self) -> DataFrame:
@@ -41,10 +46,16 @@ class LakeTimeseriesService(TimeseriesService):
         return self._spark_read()
 
     def cube(self, meta: DatasetMeta, variable_id: str) -> DataFrame:
-        return self.lake.where(
-            (F.col("dataset_id") == meta.dataset_id)
-            & (F.col("variable_id") == variable_id)
-        )
+        """The (dataset, variable) slice, built once per service like the
+        lake it filters (a ``Column`` chain costs a py4j round trip per
+        operator)."""
+        key = (meta.dataset_id, variable_id)
+        if key not in self._slices:
+            self._slices[key] = self.lake.where(
+                (F.col("dataset_id") == meta.dataset_id)
+                & (F.col("variable_id") == variable_id)
+            )
+        return self._slices[key]
 
     def _spark_read(self) -> DataFrame:
         return self.spark.read.parquet(self.lake_path)

@@ -22,7 +22,7 @@ from skope_api_spark.sources.geotiff import (
 _TRANSFORM = (1.0, -123.0, -1.0, 45.0)
 
 
-def make_fake_reader():
+def make_fake_reader(shape=(3, 3)):
     """Return a CLOSURE (cloudpickle ships it by value — a module-level
     function in a test file is not importable on executors)."""
 
@@ -31,7 +31,7 @@ def make_fake_reader():
 
         for b in range(1, 3):
             data = np.fromfunction(
-                lambda r, c: b * 100.0 + r * 10 + c, (3, 3), dtype=float
+                lambda r, c: b * 100.0 + r * 10 + c, shape, dtype=float
             )
             if b == 2:
                 data[1, 2] = np.nan  # masked/nodata cell
@@ -70,6 +70,21 @@ class TestGeotiffCells:
         assert back.where(F.col("value").isNull()).count() == 1
         # partition layout matches the S1 contract (dataset_id/variable_id)
         assert (tmp_path / "tiff_lake" / "dataset_id=ds" / "variable_id=var").exists()
+
+    def test_ingest_writes_the_tile_clustered_lake_layout(self, spark, tmp_path):
+        import pyarrow.parquet as pq
+
+        from skope_api_spark.sources.cube import TILE_CELLS
+
+        n = 2 * TILE_CELLS + 3  # 3x3 tiles, the last ones partial
+        ingest_geotiff(spark, FILES, str(tmp_path), reader=make_fake_reader((n, n)))
+        (f,) = (tmp_path / "dataset_id=ds" / "variable_id=var").glob("*.parquet")
+        t = pq.read_table(f, columns=["band", "row", "col"])
+        b, r, c = (t[k].to_numpy() for k in ("band", "row", "col"))
+        assert len(b) == 2 * n * n
+        tr, tc = r // TILE_CELLS, c // TILE_CELLS
+        order = np.lexsort((c, r, b, np.where(tr % 2 == 0, tc, -tc), tr))
+        assert (order == np.arange(len(b))).all()
 
     def test_rasterio_guard_raises_helpfully(self):
         if "rasterio" in __import__("sys").modules:

@@ -95,14 +95,24 @@ def _broadcasts(df) -> int:
 
 
 @pytest.mark.parametrize("name", sorted(REQUESTS))
-def test_one_collect_of_one_aggregation(service, monkeypatch, name):
-    collected = _spy_collects(monkeypatch)
-    resp = service.execute(_req(**REQUESTS[name]))
-    assert resp.series and resp.series[0].values
-    assert len(collected) == 1
-    nodes = _plan_nodes(collected[0])
-    assert "Aggregate" in nodes or "HashAggregate" in nodes
-    assert not nodes & {"Window", "Sort", "Union", "InMemoryRelation", "InMemoryTableScan"}
+def test_one_collect_of_one_aggregation(service, lake_svc, monkeypatch, name):
+    """One collect per request: of one aggregation for a polygon, and of
+    a bare projection for a lone point (on the lake, with no exchange;
+    the analytic cube's own cross joins broadcast)."""
+    for svc in (service, lake_svc):
+        collected = _spy_collects(monkeypatch)
+        resp = svc.execute(_req(**REQUESTS[name]))
+        assert resp.series and resp.series[0].values
+        assert len(collected) == 1
+        nodes = _plan_nodes(collected[0])
+        assert not nodes & {"Window", "Sort", "Union", "InMemoryRelation", "InMemoryTableScan"}
+        if name != "point":
+            assert "Aggregate" in nodes or "HashAggregate" in nodes
+            continue
+        qe = collected[0]._jdf.queryExecution()
+        assert "Aggregate" not in qe.optimizedPlan().toString() + qe.executedPlan().toString()
+        if svc is lake_svc:
+            assert "Exchange" not in qe.executedPlan().toString()
 
 
 def test_batched_group_is_one_aggregation_over_one_broadcast(lake_svc, monkeypatch):
@@ -160,3 +170,57 @@ def test_perfbench_tracer_wraps_the_service_layers(service):
         assert layers.get(span, 0) > 0, span
     assert layers["service.collects"] == 1
     assert layers["geometry.cells"] == 4
+
+
+LONE_CELLS = [  # (dataset, variable, (row, col)): holes give NULL bands
+    ("annual_5x5x5_dataset", "float32_variable", (2, 4)),
+    ("annual_5x5x5_dataset", "uint16_variable", (2, 4)),
+    ("monthly_5x5x60_dataset", "int16_variable", (1, 3)),
+]
+
+
+def _cell_point(meta, r, c) -> dict:
+    return {"type": "Point", "coordinates": [
+        meta.origin_lon + (c + 0.5) * meta.pixel_deg,
+        meta.origin_lat - (r + 0.5) * meta.pixel_deg,
+    ]}
+
+
+@pytest.mark.parametrize("stat", ["mean", "median"])
+@pytest.mark.parametrize("dataset_id, variable_id, cell", LONE_CELLS)
+def test_lone_cell_series_is_its_zonal_series(lake_svc, dataset_id, variable_id, cell, stat):
+    """A one-cell pick's projected value equals ``zonal_series`` over the
+    same selection exactly, NULLs included: alone, in an all-point batch
+    (projected) and next to a polygon (aggregated)."""
+    from skope_api_spark.operators.zonal import zonal_series
+
+    meta = lake_svc.catalog.variable(dataset_id, variable_id)
+    (r, c), bands = cell, meta.n_bands()
+
+    def expected(variable):
+        cells = lake_svc.cube(meta, variable).where(f"row = {r} AND col = {c}")
+        rows = zonal_series(cells, stat).orderBy("band").collect()
+        assert len(rows) == bands
+        return [row.value for row in rows]
+
+    def one(area=None, **kw):
+        return M.TimeseriesV2Request(
+            dataset_id=dataset_id, variable_id=variable_id, zonal_statistic=stat,
+            selected_area=area or _cell_point(meta, r, c), **kw,
+        )
+
+    values = expected(variable_id)
+    if dataset_id.startswith("annual"):
+        assert None in values  # the hole at band 3
+    unc = variable_id == "float32_variable"
+    neighbour = one(_cell_point(meta, 0, 0))
+    polygon = one(SQUARE, include_uncertainty=unc)
+    alone = lake_svc.execute(one(include_uncertainty=unc))
+    points = lake_svc.execute_many([neighbour, one(include_uncertainty=unc)])[1]
+    mixed = lake_svc.execute_many([polygon, one(include_uncertainty=unc)])[1]
+    for resp in (alone, points, mixed):
+        assert resp.series[0].values == values
+    if unc:
+        values = expected(variable_id + "_uncertainty")
+        for resp in (alone, points, mixed):
+            assert resp.uncertainty.values == values
