@@ -32,6 +32,16 @@ UNPROCESSABLE = (
     SelectedAreaPolygonIsTooLargeError,
     InvalidGeometryError,
 )
+HANDLED = (*UNPROCESSABLE, TimeseriesTimeoutError)
+
+
+def error_response(ex: Exception, processing_time: int) -> tuple[int, dict[str, Any]]:
+    """One of the ``HANDLED`` errors → (status, body), app-wide (reference
+    ``main.py:48-63``): 504 with the request's ``processing_time`` budget
+    for a timeout, else 422 with ``detail``."""
+    if isinstance(ex, TimeseriesTimeoutError):
+        return 504, {"detail": str(ex), "processing_time": processing_time}
+    return 422, {"detail": [{"msg": str(ex), "type": type(ex).__name__}]}
 
 
 def handle_timeseries_v2(
@@ -47,13 +57,8 @@ def handle_timeseries_v2(
         return 422, {"detail": [{"msg": str(ex), "type": type(ex).__name__}]}
     try:
         resp = service.execute(req)
-    except UNPROCESSABLE as ex:
-        return 422, {"detail": [{"msg": str(ex), "type": type(ex).__name__}]}
-    except TimeseriesTimeoutError as ex:
-        return 504, {
-            "detail": str(ex),
-            "processing_time": req.max_processing_time,
-        }
+    except HANDLED as ex:
+        return error_response(ex, req.max_processing_time)
     return 200, resp.model_dump(mode="json")
 
 
@@ -67,10 +72,9 @@ def handle_timeseries_v1(
         return 422, {"detail": json.loads(ex.json())}
     try:
         return 200, service.execute_v1(req)
-    except UNPROCESSABLE as ex:
-        return 422, {"detail": [{"msg": str(ex), "type": type(ex).__name__}]}
-    except TimeseriesTimeoutError as ex:
-        return 504, {"detail": str(ex)}
+    except HANDLED as ex:
+        # v1 requests run under the default budget (``M.v1_to_v2``)
+        return error_response(ex, M.MAX_PROCESSING_TIME_MS)
 
 
 def handle_metadata(service: TimeseriesService) -> tuple[int, list[dict]]:

@@ -9,16 +9,17 @@ One lifecycle: ``execute(req)`` is ``_run([req])[0]``, ``execute_many`` is
 ``_run(reqs)``, and neither calls the other (the traced benchmark wraps
 both as one span; nesting them would count a request twice). Per
 (dataset, variable, statistic) group, ``_run`` plans every request and
-runs at most ONE Spark aggregation and ONE collect (``_zonal``): a scan
-filtered by the OR of the disjoint band intervals the group needs (padded
-extractions and fixed z-score reference ranges) and by its cell bounding
-box, then a literal cell predicate for a lone one-cell request or else
-one broadcast ``(query_id, row, col, bgte, blte)`` mask join. A group
-whose every request picks one cell runs no aggregation: a lone cell's
-mean or median is its value. Each request's slice runs transform,
-smoothers, clipping and summaries on the driver (``api/kernels.py``);
-requests with ``include_uncertainty`` share one more scan over the
-``_uncertainty`` cube.
+runs at most ONE Spark aggregation and ONE collect of ``zonal_picks``: a
+scan filtered by the OR of the disjoint band intervals the group needs
+(padded extractions and fixed z-score reference ranges) and by its cell
+bounding box, then a literal cell predicate for a lone one-cell request
+or else one broadcast ``(query_id, row, col, bgte, blte)`` mask join. A
+group whose every request picks one cell runs no aggregation: a lone
+cell's mean or median is its value. The registry's SKOPE queries run the
+same ``zonal_picks`` plan, so their DuckDB oracles check it. Each
+request's slice runs transform, smoothers, clipping and summaries on the
+driver (``api/kernels.py``); requests with ``include_uncertainty`` share
+one more scan over the ``_uncertainty`` cube.
 
 The collect runs under a cancellable job group (cooperative timeout — the
 reference's anyio ``fail_after`` → 504 becomes ``TimeseriesTimeoutError``;
@@ -177,6 +178,79 @@ def _smooth(smoother, x: np.ndarray) -> np.ndarray:
     raise TypeError(f"unknown smoother {type(smoother).__name__}")
 
 
+def zonal_picks(
+    cube: DataFrame,
+    stat: str,
+    picks: list[tuple[list[tuple[int, int]], list[BandRange]]],
+) -> DataFrame:
+    """One scan and at most one zonal aggregation for every pick (its
+    (row, col) cells and disjoint band intervals): ``(query_id, band,
+    time, value, n_cells, n_valid)``, ``query_id`` being the pick's index.
+
+    This is the one cell-selection plan, for the API service and for the
+    registry's SKOPE queries. One request touches ~KBs after pruning; the
+    cluster-scale workload is thousands of geometries × variables at once.
+    Instead of one Spark job per request (the reference's one request per
+    HTTP call), the cells carry a ``query_id`` and join the cube ONCE: N
+    picks are one scan and one aggregation grouped by ``(query_id, band,
+    time)`` (SURVEY.md §4). The mask is Σ cells per pick, driver-tiny
+    next to the cube.
+
+    The scan is filtered by the union of the picks' bands and their
+    cells' bounding box, which the Parquet reader prunes with. A lone
+    one-cell pick is a literal ``row = r AND col = c`` predicate;
+    anything else is ONE broadcast join of a ``(query_id, row, col,
+    bgte, blte)`` mask, clipped by ``band BETWEEN bgte AND blte``
+    (inner, not semi: a cell may belong to several picks, and each
+    membership must produce a row). When every pick is one cell, the
+    selected rows are the series: no aggregation runs.
+    """
+    cells = [rc for cs, _ in picks for rc in cs]
+    bands = disjoint_band_ranges([b for _, bs in picks for b in bs])
+    # predicates are SQL strings: one py4j call each, where a Column
+    # costs a round trip (~1 ms) per operator
+    in_bands = " OR ".join(f"band BETWEEN {b.gte} AND {b.lte}" for b in bands)
+    if len(cells) == 1:  # one pick of one cell (a pick is never empty)
+        (r, c), = cells
+        selected = cube.where(f"({in_bands}) AND row = {r} AND col = {c}")
+        selected = selected.withColumn("query_id", F.lit(0))
+    else:
+        rs, cs = zip(*cells)
+        mask = mask_df(
+            cube.sparkSession,
+            [(q, r, c, b.gte, b.lte)
+             for q, (qcells, qbands) in enumerate(picks)
+             for r, c in qcells for b in qbands],
+            "query_id int, row int, col int, bgte int, blte int",
+        )
+        selected = (
+            cube.where(
+                f"({in_bands}) AND row BETWEEN {min(rs)} AND {max(rs)} "
+                f"AND col BETWEEN {min(cs)} AND {max(cs)}"
+            )
+            .join(F.broadcast(mask), ["row", "col"])
+            .where("band BETWEEN bgte AND blte")
+        )
+    keys = ("query_id", "band", "time")
+    if all(len(qcells) == 1 for qcells, _ in picks):
+        # the cube holds one row per (band, row, col), so a one-cell
+        # pick's mean or median IS that cell's value, NULL included:
+        # project it, with no aggregation and so no exchange
+        return selected.selectExpr(
+            *keys,
+            "CAST(value AS DOUBLE) AS value",
+            "CAST(1 AS BIGINT) AS n_cells",
+            "CAST(value IS NOT NULL AS BIGINT) AS n_valid",
+        )
+    return zonal_series(selected, stat, keys=keys)
+
+
+def cells_area_m2(grid: Grid, cells: list[tuple[int, int]]) -> float:
+    """The selection's area: the sum of its cells' WGS84 areas."""
+    lat_top = grid.origin_lat - np.array([r for r, _ in cells]) * grid.px_lat
+    return sum(cell_area_m2(lat_top, grid.px_lat, grid.px_lon).tolist())
+
+
 @dataclass
 class _Plan:
     """One request bound to its dataset: grid, band ranges and cells."""
@@ -286,15 +360,11 @@ class TimeseriesService:
                 M.SummaryStatRow(name=opt.name, mean=mean, median=median, stdev=stdev)
             )
 
-        grid = plan.grid
         return M.TimeseriesV2Response(
             dataset_id=req.dataset_id,
             variable_id=req.variable_id,
             n_cells=len(plan.cells),
-            area_m2=sum(
-                cell_area_m2(grid.origin_lat - r * grid.px_lat, grid.px_lat, grid.px_lon)
-                for r, _ in plan.cells
-            ),
+            area_m2=cells_area_m2(plan.grid, plan.cells),
             series=series_out,
             summary_stats=stats_out,
             processing_time_ms=int((time.perf_counter() - t0) * 1000),
@@ -352,52 +422,10 @@ class TimeseriesService:
         picks: list[tuple[list[tuple[int, int]], list[BandRange]]],
         timeout_ms: int,
     ) -> list[list]:
-        """One scan, one zonal aggregation and one collect for every pick
-        (its (row, col) cells and disjoint band intervals); returns each
-        pick's per-band rows in band order.
-
-        The scan is filtered by the union of the picks' bands and their
-        cells' bounding box, which the Parquet reader prunes with. A lone
-        one-cell pick is a literal ``row = r AND col = c`` predicate;
-        anything else is ONE broadcast join of a ``(query_id, row, col,
-        bgte, blte)`` mask, clipped by ``band BETWEEN bgte AND blte``
-        (inner, not semi: a cell may belong to several picks). When every
-        pick is one cell, the selected rows are the series: no
-        aggregation runs."""
-        cells = [rc for cs, _ in picks for rc in cs]
-        bands = disjoint_band_ranges([b for _, bs in picks for b in bs])
-        # predicates are SQL strings: one py4j call each, where a Column
-        # costs a round trip (~1 ms) per operator
-        in_bands = " OR ".join(f"band BETWEEN {b.gte} AND {b.lte}" for b in bands)
-        if len(cells) == 1:  # one pick of one cell (a pick is never empty)
-            (r, c), = cells
-            selected = cube.where(f"({in_bands}) AND row = {r} AND col = {c}")
-            selected = selected.withColumn("query_id", F.lit(0))
-        else:
-            rs, cs = zip(*cells)
-            mask = mask_df(
-                self.spark,
-                [(q, r, c, b.gte, b.lte)
-                 for q, (qcells, qbands) in enumerate(picks)
-                 for r, c in qcells for b in qbands],
-                "query_id int, row int, col int, bgte int, blte int",
-            )
-            selected = (
-                cube.where(
-                    f"({in_bands}) AND row BETWEEN {min(rs)} AND {max(rs)} "
-                    f"AND col BETWEEN {min(cs)} AND {max(cs)}"
-                )
-                .join(F.broadcast(mask), ["row", "col"])
-                .where("band BETWEEN bgte AND blte")
-            )
-        keys = ("query_id", "band", "time")
-        if all(len(qcells) == 1 for qcells, _ in picks):
-            # the cube holds one row per (band, row, col), so a one-cell
-            # pick's mean or median IS that cell's value, NULL included:
-            # project it, with no aggregation and so no exchange
-            series = selected.select(*keys, F.col("value").cast("double").alias("value"))
-        else:
-            series = zonal_series(selected, stat, keys=keys).select(*keys, "value")
+        """Every pick's per-band rows in band order, from ONE collect of
+        ``zonal_picks``."""
+        # only the values: the unread counts are pruned from the plan
+        series = zonal_picks(cube, stat, picks).select("query_id", "band", "time", "value")
         out: list[list] = [[] for _ in picks]
         for row in collect_with_timeout(self.spark, series, timeout_ms):
             out[row.query_id].append(row)

@@ -17,7 +17,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from skope_api_spark.api.service import _grid, cells_area_m2, zonal_picks
 from skope_api_spark.contract.registry import query, round_nz
+from skope_api_spark.geometry import rasterize_all_touched
 from skope_api_spark.operators import windows as wops
 from skope_api_spark.operators.zonal import summary_stats, zonal_series
 from skope_api_spark.plans.catalog import DEV_CATALOG
@@ -91,23 +93,10 @@ WITH cube AS (
 """
 
 
-def _point_series(
-    spark: SparkSession,
-    dataset_id: str = ANNUAL,
-    variable_id: str = F32,
-    *,
-    row: int = 0,
-    col: int = 0,
-    bands: BandRange | None = None,
-) -> DataFrame:
-    """S2/P5: point extraction — equality predicate on the materialized cell
-    index, pushed to the scan; zonal mean of a single cell is the cell."""
-    cells = analytic_cube(spark, dataset_id, variable_id).where(
-        (F.col("row") == row) & (F.col("col") == col)
-    )
-    if bands is not None:
-        cells = cells.where(F.col("band").between(bands.gte, bands.lte))
-    return zonal_series(cells, "mean")
+# every band of the annual dev cube: the band list of a whole-series pick
+_ALL_BANDS = [BandRange(1, DEV_CATALOG[ANNUAL].n_bands())]
+# the cube origin as a one-cell pick (golden identity: value = band·100)
+_ORIGIN = ([(0, 0)], _ALL_BANDS)
 
 
 # --- point extraction (S2, P5, A1 on one cell) ------------------------------
@@ -122,9 +111,11 @@ ORDER BY band
 )
 def skope_point_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden identity: value at the cube origin = band·100 exactly
-    (reference test_datasets.py:88)."""
+    (reference test_datasets.py:88). S2/P5 through the service's own cell
+    selection (``zonal_picks``): a literal ``row``/``col`` predicate pushed
+    to the scan, the one cell's value projected with no aggregation."""
     return (
-        _point_series(spark)
+        zonal_picks(analytic_cube(spark, ANNUAL, F32), "mean", [_ORIGIN])
         .select("band", _iso().alias("time"), "value")
         .orderBy("band")
     )
@@ -300,7 +291,7 @@ ORDER BY band
 def skope_trailing_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 — trailing w=2, current band excluded; only full windows emit
     (verified semantics of reference test_datasets.py:116-119)."""
-    series = _point_series(spark)
+    series = zonal_picks(analytic_cube(spark, ANNUAL, F32), "mean", [_ORIGIN])
     out = wops.trailing_moving_average(
         series, "value", order_by=("band",), width=2, out_col="smoothed"
     )
@@ -327,7 +318,7 @@ ORDER BY band
 )
 def skope_centered_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 — centered w=3, 'valid' convolution (full windows only)."""
-    series = _point_series(spark)
+    series = zonal_picks(analytic_cube(spark, ANNUAL, F32), "mean", [_ORIGIN])
     out = wops.centered_moving_average(
         series, "value", order_by=("band",), width=3, out_col="smoothed"
     )
@@ -379,7 +370,7 @@ def skope_nan_poisoning_smoothers(spark: SparkSession, sf_dir: str) -> DataFrame
     (window = bands 1-2, the sole all-valid window). Reference parity:
     np.convolve(mode='valid') over a NaN-bearing series poisons every
     overlapping window (reference timeseries.py:110-112)."""
-    series = _point_series(spark, row=2, col=4)
+    series = zonal_picks(analytic_cube(spark, ANNUAL, F32), "mean", [([(2, 4)], _ALL_BANDS)])
     parts = []
     for name, fn, width in (
         ("trailing_2", wops.trailing_moving_average, 2),
@@ -416,7 +407,7 @@ ORDER BY band
 )
 def skope_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 — z of current band vs preceding 2 (exclusive), ddof=0."""
-    series = _point_series(spark)
+    series = zonal_picks(analytic_cube(spark, ANNUAL, F32), "mean", [_ORIGIN])
     out = wops.rolling_zscore(
         series, "value", order_by=("band",), width=2, out_col="zscore"
     )
@@ -442,7 +433,7 @@ ORDER BY band
 )
 def skope_fixed_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4 — z vs the whole selected interval (scipy zscore ddof=0 parity)."""
-    series = _point_series(spark)
+    series = zonal_picks(analytic_cube(spark, ANNUAL, F32), "mean", [_ORIGIN])
     out = wops.fixed_interval_zscore(series, "value", out_col="zscore")
     return out.select("band", round_nz("zscore", 4).alias("zscore")).orderBy("band")
 
@@ -539,21 +530,16 @@ ORDER BY c.band
 """,
 )
 def skope_point_with_uncertainty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6 — the companion ``{variable_id}_uncertainty`` slice joined to the
-    value slice on (band, row, col), yielding value ± uncertainty bands
-    (the reference wires this source but never serves it; here it is a
-    first-class co-located join — same partition layout, no extra shuffle
-    when both slices are bucketed by the ingestion sort)."""
-    val = analytic_cube(spark, ANNUAL, F32).where(
-        (F.col("row") == 0) & (F.col("col") == 0)
-    )
-    unc = (
-        analytic_cube(spark, ANNUAL, "float32_variable_uncertainty")
-        .where((F.col("row") == 0) & (F.col("col") == 0))
-        .select("band", "row", "col", F.col("value").alias("uncertainty"))
-    )
+    """S6 — the companion ``{variable_id}_uncertainty`` series of the same
+    cell joined to the value series on band, yielding value ± uncertainty
+    bands (the reference wires this source but never serves it). Each side
+    is one lone pick, as the service reads a point and its uncertainty."""
+    val = zonal_picks(analytic_cube(spark, ANNUAL, F32), "mean", [_ORIGIN])
+    unc = zonal_picks(
+        analytic_cube(spark, ANNUAL, "float32_variable_uncertainty"), "mean", [_ORIGIN]
+    ).select("band", F.col("value").alias("uncertainty"))
     return (
-        val.join(unc, ["band", "row", "col"])
+        val.join(unc, "band")
         .select(
             "band",
             _iso().alias("time"),
@@ -566,35 +552,15 @@ def skope_point_with_uncertainty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- polygon mask → broadcast semi-join (P6, J1, A4) ------------------------
+# --- polygon mask → broadcast mask join (P6, J1, A4) ------------------------
 _TRIANGLE = {
     "type": "Polygon",
     "coordinates": [
         [[-122.5, 41.1], [-120.6, 41.1], [-121.55, 43.8], [-122.5, 41.1]]
     ],
 }
-
-
-def _dev_grid():
-    from skope_api_spark.geometry import Grid
-
-    meta = DEV_CATALOG[ANNUAL]
-    return Grid(
-        origin_lon=meta.origin_lon,
-        origin_lat=meta.origin_lat,
-        pixel_deg=meta.pixel_deg,
-        rows=meta.grid_rows,
-        cols=meta.grid_cols,
-    )
-
-
-def _triangle_cells() -> list[tuple[int, int]]:
-    from skope_api_spark.geometry import rasterize_all_touched
-
-    return rasterize_all_touched(_dev_grid(), _TRIANGLE)
-
-
-_TRIANGLE_CELLS = _triangle_cells()
+_GRID = _grid(DEV_CATALOG[ANNUAL])
+_TRIANGLE_CELLS = rasterize_all_touched(_GRID, _TRIANGLE)
 _TRIANGLE_CELLS_SQL = ", ".join(f"({r}, {c})" for r, c in _TRIANGLE_CELLS)
 
 
@@ -614,19 +580,20 @@ ORDER BY band
 """,
 )
 def skope_polygon_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P6/J1 — driver-side all_touched rasterization of a triangle →
-    broadcast left-semi join on (row, col) → zonal stats + area (A4).
-    The oracle applies the identical driver-rasterized mask as literals."""
-    from skope_api_spark.geometry import mask_df, select_cells
-
+    """P6/J1 — driver-side all_touched rasterization of a triangle → the
+    service's broadcast mask join on (row, col) (one pick of distinct
+    cells: the inner join is the semi-join) → zonal stats + area (A4), the
+    area being the service's own sum of the cells' areas. The oracle
+    applies the identical driver-rasterized mask as literals."""
     cube = analytic_cube(spark, ANNUAL, F32)
-    selected = select_cells(cube, mask_df(spark, _TRIANGLE_CELLS))
+    area_km2 = cells_area_m2(_GRID, _TRIANGLE_CELLS) / 1e6
     return (
-        selected.groupBy("band")
-        .agg(
-            F.round(F.avg("value"), 4).alias("value"),
-            F.count(F.lit(1)).alias("n_cells"),
-            F.round(F.sum("cell_area") / 1e6, 2).alias("area_km2"),
+        zonal_picks(cube, "mean", [(_TRIANGLE_CELLS, _ALL_BANDS)])
+        .select(
+            "band",
+            F.round("value", 4).alias("value"),
+            "n_cells",
+            F.round(F.lit(area_km2), 2).alias("area_km2"),
         )
         .orderBy("band")
     )
@@ -636,20 +603,14 @@ def skope_polygon_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BATCH_MASKS = {
     "origin_point": [(0, 0)],
     "center_square": [(1, 1), (1, 2), (2, 1), (2, 2)],
-    "triangle": None,  # filled below from the rasterizer
+    "triangle": _TRIANGLE_CELLS,
 }
-
-
-def _batch_masks() -> dict[str, list[tuple[int, int]]]:
-    out = dict(_BATCH_MASKS)
-    out["triangle"] = _TRIANGLE_CELLS
-    return out
 
 
 def _batch_mask_sql() -> str:
     rows = ", ".join(
         f"('{qid}', {r}, {c})"
-        for qid, cells in _batch_masks().items()
+        for qid, cells in _BATCH_MASKS.items()
         for (r, c) in cells
     )
     return f"(VALUES {rows})"
@@ -669,15 +630,19 @@ ORDER BY query_id, band
 """,
 )
 def skope_batched_multi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N geometries → ONE scan + ONE aggregation via a query_id-tagged
-    broadcast mask join — the batched execution model that replaces
-    one-job-per-request at cluster scale."""
-    from skope_api_spark.operators.batch import batched_zonal_series
-
+    """N geometries → ONE scan + ONE aggregation via the service's
+    query_id-tagged broadcast mask join — the batched execution model that
+    replaces one-job-per-request at cluster scale. A pick's query_id is its
+    index; it maps back to the geometry's name."""
     cube = analytic_cube(spark, ANNUAL, F32)
-    out = batched_zonal_series(cube, _batch_masks(), "mean")
+    picks = [(cells, _ALL_BANDS) for cells in _BATCH_MASKS.values()]
+    names = F.array(*(F.lit(name) for name in _BATCH_MASKS))
+    out = zonal_picks(cube, "mean", picks)
     return out.select(
-        "query_id", "band", F.round("value", 4).alias("value"), "n_cells"
+        F.element_at(names, F.col("query_id") + 1).alias("query_id"),
+        "band",
+        F.round("value", 4).alias("value"),
+        "n_cells",
     ).orderBy("query_id", "band")
 
 
@@ -731,7 +696,10 @@ def skope_multi_series_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     extract = extraction_band_range(
         requested, available, smoother_adjustments=tuple(smoothers.values())
     )
-    base = _point_series(spark, bands=extract).select("band", "time", "value")
+    cube = analytic_cube(spark, ANNUAL, F32)
+    base = zonal_picks(cube, "mean", [([(0, 0)], [extract])]).select(
+        "band", "time", "value"
+    )
 
     parts = []
     for name, adj in smoothers.items():

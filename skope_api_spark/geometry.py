@@ -1,23 +1,24 @@
-"""Geometry compilation: GeoJSON → cell predicates / mask DataFrames.
+"""Geometry compilation: GeoJSON → cells / mask DataFrames.
 
 The reference rasterizes the selected geometry over the raster grid with
 ``rasterio.features.geometry_mask(..., all_touched=True)`` and applies it as
 a numpy boolean mask (reference ``timeseries/app/schemas/geometry.py:87-94``
 point, ``:174-209`` polygon). Spark-first, the same semantics become:
 
-- **point** → affine-inverse cell index (``point_cell``) → equality
-  predicate on the materialized (row, col) columns — pure pushdown, no
-  join (P5/S2);
+- **point** → affine-inverse cell index (``point_cell``) → a literal
+  ``row = r AND col = c`` predicate on the materialized (row, col)
+  columns — pure pushdown, no join (P5/S2);
 - **polygon / multipolygon / feature collection** → driver-side
   rasterization to the (tiny) set of touched (row, col) cells
   (``rasterize_all_touched``) → a broadcast mask frame (``mask_df``). The
   mask is O(bbox cells), never O(data).
 
-The service (``api/service.py::_zonal``) turns a lone one-cell pick into
-a literal ``row = r AND col = c`` predicate and anything else into ONE
-tagged inner broadcast join of a ``(query_id, row, col, ...)`` mask, so a
-batch of picks shares one scan. The left-semi ``select_cells`` (J1) is
-kept only for the ``contract/skope.py`` registry query that pins it.
+``api/service.py::zonal_picks`` is the one plan that applies a
+selection, for the API service and the registry's SKOPE queries alike: a
+lone one-cell pick becomes that literal predicate, and anything else ONE
+tagged inner broadcast join of a ``(query_id, row, col, bgte, blte)``
+mask, so a batch of picks shares one scan. For one pick of distinct cells
+the inner join is the spatial semi-join (J1).
 
 rasterio/shapely are unavailable in this environment, so the rasterizer is
 implemented here in pure Python with the same ``all_touched=True`` contract:
@@ -38,7 +39,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from skope_api_spark.session import local_frame
 
@@ -278,12 +278,6 @@ def point_cell(grid: Grid, geojson: dict) -> tuple[int, int]:
     return min(row, grid.rows - 1), min(col, grid.cols - 1)
 
 
-def point_predicate(grid: Grid, geojson: dict):
-    """Point → (row, col) equality predicate: pure pushdown, no join."""
-    row, col = point_cell(grid, geojson)
-    return (F.col("row") == row) & (F.col("col") == col)
-
-
 def mask_df(
     spark: SparkSession, rows: list[tuple], schema: str = "row int, col int"
 ) -> DataFrame:
@@ -291,12 +285,3 @@ def mask_df(
     pairs, or rows of any ``schema`` that carries ``row`` and ``col`` (a
     batch tags each cell with its ``query_id``)."""
     return local_frame(spark, rows, schema)
-
-
-def select_cells(cube: DataFrame, mask: DataFrame) -> DataFrame:
-    """J1 — spatial semi-join: cube ⋉ broadcast mask on (row, col).
-
-    The mask is driver-rasterized and tiny relative to the cube; broadcast
-    left-semi keeps the cube un-shuffled (only the scan + local hash probe).
-    """
-    return cube.join(F.broadcast(mask), ["row", "col"], "left_semi")

@@ -2,7 +2,6 @@
 
 - ``windows``     — W1–W4 smoothers/z-scores, sessionize (reference §2.5)
 - ``zonal``       — zonal mean/median, weighted mean, summary stats (A1–A7)
-- ``batch``       — query_id-tagged multi-geometry execution
 - ``asof``        — backward as-of join (union-merge, join-free plan)
 - ``dedup``       — exact / MinHash-LSH / SimHash dedup, duplicate clusters
 - ``similarity``  — brute-force / hyperplane-LSH / IVF cosine search
@@ -13,7 +12,6 @@
 """
 
 from skope_api_spark.operators.asof import asof_join
-from skope_api_spark.operators.batch import batched_zonal_series
 from skope_api_spark.operators.dedup import (
     duplicate_clusters,
     exact_duplicate_groups,
@@ -52,7 +50,6 @@ from skope_api_spark.operators.zonal import (
 
 __all__ = [
     "asof_join",
-    "batched_zonal_series",
     "bottomk_fingerprint",
     "brute_force_topk",
     "centered_moving_average",

@@ -8,10 +8,10 @@ the pruned cube slice; NULL-skipping aggregates reproduce numpy's masked /
 
 Scale note: the groupBy shuffles only the pruned slice (band-range +
 cell-predicate pushdown happen at the scan), and the per-band series that
-window functions run on is tiny (one row per band per series key). For
-batched multi-geometry execution, callers add a ``query_id`` column to the
-selection and include it in ``keys`` — thousands of extractions become one
-job over the same scan (SURVEY.md §4).
+window functions run on is tiny (one row per band per series key). Batched
+multi-geometry execution is ``api/service.py::zonal_picks``: it tags the
+selection with a ``query_id`` and includes it in ``keys``, so thousands of
+extractions become one job over the same scan (SURVEY.md §4).
 """
 
 from __future__ import annotations

@@ -28,6 +28,7 @@ from __future__ import annotations
 import math
 from datetime import date
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,11 +55,11 @@ WGS84_E = math.sqrt(WGS84_E2)
 TILE_CELLS = 16
 
 
-def _authalic_q(sin_phi: float) -> float:
+def _authalic_q(sin_phi):
     s = sin_phi
     return (1.0 - WGS84_E2) * (
         s / (1.0 - WGS84_E2 * s * s)
-        + math.log((1.0 + WGS84_E * s) / (1.0 - WGS84_E * s)) / (2.0 * WGS84_E)
+        + np.log((1.0 + WGS84_E * s) / (1.0 - WGS84_E * s)) / (2.0 * WGS84_E)
     )
 
 # variable_id → (value rule, float32-rounded?, null rule)
@@ -100,23 +101,21 @@ VARIABLE_RULES: dict[tuple[str, str], dict] = {
 }
 
 
-def cell_area_m2(
-    lat_top_deg: float, pixel_deg: float, pixel_deg_lon: float | None = None
-) -> float:
-    """Exact WGS84 ellipsoidal area of one cell whose top edge sits at this
-    latitude (meridian/parallel-bounded quad). ``pixel_deg`` is the
-    LATITUDE extent; ``pixel_deg_lon`` the longitude extent (defaults to
-    square pixels) — Δλ scales the area linearly, the latitude band sets
-    the authalic term (same split as the GeoTIFF ETL's rectangular-pixel
-    kernel, sources/geotiff.py)."""
+def cell_area_m2(lat_top_deg, pixel_deg: float, pixel_deg_lon: float | None = None):
+    """Exact WGS84 ellipsoidal area of the cells whose top edges sit at
+    these latitudes (meridian/parallel-bounded quads); a scalar or a numpy
+    array of latitudes, elementwise. ``pixel_deg`` is the LATITUDE extent;
+    ``pixel_deg_lon`` the longitude extent (defaults to square pixels) —
+    Δλ scales the area linearly, the latitude band sets the authalic term
+    (the GeoTIFF ETL's rectangular pixels need both)."""
     dlon = math.radians(pixel_deg if pixel_deg_lon is None else pixel_deg_lon)
     return (
         dlon
         * WGS84_A_M**2
         / 2.0
         * (
-            _authalic_q(math.sin(math.radians(lat_top_deg)))
-            - _authalic_q(math.sin(math.radians(lat_top_deg - pixel_deg)))
+            _authalic_q(np.sin(np.radians(lat_top_deg)))
+            - _authalic_q(np.sin(np.radians(lat_top_deg - pixel_deg)))
         )
     )
 

@@ -22,7 +22,6 @@ partitioned write) is real and unit-tested with a fake reader.
 
 from __future__ import annotations
 
-import math
 from calendar import monthrange
 from collections.abc import Callable, Iterator, Sequence
 from datetime import date
@@ -30,6 +29,8 @@ from datetime import date
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from skope_api_spark.sources.cube import cell_area_m2, write_lake
 
 # one long row per (band, row, col) cell — identical to sources.cube
 CUBE_SCHEMA = T.StructType(
@@ -301,7 +302,7 @@ def _add_months(d: date, months: int) -> date:
     return date(y, m0 + 1, min(d.day, monthrange(y, m0 + 1)[1]))
 
 
-def _cells(reader, files_pdf, cell_area_fn):
+def _cells(reader, files_pdf):
     """One task's work: decode every assigned file, emit long rows."""
     import numpy as np
     import pandas as pd
@@ -330,7 +331,7 @@ def _cells(reader, files_pdf, cell_area_fn):
                     # Δλ comes from the LONGITUDE pixel width; the latitude
                     # band span from the pixel height — non-square pixels
                     # (common in reprojected rasters) need both
-                    "cell_area": cell_area_fn(lat_top, px_lat, px_w).ravel(),
+                    "cell_area": cell_area_m2(lat_top, px_lat, px_w).ravel(),
                     "value": np.where(
                         np.isnan(data), None, data.astype(object)
                     ).ravel(),
@@ -346,25 +347,6 @@ def geotiff_cells(
 ) -> DataFrame:
     """Decode (path, dataset_id, variable_id, resolution, start_date) files
     into the long cube DataFrame, one executor task per file batch."""
-    from skope_api_spark.sources.cube import WGS84_A_M, WGS84_E, WGS84_E2
-
-    def q(s):
-        import numpy as np
-
-        return (1.0 - WGS84_E2) * (
-            s / (1.0 - WGS84_E2 * s * s)
-            + np.log((1.0 + WGS84_E * s) / (1.0 - WGS84_E * s)) / (2.0 * WGS84_E)
-        )
-
-    def cell_area(lat_top_deg, px_lat, px_lon):
-        import numpy as np
-
-        k = math.radians(px_lon) * WGS84_A_M**2 / 2.0
-        return k * (
-            q(np.sin(np.radians(lat_top_deg)))
-            - q(np.sin(np.radians(lat_top_deg - px_lat)))
-        )
-
     rd = reader if reader is not None else _read_with_rasterio_or_baseline
     # one file per partition: raster decode is the unit of parallelism.
     # An explicit sequential index + range partitioning gives true
@@ -379,7 +361,7 @@ def geotiff_cells(
 
     def run(batches: Iterator) -> Iterator:
         for pdf in batches:
-            yield from _cells(rd, pdf, cell_area)
+            yield from _cells(rd, pdf)
 
     return files_df.mapInPandas(run, CUBE_SCHEMA)
 
@@ -393,8 +375,6 @@ def ingest_geotiff(
 ) -> None:
     """ETL entry point: decode → the lake layout (``sources.cube.write_lake``,
     the writer ``ingest_to_parquet`` uses, so all pruning behavior carries)."""
-    from skope_api_spark.sources.cube import write_lake
-
     write_lake(geotiff_cells(spark, files, reader=reader), out_path)
 
 

@@ -1,4 +1,4 @@
-"""Geometry path tests: affine index, all_touched rasterization, semi-join.
+"""Geometry path tests: affine index, all_touched rasterization, mask join.
 
 Grid layout (dev fixtures, FIXTURES.md §1): top-left (−123, 45), 1° pixels,
 5×5 → lon ∈ [−123, −118], lat ∈ [40, 45]. Point (−120, 42.5) → row 2,
@@ -8,23 +8,21 @@ col 3; point (−123, 45) → row 0, col 0.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
+from skope_api_spark.api.service import zonal_picks
 from skope_api_spark.geometry import (
     Grid,
     InvalidGeometryError,
     SelectedAreaOutOfBoundsError,
     SelectedAreaPolygonIsTooLargeError,
-    mask_df,
     point_cell,
-    point_predicate,
     rasterize_all_touched,
-    select_cells,
 )
-from skope_api_spark.operators.zonal import zonal_series
+from skope_api_spark.plans.intervals import BandRange
 from skope_api_spark.sources.cube import analytic_cube
 
 GRID = Grid(origin_lon=-123.0, origin_lat=45.0, pixel_deg=1.0, rows=5, cols=5)
+BANDS = [BandRange(1, 5)]
 
 
 def poly(*coords):
@@ -39,9 +37,9 @@ class TestCellIndex:
         assert GRID.cell_index(-122.5, 44.5) == (0, 0)
         assert GRID.cell_index(-118.5, 40.5) == (4, 4)
 
-    def test_point_predicate_bounds(self, spark):
+    def test_point_cell_bounds(self):
         with pytest.raises(SelectedAreaOutOfBoundsError):
-            point_predicate(GRID, {"type": "Point", "coordinates": [-130.0, 42.0]})
+            point_cell(GRID, {"type": "Point", "coordinates": [-130.0, 42.0]})
         # far edges are inside (covers() is inclusive) and clamp to the last cell
         for lon, lat, cell in [(-118.0, 40.0, (4, 4)), (-118.0, 45.0, (0, 4)),
                                (-123.0, 40.0, (4, 0)), (-120.0, 42.5, (2, 3))]:
@@ -56,10 +54,12 @@ class TestCellIndex:
             point_cell(GRID, {"type": "LineString", "coordinates": [[-120, 42], [-119, 43]]})
 
     def test_point_on_far_edge_clamps(self, spark):
-        pred = point_predicate(GRID, {"type": "Point", "coordinates": [-118.0, 40.0]})
+        cell = point_cell(GRID, {"type": "Point", "coordinates": [-118.0, 40.0]})
+        assert cell == (4, 4)
         cube = analytic_cube(spark, "annual_5x5x5_dataset", "uint16_variable")
-        rows = cube.where(pred).select("row", "col").distinct().collect()
-        assert [(r.row, r.col) for r in rows] == [(4, 4)]
+        rows = zonal_picks(cube, "mean", [([cell], BANDS)]).orderBy("band").collect()
+        # uint16 law: value = band·100 + row·10 + col
+        assert [r.value for r in rows] == [b * 100.0 + 44 for b in range(1, 6)]
 
 
 class TestRasterize:
@@ -125,18 +125,21 @@ class TestRasterize:
 
 
 class TestSemiJoin:
+    """J1 through the service plan: for one pick of distinct cells the
+    tagged inner mask join is the spatial semi-join."""
+
     def test_polygon_zonal_mean_matches_manual(self, spark):
         cube = analytic_cube(spark, "annual_5x5x5_dataset", "uint16_variable")
         cells = [(1, 1), (1, 2), (2, 1), (2, 2)]
-        selected = select_cells(cube, mask_df(spark, cells))
-        out = {r.band: r for r in zonal_series(selected, "mean").collect()}
+        out = {r.band: r for r in zonal_picks(cube, "mean", [(cells, BANDS)]).collect()}
         for b in range(1, 6):
             vals = [b * 100 + r * 10 + c for (r, c) in cells]
             assert out[b].value == sum(vals) / 4
             assert out[b].n_cells == 4
 
-    def test_semi_join_is_broadcast(self, spark):
+    def test_mask_join_is_broadcast(self, spark):
         cube = analytic_cube(spark, "annual_5x5x5_dataset", "uint16_variable")
-        selected = select_cells(cube, mask_df(spark, [(0, 0)]))
-        plan = selected._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+        picked = zonal_picks(cube, "mean", [([(0, 0), (1, 1)], BANDS)])
+        plan = picked._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan and "Inner" in plan
+        assert "LeftSemi" not in plan

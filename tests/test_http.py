@@ -84,6 +84,40 @@ class TestV1Route:
         assert body["start"] == "0001-01-01"
 
 
+class TestErrorBodies:
+    """The 422 and 504 bodies of both routes (reference main.py:48-63)."""
+
+    class _TimingOut:
+        def execute(self, req):
+            raise H.TimeseriesTimeoutError("processing exceeded 250 ms")
+
+        def execute_v1(self, req):
+            raise H.TimeseriesTimeoutError("processing exceeded 250 ms")
+
+    def test_422_bodies(self, service):
+        # str() of a KeyError subclass is its repr-quoted message
+        body = {"detail": [{"msg": '"no such dataset \'nope\'"',
+                            "type": "DatasetNotFoundError"}]}
+        assert H.handle_timeseries_v2(
+            service, {"dataset_id": "nope", "variable_id": "v", "selected_area": POINT}
+        ) == (422, body)
+        assert H.handle_timeseries_v1(
+            service, {"datasetId": "nope", "variableName": "v", "boundaryGeometry": POINT}
+        ) == (422, body)
+
+    def test_504_bodies(self):
+        detail = "processing exceeded 250 ms"
+        assert H.handle_timeseries_v2(
+            self._TimingOut(),
+            {"dataset_id": "d", "variable_id": "v", "selected_area": POINT,
+             "max_processing_time": 250},
+        ) == (504, {"detail": detail, "processing_time": 250})
+        assert H.handle_timeseries_v1(
+            self._TimingOut(),
+            {"datasetId": "d", "variableName": "v", "boundaryGeometry": POINT},
+        ) == (504, {"detail": detail, "processing_time": M.MAX_PROCESSING_TIME_MS})
+
+
 class TestMetadataRoute:
     def test_200(self, service):
         status, body = H.handle_metadata(service)

@@ -191,11 +191,22 @@ def _cell_point(meta, r, c) -> dict:
 def test_lone_cell_series_is_its_zonal_series(lake_svc, dataset_id, variable_id, cell, stat):
     """A one-cell pick's projected value equals ``zonal_series`` over the
     same selection exactly, NULLs included: alone, in an all-point batch
-    (projected) and next to a polygon (aggregated)."""
+    (projected) and next to a polygon (aggregated). So do its projected
+    ``n_cells`` and ``n_valid``."""
     from skope_api_spark.operators.zonal import zonal_series
+    from skope_api_spark.plans.intervals import BandRange
 
     meta = lake_svc.catalog.variable(dataset_id, variable_id)
     (r, c), bands = cell, meta.n_bands()
+    cube = lake_svc.cube(meta, variable_id)
+    counts = zonal_series(cube.where(f"row = {r} AND col = {c}"), stat).orderBy("band")
+    counts = [(row.value, row.n_cells, row.n_valid) for row in counts.collect()]
+    for picks in ([[(r, c)]], [[(0, 0)], [(r, c)]]):  # alone, all-point batch
+        picked = service_mod.zonal_picks(
+            cube, stat, [(cells, [BandRange(1, bands)]) for cells in picks]
+        ).where(f"query_id = {len(picks) - 1}").orderBy("band")
+        assert "Aggregate" not in picked._jdf.queryExecution().optimizedPlan().toString()
+        assert [(row.value, row.n_cells, row.n_valid) for row in picked.collect()] == counts
 
     def expected(variable):
         cells = lake_svc.cube(meta, variable).where(f"row = {r} AND col = {c}")
