@@ -36,9 +36,10 @@ HANDLED = (*UNPROCESSABLE, TimeseriesTimeoutError)
 
 
 def error_response(ex: Exception, processing_time: int) -> tuple[int, dict[str, Any]]:
-    """One of the ``HANDLED`` errors → (status, body), app-wide (reference
-    ``main.py:48-63``): 504 with the request's ``processing_time`` budget
-    for a timeout, else 422 with ``detail``."""
+    """One of the ``HANDLED`` errors, or a payload's ``ValueError``, →
+    (status, body), app-wide (reference ``main.py:48-63``): 504 with the
+    request's ``processing_time`` budget for a timeout, else 422 with
+    ``detail``."""
     if isinstance(ex, TimeseriesTimeoutError):
         return 504, {"detail": str(ex), "processing_time": processing_time}
     return 422, {"detail": [{"msg": str(ex), "type": type(ex).__name__}]}
@@ -53,8 +54,9 @@ def handle_timeseries_v2(
     except ValidationError as ex:
         return 422, {"detail": json.loads(ex.json())}
     except ValueError as ex:
-        # legacy_payload_to_v2 conflicts (e.g. transforms + series options)
-        return 422, {"detail": [{"msg": str(ex), "type": type(ex).__name__}]}
+        # legacy_payload_to_v2 conflicts (e.g. transforms + series options);
+        # a 422 never reads the budget
+        return error_response(ex, 0)
     try:
         resp = service.execute(req)
     except HANDLED as ex:

@@ -19,7 +19,8 @@ cell's mean or median is its value. The registry's SKOPE queries run the
 same ``zonal_picks`` plan, so their DuckDB oracles check it. Each
 request's slice runs transform, smoothers, clipping and summaries on the
 driver (``api/kernels.py``); requests with ``include_uncertainty`` share
-one more scan over the ``_uncertainty`` cube.
+one more scan over the ``_uncertainty`` slice. Every service reads one
+long cube table, ``lake``, whatever holds it.
 
 The collect runs under a cancellable job group (cooperative timeout — the
 reference's anyio ``fail_after`` → 504 becomes ``TimeseriesTimeoutError``;
@@ -66,7 +67,7 @@ from skope_api_spark.plans.intervals import (
     normalize_time_range,
     output_band_range,
 )
-from skope_api_spark.sources.cube import analytic_cube, cell_area_m2
+from skope_api_spark.sources.cube import cell_area_m2
 
 
 class TimeseriesTimeoutError(RuntimeError):
@@ -270,14 +271,32 @@ class _Plan:
 
 @dataclass
 class TimeseriesService:
+    """The API over one long cube table, ``lake`` (``sources.cube``): the
+    Parquet lake as read by ``sources.lake.lake_service``, or the dev cube
+    ``full_dev_cube``. The service plans every request against that
+    DataFrame, so a Parquet lake's file listing is fixed when the caller
+    reads it: a lake re-ingested after that needs a new service."""
+
     spark: SparkSession
+    lake: DataFrame
     catalog: Catalog = field(default_factory=Catalog)
     max_cells: int = DEFAULT_MAX_CELLS
+    _slices: dict[tuple[str, str], DataFrame] = field(
+        default_factory=dict, init=False, repr=False
+    )
 
     def cube(self, meta: DatasetMeta, variable_id: str) -> DataFrame:
-        """Cube slice provider — dev default regenerates the analytic cube;
-        override/subclass to read the ingested Parquet lake instead."""
-        return analytic_cube(self.spark, meta.dataset_id, variable_id, meta=meta)
+        """The (dataset, variable) slice of the lake, built once per
+        service (a ``Column`` chain costs a py4j round trip per operator).
+        Its partition filters list one lake directory; a slice the lake
+        does not hold is an empty scan."""
+        key = (meta.dataset_id, variable_id)
+        if key not in self._slices:
+            self._slices[key] = self.lake.where(
+                (F.col("dataset_id") == meta.dataset_id)
+                & (F.col("variable_id") == variable_id)
+            )
+        return self._slices[key]
 
     # -- lifecycle -----------------------------------------------------------
 
@@ -399,10 +418,9 @@ class TimeseriesService:
             unc = [i for i in idxs if reqs[i].include_uncertainty]
             if not unc:
                 continue
-            try:
-                ucube = self.cube(meta, variable_id + "_uncertainty")
-            except KeyError:
-                continue  # dataset has no uncertainty companion
+            # a variable with no uncertainty companion scans an empty
+            # slice, and its requests keep ``uncertainty`` None
+            ucube = self.cube(meta, variable_id + "_uncertainty")
             # S6 — no padding: transforms and smoothers never apply to the
             # uncertainty channel, so each request reads its requested range
             picks = [(plans[i].cells, [plans[i].requested]) for i in unc]

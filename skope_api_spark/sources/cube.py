@@ -16,11 +16,11 @@ reference ``test_datasets.py:68-88``), so no raster reader is needed:
 nodata cells become NULL (P4), cell centers/areas are materialized at
 ingestion (P5/A4).
 
-``cell_area`` uses the spherical-band formula with the WGS84 authalic
-radius: area = R²·Δλ·(sin φ_top − sin φ_bot). The reference uses pyproj's
-geodesic area (``geometry.py:62-71,141-156``); the two differ by < 0.3% —
-documented divergence (pyproj is unavailable here, and the formula is
-deterministic enough to be oracle-checked in SQL).
+``cell_area`` is the exact WGS84 ellipsoidal band area (``cell_area_m2``),
+computed on the driver once per grid row: every ingest path and the
+service's ``area_m2`` use that one function. The reference uses pyproj's
+geodesic area (``geometry.py:62-71,141-156``); the two differ by < 1e-5
+relative on ≤1° cells (pyproj is unavailable here).
 """
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from skope_api_spark.plans.catalog import DEV_CATALOG, DatasetMeta
 from skope_api_spark.plans.intervals import MONTH
+from skope_api_spark.session import local_frame
 
 # WGS84 ellipsoid — cell areas use the EXACT ellipsoidal band integral
 # (Snyder, "Map Projections — A Working Manual", eq. 3-12): for a cell
@@ -136,10 +137,17 @@ def analytic_cube(
     rule = VARIABLE_RULES[(dataset_id, variable_id)] if rule is None else rule
     nb = meta.n_bands()
 
+    # general form for arbitrary (possibly rectangular) pixels, matching
+    # Grid.cell_bounds: cell (r, c) spans [origin + c*px_lon, ...); center
+    # at +px/2 on each axis.
+    px_lon = meta.pixel_deg if meta.pixel_deg_lon is None else meta.pixel_deg_lon
+    px = meta.pixel_deg if meta.pixel_deg_lat is None else meta.pixel_deg_lat
+    # a row's cells share their area: the row dimension carries it
+    areas = cell_area_m2(meta.origin_lat - np.arange(meta.grid_rows) * px, px, px_lon)
     df = (
         spark.range(1, nb + 1)
         .select(F.col("id").cast("int").alias("b"))
-        .crossJoin(spark.range(0, meta.grid_rows).select(F.col("id").cast("int").alias("r")))
+        .crossJoin(local_frame(spark, list(enumerate(areas.tolist())), "r int, cell_area double"))
         .crossJoin(spark.range(0, meta.grid_cols).select(F.col("id").cast("int").alias("c")))
     )
 
@@ -157,29 +165,8 @@ def analytic_cube(
     else:
         time = F.add_months(origin, (F.col("b") - 1) * 12)
 
-    # general form for arbitrary (possibly rectangular) pixels, matching
-    # Grid.cell_bounds: cell (r, c) spans [origin + c*px_lon, ...); center
-    # at +px/2 on each axis.
-    px_lon = meta.pixel_deg if meta.pixel_deg_lon is None else meta.pixel_deg_lon
-    px = meta.pixel_deg if meta.pixel_deg_lat is None else meta.pixel_deg_lat
     lon = F.lit(meta.origin_lon) + F.col("c") * F.lit(px_lon) + F.lit(px_lon / 2)
     lat = F.lit(meta.origin_lat) - F.col("r") * F.lit(px) - F.lit(px / 2)
-    lat_top = F.lit(meta.origin_lat) - F.col("r") * F.lit(px)
-
-    def q(lat_deg):
-        s = F.sin(F.radians(lat_deg))
-        return F.lit(1.0 - WGS84_E2) * (
-            s / (F.lit(1.0) - F.lit(WGS84_E2) * s * s)
-            + F.log(
-                (F.lit(1.0) + F.lit(WGS84_E) * s)
-                / (F.lit(1.0) - F.lit(WGS84_E) * s)
-            )
-            / F.lit(2.0 * WGS84_E)
-        )
-
-    area = F.lit(math.radians(px_lon) * WGS84_A_M**2 / 2.0) * (
-        q(lat_top) - q(lat_top - F.lit(px))
-    )
 
     return df.select(
         F.lit(dataset_id).alias("dataset_id"),
@@ -190,7 +177,7 @@ def analytic_cube(
         F.col("c").alias("col"),
         lon.alias("lon"),
         lat.alias("lat"),
-        area.alias("cell_area"),
+        "cell_area",
         value.alias("value"),
     )
 
@@ -247,7 +234,3 @@ def write_lake(cube: DataFrame, path: str) -> None:
         .partitionBy("dataset_id", "variable_id")
         .parquet(path)
     )
-
-
-def load_cube(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

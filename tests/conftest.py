@@ -47,22 +47,28 @@ def _warmup(s) -> None:
     out.collect()
     out.unpersist()
 
-    # Also warm the SERVICE path with one untimed request
-    # (max_processing_time=0 → no deadline): the first cube request pays
-    # parquet listing + cube-plan codegen (~16 s on a freshly booted
-    # host), which exceeded the 15 s request budget and flaked
-    # test_batch_service when that module ran before any other service
-    # module had warmed the path. test_api's module fixture does the
-    # same for itself; doing it once here covers every service module
-    # regardless of execution order or -k selection.
+
+@pytest.fixture(scope="session")
+def dev_service(spark):
+    """The dev service: ``TimeseriesService`` over ``full_dev_cube``.
+
+    Its one UNTIMED request (max_processing_time=0 → no deadline),
+    mirroring the reference's app-startup ingest, pays the first
+    request's cube-plan codegen (~16 s on a freshly booted host) before
+    any timed request runs: that cost exceeded the 15 s request budget
+    (reference config.py:32) and flaked whichever service module ran
+    first."""
     from skope_api_spark.api import models as M
     from skope_api_spark.api.service import TimeseriesService
+    from skope_api_spark.sources.cube import full_dev_cube
 
-    TimeseriesService(s).execute(
+    svc = TimeseriesService(spark, full_dev_cube(spark))
+    svc.execute(
         M.TimeseriesV2Request(
             dataset_id="annual_5x5x5_dataset",
-            variable_id="uint16_variable",
+            variable_id="float32_variable",
             selected_area={"type": "Point", "coordinates": [-123.0, 45.0]},
             max_processing_time=0,
         )
     )
+    return svc

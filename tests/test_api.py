@@ -19,22 +19,8 @@ INTERIOR_POINT = {"type": "Point", "coordinates": [-120.0, 42.5]}
 
 
 @pytest.fixture(scope="module")
-def service(spark):
-    svc = TimeseriesService(spark)
-    # Startup warm-up, mirroring the reference's app-startup ingest: one
-    # UNTIMED request (max_processing_time=0 → no deadline) pays the
-    # first-plan codegen JIT so the timed tests below measure request
-    # processing, not JVM warm-up (which is not part of any request's
-    # budget). Response content is ignored.
-    svc.execute(
-        M.TimeseriesV2Request(
-            dataset_id="annual_5x5x5_dataset",
-            variable_id="float32_variable",
-            selected_area=ORIGIN_POINT,
-            max_processing_time=0,
-        )
-    )
-    return svc
+def service(dev_service):
+    return dev_service
 
 
 def v2(**kw) -> M.TimeseriesV2Request:
@@ -377,15 +363,8 @@ class TestNonSquareGrid:
             pixel_deg_lon=0.5,
             pixel_deg_lat=1.0,
         )
-        rule = self.RULE
-
-        class RectService(TimeseriesService):
-            def cube(self, meta, variable_id):
-                return analytic_cube(
-                    self.spark, meta.dataset_id, variable_id, meta=meta, rule=rule
-                )
-
-        return RectService(spark, catalog=Catalog(datasets={self.RECT_ID: meta}))
+        cube = analytic_cube(spark, self.RECT_ID, "uint16_variable", meta=meta, rule=self.RULE)
+        return TimeseriesService(spark, cube, catalog=Catalog(datasets={self.RECT_ID: meta}))
 
     def rect_v2(self, **kw):
         base = dict(

@@ -9,7 +9,7 @@ import pytest
 
 from skope_api_spark.api import models as M
 from skope_api_spark.api import service as service_mod
-from skope_api_spark.api.service import TimeseriesService, TimeseriesTimeoutError
+from skope_api_spark.api.service import TimeseriesTimeoutError
 
 POINT = {"type": "Point", "coordinates": [-123.0, 45.0]}
 SQUARE = {
@@ -21,8 +21,8 @@ SQUARE = {
 
 
 @pytest.fixture(scope="module")
-def service(spark):
-    return TimeseriesService(spark)
+def service(dev_service):
+    return dev_service
 
 
 def _strip_time(resp):

@@ -10,14 +10,13 @@ import pytest
 
 from skope_api_spark.api import http as H
 from skope_api_spark.api import models as M
-from skope_api_spark.api.service import TimeseriesService
 
 POINT = {"type": "Point", "coordinates": [-123.0, 45.0]}
 
 
 @pytest.fixture(scope="module")
-def service(spark):
-    return TimeseriesService(spark)
+def service(dev_service):
+    return dev_service
 
 
 class TestV2Route:
@@ -205,8 +204,11 @@ class TestMalformedPayloads422:
                 ],
             },
         )
-        assert status == 422
-        assert "transforms" in body["detail"][0]["msg"]
+        assert (status, body) == (422, {"detail": [{
+            "msg": "payload mixes legacy 'transforms' with"
+                   " 'requested_series_options' — send one or the other",
+            "type": "ValueError",
+        }]})
 
 
 # The four request payloads the reference ships under

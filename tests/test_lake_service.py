@@ -1,4 +1,4 @@
-"""Lake-backed service: identical responses to the analytic provider,
+"""The service over a Parquet lake: identical responses to the dev cube,
 partition-pruned scans, and a tile-clustered layout whose page indexes
 let a point read its own tile."""
 
@@ -15,7 +15,12 @@ from skope_api_spark.api import models as M
 from skope_api_spark.api.service import TimeseriesService
 from skope_api_spark.plans.catalog import DEV_CATALOG, DatasetMeta
 from skope_api_spark.plans.intervals import YEAR, TimeRange
-from skope_api_spark.sources.cube import TILE_CELLS, VARIABLE_RULES, ingest_to_parquet
+from skope_api_spark.sources.cube import (
+    TILE_CELLS,
+    VARIABLE_RULES,
+    full_dev_cube,
+    ingest_to_parquet,
+)
 from skope_api_spark.sources.lake import lake_service
 
 POINT = {"type": "Point", "coordinates": [-120.0, 42.5]}
@@ -38,39 +43,38 @@ def req(**kw):
     return M.TimeseriesV2Request(**base)
 
 
+SQUARE = {
+    "type": "Polygon",
+    "coordinates": [[[-121.9, 43.9], [-120.1, 43.9], [-120.1, 42.1],
+                     [-121.9, 42.1], [-121.9, 43.9]]],
+}
+
+
 class TestLakeService:
-    def test_matches_analytic_provider(self, spark, lake):
-        a = TimeseriesService(spark).execute(req())
-        b = lake_service(spark, lake).execute(req())
-        da, db = a.model_dump(), b.model_dump()
-        da.pop("processing_time_ms"), db.pop("processing_time_ms")
-        assert da == db
-        assert b.series[0].values == [
-            pytest.approx(x + 23.3, abs=0.01) for x in (100, 200, 300, 400, 500)
-        ]
+    def test_matches_analytic_provider(self, spark, dev_service, lake):
+        """The dev cube and the Parquet lake answer alike, uncertainty
+        included; a variable with no uncertainty companion gets none."""
+        parquet = lake_service(spark, lake)
+        point = req()
+        polygon = req(selected_area=SQUARE, include_uncertainty=True)
+        no_companion = req(variable_id="uint16_variable", include_uncertainty=True)
+        for r in (point, polygon, no_companion):
+            a, b = dev_service.execute(r), parquet.execute(r)
+            da, db = a.model_dump(), b.model_dump()
+            da.pop("processing_time_ms"), db.pop("processing_time_ms")
+            assert da == db
+            assert (b.uncertainty is None) == (r is not polygon)
+            if r is point:
+                assert b.series[0].values == [
+                    pytest.approx(x + 23.3, abs=0.01) for x in (100, 200, 300, 400, 500)
+                ]
 
     def test_scan_is_partition_pruned(self, spark, lake):
         svc = lake_service(spark, lake)
-        from skope_api_spark.plans.catalog import DEV_CATALOG
-
         cube = svc.cube(DEV_CATALOG["annual_5x5x5_dataset"], "float32_variable")
         plan = cube._jdf.queryExecution().executedPlan().toString()
         pf = plan.split("PartitionFilters")[1][:300]
         assert "dataset_id" in pf and "variable_id" in pf
-
-    def test_lake_is_opened_once_per_service(self, spark, lake, monkeypatch):
-        svc = lake_service(spark, lake)
-        reads = []
-        real = svc._spark_read
-
-        def spy():
-            reads.append(1)
-            return real()
-
-        monkeypatch.setattr(svc, "_spark_read", spy)
-        svc.execute(req())
-        svc.execute(req(zonal_statistic="median"))
-        assert len(reads) == 1
 
     def test_batched_scan_pushes_the_band_filter(self, spark, lake, monkeypatch):
         from skope_api_spark.api import service as service_mod
@@ -83,19 +87,19 @@ class TestLakeService:
             return real(spark, df, timeout_ms)
 
         monkeypatch.setattr(service_mod, "collect_with_timeout", spy)
-        square = {
-            "type": "Polygon",
-            "coordinates": [[[-121.9, 43.9], [-120.1, 43.9], [-120.1, 42.1],
-                             [-121.9, 42.1], [-121.9, 43.9]]],
-        }
-        lake_service(spark, lake).execute_many([req(), req(selected_area=square)])
+        lake_service(spark, lake).execute_many([req(), req(selected_area=SQUARE)])
         (df,) = collected
         plan = df._jdf.queryExecution().executedPlan().toString()
         pushed = plan.split("PushedFilters")[1][:300]
         assert "GreaterThanOrEqual(band," in pushed and "LessThanOrEqual(ban" in pushed
 
-    def test_two_requests_build_the_slice_once(self, spark, lake, monkeypatch):
-        svc = lake_service(spark, lake)
+    @pytest.mark.parametrize("source", ["dev", "parquet"])
+    def test_two_requests_build_the_slice_once(self, spark, lake, monkeypatch, source):
+        svc = (
+            TimeseriesService(spark, full_dev_cube(spark))
+            if source == "dev"
+            else lake_service(spark, lake)
+        )
         frame = type(svc.lake)
         slices = []
         real = frame.where

@@ -48,8 +48,8 @@ TRACED_LAYERS = ("collect_with_timeout", "rasterize_all_touched", "mask_df", "zo
 
 
 @pytest.fixture(scope="module")
-def service(spark):
-    return TimeseriesService(spark)
+def service(dev_service):
+    return dev_service
 
 
 @pytest.fixture(scope="module")

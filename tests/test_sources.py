@@ -10,7 +10,6 @@ from skope_api_spark.sources.cube import (
     analytic_cube,
     full_dev_cube,
     ingest_to_parquet,
-    load_cube,
 )
 from skope_api_spark.sources.store import DatasetStore, PathTraversalError
 
@@ -85,7 +84,7 @@ class TestIngestionRoundTrip:
         return path
 
     def test_roundtrip_values_equal(self, spark, lake):
-        disk = load_cube(spark, lake)
+        disk = spark.read.parquet(lake)
         mem = full_dev_cube(spark)
         # same row count and identical per-slice checksums
         assert disk.count() == mem.count()
@@ -105,7 +104,7 @@ class TestIngestionRoundTrip:
         assert sums_disk == sums_mem
 
     def test_partition_pruning(self, spark, lake):
-        disk = load_cube(spark, lake)
+        disk = spark.read.parquet(lake)
         q = disk.where(
             (F.col("dataset_id") == "annual_5x5x5_dataset")
             & (F.col("variable_id") == "float32_variable")
@@ -118,7 +117,7 @@ class TestIngestionRoundTrip:
         assert "band" in plan.split("PushedFilters")[1][:200]
 
     def test_uncertainty_slice_present(self, spark, lake):
-        disk = load_cube(spark, lake)
+        disk = spark.read.parquet(lake)
         unc = disk.where(F.col("variable_id") == "float32_variable_uncertainty")
         assert unc.count() == 125
         # uncertainty rule: b*10 + r + c*0.1 at origin = b*10
