@@ -12,14 +12,16 @@ both as one span; nesting them would count a request twice). Per
 runs at most ONE Spark aggregation and ONE collect of ``zonal_picks``: a
 scan filtered by the OR of the disjoint band intervals the group needs
 (padded extractions and fixed z-score reference ranges) and by its cell
-bounding box, then a literal cell predicate for a lone one-cell request
-or else one broadcast ``(query_id, row, col, bgte, blte)`` mask join. A
-group whose every request picks one cell runs no aggregation: a lone
-cell's mean or median is its value. The registry's SKOPE queries run the
-same ``zonal_picks`` plan, so their DuckDB oracles check it. Each
-request's slice runs transform, smoothers, clipping and summaries on the
-driver (``api/kernels.py``); requests with ``include_uncertainty`` share
-one more scan over the ``_uncertainty`` slice. Every service reads one
+bounding box, then a literal cell predicate for a lone request (for a
+polygon, within ``ONE_TASK_CELLS`` and ``ONE_TASK_ROWS``, aggregated in
+its one scan task: one Spark job, no exchange) or else one broadcast
+``(query_id, row, col, bgte, blte)`` mask join. A group whose every
+request picks one cell runs no aggregation: a lone cell's mean or median
+is its value. The registry's SKOPE queries run the same ``zonal_picks``
+plan, so their DuckDB oracles check it. Each request's slice runs
+transform, smoothers, clipping and summaries on the driver
+(``api/kernels.py``); requests with ``include_uncertainty`` share one
+more scan over the ``_uncertainty`` slice. Every service reads one
 long cube table, ``lake``, whatever holds it.
 
 The collect runs under a cancellable job group (cooperative timeout — the
@@ -68,6 +70,17 @@ from skope_api_spark.plans.intervals import (
     output_band_range,
 )
 from skope_api_spark.sources.cube import cell_area_m2
+
+
+# A lone pick of at most ONE_TASK_CELLS cells that selects at most
+# ONE_TASK_ROWS rows (cells × bands) is selected with a literal predicate
+# and aggregated in the one task that scans it. Above either bound the
+# broadcast mask join and the partial-aggregate exchange win: Spark plans
+# the predicate in time linear in its cells, and one task aggregates a
+# large selection slower than the exchange spreads it (PERF.md "One Spark
+# job per polygon request": the sweeps).
+ONE_TASK_CELLS = 2_000
+ONE_TASK_ROWS = 600_000
 
 
 class TimeseriesTimeoutError(RuntimeError):
@@ -199,24 +212,48 @@ def zonal_picks(
 
     The scan is filtered by the union of the picks' bands and their
     cells' bounding box, which the Parquet reader prunes with. A lone
-    one-cell pick is a literal ``row = r AND col = c`` predicate;
-    anything else is ONE broadcast join of a ``(query_id, row, col,
-    bgte, blte)`` mask, clipped by ``band BETWEEN bgte AND blte``
-    (inner, not semi: a cell may belong to several picks, and each
-    membership must produce a row). When every pick is one cell, the
-    selected rows are the series: no aggregation runs.
+    pick is a literal predicate: ``row = r AND col = c`` for one cell,
+    and for several cells their offsets in the bounding box, ``(row -
+    r0) * w + (col - c0) IN (...)``, when it has at most
+    ``ONE_TASK_CELLS`` cells and selects at most ``ONE_TASK_ROWS`` rows,
+    which are then coalesced into one partition so that the scan task
+    aggregates them (one Spark job, no broadcast, no exchange). Anything
+    else is ONE broadcast join of a ``(query_id, row, col, bgte, blte)``
+    mask, clipped by ``band BETWEEN bgte AND blte`` (inner, not semi: a
+    cell may belong to several picks, and each membership must produce a
+    row). A pick's cells are distinct, so for
+    a lone pick the predicate and the join select the same rows. When
+    every pick is one cell, the selected rows are the series: no
+    aggregation runs.
     """
     cells = [rc for cs, _ in picks for rc in cs]
     bands = disjoint_band_ranges([b for _, bs in picks for b in bs])
     # predicates are SQL strings: one py4j call each, where a Column
     # costs a round trip (~1 ms) per operator
     in_bands = " OR ".join(f"band BETWEEN {b.gte} AND {b.lte}" for b in bands)
+    rs, cs = zip(*cells)
+    r0, c0 = min(rs), min(cs)
+    in_bbox = (
+        f"({in_bands}) AND row BETWEEN {r0} AND {max(rs)} "
+        f"AND col BETWEEN {c0} AND {max(cs)}"
+    )
+    n_rows = len(cells) * sum(b.lte - b.gte + 1 for b in bands)
     if len(cells) == 1:  # one pick of one cell (a pick is never empty)
         (r, c), = cells
         selected = cube.where(f"({in_bands}) AND row = {r} AND col = {c}")
         selected = selected.withColumn("query_id", F.lit(0))
+    elif len(picks) == 1 and len(cells) <= ONE_TASK_CELLS and n_rows <= ONE_TASK_ROWS:
+        # an int key per cell of the bounding box: below the box's cell
+        # count, so it cannot overflow
+        w = max(cs) - c0 + 1
+        offsets = ", ".join(str((r - r0) * w + c - c0) for r, c in cells)
+        selected = (
+            cube.where(f"{in_bbox} AND (row - {r0}) * {w} + (col - {c0}) IN ({offsets})")
+            # a single partition needs no exchange to aggregate
+            .coalesce(1)
+            .withColumn("query_id", F.lit(0))
+        )
     else:
-        rs, cs = zip(*cells)
         mask = mask_df(
             cube.sparkSession,
             [(q, r, c, b.gte, b.lte)
@@ -225,10 +262,7 @@ def zonal_picks(
             "query_id int, row int, col int, bgte int, blte int",
         )
         selected = (
-            cube.where(
-                f"({in_bands}) AND row BETWEEN {min(rs)} AND {max(rs)} "
-                f"AND col BETWEEN {min(cs)} AND {max(cs)}"
-            )
+            cube.where(in_bbox)
             .join(F.broadcast(mask), ["row", "col"])
             .where("band BETWEEN bgte AND blte")
         )

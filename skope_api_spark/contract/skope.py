@@ -552,7 +552,7 @@ def skope_point_with_uncertainty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- polygon mask → broadcast mask join (P6, J1, A4) ------------------------
+# --- polygon mask → cell selection of a lone pick (P6, J1, A4) -------------
 _TRIANGLE = {
     "type": "Polygon",
     "coordinates": [
@@ -581,8 +581,8 @@ ORDER BY band
 )
 def skope_polygon_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6/J1 — driver-side all_touched rasterization of a triangle → the
-    service's broadcast mask join on (row, col) (one pick of distinct
-    cells: the inner join is the semi-join) → zonal stats + area (A4), the
+    service's cell selection of a lone pick, a literal predicate over the
+    cells (the semi-join as a filter) → zonal stats + area (A4), the
     area being the service's own sum of the cells' areas. The oracle
     applies the identical driver-rasterized mask as literals."""
     cube = analytic_cube(spark, ANNUAL, F32)

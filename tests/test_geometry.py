@@ -125,8 +125,9 @@ class TestRasterize:
 
 
 class TestSemiJoin:
-    """J1 through the service plan: for one pick of distinct cells the
-    tagged inner mask join is the spatial semi-join."""
+    """J1 through the service plan: a lone pick selects its distinct cells
+    with a literal predicate, and for a batch of picks the tagged inner
+    mask join is the spatial semi-join of each pick."""
 
     def test_polygon_zonal_mean_matches_manual(self, spark):
         cube = analytic_cube(spark, "annual_5x5x5_dataset", "uint16_variable")
@@ -138,8 +139,15 @@ class TestSemiJoin:
             assert out[b].n_cells == 4
 
     def test_mask_join_is_broadcast(self, spark):
-        cube = analytic_cube(spark, "annual_5x5x5_dataset", "uint16_variable")
-        picked = zonal_picks(cube, "mean", [([(0, 0), (1, 1)], BANDS)])
-        plan = picked._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan and "Inner" in plan
-        assert "LeftSemi" not in plan
+        # checkpointed, so that the plan holds no join of the cube's own
+        cube = analytic_cube(spark, "annual_5x5x5_dataset", "uint16_variable").localCheckpoint()
+
+        def plan(picks):
+            df = zonal_picks(cube, "mean", [(cells, BANDS) for cells in picks])
+            return df._jdf.queryExecution().executedPlan().toString()
+
+        lone = plan([[(0, 0), (1, 1)]])
+        assert "Join" not in lone and "BroadcastExchange" not in lone
+        two = plan([[(0, 0), (1, 1)], [(1, 1)]])
+        assert two.count("BroadcastHashJoin") == 1 and "Inner" in two
+        assert "LeftSemi" not in two

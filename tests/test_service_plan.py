@@ -1,11 +1,13 @@
 """Request plan shape: one Spark aggregation and one collect per request
-(and per batched group, over one broadcast mask), and the layer entry
-points the traced benchmark (``perfbench/spans.py``) wraps stay module
-globals of ``api/service.py``."""
+(and per batched group, over one broadcast mask), one Spark job for a
+lone polygon, and the layer entry points the traced benchmark
+(``perfbench/spans.py``) wraps stay module globals of
+``api/service.py``."""
 
 from __future__ import annotations
 
 import re
+import uuid
 from datetime import date
 
 import pytest
@@ -159,6 +161,9 @@ def test_perfbench_tracer_wraps_the_service_layers(service):
     try:
         assert all(getattr(service_mod, n) is not f for n, f in originals.items())
         service.execute(_req(**REQUESTS["polygon_rolling_z"]))
+        # a batch of two picks selects its cells with the mask
+        tracer.op = 1
+        service.execute_many([_req(**REQUESTS["polygon_rolling_z"]), _req(**REQUESTS["point"])])
     finally:
         tracer.uninstall()
     assert all(getattr(service_mod, n) is f for n, f in originals.items())
@@ -166,10 +171,93 @@ def test_perfbench_tracer_wraps_the_service_layers(service):
 
     layers = tracer.per_op(0)
     for span in ("service.execute", "service.collect", "geometry.rasterize",
-                 "geometry.mask_df", "operators.zonal_series"):
+                 "operators.zonal_series"):
         assert layers.get(span, 0) > 0, span
     assert layers["service.collects"] == 1
     assert layers["geometry.cells"] == 4
+    assert tracer.per_op(1).get("geometry.mask_df", 0) > 0
+
+
+def _jobs(spark, run) -> int:
+    """The Spark jobs ``run()`` submits, counted by a job group of its own."""
+    sc = spark.sparkContext
+    group = f"plan-test-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "plan test")
+    try:
+        run()
+    finally:
+        sc.setJobGroup("", "", False)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lone_polygon_is_one_job_with_no_exchange(spark, lake_svc, monkeypatch):
+    """A lone polygon within ``ONE_TASK_CELLS`` and ``ONE_TASK_ROWS``
+    selects its cells with a predicate and aggregates them in the scan's
+    one task: no broadcast, no exchange, one Spark job. With either bound
+    at 0 the same polygon plans the broadcast mask join and one
+    aggregation exchange."""
+    polygon = _req(selected_area=SQUARE, max_processing_time=0)
+    collected = _spy_collects(monkeypatch)
+    assert _jobs(spark, lambda: lake_svc.execute(polygon)) == 1
+    plan = collected[-1]._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Join" not in plan
+
+    point = _req(selected_area=POINT, max_processing_time=0)
+    assert _jobs(spark, lambda: lake_svc.execute(point)) == 1
+    qe = collected[-1]._jdf.queryExecution()
+    assert "Aggregate" not in qe.optimizedPlan().toString() + qe.executedPlan().toString()
+    assert _broadcasts(collected[-1]) == 0
+
+    for bound in ("ONE_TASK_CELLS", "ONE_TASK_ROWS"):
+        with monkeypatch.context() as patched:
+            patched.setattr(service_mod, bound, 0)
+            lake_svc.execute(polygon)
+        initial = collected[-1]._jdf.queryExecution().executedPlan().toString()
+        initial = initial.split("== Initial Plan ==")[-1]
+        assert _broadcasts(collected[-1]) == 1, bound
+        assert initial.count("Exchange hashpartitioning") == 1, bound
+
+
+# covers the annual NULL hole at (2, 4): cells (1, 3), (1, 4), (2, 3), (2, 4)
+HOLE_SQUARE = {
+    "type": "Polygon",
+    "coordinates": [
+        [[-119.9, 43.9], [-118.1, 43.9], [-118.1, 42.1], [-119.9, 42.1], [-119.9, 43.9]]
+    ],
+}
+
+
+@pytest.mark.parametrize("stat", ["mean", "median"])
+@pytest.mark.parametrize("lake", ["dev", "parquet"])
+def test_lone_polygon_plans_agree(service, lake_svc, monkeypatch, lake, stat):
+    """A lone polygon's rows, NULL band included, are exactly those of the
+    broadcast-join plan (bound 0) and of the same pick batched next to
+    another; so are its series and its uncertainty series."""
+    svc = service if lake == "dev" else lake_svc
+    req = _req(selected_area=HOLE_SQUARE, zonal_statistic=stat, include_uncertainty=True)
+    meta = svc.catalog.variable(req.dataset_id, req.variable_id)
+    plan = svc._plan(req, meta)
+    assert (2, 4) in plan.cells and len(plan.cells) == 4
+    cube = svc.cube(meta, req.variable_id)
+    pick = (plan.cells, plan.bands())
+
+    def rows(picks) -> list[tuple]:
+        out = service_mod.zonal_picks(cube, stat, picks).where("query_id = 0")
+        return sorted((r.band, r.value, r.n_cells, r.n_valid) for r in out.collect())
+
+    def answer() -> tuple:
+        resp = svc.execute(req)
+        return resp.series[0].values, resp.uncertainty.values
+
+    alone, alone_answer = rows([pick]), answer()
+    assert [n_valid for *_, n_valid in alone] == [4, 4, 3, 4, 4]  # the hole at band 3
+    batched = rows([pick, ([(0, 0)], plan.bands())])
+    neighbour = _req(selected_area=SQUARE, zonal_statistic=stat, include_uncertainty=True)
+    batched_answer = svc.execute_many([req, neighbour])[0]
+    monkeypatch.setattr(service_mod, "ONE_TASK_ROWS", 0)
+    assert rows([pick]) == alone == batched
+    assert answer() == alone_answer
+    assert (batched_answer.series[0].values, batched_answer.uncertainty.values) == alone_answer
 
 
 LONE_CELLS = [  # (dataset, variable, (row, col)): holes give NULL bands
