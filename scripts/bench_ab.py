@@ -13,8 +13,9 @@ boot in BOTH orders and taking the per-query geomean of the two ratios
 cancels order/warmth effects; only both-directions signals are real.
 Runs 4 benches (~25-40 min at sf0.1): HEAD, ref, ref, HEAD. Prints a
 markdown ratio table; queries with geomean > 1.25 are flagged REAL.
-The baseline runs from a temporary worktree; nothing in the working
-tree is touched.
+The baseline is exported with ``git archive`` into ``--scratch`` and
+kept there, as in perfbench mode; nothing in the working tree is
+touched.
 
 Perfbench mode (``BENCHMARK.json``, interleaved pairs):
 
@@ -86,55 +87,6 @@ def refuse_if_contended() -> None:
         )
 
 
-def registry_ab(ref: str) -> int:
-    refuse_if_contended()
-    tree = tempfile.mkdtemp(prefix="bench_ab_")
-    sh("git", "worktree", "add", "--detach", tree, ref)
-    try:
-        print(f"[ab] baseline {ref} in {tree}; 4 bench runs follow", flush=True)
-        runs = {}
-        for tag, t in (("head_a", REPO), ("ref_a", tree),
-                       ("ref_b", tree), ("head_b", REPO)):
-            runs[tag] = run_bench(t)
-            print(f"[ab] {tag}: headline {runs[tag]['value']}s "
-                  f"ext {runs[tag].get('value_ext')}s", flush=True)
-
-        print("\n| query | ratio A | ratio B | geomean | verdict |")
-        print("|---|---|---|---|---|")
-        for grp in ("queries", "queries_ext"):
-            ha, ra = runs["head_a"].get(grp, {}), runs["ref_a"].get(grp, {})
-            hb, rb = runs["head_b"].get(grp, {}), runs["ref_b"].get(grp, {})
-            for k in ha:
-                if k in ra and k in hb and k in rb:
-                    r1, r2 = ha[k] / ra[k], hb[k] / rb[k]
-                    g = math.sqrt(r1 * r2)
-                    verdict = ("**REAL**" if g > 1.25 else
-                               "improved" if g < 0.8 else "noise")
-                    print(f"| {k} | {r1:.2f} | {r2:.2f} | {g:.2f} | {verdict} |")
-        for key in ("value", "value_ext"):
-            try:
-                g = math.sqrt(
-                    (runs["head_a"][key] / runs["ref_a"][key])
-                    * (runs["head_b"][key] / runs["ref_b"][key])
-                )
-                print(f"\n{key} geomean: {g:.3f}")
-            except KeyError:
-                pass
-        return 0
-    finally:
-        subprocess.run(["git", "worktree", "remove", "--force", tree],
-                       cwd=REPO, capture_output=True)
-
-
-# -- perfbench mode ------------------------------------------------------------
-
-# a gain needs at least MIN_GAIN_PAIRS pairs, the change winning
-# GAIN_SHARE of them (9 of 10)
-MIN_GAIN_PAIRS = 10
-GAIN_SHARE = 0.9
-FIRST_SEED = 1000
-
-
 def export(ref: str, scratch: str) -> str:
     """``git archive`` of ``ref`` under ``scratch``, kept between calls."""
     sha = sh("git", "rev-parse", "--verify", f"{ref}^{{commit}}").strip()
@@ -148,6 +100,50 @@ def export(ref: str, scratch: str) -> str:
             raise SystemExit(f"[ab] git archive {sha} failed")
         os.rename(part, tree)
     return tree
+
+
+def registry_ab(ref: str, scratch: str) -> int:
+    refuse_if_contended()
+    tree = export(ref, scratch)
+    print(f"[ab] baseline {ref} in {tree}; 4 bench runs follow", flush=True)
+    runs = {}
+    for tag, t in (("head_a", REPO), ("ref_a", tree),
+                   ("ref_b", tree), ("head_b", REPO)):
+        runs[tag] = run_bench(t)
+        print(f"[ab] {tag}: headline {runs[tag]['value']}s "
+              f"ext {runs[tag].get('value_ext')}s", flush=True)
+
+    print("\n| query | ratio A | ratio B | geomean | verdict |")
+    print("|---|---|---|---|---|")
+    for grp in ("queries", "queries_ext"):
+        ha, ra = runs["head_a"].get(grp, {}), runs["ref_a"].get(grp, {})
+        hb, rb = runs["head_b"].get(grp, {}), runs["ref_b"].get(grp, {})
+        for k in ha:
+            if k in ra and k in hb and k in rb:
+                r1, r2 = ha[k] / ra[k], hb[k] / rb[k]
+                g = math.sqrt(r1 * r2)
+                verdict = ("**REAL**" if g > 1.25 else
+                           "improved" if g < 0.8 else "noise")
+                print(f"| {k} | {r1:.2f} | {r2:.2f} | {g:.2f} | {verdict} |")
+    for key in ("value", "value_ext"):
+        try:
+            g = math.sqrt(
+                (runs["head_a"][key] / runs["ref_a"][key])
+                * (runs["head_b"][key] / runs["ref_b"][key])
+            )
+            print(f"\n{key} geomean: {g:.3f}")
+        except KeyError:
+            pass
+    return 0
+
+
+# -- perfbench mode ------------------------------------------------------------
+
+# a gain needs at least MIN_GAIN_PAIRS pairs, the change winning
+# GAIN_SHARE of them (9 of 10)
+MIN_GAIN_PAIRS = 10
+GAIN_SHARE = 0.9
+FIRST_SEED = 1000
 
 
 def ensure_build(tree: str) -> None:
@@ -245,7 +241,7 @@ def main(argv: list[str]) -> int:
                     help="where the ref's export and the seed ledger are kept")
     args = ap.parse_args(argv)
     if args.workload is None:
-        return registry_ab(args.ref)
+        return registry_ab(args.ref, args.scratch)
     return perfbench_ab(args)
 
 

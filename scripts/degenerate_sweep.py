@@ -22,26 +22,26 @@ fixture whose documents carry ~1 MB blob-shaped rows (a no-whitespace
 base64-ish megatoken and a high-fanout word blob — the rows
 mm_binary_stats/sha paths and every text scan see when crawl junk is
 twice megadoc size); (b) a dedicated adversarial-blob protocol drives
-the sniffer → quarantine → codec → pHash/audio chain on
-executor-BUILT hostile payloads under the same interrupting watchdog:
-decompression-bomb headers for all four image codecs (claimed 4–10 GP
-vs the 64 MP cap), a WAV claiming a 2 GB data chunk, a REAL
-130 MB over-cap WAV (the cap must fire BEFORE the 8× float64
-conversion — the r14 fix in wav.py), a legal 192 MB at-cap BMP and a
-legal 120 MB WAV decoded end-to-end, truncated tails, 8 MB unknown
-noise, a VP8L/WebP header claiming the format's 268 MP maximum (must
-hash-FALL-BACK in the feature stage, never allocate or fail the
-batch) plus a legal VP8L decode, a 10 GP-claiming baseline TIFF
-through the raster-ingest reader (loud ValueError from the frombuffer
-count check, no allocation), a 64-frame animated GIF through
-the frame sampler, and — r15, closing the two remaining slow legal
-paths — a ~0.8 MP progressive (SOF2) JPEG with successive
-approximation + restart markers decoded through pHash, and a
-big-endian multi-strip (short final strip) page-per-band float32
-raster with nodata through geotiff_cells on real executors. Every
-drive asserts the expected classify/quarantine/decode outcome — a
-bomb that allocates, a cap that rejects a legal blob, or a quarantine
-that throws all fail the sweep.
+executor-BUILT hostile payloads through the registry's own binary stages
+(the sniffer, the frame sampler and the ``extract_features`` feature
+stage whose default encoder decodes pixels and falls back to the hash
+pseudo-embedding) under the same interrupting watchdog:
+decompression-bomb headers for the four image codecs and VP8L/WebP
+(claimed 4–268 MP vs the 64 MP cap: the raw decoder must refuse with
+MAX_PIXELS, and the feature stage must hash-FALL-BACK, never allocate
+or fail the batch), a truncated BMP tail and 8 MB unknown noise (fall
+back too), legal decodes that must take the pixel path (a 192 MB at-cap
+BMP, a 16 MP paletted BMP, a 512x512 VP8L, a GIF-sampled frame of a
+64-frame animation and a ~0.8 MP progressive (SOF2) JPEG with
+successive approximation + restart markers), a 10 GP-claiming baseline
+TIFF through the raster-ingest reader (loud ValueError from the
+frombuffer count check, no allocation) and a big-endian multi-strip
+(short final strip) page-per-band float32 raster with nodata through
+geotiff_cells on real executors. A fall-back blob's features must equal
+the hash encoder's row for row and a legal blob's must differ from
+them; both sides are computed executor-side, so no hostile byte reaches
+the driver. A bomb that allocates, a cap that rejects a legal blob, or
+a fallback that throws all fail the sweep.
 
 megadoc (r13): four pathological document shapes injected by doc_id —
 a ~30k-distinct-token shingle bomb, a 500 kB single token (no
@@ -457,40 +457,9 @@ def _bomb_jpeg() -> bytes:
     )
 
 
-def _wav_header(n_data_bytes: int, *, bits: int = 16, rate: int = 16000,
-                channels: int = 1, claimed: int | None = None) -> bytes:
-    import struct as s
-
-    claimed = n_data_bytes if claimed is None else claimed
-    fmt = s.pack("<HHIIHH", 1, channels, rate,
-                 rate * channels * bits // 8, channels * bits // 8, bits)
-    return (
-        b"RIFF" + s.pack("<I", 36 + claimed) + b"WAVE"
-        + b"fmt " + s.pack("<I", len(fmt)) + fmt
-        + b"data" + s.pack("<I", claimed)
-    )
-
-
-def _wav_claims_2gb() -> bytes:
-    # data chunk CLAIMS ~2 GB; 128-byte body. Must reject as truncated
-    # without allocating the claimed size.
-    return _wav_header(128, claimed=0x7FFFFFF0) + b"\x00" * 128
-
-
-def _wav_over_cap() -> bytes:
-    # REAL 130 MB PCM16 payload: 65M samples > 64M cap. The cap must
-    # fire BEFORE the float64 conversion (8x amplification).
-    return _wav_header(65_000_000 * 2) + b"\x00" * (65_000_000 * 2)
-
-
-def _wav_legal_120mb() -> bytes:
-    # 60M samples, under cap: must DECODE (features over 120 MB).
-    return _wav_header(60_000_000 * 2) + b"\x00" * (60_000_000 * 2)
-
-
 def _bmp_at_cap_192mb() -> bytes:
     # 8000x8000 = exactly 64 MP: legal, 192 MB of pixels. Must decode
-    # and pHash inside the watchdog.
+    # to pixel features inside the watchdog.
     from skope_api_spark.operators.bmp import bmp_encode
 
     px = bytearray(8000 * 8000 * 3)
@@ -621,7 +590,9 @@ def _gif_anim_64f() -> bytes:
 
 def _blob_df(spark, builder):
     """(media_id, content) with the blob built EXECUTOR-side — hostile
-    bytes never transit the driver, mirroring a real raw-bytes scan."""
+    bytes never transit the driver, mirroring a real raw-bytes scan.
+    Checkpointed once, so the builder runs once per drive and every
+    stage a drive compares reads the same bytes."""
     from pyspark.sql.types import (
         BinaryType, LongType, StructField, StructType,
     )
@@ -644,45 +615,69 @@ def _blob_df(spark, builder):
                 }
             )
 
-    return spark.range(1).mapInPandas(gen, schema)
+    return spark.range(1).mapInPandas(gen, schema).localCheckpoint()
 
 
 def _megablob_drives():
     """(name, fn(spark)) pairs; each asserts the expected outcome of one
-    hostile blob through the real operator chain."""
+    hostile blob through the registry's own binary stages: the sniffer
+    (``decode_image_metadata``) and the feature stage
+    (``extract_features``), whose default encoder decodes pixels and
+    falls back to the hash pseudo-embedding on any blob it refuses."""
+    from skope_api_spark.operators.bmp import bmp_decode
+    from skope_api_spark.operators.gif import gif_decode
+    from skope_api_spark.operators.jpeg import jpeg_decode
     from skope_api_spark.operators.multimodal import (
-        binary_stats, decode_image_metadata, gif_frame_sampler,
-        sample_frames,
+        binary_stats, decode_image_metadata, extract_features,
+        gif_frame_sampler, hash_pseudo_encoder, sample_frames,
     )
-    from skope_api_spark.operators.phash import image_phash
-    from skope_api_spark.operators.wav import decode_audio_features
+    from skope_api_spark.operators.png import png_decode
+    from skope_api_spark.operators.vp8l import vp8l_decode
 
-    def quarantined(spark, builder, fmt, needle):
-        df = _blob_df(spark, builder)
+    def sniffed(df, fmt):
         sniff = decode_image_metadata(df).collect()[0]
         assert sniff.format == fmt, f"sniffed {sniff.format}, want {fmt}"
-        r = image_phash(df).collect()[0]
-        assert r.error is not None and needle in r.error, (
-            f"expected quarantine containing {needle!r}, got {r.error!r}"
+        return sniff
+
+    def features(df, encoder=None):
+        # computed executor-side: only the small feature rows reach the
+        # driver, never the blob
+        return sorted(
+            (r.media_id, r.feature)
+            for r in extract_features(df, encoder=encoder).collect()
         )
 
-    def decodes(spark, builder, w, h):
-        r = image_phash(_blob_df(spark, builder)).collect()[0]
-        assert r.error is None, f"legal blob quarantined: {r.error!r}"
-        assert (r.width, r.height) == (w, h), (r.width, r.height)
-        assert r.phash is not None
+    def fell_back(df):
+        """Whether the default feature stage gave the hash encoder's
+        features row for row: a refused blob must (the batch does not
+        fail — at corpus scale a hostile blob is data), a legal one must
+        not (the pixel decode ran)."""
+        got = features(df)
+        assert len(got) == 1, len(got)
+        return got == features(df, hash_pseudo_encoder())
 
-    def wav_err(spark, builder, needle):
-        r = decode_audio_features(_blob_df(spark, builder)).collect()[0]
-        assert r.error is not None and needle in r.error, (
-            f"expected audio quarantine containing {needle!r}, "
-            f"got {r.error!r}"
-        )
+    def bomb(spark, builder, fmt, decode):
+        # the raw decode must refuse from the header alone
+        try:
+            decode(builder())
+            raise AssertionError(f"{fmt} bomb header decoded?!")
+        except ValueError as ex:
+            assert "MAX_PIXELS" in str(ex), ex
+        df = _blob_df(spark, builder)
+        sniffed(df, fmt)
+        assert fell_back(df), "refused blob did not take the hash fallback"
 
-    def wav_ok(spark, builder, n_frames):
-        r = decode_audio_features(_blob_df(spark, builder)).collect()[0]
-        assert r.error is None, f"legal WAV quarantined: {r.error!r}"
-        assert r.n_frames == n_frames, r.n_frames
+    def truncated(spark):
+        df = _blob_df(spark, _bmp_truncated_tail)
+        sniffed(df, "bmp")
+        assert fell_back(df), "truncated BMP did not take the hash fallback"
+
+    def decodes(spark, builder, fmt, w, h):
+        df = _blob_df(spark, builder)
+        sniff = sniffed(df, fmt)
+        dims = (sniff.width, sniff.height)
+        assert dims == (w, h), dims
+        assert not fell_back(df), "legal blob took the hash fallback"
 
     def noise(spark):
         df = _blob_df(spark, _noise_8mb)
@@ -690,8 +685,7 @@ def _megablob_drives():
         assert sniff.format is None and sniff.n_bytes == 8 * 1024 * 1024
         st = binary_stats(df).collect()[0]
         assert st.n_bytes == 8 * 1024 * 1024
-        r = image_phash(df).collect()[0]
-        assert r.error is not None
+        assert fell_back(df), "noise did not take the hash fallback"
 
     def tiff_bomb(spark):
         from skope_api_spark.sources.geotiff import read_baseline_tiff
@@ -706,34 +700,6 @@ def _megablob_drives():
         # CLAIMED dims (headers are metadata, decode is where caps live)
         sniff = decode_image_metadata(_blob_df(spark, _bomb_tiff)).collect()[0]
         assert sniff.format == "tiff", sniff.format
-
-    def webp_bomb(spark):
-        from skope_api_spark.operators.multimodal import extract_features
-        from skope_api_spark.operators.vp8l import vp8l_decode
-
-        # the raw decode must refuse from the header alone
-        try:
-            vp8l_decode(_bomb_webp())
-            raise AssertionError("268 MP VP8L header decoded?!")
-        except ValueError as ex:
-            assert "MAX_PIXELS" in str(ex), ex
-        df = _blob_df(spark, _bomb_webp)
-        sniff = decode_image_metadata(df).collect()[0]
-        assert sniff.format == "webp", sniff.format
-        # the feature stage must FALL BACK (hash pseudo-embedding), not
-        # fail the batch — at corpus scale a bomb header is data
-        feats = extract_features(df).collect()
-        assert len(feats) == 1 and feats[0].feature is not None
-
-    def webp_legal(spark):
-        from skope_api_spark.operators.multimodal import extract_features
-
-        df = _blob_df(spark, _webp_legal_512)
-        sniff = decode_image_metadata(df).collect()[0]
-        assert sniff.format == "webp", sniff.format
-        assert (sniff.width, sniff.height) == (512, 512)
-        feats = extract_features(df).collect()
-        assert len(feats) == 1 and feats[0].feature is not None
 
     def tiff_multistrip(spark):
         """Legal multi-strip decode through the geotiff ETL seam (r15,
@@ -784,40 +750,29 @@ def _megablob_drives():
             sampler=gif_frame_sampler(every_n=8, max_frames=4),
         ).collect()
         assert 1 <= len(rows) <= 4, len(rows)
-        # sampled frames are real BMPs: close the loop through pHash
-        fr = rows[0]
-        r = image_phash(
-            _blob_df(spark, lambda b=bytes(fr.frame_bytes): b)
-        ).collect()[0]
-        assert r.error is None and (r.width, r.height) == (64, 64)
+        # sampled frames are real BMPs: close the loop through the
+        # feature stage's pixel path
+        decodes(spark, lambda b=bytes(rows[0].frame_bytes): b, "bmp", 64, 64)
 
     return [
-        ("bomb_bmp_10gp", lambda s: quarantined(
-            s, _bomb_bmp, "bmp", "MAX_PIXELS")),
-        ("bomb_png_10gp", lambda s: quarantined(
-            s, _bomb_png, "png", "MAX_PIXELS")),
-        ("bomb_gif_4gp", lambda s: quarantined(
-            s, _bomb_gif, "gif", "MAX_PIXELS")),
-        ("bomb_jpeg_4gp", lambda s: quarantined(
-            s, _bomb_jpeg, "jpeg", "MAX_PIXELS")),
-        ("wav_claims_2gb", lambda s: wav_err(s, _wav_claims_2gb,
-                                             "truncated")),
-        ("wav_over_cap_130mb", lambda s: wav_err(s, _wav_over_cap,
-                                                 "exceeds cap")),
-        ("wav_legal_120mb", lambda s: wav_ok(s, _wav_legal_120mb,
-                                             60_000_000)),
+        ("bomb_bmp_10gp", lambda s: bomb(s, _bomb_bmp, "bmp", bmp_decode)),
+        ("bomb_png_10gp", lambda s: bomb(s, _bomb_png, "png", png_decode)),
+        ("bomb_gif_4gp", lambda s: bomb(s, _bomb_gif, "gif", gif_decode)),
+        ("bomb_jpeg_4gp", lambda s: bomb(s, _bomb_jpeg, "jpeg", jpeg_decode)),
         ("bmp_at_cap_192mb", lambda s: decodes(
-            s, _bmp_at_cap_192mb, 8000, 8000)),
-        ("bmp_truncated_tail", lambda s: quarantined(
-            s, _bmp_truncated_tail, "bmp", "truncated")),
-        ("bmp_pal8_16mp", lambda s: decodes(s, _bmp_pal8_16mp, 4000, 4000)),
+            s, _bmp_at_cap_192mb, "bmp", 8000, 8000)),
+        ("bmp_truncated_tail", truncated),
+        ("bmp_pal8_16mp", lambda s: decodes(
+            s, _bmp_pal8_16mp, "bmp", 4000, 4000)),
         ("noise_8mb_unknown", noise),
         ("tiff_bomb_10gp", tiff_bomb),
-        ("webp_bomb_268mp", webp_bomb),
-        ("webp_legal_512", webp_legal),
+        ("webp_bomb_268mp", lambda s: bomb(
+            s, _bomb_webp, "webp", vp8l_decode)),
+        ("webp_legal_512", lambda s: decodes(
+            s, _webp_legal_512, "webp", 512, 512)),
         ("gif_anim_64f_sample", anim),
         ("jpeg_progressive_1mp_legal", lambda s: decodes(
-            s, _jpeg_prog_1mp, 1024, 768)),
+            s, _jpeg_prog_1mp, "jpeg", 1024, 768)),
         ("tiff_multistrip_legal", tiff_multistrip),
     ]
 

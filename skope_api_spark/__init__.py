@@ -16,7 +16,7 @@ Layout:
 - ``plans``      — plan-time Python: interval algebra, band-padding planner,
                    dataset catalog.
 - ``sources``    — cube ingestion (analytic fixture generator → Parquet long
-                   table), store path guards, lake provider, format round-trips.
+                   table), GeoTIFF reader, lake provider.
 - ``geometry``   — GeoJSON → cell predicates: affine index, pure-Python
                    all_touched rasterization, broadcast mask semi-join.
 - ``operators``  — zonal stats, window smoothers/transforms, as-of join,
@@ -24,7 +24,7 @@ Layout:
                    (brute-force/LSH/IVF), text analysis, multimodal binary
                    stages, skew-safe aggregation, batched multi-query.
 - ``streaming``  — watermarked windows, native session_window sessions,
-                   applyInPandasWithState stateful operators.
+                   exactly-once partitioned Parquet sink.
 - ``api``        — pydantic request façade compiling to DataFrame plans;
                    single and batched execution.
 - ``contract``   — the driver-contract query registry (queries + DuckDB

@@ -124,4 +124,9 @@ def build_app(service: TimeseriesService):
         status, body = handle_metadata(service)
         return JSONResponse(status_code=status, content=body)
 
+    @app.get("/settings")
+    def settings():  # pragma: no cover
+        status, body = handle_settings(service)
+        return JSONResponse(status_code=status, content=body)
+
     return app

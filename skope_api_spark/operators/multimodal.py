@@ -12,8 +12,8 @@ plumbing (the same seam pattern as ``sources/geotiff.py``'s ``reader=``).
 
 Defaults in this environment (no image/audio libraries installed;
 real pure-stdlib decoders now cover PNG (incl. palette/16-bit),
-JPEG (baseline + progressive), GIF and lossless-WebP images in
-png.py/jpeg.py/gif.py/vp8l.py and WAV/PCM audio in wav.py):
+JPEG (baseline + progressive), GIF, BMP and lossless-WebP images in
+png.py/jpeg.py/gif.py/bmp.py/vp8l.py):
 
 - ``decode_image_metadata`` — REAL pure-Python header parsing
   (PNG IHDR / GIF screen descriptor / JPEG SOFn walk / WebP chunks).
@@ -351,7 +351,7 @@ def gif_frame_sampler(every_n: int = 1, max_frames: int = 8):
     compositing — disposal methods, transparency, local palettes,
     sub-rect placement). Each sampled frame is emitted as a BMP blob
     (``bmp.bmp_encode``), so the frames flow straight back through the
-    REAL image feature/pHash path: GIF → frames → features needs no
+    REAL image feature path: GIF → frames → features needs no
     injected kernel anywhere. Non-GIF / malformed blobs yield no frames
     (same contract as a keyframe extractor fed a non-video blob)."""
     from skope_api_spark.operators.bmp import bmp_encode

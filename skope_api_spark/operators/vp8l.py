@@ -186,10 +186,6 @@ def _div_round_up(a: int, shift: int) -> int:
     return (a + (1 << shift) - 1) >> shift
 
 
-def _decode_entropy_image(br, w, h):
-    return _decode_image(br, w, h, level0=False)
-
-
 def _decode_image(
     br: _LsbReader, w: int, h: int, *, level0: bool
 ) -> list[int]:

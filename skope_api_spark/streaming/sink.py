@@ -24,8 +24,7 @@ marker — forcing Spark to re-run the final batch — and hash-comparing the
 sink contents before and after.
 
 Scale notes: one directory per micro-batch keeps commits O(1) metadata
-renames (no global file listing); compact with
-``sources/maintenance.compact_small_files`` if micro-batches are small.
+renames (no global file listing).
 """
 
 from __future__ import annotations

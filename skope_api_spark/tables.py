@@ -1,12 +1,10 @@
-"""TESTDATA star-schema loaders (see /root/repo/TESTDATA.md).
+"""TESTDATA star-schema loaders (see TESTDATA.md).
 
 Tables: region nation customer supplier part orders lineitem events
 documents embeddings — one parquet each under a scale-factor directory.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,12 +21,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -56,13 +48,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # DuckDB's naive read whatever the session tz is.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view so plans can be written in SQL."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

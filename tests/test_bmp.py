@@ -1,5 +1,4 @@
-"""BMP codec: round-trip, paletted decode, defensive rejections, and
-pHash cross-format agreement (same scene encoded as PNG and BMP)."""
+"""BMP codec: round-trip, paletted decode and defensive rejections."""
 
 from __future__ import annotations
 
@@ -63,16 +62,3 @@ def test_rejections():
     with pytest.raises(ValueError, match="MAX_PIXELS"):
         bmp_decode(bytes(huge))
 
-
-def test_phash_agrees_across_png_and_bmp():
-    from skope_api_spark.operators.phash import phash64
-    from skope_api_spark.operators.png import png_encode
-
-    rng = np.random.default_rng(6)
-    field = rng.integers(30, 220, size=(12, 16), dtype=np.uint8)
-    img = np.stack([field, field, field], axis=2)
-    up = np.kron(img, np.ones((4, 4, 1), dtype=np.uint8))
-    h, w, _ = up.shape
-    p1 = phash64(png_encode(w, h, up.tobytes(), channels=3))
-    p2 = phash64(bmp_encode(w, h, up.tobytes()))
-    assert p1 == p2  # identical pixels -> identical hash, format-agnostic

@@ -45,13 +45,23 @@ class TestV2Route:
         assert status == 422
         assert body["detail"][0]["loc"] == ["dataset_id"]
 
-    def test_422_unknown_dataset(self, service):
+    @pytest.mark.parametrize(
+        ("dataset_id", "error"),
+        [
+            ("nope", "DatasetNotFoundError"),
+            # S8: a dataset id is a partition-filter value, never a path;
+            # a traversal-shaped id is refused at the request edge
+            ("../../etc", "string_pattern_mismatch"),
+        ],
+        ids=["nope", "traversal"],
+    )
+    def test_422_unknown_dataset(self, service, dataset_id, error):
         status, body = H.handle_timeseries_v2(
             service,
-            {"dataset_id": "nope", "variable_id": "v", "selected_area": POINT},
+            {"dataset_id": dataset_id, "variable_id": "v", "selected_area": POINT},
         )
         assert status == 422
-        assert body["detail"][0]["type"] == "DatasetNotFoundError"
+        assert body["detail"][0]["type"] == error
 
     def test_422_out_of_bounds_geometry(self, service):
         status, body = H.handle_timeseries_v2(
@@ -133,6 +143,54 @@ class TestSettingsRoute:
         assert status == 200
         assert body["max_cells"] == 500_000
         assert "annual_5x5x5_dataset" in body["datasets"]
+
+
+class TestBuildApp:
+    def test_routes_all_four_handlers(self, monkeypatch):
+        """``build_app`` routes every handler; FastAPI is not installed
+        here, so a stub module records the routes."""
+        import sys
+        import types
+
+        class StubApp:
+            def __init__(self, title):
+                self.routes = {}
+
+            def _route(self, method, path):
+                def register(fn):
+                    self.routes[(method, path)] = fn
+                    return fn
+
+                return register
+
+            def post(self, path):
+                return self._route("POST", path)
+
+            def get(self, path):
+                return self._route("GET", path)
+
+        fastapi = types.ModuleType("fastapi")
+        fastapi.FastAPI = StubApp
+        responses = types.ModuleType("fastapi.responses")
+        responses.JSONResponse = lambda status_code, content: (status_code, content)
+        monkeypatch.setitem(sys.modules, "fastapi", fastapi)
+        monkeypatch.setitem(sys.modules, "fastapi.responses", responses)
+        for name in ("handle_timeseries_v2", "handle_timeseries_v1"):
+            monkeypatch.setattr(H, name, lambda service, payload, n=name: (200, n))
+        for name in ("handle_metadata", "handle_settings"):
+            monkeypatch.setattr(H, name, lambda service, n=name: (200, n))
+
+        app = H.build_app(service=None)
+        served = {
+            route: fn({}) if route[0] == "POST" else fn()
+            for route, fn in app.routes.items()
+        }
+        assert served == {
+            ("POST", "/timeseries"): (200, "handle_timeseries_v2"),
+            ("POST", "/v1/timeseries"): (200, "handle_timeseries_v1"),
+            ("GET", "/metadata"): (200, "handle_metadata"),
+            ("GET", "/settings"): (200, "handle_settings"),
+        }
 
 
 class TestYamlCatalog:

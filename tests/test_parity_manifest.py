@@ -51,7 +51,7 @@ MANIFEST: dict[str, list[tuple]] = {
         ("attr", "skope_api_spark.api.models", "TimeseriesV2Response"),
     ],
     "S8 path resolver + traversal guard": [
-        ("test", "tests/test_sources.py", "test_traversal_guard"),
+        ("test", "tests/test_http.py", "test_422_unknown_dataset"),
     ],
     "P1 time->band resolution": [
         ("attr", "skope_api_spark.plans.intervals",

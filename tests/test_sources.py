@@ -1,4 +1,4 @@
-"""Source-layer tests: store resolution guards and the S1 ingestion
+"""Source-layer tests: non-unit grid coordinates and the S1 ingestion
 round-trip (partitioned Parquet write → pruned read)."""
 
 from __future__ import annotations
@@ -11,26 +11,6 @@ from skope_api_spark.sources.cube import (
     full_dev_cube,
     ingest_to_parquet,
 )
-from skope_api_spark.sources.store import DatasetStore, PathTraversalError
-
-
-class TestStore:
-    store = DatasetStore(base_path="/data/cubes")
-
-    def test_resolves_template(self):
-        assert self.store.dataset_path("annual", "f32") == "/data/cubes/annual_f32"
-
-    def test_uncertainty_companion(self):
-        assert (
-            self.store.uncertainty_path("annual", "f32")
-            == "/data/cubes/annual_f32_uncertainty"
-        )
-
-    def test_traversal_guard(self):
-        with pytest.raises(PathTraversalError):
-            self.store.dataset_path("../../etc", "passwd")
-        with pytest.raises(PathTraversalError):
-            DatasetStore(base_path="/data", template="../{dataset_id}_{variable_id}").dataset_path("a", "b")
 
 
 class TestNonUnitGrid:
