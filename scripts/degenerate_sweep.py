@@ -777,15 +777,11 @@ def _megablob_drives():
     ]
 
 
-def main() -> int:
-    mode = sys.argv[1]
-    selected = sys.argv[2:]
-    from skope_api_spark.session import get_spark
+def write_fixtures(spark, mode: str) -> str:
+    """The mode's ten mutated fixture tables, written once per stamp
+    under /tmp; returns their directory."""
     from skope_api_spark.tables import load
 
-    spark = get_spark(
-        f"degenerate_{mode}", master="local[8]", shuffle_partitions=8
-    )
     # Fixture cache key covers this script's content (mutate() logic) and
     # the base tables' mtimes, so editing either regenerates fixtures
     # automatically instead of silently reusing stale ones (ADVICE r10).
@@ -816,6 +812,22 @@ def main() -> int:
             part = glob.glob(f"{tmp}/part-*.parquet")[0]
             shutil.copy(part, f"{out}/{t}.parquet")
             shutil.rmtree(tmp)
+    return out
+
+
+def main() -> int:
+    mode = sys.argv[1]
+    selected = sys.argv[2:]
+    from skope_api_spark.session import get_spark
+
+    spark = get_spark(
+        f"degenerate_{mode}", master="local[8]", shuffle_partitions=8
+    )
+    # `megablob drives` runs ONLY the blob drives (fast iteration on the
+    # binary protocol) and reads no fixture table, so it writes none; a
+    # full `megablob` run does registry + drives.
+    drives_only = mode == "megablob" and selected == ["drives"]
+    out = None if drives_only else write_fixtures(spark, mode)
 
     import __spark_entry__ as e
 
@@ -870,9 +882,6 @@ def main() -> int:
             timer.cancel()
         print(f"{time.time()-t0:7.1f}s {status} {name}", flush=True)
 
-    # `megablob drives` runs ONLY the blob drives (fast iteration on the
-    # binary protocol); a full `megablob` run does registry + drives.
-    drives_only = mode == "megablob" and selected == ["drives"]
     if drives_only:
         names = []
     for name in names:

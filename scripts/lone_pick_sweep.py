@@ -37,7 +37,9 @@ sys.path.insert(0, str(ROOT))
 # (rows of cells, cols of cells, bands): rows × cols × bands selected rows
 ROW_LADDER = [
     (10, 25, 400),     # 0.10M
+    (20, 25, 300),     # 0.15M
     (20, 25, 400),     # 0.20M
+    (20, 25, 600),     # 0.30M
     (20, 50, 400),     # 0.40M
     (20, 50, 450),     # 0.45M
     (12, 25, 2017),    # 0.61M
@@ -49,7 +51,9 @@ ROW_LADDER = [
 # many cells over few bands: the predicate's planning cost per cell
 CELL_LADDER = [
     (20, 25, 10),      # 500 cells
+    (25, 30, 10),      # 750
     (20, 50, 10),      # 1,000
+    (30, 50, 10),      # 1,500
     (40, 50, 10),      # 2,000
     (30, 100, 10),     # 3,000
     (40, 100, 10),     # 4,000

@@ -10,9 +10,10 @@ One lifecycle: ``execute(req)`` is ``_run([req])[0]``, ``execute_many`` is
 both as one span; nesting them would count a request twice). Per
 (dataset, variable, statistic) group, ``_run`` plans every request and
 runs at most ONE Spark aggregation and ONE collect of ``zonal_picks``: a
-scan filtered by the OR of the disjoint band intervals the group needs
-(padded extractions and fixed z-score reference ranges) and by its cell
-bounding box, then a literal cell predicate for a lone request (for a
+scan filtered by the tiles of the group's cells (on the lake, a
+partition filter), by the OR of the disjoint band intervals the group
+needs (padded extractions and fixed z-score reference ranges) and by its
+cell bounding box, then a literal cell predicate for a lone request (for a
 polygon, within ``ONE_TASK_CELLS`` and ``ONE_TASK_ROWS``, aggregated in
 its one scan task: one Spark job, no exchange) or else one broadcast
 ``(query_id, row, col, bgte, blte)`` mask join. A group whose every
@@ -69,18 +70,19 @@ from skope_api_spark.plans.intervals import (
     normalize_time_range,
     output_band_range,
 )
-from skope_api_spark.sources.cube import cell_area_m2
+from skope_api_spark.sources.cube import cell_area_m2, tile_of
 
 
 # A lone pick of at most ONE_TASK_CELLS cells that selects at most
 # ONE_TASK_ROWS rows (cells × bands) is selected with a literal predicate
 # and aggregated in the one task that scans it. Above either bound the
 # broadcast mask join and the partial-aggregate exchange win: Spark plans
-# the predicate in time linear in its cells, and one task aggregates a
-# large selection slower than the exchange spreads it (PERF.md "One Spark
-# job per polygon request": the sweeps).
-ONE_TASK_CELLS = 2_000
-ONE_TASK_ROWS = 600_000
+# the predicate in time linear in its cells, and one task reads a large
+# selection's tile files and aggregates them slower than the join plan's
+# tasks, one per file, spread them (PERF.md "One Spark job per polygon
+# request": the sweeps on the tile-partitioned lake).
+ONE_TASK_CELLS = 750
+ONE_TASK_ROWS = 150_000
 
 
 class TimeseriesTimeoutError(RuntimeError):
@@ -210,39 +212,49 @@ def zonal_picks(
     time)`` (SURVEY.md §4). The mask is Σ cells per pick, driver-tiny
     next to the cube.
 
-    The scan is filtered by the union of the picks' bands and their
-    cells' bounding box, which the Parquet reader prunes with. A lone
-    pick is a literal predicate: ``row = r AND col = c`` for one cell,
-    and for several cells their offsets in the bounding box, ``(row -
-    r0) * w + (col - c0) IN (...)``, when it has at most
-    ``ONE_TASK_CELLS`` cells and selects at most ``ONE_TASK_ROWS`` rows,
-    which are then coalesced into one partition so that the scan task
-    aggregates them (one Spark job, no broadcast, no exchange). Anything
-    else is ONE broadcast join of a ``(query_id, row, col, bgte, blte)``
-    mask, clipped by ``band BETWEEN bgte AND blte`` (inner, not semi: a
-    cell may belong to several picks, and each membership must produce a
-    row). A pick's cells are distinct, so for
-    a lone pick the predicate and the join select the same rows. When
-    every pick is one cell, the selected rows are the series: no
+    The scan is filtered by the picks' tiles, the union of their bands
+    and their cells' bounding box. On the lake, ``tile IN (...)`` is a
+    partition filter: the planner keeps only those tiles' files and
+    evaluates nothing per row; the Parquet reader prunes pages with the
+    rest. A lone pick of one cell is then one ``where`` and one
+    ``selectExpr``. A lone pick of several cells is a literal predicate
+    over their offsets in the bounding box, ``(row - r0) * w + (col -
+    c0) IN (...)``, when it has at most ``ONE_TASK_CELLS`` cells and
+    selects at most ``ONE_TASK_ROWS`` rows, which are then coalesced into
+    one partition so that the scan task aggregates them (one Spark job,
+    no broadcast, no exchange). Anything else is ONE broadcast join of a
+    ``(query_id, row, col, bgte, blte)`` mask, clipped by ``band BETWEEN
+    bgte AND blte`` (inner, not semi: a cell may belong to several picks,
+    and each membership must produce a row). A pick's cells are distinct,
+    so for a lone pick the predicate and the join select the same rows.
+    When every pick is one cell, the selected rows are the series: no
     aggregation runs.
     """
     cells = [rc for cs, _ in picks for rc in cs]
     bands = disjoint_band_ranges([b for _, bs in picks for b in bs])
     # predicates are SQL strings: one py4j call each, where a Column
     # costs a round trip (~1 ms) per operator
+    tiles = ", ".join(str(t) for t in sorted({tile_of(r, c) for r, c in cells}))
     in_bands = " OR ".join(f"band BETWEEN {b.gte} AND {b.lte}" for b in bands)
-    rs, cs = zip(*cells)
-    r0, c0 = min(rs), min(cs)
-    in_bbox = (
-        f"({in_bands}) AND row BETWEEN {r0} AND {max(rs)} "
-        f"AND col BETWEEN {c0} AND {max(cs)}"
+    scan = f"tile IN ({tiles}) AND ({in_bands})"
+    # the cube holds one row per (band, row, col), so a one-cell pick's
+    # mean or median IS that cell's value, NULL included: project it,
+    # with no aggregation and so no exchange
+    one_cell = (
+        "CAST(value AS DOUBLE) AS value",
+        "CAST(1 AS BIGINT) AS n_cells",
+        "CAST(value IS NOT NULL AS BIGINT) AS n_valid",
     )
-    n_rows = len(cells) * sum(b.lte - b.gte + 1 for b in bands)
     if len(cells) == 1:  # one pick of one cell (a pick is never empty)
         (r, c), = cells
-        selected = cube.where(f"({in_bands}) AND row = {r} AND col = {c}")
-        selected = selected.withColumn("query_id", F.lit(0))
-    elif len(picks) == 1 and len(cells) <= ONE_TASK_CELLS and n_rows <= ONE_TASK_ROWS:
+        return cube.where(f"{scan} AND row = {r} AND col = {c}").selectExpr(
+            "0 AS query_id", "band", "time", *one_cell
+        )
+    rs, cs = zip(*cells)
+    r0, c0 = min(rs), min(cs)
+    in_bbox = f"{scan} AND row BETWEEN {r0} AND {max(rs)} AND col BETWEEN {c0} AND {max(cs)}"
+    n_rows = len(cells) * sum(b.lte - b.gte + 1 for b in bands)
+    if len(picks) == 1 and len(cells) <= ONE_TASK_CELLS and n_rows <= ONE_TASK_ROWS:
         # an int key per cell of the bounding box: below the box's cell
         # count, so it cannot overflow
         w = max(cs) - c0 + 1
@@ -268,15 +280,7 @@ def zonal_picks(
         )
     keys = ("query_id", "band", "time")
     if all(len(qcells) == 1 for qcells, _ in picks):
-        # the cube holds one row per (band, row, col), so a one-cell
-        # pick's mean or median IS that cell's value, NULL included:
-        # project it, with no aggregation and so no exchange
-        return selected.selectExpr(
-            *keys,
-            "CAST(value AS DOUBLE) AS value",
-            "CAST(1 AS BIGINT) AS n_cells",
-            "CAST(value IS NOT NULL AS BIGINT) AS n_valid",
-        )
+        return selected.selectExpr(*keys, *one_cell)
     return zonal_series(selected, stat, keys=keys)
 
 
@@ -322,8 +326,8 @@ class TimeseriesService:
     def cube(self, meta: DatasetMeta, variable_id: str) -> DataFrame:
         """The (dataset, variable) slice of the lake, built once per
         service (a ``Column`` chain costs a py4j round trip per operator).
-        Its partition filters list one lake directory; a slice the lake
-        does not hold is an empty scan."""
+        Its partition filters keep one (dataset, variable) directory of the
+        lake; a slice the lake does not hold is an empty scan."""
         key = (meta.dataset_id, variable_id)
         if key not in self._slices:
             self._slices[key] = self.lake.where(
@@ -476,10 +480,8 @@ class TimeseriesService:
     ) -> list[list]:
         """Every pick's per-band rows in band order, from ONE collect of
         ``zonal_picks``."""
-        # only the values: the unread counts are pruned from the plan
-        series = zonal_picks(cube, stat, picks).select("query_id", "band", "time", "value")
         out: list[list] = [[] for _ in picks]
-        for row in collect_with_timeout(self.spark, series, timeout_ms):
+        for row in collect_with_timeout(self.spark, zonal_picks(cube, stat, picks), timeout_ms):
             out[row.query_id].append(row)
         return [sorted(rows, key=lambda r: r.band) for rows in out]
 

@@ -12,7 +12,9 @@ Adam7 interlacing is decoded via per-pass unfiltering + scatter,
 golden-pinned by libpng's own pngtest.png. Palette and 16-bit decode are
 golden-pinned by real stdlib/IDLE icon fixtures in tests/test_png.py.
 
-Performance note: this is per-pixel Python inside an Arrow-batched
+``quadrant_features`` reduces the decoded raster with numpy.
+
+Performance note: the decoder is per-pixel Python inside an Arrow-batched
 ``mapInPandas`` kernel — correct-but-slow by design. The Spark plumbing is
 the scale-relevant part; a production deployment swaps this callable for
 PIL/libpng (C speed) through the same ``decoder=``/``encoder=`` seam.
@@ -22,6 +24,8 @@ from __future__ import annotations
 
 import struct
 import zlib
+
+import numpy as np
 
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
@@ -328,22 +332,16 @@ def quadrant_features(
     w: int, h: int, ch: int, px: bytes, *, dim: int = 16
 ) -> list[float]:
     """Per-quadrant per-channel mean intensity over a raw interleaved
-    8-bit raster — shared by the PNG and JPEG feature kernels."""
-    sums = [0] * (4 * ch)
-    counts = [0] * 4
-    for y in range(h):
-        qy = 0 if y < (h + 1) // 2 else 1
-        row = y * w * ch
-        for x in range(w):
-            q = qy * 2 + (0 if x < (w + 1) // 2 else 1)
-            counts[q] += 1
-            base = row + x * ch
-            for c in range(ch):
-                sums[q * ch + c] += px[base + c]
-    feats = [
-        sums[q * ch + c] / (255.0 * counts[q]) if counts[q] else 0.0
-        for q in range(4)
-        for c in range(ch)
-    ]
+    8-bit raster — shared by the PNG and JPEG feature kernels. The top
+    and left quadrants take the middle row and column of an odd size; an
+    empty quadrant (``w == 1`` or ``h == 1``) gives 0.0."""
+    img = np.frombuffer(px, dtype=np.uint8, count=h * w * ch).reshape(h, w, ch)
+    hy, wx = (h + 1) // 2, (w + 1) // 2
+    feats = []
+    for quad in (img[:hy, :wx], img[:hy, wx:], img[hy:, :wx], img[hy:, wx:]):
+        n = quad.shape[0] * quad.shape[1]
+        # exact integer sums, divided as Python numbers
+        sums = quad.sum(axis=(0, 1), dtype=np.int64).tolist()
+        feats += [s / (255.0 * n) if n else 0.0 for s in sums]
     feats = feats[:dim]
     return feats + [0.0] * (dim - len(feats))

@@ -3,11 +3,12 @@
 The reference reads multi-band GeoTIFFs band-wise (S1, reference
 ``timeseries/app/schemas/geometry.py:90-94, 193``). Spark-first, the cube is
 a long Parquet table ``(dataset_id, variable_id, band, time, row, col, lon,
-lat, cell_area, value)`` partitioned by ``(dataset_id, variable_id)`` and
-clustered within files by 16x16-cell tile, then ``(band, row, col)``
-(``write_lake``), so the Parquet page indexes let a point or bbox filter
-plus a ``band BETWEEN`` predicate skip the pages of every other tile and
-band (SURVEY.md §1.1, §4).
+lat, cell_area, value, tile)`` partitioned by ``(dataset_id, variable_id,
+tile)``, ``tile`` being the cell's 16x16-cell tile (``TILE_SQL``), and
+sorted within each tile's file by ``(band, row, col)`` (``write_lake``).
+The planner keeps only the files of a request's tiles, before any task
+starts, and the Parquet page indexes let a ``band BETWEEN`` predicate skip
+the pages of every other band (SURVEY.md §1.1, §4).
 
 ``analytic_cube`` regenerates the reference's dev fixtures exactly from
 their analytic construction rule (value = band·100 + row·10 + col·1.1
@@ -50,10 +51,16 @@ WGS84_A_M = 6378137.0
 WGS84_E2 = 6.69437999014132e-3  # first eccentricity squared = f(2−f)
 WGS84_E = math.sqrt(WGS84_E2)
 
-# Edge, in cells, of the square tiles that cluster each lake slice: a
-# cell's rows for a band range lie inside one contiguous run of its
-# tile's rows.
+# Edge, in cells, of the square tiles that partition each lake slice.
 TILE_CELLS = 16
+# A cell's tile id. Ids are unique while a grid is at most 4096 tiles
+# (65,536 cells) wide; ``tile_of`` is the same id on the driver.
+TILE_SQL = f"CAST((row DIV {TILE_CELLS}) * 4096 + col DIV {TILE_CELLS} AS INT)"
+
+
+def tile_of(row: int, col: int) -> int:
+    """The ``TILE_SQL`` id of cell ``(row, col)``."""
+    return row // TILE_CELLS * 4096 + col // TILE_CELLS
 
 
 def _authalic_q(sin_phi):
@@ -179,7 +186,7 @@ def analytic_cube(
         lat.alias("lat"),
         "cell_area",
         value.alias("value"),
-    )
+    ).withColumn("tile", F.expr(TILE_SQL))
 
 
 def full_dev_cube(spark: SparkSession) -> DataFrame:
@@ -194,43 +201,32 @@ def full_dev_cube(spark: SparkSession) -> DataFrame:
 def ingest_to_parquet(spark: SparkSession, path: str) -> None:
     """S1 ingestion: write the dev cube as the lake (``write_lake``).
 
-    What prunes a request's scan: the (dataset_id, variable_id) partition
-    directories first, then, inside the one file of a slice, the Parquet
-    page indexes of the tile-major order, which skip every page outside
-    the request's tiles and band range.
+    What prunes a request's scan: the (dataset_id, variable_id, tile)
+    partition directories first, so the planner lists only the files of
+    the request's tiles, then the Parquet page indexes of each tile's
+    ``(band, row, col)`` order, which skip every page outside the
+    request's band range.
     """
     write_lake(full_dev_cube(spark), path)
 
 
 def write_lake(cube: DataFrame, path: str) -> None:
     """Write a long cube as the lake, the one layout every ingest path
-    uses: partitioned by (dataset_id, variable_id), and each slice
-    clustered by ``TILE_CELLS``-square cell tiles, then (band, row, col).
+    uses: partitioned by (dataset_id, variable_id, tile), one file per
+    tile, sorted by (band, row, col). ``tile`` is (re)derived here from
+    ``TILE_SQL``, so any long cube can be written.
 
-    Tiles follow each other row by row, the odd tile rows right to left,
-    so consecutive tiles are always neighbours: a Parquet page that
-    straddles two tiles then has min/max stats that bound just those two,
-    and a point reads the pages of its own tile's band run plus the two
-    pages where its tile starts and ends.
-
-    The partition columns lead the sort. The file writer sorts its input
-    by them unless that input's order already starts with them, and its
-    own sort drops any order under it.
+    The input is repartitioned by the partition columns, so a slice's
+    tiles are written by several tasks and each tile by exactly one. The
+    partition columns lead the sort: the file writer sorts its input by
+    them unless that input's order already starts with them, and its own
+    sort drops any order under it.
     """
-    tile_row = f"row DIV {TILE_CELLS}"
-    tile_col = f"col DIV {TILE_CELLS}"
     (
-        cube.repartition("dataset_id", "variable_id")
-        .sortWithinPartitions(
-            "dataset_id",
-            "variable_id",
-            F.expr(tile_row),
-            F.expr(f"IF({tile_row} % 2 = 0, {tile_col}, -{tile_col})"),
-            "band",
-            "row",
-            "col",
-        )
+        cube.withColumn("tile", F.expr(TILE_SQL))
+        .repartition("dataset_id", "variable_id", "tile")
+        .sortWithinPartitions("dataset_id", "variable_id", "tile", "band", "row", "col")
         .write.mode("overwrite")
-        .partitionBy("dataset_id", "variable_id")
+        .partitionBy("dataset_id", "variable_id", "tile")
         .parquet(path)
     )

@@ -1,13 +1,13 @@
 """The Parquet lake as the API service's cube table.
 
 Production serves from the ingested lake (``sources.cube.write_lake``
-layout: partitioned by (dataset_id, variable_id), each slice clustered
-by 16x16-cell tile, then (band, row, col)). What prunes a request's
+layout: partitioned by (dataset_id, variable_id, tile), one file per
+16x16-cell tile, sorted by (band, row, col)). What prunes a request's
 scan, in order: the partition filters of the service's slice
-(``TimeseriesService.cube``), so the scan lists one (dataset, variable)
-directory; then the Parquet page indexes of that slice's file, which the
-service's ``band BETWEEN`` and ``row``/``col`` predicates use to skip
-every page outside the request's tiles and band range.
+(``TimeseriesService.cube``) and ``zonal_picks``'s ``tile IN (...)``, so
+the scan lists only the files of the request's tiles; then the Parquet
+page indexes of those files, which the ``band BETWEEN`` predicate uses
+to skip every page outside the request's band range.
 """
 
 from __future__ import annotations

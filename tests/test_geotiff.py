@@ -74,17 +74,24 @@ class TestGeotiffCells:
     def test_ingest_writes_the_tile_clustered_lake_layout(self, spark, tmp_path):
         import pyarrow.parquet as pq
 
-        from skope_api_spark.sources.cube import TILE_CELLS
+        from skope_api_spark.sources.cube import TILE_CELLS, tile_of
 
         n = 2 * TILE_CELLS + 3  # 3x3 tiles, the last ones partial
         ingest_geotiff(spark, FILES, str(tmp_path), reader=make_fake_reader((n, n)))
-        (f,) = (tmp_path / "dataset_id=ds" / "variable_id=var").glob("*.parquet")
-        t = pq.read_table(f, columns=["band", "row", "col"])
-        b, r, c = (t[k].to_numpy() for k in ("band", "row", "col"))
-        assert len(b) == 2 * n * n
-        tr, tc = r // TILE_CELLS, c // TILE_CELLS
-        order = np.lexsort((c, r, b, np.where(tr % 2 == 0, tc, -tc), tr))
-        assert (order == np.arange(len(b))).all()
+        tiles = sorted((tmp_path / "dataset_id=ds" / "variable_id=var").glob("tile=*"))
+        assert len(tiles) == 9
+        total = 0
+        for d in tiles:
+            (f,) = d.glob("*.parquet")
+            t = pq.read_table(f, columns=["band", "row", "col"])
+            b, r, c = (t[k].to_numpy() for k in ("band", "row", "col"))
+            # exactly its tile's cells, each in both bands
+            cells = set(zip(r.tolist(), c.tolist()))
+            assert {tile_of(*rc) for rc in cells} == {int(d.name.removeprefix("tile="))}
+            assert len(b) == 2 * len(cells)
+            assert (np.lexsort((c, r, b)) == np.arange(len(b))).all()
+            total += len(cells)
+        assert total == n * n
 
     def test_rasterio_guard_raises_helpfully(self):
         if "rasterio" in __import__("sys").modules:

@@ -1,6 +1,6 @@
 """The service over a Parquet lake: identical responses to the dev cube,
-partition-pruned scans, and a tile-clustered layout whose page indexes
-let a point read its own tile."""
+partition-pruned scans, and a tile-partitioned layout: a point reads its
+own tile's file in one task, a polygon the files of its tiles."""
 
 from __future__ import annotations
 
@@ -20,6 +20,7 @@ from skope_api_spark.sources.cube import (
     VARIABLE_RULES,
     full_dev_cube,
     ingest_to_parquet,
+    tile_of,
 )
 from skope_api_spark.sources.lake import lake_service
 
@@ -50,6 +51,21 @@ SQUARE = {
 }
 
 
+def _collected(monkeypatch) -> list:
+    """The DataFrames the service hands to ``collect_with_timeout``."""
+    from skope_api_spark.api import service as service_mod
+
+    collected = []
+    real = service_mod.collect_with_timeout
+
+    def spy(spark, df, timeout_ms):
+        collected.append(df)
+        return real(spark, df, timeout_ms)
+
+    monkeypatch.setattr(service_mod, "collect_with_timeout", spy)
+    return collected
+
+
 class TestLakeService:
     def test_matches_analytic_provider(self, spark, dev_service, lake):
         """The dev cube and the Parquet lake answer alike, uncertainty
@@ -77,16 +93,7 @@ class TestLakeService:
         assert "dataset_id" in pf and "variable_id" in pf
 
     def test_batched_scan_pushes_the_band_filter(self, spark, lake, monkeypatch):
-        from skope_api_spark.api import service as service_mod
-
-        collected = []
-        real = service_mod.collect_with_timeout
-
-        def spy(spark, df, timeout_ms):
-            collected.append(df)
-            return real(spark, df, timeout_ms)
-
-        monkeypatch.setattr(service_mod, "collect_with_timeout", spy)
+        collected = _collected(monkeypatch)
         lake_service(spark, lake).execute_many([req(), req(selected_area=SQUARE)])
         (df,) = collected
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -147,13 +154,14 @@ def tiled_lake(spark, tmp_path_factory):
         yield path
 
 
-def _scan_rows(df) -> int:
-    """Rows the file scans of an executed DataFrame handed on."""
+def _scan_metric(df, metric: str) -> int:
+    """A metric (``numOutputRows``, ``numFiles``) summed over the file
+    scans of an executed DataFrame handed on."""
 
     def walk(node):
         name = node.getClass().getSimpleName()
         if name == "FileSourceScanExec":
-            yield node.metrics().apply("numOutputRows").value()
+            yield node.metrics().apply(metric).value()
         elif name == "AdaptiveSparkPlanExec":
             yield from walk(node.executedPlan())
         elif name.endswith("QueryStageExec"):
@@ -165,45 +173,87 @@ def _scan_rows(df) -> int:
     return sum(walk(df._jdf.queryExecution().executedPlan()))
 
 
+def _tiled_point(r: int, c: int) -> dict:
+    return {"type": "Point", "coordinates": [
+        TILED.origin_lon + (c + 0.5) * TILED.pixel_deg,
+        TILED.origin_lat - (r + 0.5) * TILED.pixel_deg,
+    ]}
+
+
+def _tiled_req(area: dict, b0: int, b1: int, **kw) -> M.TimeseriesV2Request:
+    return M.TimeseriesV2Request(
+        dataset_id=TILED.dataset_id, variable_id="v", selected_area=area,
+        time_range=M.OptionalTimeRangeModel(gte=date(b0, 1, 1), lte=date(b1, 1, 1)),
+        **kw,
+    )
+
+
 class TestTiledLayout:
     def test_file_is_clustered_by_tile(self, tiled_lake):
-        (f,) = (tiled_lake / "dataset_id=tiled_grid" / "variable_id=v").glob("*.parquet")
-        t = pq.read_table(f, columns=["band", "row", "col"])
-        b, r, c = (t[k].to_numpy().astype(np.int64) for k in ("band", "row", "col"))
-        assert len(b) == TILED.grid_rows * TILED.grid_cols * TILED.n_bands()
-        tr, tc = r // TILE_CELLS, c // TILE_CELLS
-        order = np.lexsort((c, r, b, np.where(tr % 2 == 0, tc, -tc), tr))
-        assert (order == np.arange(len(b))).all()
+        """One file per tile directory, holding exactly its tile's cells,
+        sorted by (band, row, col)."""
+        slice_dir = tiled_lake / "dataset_id=tiled_grid" / "variable_id=v"
+        tiles = sorted(slice_dir.glob("tile=*"))
+        assert len(tiles) == (TILED.grid_rows // TILE_CELLS) * (TILED.grid_cols // TILE_CELLS)
+        seen = set()
+        for d in tiles:
+            (f,) = d.glob("*.parquet")
+            tile = int(d.name.removeprefix("tile="))
+            t = pq.read_table(f, columns=["band", "row", "col"])
+            b, r, c = (t[k].to_numpy().astype(np.int64) for k in ("band", "row", "col"))
+            # exactly its tile's cells, every band of each
+            cells = set(zip(r.tolist(), c.tolist()))
+            assert {tile_of(*rc) for rc in cells} == {tile}
+            assert len(cells) == TILE_CELLS**2
+            assert len(b) == TILE_CELLS**2 * TILED.n_bands()
+            assert (np.lexsort((c, r, b)) == np.arange(len(b))).all()
+            seen.add(tile)
+        assert len(seen) == len(tiles)
 
     def test_point_scan_reads_its_tile(self, spark, tiled_lake, monkeypatch):
-        from skope_api_spark.api import service as service_mod
-
-        collected = []
-        real = service_mod.collect_with_timeout
-
-        def spy(spark, df, timeout_ms):
-            collected.append(df)
-            return real(spark, df, timeout_ms)
-
-        monkeypatch.setattr(service_mod, "collect_with_timeout", spy)
+        collected = _collected(monkeypatch)
         r, c, b0, b1 = 40, 50, 20, 69
-        point = {"type": "Point", "coordinates": [
-            TILED.origin_lon + (c + 0.5) * TILED.pixel_deg,
-            TILED.origin_lat - (r + 0.5) * TILED.pixel_deg,
-        ]}
         svc = lake_service(spark, str(tiled_lake))
-        resp = svc.execute(M.TimeseriesV2Request(
-            dataset_id=TILED.dataset_id, variable_id="v", selected_area=point,
-            time_range=M.OptionalTimeRangeModel(gte=date(b0, 1, 1), lte=date(b1, 1, 1)),
-        ))
+        resp = svc.execute(_tiled_req(_tiled_point(r, c), b0, b1))
         assert resp.series[0].values == [b * 10000 + r * 100 + c for b in range(b0, b1 + 1)]
 
         (df,) = collected
+        assert _scan_metric(df, "numFiles") == 1
         page = spark._jvm.org.apache.parquet.column.ParquetProperties.DEFAULT_PAGE_ROW_COUNT_LIMIT
         run = TILE_CELLS**2 * (b1 - b0 + 1)  # the tile's rows for the band range
-        # the pages holding that run, plus the two pages where the tile
-        # starts and ends, each shared with the neighbour next to it in
-        # the order
-        bound = (math.ceil(run / page) + 1 + 2) * page
-        band_range = TILED.grid_rows * TILED.grid_cols * (b1 - b0 + 1)
-        assert _scan_rows(df) <= bound < band_range // 3
+        assert _scan_metric(df, "numOutputRows") <= math.ceil(run / page) * page
+
+    def test_polygon_scan_lists_its_tiles(self, spark, tiled_lake, monkeypatch):
+        collected = _collected(monkeypatch)
+        # cells rows 10..20 x cols 30..50: tiles rows 0-1 x cols 1-3
+        west, north = TILED.origin_lon + 30.5 * TILED.pixel_deg, TILED.origin_lat - 10.5 * TILED.pixel_deg
+        east, south = TILED.origin_lon + 50.5 * TILED.pixel_deg, TILED.origin_lat - 20.5 * TILED.pixel_deg
+        box = {"type": "Polygon", "coordinates": [[
+            [west, north], [east, north], [east, south], [west, south], [west, north],
+        ]]}
+        svc = lake_service(spark, str(tiled_lake))
+        resp = svc.execute(_tiled_req(box, 1, 5))
+        assert resp.n_cells == 11 * 21
+        mean_rc = 15 * 100 + 40
+        assert resp.series[0].values == [pytest.approx(b * 10000 + mean_rc) for b in range(1, 6)]
+
+        (df,) = collected
+        tiles = {tile_of(r, c) for r in range(10, 21) for c in range(30, 51)}
+        assert len(tiles) == 6
+        assert _scan_metric(df, "numFiles") == len(tiles)
+
+    def test_point_runs_one_task(self, spark, tiled_lake):
+        svc = lake_service(spark, str(tiled_lake))
+        point = _tiled_req(_tiled_point(70, 5), 1, 100, max_processing_time=0)
+        svc.execute(point)  # plans and compiles once, outside the group
+        sc = spark.sparkContext
+        sc.setJobGroup("tiled-point", "a point on the lake")
+        try:
+            svc.execute(point)
+        finally:
+            sc.setJobGroup("", "", False)
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup("tiled-point")
+        stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+        assert len(jobs) == 1
+        assert sum(tracker.getStageInfo(s).numTasks for s in stages) == 1

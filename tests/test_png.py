@@ -14,6 +14,7 @@ from skope_api_spark.operators.png import (
     png_decode,
     png_encode,
     png_pixel_features,
+    quadrant_features,
 )
 
 
@@ -209,6 +210,44 @@ class TestPixelFeatures:
         feats = png_pixel_features(png_encode(4, 2, pixels, channels=1), dim=4)
         assert feats[0] == pytest.approx(0.0)  # top-left quadrant
         assert feats[1] == pytest.approx(1.0)  # top-right quadrant
+
+
+def _loop_quadrant_features(w, h, ch, px, *, dim=16):
+    """The per-pixel loop ``quadrant_features`` replaced: the reference
+    its numpy reduction must match bit for bit."""
+    sums = [0] * (4 * ch)
+    counts = [0] * 4
+    for y in range(h):
+        qy = 0 if y < (h + 1) // 2 else 1
+        row = y * w * ch
+        for x in range(w):
+            q = qy * 2 + (0 if x < (w + 1) // 2 else 1)
+            counts[q] += 1
+            base = row + x * ch
+            for c in range(ch):
+                sums[q * ch + c] += px[base + c]
+    feats = [
+        sums[q * ch + c] / (255.0 * counts[q]) if counts[q] else 0.0
+        for q in range(4)
+        for c in range(ch)
+    ]
+    feats = feats[:dim]
+    return feats + [0.0] * (dim - len(feats))
+
+
+class TestQuadrantFeatures:
+    @pytest.mark.parametrize("w,h", [(1, 1), (1, 7), (9, 1), (5, 3), (8, 8), (33, 17)])
+    @pytest.mark.parametrize("ch", [1, 2, 3, 4])
+    @pytest.mark.parametrize("dim", [4, 16])
+    def test_matches_the_per_pixel_loop_bit_for_bit(self, w, h, ch, dim):
+        import random
+
+        rng = random.Random(w * 1000 + h * 10 + ch)
+        px = bytes(rng.randrange(256) for _ in range(w * h * ch))
+        got = quadrant_features(w, h, ch, px, dim=dim)
+        want = _loop_quadrant_features(w, h, ch, px, dim=dim)
+        assert [v.hex() for v in got] == [v.hex() for v in want]
+        assert all(type(v) is float for v in got)
 
 
 class TestSparkIntegration:
