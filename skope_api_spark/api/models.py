@@ -28,6 +28,15 @@ from skope_api_spark.plans import intervals as iv
 MAX_PROCESSING_TIME_MS = 15_000  # reference config.py:32
 
 
+def _date(year: int, month: int, day: int) -> date:
+    """``date(year, month, day)``, raising ``ValueError`` (a 422) also for
+    a component past a C long, where ``date`` raises ``OverflowError``."""
+    try:
+        return date(year, month, day)
+    except OverflowError as e:
+        raise ValueError(f"date out of range: {year}-{month}-{day}") from e
+
+
 def _coerce_loose_date(v):
     """Accept the reference's shipped request-fixture date forms
     (``data/requests/*.json``): a bare year int (``2`` → 0002-01-01) and a
@@ -37,7 +46,7 @@ def _coerce_loose_date(v):
     if isinstance(v, bool):
         return v
     if isinstance(v, int):
-        return date(v, 1, 1)
+        return _date(v, 1, 1)
     if isinstance(v, dict) and "year" in v:
         # null month/day mean "not specified" (Jan/1st); any non-numeric
         # value must surface as ValueError so pydantic converts it to a
@@ -47,14 +56,14 @@ def _coerce_loose_date(v):
                 return default
             try:
                 return int(x)
-            except (TypeError, ValueError) as e:
+            except (TypeError, ValueError, OverflowError) as e:
                 raise ValueError(f"invalid date component {x!r}") from e
 
         if v["year"] is None:
             # date(None, ...) would raise a bare TypeError → 500; a null
             # year has no Jan-1 default, it is simply malformed
             raise ValueError("date object requires a non-null year")
-        return date(
+        return _date(
             _num(v["year"], None),
             _num(v.get("month"), 1),
             _num(v.get("day"), 1),
@@ -216,6 +225,14 @@ class TimeseriesV1Request(BaseModel):
         # bare year ints; the reference's pydantic v1 coerced them to str
         return str(v) if isinstance(v, int) else v
 
+    @field_validator("start", "end")
+    @classmethod
+    def _v1_date(cls, v):
+        # a malformed date is a validation error (422), like any other field
+        if v:
+            parse_v1_date(v)
+        return v
+
 
 def parse_v1_date(s: str) -> date:
     """Parse v1 "1" / "2000-01" strings (reference timeseries.py:295-325).
@@ -227,7 +244,7 @@ def parse_v1_date(s: str) -> date:
     parts = s.split("-")
     year = int(parts[0])
     month = int(parts[1]) if len(parts) > 1 else 1
-    return date(year, month, 1)
+    return _date(year, month, 1)
 
 
 def legacy_payload_to_v2(payload: dict) -> dict:

@@ -21,9 +21,10 @@ request picks one cell runs no aggregation: a lone cell's mean or median
 is its value. The registry's SKOPE queries run the same ``zonal_picks``
 plan, so their DuckDB oracles check it. Each request's slice runs
 transform, smoothers, clipping and summaries on the driver
-(``api/kernels.py``); requests with ``include_uncertainty`` share one
-more scan over the ``_uncertainty`` slice. Every service reads one
-long cube table, ``lake``, whatever holds it.
+(``api/kernels.py``); a member's ``include_uncertainty`` adds the
+``{variable_id}_uncertainty`` companion to the group's slice, so to its
+one scan and collect. Every service reads one long cube table, ``lake``,
+whatever holds it.
 
 The collect runs under a cancellable job group (cooperative timeout — the
 reference's anyio ``fail_after`` → 504 becomes ``TimeseriesTimeoutError``;
@@ -74,10 +75,11 @@ from skope_api_spark.sources.cube import cell_area_m2, tile_of
 
 
 # A lone pick of at most ONE_TASK_CELLS cells that selects at most
-# ONE_TASK_ROWS rows (cells × bands) is selected with a literal predicate
-# and aggregated in the one task that scans it. Above either bound the
-# broadcast mask join and the partial-aggregate exchange win: Spark plans
-# the predicate in time linear in its cells, and one task reads a large
+# ONE_TASK_ROWS rows (cells × bands, per variable; only a group with an
+# uncertainty companion reads two) is selected with a literal predicate and
+# aggregated in the one task that scans it. Above either bound the broadcast
+# mask join and the partial-aggregate exchange win: Spark plans the
+# predicate in time linear in its cells, and one task reads a large
 # selection's tile files and aggregates them slower than the join plan's
 # tasks, one per file, spread them (PERF.md "One Spark job per polygon
 # request": the sweeps on the tile-partitioned lake).
@@ -200,17 +202,18 @@ def zonal_picks(
     picks: list[tuple[list[tuple[int, int]], list[BandRange]]],
 ) -> DataFrame:
     """One scan and at most one zonal aggregation for every pick (its
-    (row, col) cells and disjoint band intervals): ``(query_id, band,
-    time, value, n_cells, n_valid)``, ``query_id`` being the pick's index.
+    (row, col) cells and disjoint band intervals): ``(query_id,
+    variable_id, band, time, value, n_cells, n_valid)``, ``query_id``
+    being the pick's index, one series per variable of ``cube``.
 
     This is the one cell-selection plan, for the API service and for the
     registry's SKOPE queries. One request touches ~KBs after pruning; the
     cluster-scale workload is thousands of geometries × variables at once.
     Instead of one Spark job per request (the reference's one request per
     HTTP call), the cells carry a ``query_id`` and join the cube ONCE: N
-    picks are one scan and one aggregation grouped by ``(query_id, band,
-    time)`` (SURVEY.md §4). The mask is Σ cells per pick, driver-tiny
-    next to the cube.
+    picks are one scan and one aggregation grouped by ``(query_id,
+    variable_id, band, time)`` (SURVEY.md §4). The mask is Σ cells per
+    pick, driver-tiny next to the cube.
 
     The scan is filtered by the picks' tiles, the union of their bands
     and their cells' bounding box. On the lake, ``tile IN (...)`` is a
@@ -248,7 +251,7 @@ def zonal_picks(
     if len(cells) == 1:  # one pick of one cell (a pick is never empty)
         (r, c), = cells
         return cube.where(f"{scan} AND row = {r} AND col = {c}").selectExpr(
-            "0 AS query_id", "band", "time", *one_cell
+            "0 AS query_id", "variable_id", "band", "time", *one_cell
         )
     rs, cs = zip(*cells)
     r0, c0 = min(rs), min(cs)
@@ -278,7 +281,7 @@ def zonal_picks(
             .join(F.broadcast(mask), ["row", "col"])
             .where("band BETWEEN bgte AND blte")
         )
-    keys = ("query_id", "band", "time")
+    keys = ("query_id", "variable_id", "band", "time")
     if all(len(qcells) == 1 for qcells, _ in picks):
         return selected.selectExpr(*keys, *one_cell)
     return zonal_series(selected, stat, keys=keys)
@@ -319,20 +322,20 @@ class TimeseriesService:
     lake: DataFrame
     catalog: Catalog = field(default_factory=Catalog)
     max_cells: int = DEFAULT_MAX_CELLS
-    _slices: dict[tuple[str, str], DataFrame] = field(
+    _slices: dict[tuple[str, ...], DataFrame] = field(
         default_factory=dict, init=False, repr=False
     )
 
-    def cube(self, meta: DatasetMeta, variable_id: str) -> DataFrame:
-        """The (dataset, variable) slice of the lake, built once per
-        service (a ``Column`` chain costs a py4j round trip per operator).
-        Its partition filters keep one (dataset, variable) directory of the
-        lake; a slice the lake does not hold is an empty scan."""
-        key = (meta.dataset_id, variable_id)
+    def cube(self, meta: DatasetMeta, *variable_ids: str) -> DataFrame:
+        """The lake's slice of one dataset's ``variable_ids``, built once
+        per service and key (a ``Column`` chain costs a py4j round trip per
+        operator). Its partition filters keep one (dataset, variable)
+        directory per variable; one the lake does not hold reads nothing."""
+        key = (meta.dataset_id, *variable_ids)
         if key not in self._slices:
             self._slices[key] = self.lake.where(
                 (F.col("dataset_id") == meta.dataset_id)
-                & (F.col("variable_id") == variable_id)
+                & F.col("variable_id").isin(*variable_ids)
             )
         return self._slices[key]
 
@@ -363,10 +366,10 @@ class TimeseriesService:
                 meta.resolution,
             )
         grid, area = _grid(meta), req.selected_area
-        geom = area.get("geometry", {}) if area.get("type") == "Feature" else area
+        geom = area.get("geometry") if area.get("type") == "Feature" else area
         cells = (
             [point_cell(grid, area)]
-            if geom.get("type") == "Point"
+            if isinstance(geom, dict) and geom.get("type") == "Point"
             else rasterize_all_touched(grid, area, max_cells=self.max_cells)
         )
         return _Plan(grid, requested, extract, reference, cells)
@@ -374,8 +377,12 @@ class TimeseriesService:
     def _assemble(
         self, req: M.TimeseriesV2Request, plan: _Plan, rows: list, t0: float
     ) -> M.TimeseriesV2Response:
-        """Run the chain on the band-ordered per-band rows; build the response."""
+        """Run the chain on the pick's band-ordered rows; build the response."""
         requested, extract = plan.requested, plan.extract
+        # S6 — the companion's requested range: no transform or smoother pads it
+        unc = [r for r in rows if req.include_uncertainty and r.variable_id != req.variable_id
+               and requested.gte <= r.band <= requested.lte]
+        rows = [r for r in rows if r.variable_id == req.variable_id]
         base = [r for r in rows if extract.gte <= r.band <= extract.lte]
         ref = None if plan.reference is None else _values(rows, plan.reference)
         transformed, valid = _transform(req.transform, _values(rows, extract), extract, ref)
@@ -425,6 +432,12 @@ class TimeseriesService:
             series=series_out,
             summary_stats=stats_out,
             processing_time_ms=int((time.perf_counter() - t0) * 1000),
+            # a companion the lake lacks has no rows: no uncertainty series
+            uncertainty=M.SeriesResult(
+                name="uncertainty",
+                time_range=M.TimeRangeModel(gte=unc[0].time, lte=unc[-1].time),
+                values=[r.value for r in unc],
+            ) if unc else None,
         )
 
     def execute(self, req: M.TimeseriesV2Request) -> M.TimeseriesV2Response:
@@ -445,30 +458,15 @@ class TimeseriesService:
 
         for (dataset_id, variable_id, stat), idxs in groups.items():
             meta = self.catalog.variable(dataset_id, variable_id)
-            cube = self.cube(meta, variable_id)
+            # S6 — the uncertainty companion is one more variable of the scan
+            unc = any(reqs[i].include_uncertainty for i in idxs)
+            cube = self.cube(meta, variable_id, *([variable_id + "_uncertainty"] if unc else []))
             plans = {i: self._plan(reqs[i], meta) for i in idxs}
             budgets = [reqs[i].max_processing_time for i in idxs]
             timeout = max(budgets) if min(budgets) > 0 else 0  # 0: no deadline
             picks = [(p.cells, p.bands()) for p in plans.values()]
             for i, rows in zip(idxs, self._zonal(cube, stat, picks, timeout)):
                 results[i] = self._assemble(reqs[i], plans[i], rows, t0)
-
-            unc = [i for i in idxs if reqs[i].include_uncertainty]
-            if not unc:
-                continue
-            # a variable with no uncertainty companion scans an empty
-            # slice, and its requests keep ``uncertainty`` None
-            ucube = self.cube(meta, variable_id + "_uncertainty")
-            # S6 — no padding: transforms and smoothers never apply to the
-            # uncertainty channel, so each request reads its requested range
-            picks = [(plans[i].cells, [plans[i].requested]) for i in unc]
-            for i, rows in zip(unc, self._zonal(ucube, stat, picks, timeout)):
-                if rows:
-                    results[i].uncertainty = M.SeriesResult(
-                        name="uncertainty",
-                        time_range=M.TimeRangeModel(gte=rows[0].time, lte=rows[-1].time),
-                        values=[r.value for r in rows],
-                    )
         return results  # type: ignore[return-value]
 
     def _zonal(

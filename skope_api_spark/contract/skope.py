@@ -531,22 +531,23 @@ ORDER BY c.band
 )
 def skope_point_with_uncertainty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 — the companion ``{variable_id}_uncertainty`` series of the same
-    cell joined to the value series on band, yielding value ± uncertainty
-    bands (the reference wires this source but never serves it). Each side
-    is one lone pick, as the service reads a point and its uncertainty."""
-    val = zonal_picks(analytic_cube(spark, ANNUAL, F32), "mean", [_ORIGIN])
-    unc = zonal_picks(
-        analytic_cube(spark, ANNUAL, "float32_variable_uncertainty"), "mean", [_ORIGIN]
-    ).select("band", F.col("value").alias("uncertainty"))
+    cell beside the value series: value ± uncertainty bands (the reference
+    wires this source but never serves it). One lone pick over both
+    variables, one scan, as the service reads a point and its uncertainty."""
+    unc = F32 + "_uncertainty"
+    cube = analytic_cube(spark, ANNUAL, F32).unionByName(analytic_cube(spark, ANNUAL, unc))
     return (
-        val.join(unc, "band")
+        zonal_picks(cube, "mean", [_ORIGIN])
+        .groupBy("band", "time")
+        .pivot("variable_id", [F32, unc])  # one row per (band, variable)
+        .agg(F.max("value"))
         .select(
             "band",
             _iso().alias("time"),
-            "value",
-            "uncertainty",
-            F.round(F.col("value") - F.col("uncertainty"), 4).alias("lo"),
-            F.round(F.col("value") + F.col("uncertainty"), 4).alias("hi"),
+            F.col(F32).alias("value"),
+            F.col(unc).alias("uncertainty"),
+            F.round(F.col(F32) - F.col(unc), 4).alias("lo"),
+            F.round(F.col(F32) + F.col(unc), 4).alias("hi"),
         )
         .orderBy("band")
     )

@@ -40,6 +40,7 @@ Bounds validation mirrors the reference (``geometry.py:73-79`` point covers,
 
 from __future__ import annotations
 
+import sys
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -190,7 +191,33 @@ def _rect_touches_polygon(
 # --- GeoJSON handling --------------------------------------------------------
 
 
-def _close_ring(ring: Ring) -> Ring:
+def _type_of(geojson) -> str | None:
+    if not isinstance(geojson, dict):
+        raise InvalidGeometryError(f"expected a GeoJSON object, got {geojson!r}")
+    return geojson.get("type")
+
+
+def _array(value, what: str) -> list:
+    """A member that GeoJSON requires to be an array (missing or null is not)."""
+    if not isinstance(value, (list, tuple)):
+        raise InvalidGeometryError(f"{what} must be an array, got {value!r}")
+    return value
+
+
+def _position(p) -> tuple[float, float]:
+    """A position's (lon, lat): it must hold two or more finite numbers
+    (JSON booleans are not numbers)."""
+    if len(_array(p, "a position")) < 2 or not all(
+        isinstance(v, (int, float)) and not isinstance(v, bool)
+        and abs(v) <= sys.float_info.max  # False for NaN
+        for v in p
+    ):
+        raise InvalidGeometryError(f"a position is two or more finite numbers, got {p!r}")
+    return float(p[0]), float(p[1])
+
+
+def _close_ring(ring) -> Ring:
+    ring = [_position(p) for p in _array(ring, "a ring")]
     if not ring:
         raise InvalidGeometryError("empty ring")
     if len(ring) < 4 or ring[0] != ring[-1]:
@@ -198,28 +225,25 @@ def _close_ring(ring: Ring) -> Ring:
     return ring
 
 
-def _polygons_of(geojson: dict) -> list[list[Ring]]:
+def _polygon(rings) -> list[Ring]:
+    if not _array(rings, "a polygon's coordinates"):
+        raise InvalidGeometryError("a polygon needs at least one ring")
+    return [_close_ring(ring) for ring in rings]
+
+
+def _polygons_of(geojson) -> list[list[Ring]]:
     """Flatten any GeoJSON into a list of polygons (each = list of rings)."""
-    t = geojson.get("type")
+    t = _type_of(geojson)
     if t == "Polygon":
-        return [[_close_ring([tuple(p) for p in ring]) for ring in geojson["coordinates"]]]
+        return [_polygon(geojson.get("coordinates"))]
     if t == "MultiPolygon":
-        return [
-            [_close_ring([tuple(p) for p in ring]) for ring in poly]
-            for poly in geojson["coordinates"]
-        ]
+        return [_polygon(poly) for poly in _array(geojson.get("coordinates"), "coordinates")]
     if t == "Feature":
-        return _polygons_of(geojson["geometry"])
-    if t == "FeatureCollection":
-        out: list[list[Ring]] = []
-        for feat in geojson["features"]:
-            out.extend(_polygons_of(feat))
-        return out
-    if t == "GeometryCollection":
-        out = []
-        for g in geojson["geometries"]:
-            out.extend(_polygons_of(g))
-        return out
+        return _polygons_of(geojson.get("geometry"))
+    members = {"FeatureCollection": "features", "GeometryCollection": "geometries"}
+    if t in members:
+        items = _array(geojson.get(members[t]), members[t])
+        return [poly for item in items for poly in _polygons_of(item)]
     raise InvalidGeometryError(f"unsupported geometry type {t!r}")
 
 
@@ -268,12 +292,12 @@ def point_cell(grid: Grid, geojson: dict) -> tuple[int, int]:
     """Point (or Point Feature) → its (row, col) cell (P5), bounds-checked
     (P7). Points on the far edge land on the last cell (``covers`` is
     inclusive)."""
-    t = geojson.get("type")
+    t = _type_of(geojson)
     if t == "Feature":
-        return point_cell(grid, geojson["geometry"])
+        return point_cell(grid, geojson.get("geometry"))
     if t != "Point":
         raise InvalidGeometryError(f"expected Point, got {t!r}")
-    lon, lat = geojson["coordinates"][:2]
+    lon, lat = _position(geojson.get("coordinates"))
     if not grid.covers(lon, lat):
         raise SelectedAreaOutOfBoundsError(
             f"point ({lon}, {lat}) outside dataset bounds"

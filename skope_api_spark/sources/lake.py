@@ -4,10 +4,11 @@ Production serves from the ingested lake (``sources.cube.write_lake``
 layout: partitioned by (dataset_id, variable_id, tile), one file per
 16x16-cell tile, sorted by (band, row, col)). What prunes a request's
 scan, in order: the partition filters of the service's slice
-(``TimeseriesService.cube``) and ``zonal_picks``'s ``tile IN (...)``, so
-the scan lists only the files of the request's tiles; then the Parquet
-page indexes of those files, which the ``band BETWEEN`` predicate uses
-to skip every page outside the request's band range.
+(``TimeseriesService.cube``, a directory per variable) and
+``zonal_picks``'s ``tile IN (...)``, so the scan lists only the files of
+the request's tiles; then the Parquet page indexes of those files, which
+the ``band BETWEEN`` predicate uses to skip every page outside the
+request's band range.
 """
 
 from __future__ import annotations

@@ -127,6 +127,53 @@ class TestErrorBodies:
         ) == (504, {"detail": detail, "processing_time": M.MAX_PROCESSING_TIME_MS})
 
 
+SQUARE_RING = [[-122.9, 44.9], [-122.1, 44.9], [-122.1, 44.1], [-122.9, 44.1], [-122.9, 44.9]]
+# (route, payload field, value): each must be a 422, never an uncaught error
+HOSTILE = {
+    "point_without_coordinates": ("v2", "selected_area", {"type": "Point"}),
+    "point_of_one_number": ("v2", "selected_area", {"type": "Point", "coordinates": [-122.5]}),
+    "point_of_strings": ("v2", "selected_area", {"type": "Point", "coordinates": ["a", "b"]}),
+    "point_of_null": ("v2", "selected_area", {"type": "Point", "coordinates": None}),
+    "point_of_booleans": ("v2", "selected_area", {"type": "Point", "coordinates": [True, False]}),
+    "point_at_nan": ("v2", "selected_area", {"type": "Point", "coordinates": [float("nan"), 45.0]}),
+    "polygon_without_coordinates": ("v2", "selected_area", {"type": "Polygon"}),
+    "polygon_of_numbers": ("v2", "selected_area", {"type": "Polygon", "coordinates": [[1, 2, 3, 1]]}),
+    "polygon_without_rings": ("v2", "selected_area", {"type": "Polygon", "coordinates": []}),
+    "multipolygon_of_a_number": ("v2", "selected_area", {"type": "MultiPolygon", "coordinates": 5}),
+    "feature_without_geometry": ("v2", "selected_area", {"type": "Feature"}),
+    "feature_of_null": ("v2", "selected_area", {"type": "Feature", "geometry": None}),
+    "collection_without_features": ("v2", "selected_area", {"type": "FeatureCollection"}),
+    "collection_of_strings": ("v2", "selected_area", {"type": "FeatureCollection", "features": ["x"]}),
+    "vertex_at_inf": ("v2", "selected_area", {"type": "Polygon", "coordinates": [
+        [*SQUARE_RING[:2], [float("inf"), 44.1], *SQUARE_RING[3:]]
+    ]}),
+    "year_past_a_c_long": ("v2", "time_range", {"gte": 10**20}),
+    "v1_point_of_null": ("v1", "boundaryGeometry", {"type": "Point", "coordinates": None}),
+    **{f"v1_start_{s}": ("v1", "start", s)
+       for s in ("abc", "2000-13", "0", "-5", "99999999999999999999")},
+    "v1_end_abc": ("v1", "end", "abc"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(HOSTILE))
+def test_hostile_payload_is_422(service, case):
+    route, name, value = HOSTILE[case]
+    if route == "v2":
+        payload = {"dataset_id": "annual_5x5x5_dataset", "variable_id": "float32_variable",
+                   "selected_area": POINT, name: value}
+        status, body = H.handle_timeseries_v2(service, payload)
+    else:
+        payload = {"datasetId": "annual_5x5x5_dataset", "variableName": "float32_variable",
+                   "boundaryGeometry": POINT, name: value}
+        status, body = H.handle_timeseries_v1(service, payload)
+    assert status == 422, body
+    if name in ("selected_area", "boundaryGeometry"):
+        # refused as malformed, not read as a position off the grid
+        assert body["detail"][0]["type"] == "InvalidGeometryError"
+    else:
+        assert body["detail"][0]["type"] == "value_error"
+
+
 class TestMetadataRoute:
     def test_200(self, service):
         status, body = H.handle_metadata(service)

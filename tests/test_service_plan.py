@@ -32,6 +32,8 @@ SMOOTHERS = [
 ]
 REQUESTS = {
     "point": dict(selected_area=POINT),
+    "point_uncertainty": dict(selected_area=POINT, include_uncertainty=True),
+    "polygon_uncertainty": dict(selected_area=SQUARE, include_uncertainty=True),
     "polygon_rolling_z": dict(
         selected_area=SQUARE,
         transform=M.ZScoreMovingInterval(width=2),
@@ -98,17 +100,35 @@ def _broadcasts(df) -> int:
 
 @pytest.mark.parametrize("name", sorted(REQUESTS))
 def test_one_collect_of_one_aggregation(service, lake_svc, monkeypatch, name):
-    """One collect per request: of one aggregation for a polygon, and of
-    a bare projection for a lone point (on the lake, with no exchange;
-    the analytic cube's own cross joins broadcast)."""
+    """One collect per request, its uncertainty series included, of one
+    selection (a polygon is rasterized once): of one aggregation for a
+    polygon, and of a bare projection for a lone point (on the lake, with
+    no exchange; the analytic cube's own cross joins broadcast)."""
+    req = _req(**REQUESTS[name])
+    rasterized = []
+    real = service_mod.rasterize_all_touched
+
+    def spy(*a, **kw):
+        rasterized.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(service_mod, "rasterize_all_touched", spy)
     for svc in (service, lake_svc):
         collected = _spy_collects(monkeypatch)
-        resp = svc.execute(_req(**REQUESTS[name]))
+        rasterized.clear()
+        resp = svc.execute(req)
         assert resp.series and resp.series[0].values
         assert len(collected) == 1
+        assert len(rasterized) == (0 if name.startswith("point") else 1)
+        if req.include_uncertainty:
+            assert len(resp.uncertainty.values) == 5
         nodes = _plan_nodes(collected[0])
+        if svc is service and req.include_uncertainty:
+            # the dev cube unions one generator per slice: two variables
+            # are two of its branches, none of them the service's own
+            nodes.discard("Union")
         assert not nodes & {"Window", "Sort", "Union", "InMemoryRelation", "InMemoryTableScan"}
-        if name != "point":
+        if not name.startswith("point"):
             assert "Aggregate" in nodes or "HashAggregate" in nodes
             continue
         qe = collected[0]._jdf.queryExecution()
@@ -134,20 +154,6 @@ def test_lone_point_has_no_broadcast(lake_svc, monkeypatch):
     lake_svc.execute(_req(**REQUESTS["point"]))
     (df,) = collected
     assert _broadcasts(df) == 0
-
-
-def test_uncertainty_reuses_the_selection(service, monkeypatch):
-    calls = []
-    real = service_mod.rasterize_all_touched
-
-    def spy(*a, **kw):
-        calls.append(1)
-        return real(*a, **kw)
-
-    monkeypatch.setattr(service_mod, "rasterize_all_touched", spy)
-    resp = service.execute(_req(selected_area=SQUARE, include_uncertainty=True))
-    assert resp.uncertainty is not None and len(resp.uncertainty.values) == 5
-    assert len(calls) == 1
 
 
 def test_perfbench_tracer_wraps_the_service_layers(service):
@@ -202,11 +208,12 @@ def test_lone_polygon_is_one_job_with_no_exchange(spark, lake_svc, monkeypatch):
     plan = collected[-1]._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Join" not in plan
 
-    point = _req(selected_area=POINT, max_processing_time=0)
-    assert _jobs(spark, lambda: lake_svc.execute(point)) == 1
-    qe = collected[-1]._jdf.queryExecution()
-    assert "Aggregate" not in qe.optimizedPlan().toString() + qe.executedPlan().toString()
-    assert _broadcasts(collected[-1]) == 0
+    for unc in (False, True):  # a point, and a point with its uncertainty
+        point = _req(selected_area=POINT, max_processing_time=0, include_uncertainty=unc)
+        assert _jobs(spark, lambda: lake_svc.execute(point)) == 1
+        qe = collected[-1]._jdf.queryExecution()
+        assert "Aggregate" not in qe.optimizedPlan().toString() + qe.executedPlan().toString()
+        assert _broadcasts(collected[-1]) == 0
 
     for bound in ("ONE_TASK_CELLS", "ONE_TASK_ROWS"):
         with monkeypatch.context() as patched:
@@ -280,7 +287,9 @@ def test_lone_cell_series_is_its_zonal_series(lake_svc, dataset_id, variable_id,
     """A one-cell pick's projected value equals ``zonal_series`` over the
     same selection exactly, NULLs included: alone, in an all-point batch
     (projected) and next to a polygon (aggregated). So do its projected
-    ``n_cells`` and ``n_valid``."""
+    ``n_cells`` and ``n_valid``. A neighbour that does not ask for the
+    uncertainty series gets none, and its answer alone, when batched next
+    to one that does."""
     from skope_api_spark.operators.zonal import zonal_series
     from skope_api_spark.plans.intervals import BandRange
 
@@ -315,10 +324,12 @@ def test_lone_cell_series_is_its_zonal_series(lake_svc, dataset_id, variable_id,
     neighbour = one(_cell_point(meta, 0, 0))
     polygon = one(SQUARE, include_uncertainty=unc)
     alone = lake_svc.execute(one(include_uncertainty=unc))
-    points = lake_svc.execute_many([neighbour, one(include_uncertainty=unc)])[1]
+    batched, points = lake_svc.execute_many([neighbour, one(include_uncertainty=unc)])
     mixed = lake_svc.execute_many([polygon, one(include_uncertainty=unc)])[1]
     for resp in (alone, points, mixed):
         assert resp.series[0].values == values
+    assert batched.uncertainty is None
+    assert batched.series == lake_svc.execute(neighbour).series
     if unc:
         values = expected(variable_id + "_uncertainty")
         for resp in (alone, points, mixed):
