@@ -5,8 +5,8 @@ broadcast-join-and-exchange plan, interleaved in one Spark session.
     python3 perfbench/run.py --build      # builds .bench_build/lake once
     python scripts/lone_pick_sweep.py [--lake .bench_build/lake] [--rounds 7]
 
-``api/service.py::zonal_picks`` selects a lone pick's cells with a
-literal predicate and aggregates them in one task when the pick has at
+``api/service.py::zonal_picks`` selects a lone pick's cells by a set of
+cell keys and aggregates them in one task when the pick has at
 most ``ONE_TASK_CELLS`` cells and selects at most ``ONE_TASK_ROWS`` rows,
 and with the mask join and a partial-aggregate exchange otherwise. This
 script times both plans on the lbda-shaped slice of the benchmark lake
@@ -37,6 +37,7 @@ sys.path.insert(0, str(ROOT))
 # (rows of cells, cols of cells, bands): rows × cols × bands selected rows
 ROW_LADDER = [
     (10, 25, 400),     # 0.10M
+    (20, 25, 250),     # 0.125M
     (20, 25, 300),     # 0.15M
     (20, 25, 400),     # 0.20M
     (20, 25, 600),     # 0.30M

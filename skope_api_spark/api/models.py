@@ -50,10 +50,15 @@ def _coerce_loose_date(v):
     if isinstance(v, dict) and "year" in v:
         # null month/day mean "not specified" (Jan/1st); any non-numeric
         # value must surface as ValueError so pydantic converts it to a
-        # ValidationError (422) — a bare TypeError would 500 the request
+        # ValidationError (422) — a bare TypeError would 500 the request.
+        # A JSON boolean is not a number, and a fractional one is no
+        # component: int() would read true as 1 and 2.7 as 2 (an integral
+        # 2.0 is 2)
         def _num(x, default):
             if x is None:
                 return default
+            if isinstance(x, bool) or (isinstance(x, float) and not x.is_integer()):
+                raise ValueError(f"invalid date component {x!r}")
             try:
                 return int(x)
             except (TypeError, ValueError, OverflowError) as e:

@@ -11,12 +11,15 @@ both as one span; nesting them would count a request twice). Per
 (dataset, variable, statistic) group, ``_run`` plans every request and
 runs at most ONE Spark aggregation and ONE collect of ``zonal_picks``: a
 scan filtered by the tiles of the group's cells (on the lake, a
-partition filter), by the OR of the disjoint band intervals the group
-needs (padded extractions and fixed z-score reference ranges) and by its
-cell bounding box, then a literal cell predicate for a lone request (for a
-polygon, within ``ONE_TASK_CELLS`` and ``ONE_TASK_ROWS``, aggregated in
-its one scan task: one Spark job, no exchange) or else one broadcast
-``(query_id, row, col, bgte, blte)`` mask join. A group whose every
+partition filter) and by ``band IN`` sets for each disjoint band
+interval the group needs (padded extractions and fixed z-score reference
+ranges),
+then a filter on the set of a lone request's cell keys (for a polygon,
+within ``ONE_TASK_CELLS`` and ``ONE_TASK_ROWS``, aggregated in its one
+scan task: one Spark job, no exchange) or else one broadcast
+``(query_id, row, col, bgte, blte)`` mask join. The sets are data that
+the generated code holds by reference, so requests of one plan shape
+reuse one compiled class. A group whose every
 request picks one cell runs no aggregation: a lone cell's mean or median
 is its value. The registry's SKOPE queries run the same ``zonal_picks``
 plan, so their DuckDB oracles check it. Each request's slice runs
@@ -76,13 +79,14 @@ from skope_api_spark.sources.cube import cell_area_m2, tile_of
 
 # A lone pick of at most ONE_TASK_CELLS cells that selects at most
 # ONE_TASK_ROWS rows (cells × bands, per variable; only a group with an
-# uncertainty companion reads two) is selected with a literal predicate and
+# uncertainty companion reads two) is selected by its set of cell keys and
 # aggregated in the one task that scans it. Above either bound the broadcast
 # mask join and the partial-aggregate exchange win: Spark plans the
 # predicate in time linear in its cells, and one task reads a large
 # selection's tile files and aggregates them slower than the join plan's
 # tasks, one per file, spread them (PERF.md "One Spark job per polygon
-# request": the sweeps on the tile-partitioned lake).
+# request": the sweeps on the tile-partitioned lake; "One compiled class
+# per request shape": the re-sweep once neither plan compiles per request).
 ONE_TASK_CELLS = 750
 ONE_TASK_ROWS = 150_000
 
@@ -196,6 +200,53 @@ def _smooth(smoother, x: np.ndarray) -> np.ndarray:
     raise TypeError(f"unknown smoother {type(smoother).__name__}")
 
 
+# Catalyst keeps an ``IN`` list of at most IN_LITERALS values as ``In``
+# (one value as ``=``), whose generated code holds every value, and turns a
+# longer one into ``InSet``, a hash set the code holds by reference (Spark's
+# ``spark.sql.optimizer.inSetConversionThreshold``, left at its default).
+IN_LITERALS = 10
+# a cell's key, unique while a grid is at most 65,536 cells wide (as the
+# tile id is); BIGINT, so any grid height fits
+CELL_KEY = "CAST(row AS BIGINT) * 65536 + col"
+
+
+def _band_in(gte: int, lte: int) -> str:
+    return f"band IN ({', '.join(map(str, range(gte, lte + 1)))})"
+
+
+def _band_filter(bands: list[BandRange]) -> str:
+    """The bands as sets that the generated code holds by reference, one
+    per disjoint interval, ORed. Each set reaches Parquet as ``In(band,
+    ...)``; above 10 values (``spark.sql.parquet.pushdown.inFilterThreshold``)
+    the reader prunes pages by the set's least and greatest band, so a gap
+    between intervals is never read, where one ``IN`` over every band
+    would be bounded by the hull of the set. An interval of at most
+    ``IN_LITERALS`` bands, whose ``IN`` Catalyst would write into the code,
+    is the intersection of two sets of ``IN_LITERALS + 1`` bands, one
+    reaching below the interval and one above it: a row is in both exactly
+    when it is in the interval, and a page overlaps both exactly when it
+    overlaps the interval."""
+    def one(b: BandRange) -> str:
+        if len(b) > IN_LITERALS:
+            return _band_in(b.gte, b.lte)
+        k = IN_LITERALS + 1 - len(b)
+        return f"({_band_in(b.gte - k, b.lte)} AND {_band_in(b.gte, b.lte + k)})"
+
+    return " OR ".join(map(one, bands))
+
+
+def _cell_filter(cells: list[tuple[int, int]]) -> str:
+    """The cells as a set of ``CELL_KEY`` values that the generated code
+    holds by reference: a BIGINT ``IN`` of more than ``IN_LITERALS`` keys
+    is a hash set, and a literal array (a short one, scanned per row) is
+    a reference too, where a short ``IN`` would be written into the
+    code."""
+    keys = ", ".join(f"{r * 65536 + c}L" for r, c in cells)
+    if len(cells) > IN_LITERALS:
+        return f"{CELL_KEY} IN ({keys})"
+    return f"array_contains(array({keys}), {CELL_KEY})"
+
+
 def zonal_picks(
     cube: DataFrame,
     stat: str,
@@ -215,31 +266,39 @@ def zonal_picks(
     variable_id, band, time)`` (SURVEY.md §4). The mask is Σ cells per
     pick, driver-tiny next to the cube.
 
-    The scan is filtered by the picks' tiles, the union of their bands
-    and their cells' bounding box. On the lake, ``tile IN (...)`` is a
-    partition filter: the planner keeps only those tiles' files and
-    evaluates nothing per row; the Parquet reader prunes pages with the
-    rest. A lone pick of one cell is then one ``where`` and one
-    ``selectExpr``. A lone pick of several cells is a literal predicate
-    over their offsets in the bounding box, ``(row - r0) * w + (col -
-    c0) IN (...)``, when it has at most ``ONE_TASK_CELLS`` cells and
-    selects at most ``ONE_TASK_ROWS`` rows, which are then coalesced into
-    one partition so that the scan task aggregates them (one Spark job,
-    no broadcast, no exchange). Anything else is ONE broadcast join of a
-    ``(query_id, row, col, bgte, blte)`` mask, clipped by ``band BETWEEN
-    bgte AND blte`` (inner, not semi: a cell may belong to several picks,
-    and each membership must produce a row). A pick's cells are distinct,
-    so for a lone pick the predicate and the join select the same rows.
-    When every pick is one cell, the selected rows are the series: no
+    The scan is filtered by the picks' tiles and the union of their
+    bands. On the lake, ``tile IN (...)`` is a partition filter: the
+    planner keeps only those tiles' files and evaluates nothing per row.
+    The bands are one ``band IN (...)`` per disjoint interval, which the
+    Parquet reader uses to prune pages. A lone pick's cells are a set of
+    keys, ``CAST(row AS BIGINT) * 65536 + col``; a lone pick of one cell
+    is then one ``where`` and one ``selectExpr``. A lone pick of several
+    cells, when it has at most ``ONE_TASK_CELLS`` cells and selects at
+    most ``ONE_TASK_ROWS`` rows, is coalesced into one partition so that
+    the scan task aggregates it (one Spark job, no broadcast, no
+    exchange). Anything else is ONE broadcast join of a ``(query_id, row,
+    col, bgte, blte)`` mask, clipped by ``band BETWEEN bgte AND blte``
+    (inner, not semi: a cell may belong to several picks, and each
+    membership must produce a row). A pick's cells are distinct, so for
+    a lone pick the key set and the join select the same rows. When
+    every pick is one cell, the selected rows are the series: no
     aggregation runs.
+
+    Values are data, not code: every set above has more than
+    ``IN_LITERALS`` values, so it is a hash set (``get_spark`` makes an
+    int one a hash set too), or is a short cell set, a literal array; the
+    generated code holds both by reference. A band interval of at most
+    ``IN_LITERALS`` bands is two such sets (``_band_filter``). So requests
+    of one plan shape share one compiled class, and a fresh request
+    compiles nothing, whatever its window's length (PERF.md "One compiled
+    class per request shape").
     """
     cells = [rc for cs, _ in picks for rc in cs]
     bands = disjoint_band_ranges([b for _, bs in picks for b in bs])
     # predicates are SQL strings: one py4j call each, where a Column
     # costs a round trip (~1 ms) per operator
     tiles = ", ".join(str(t) for t in sorted({tile_of(r, c) for r, c in cells}))
-    in_bands = " OR ".join(f"band BETWEEN {b.gte} AND {b.lte}" for b in bands)
-    scan = f"tile IN ({tiles}) AND ({in_bands})"
+    scan = f"tile IN ({tiles}) AND ({_band_filter(bands)})"
     # the cube holds one row per (band, row, col), so a one-cell pick's
     # mean or median IS that cell's value, NULL included: project it,
     # with no aggregation and so no exchange
@@ -249,21 +308,13 @@ def zonal_picks(
         "CAST(value IS NOT NULL AS BIGINT) AS n_valid",
     )
     if len(cells) == 1:  # one pick of one cell (a pick is never empty)
-        (r, c), = cells
-        return cube.where(f"{scan} AND row = {r} AND col = {c}").selectExpr(
+        return cube.where(f"{scan} AND {_cell_filter(cells)}").selectExpr(
             "0 AS query_id", "variable_id", "band", "time", *one_cell
         )
-    rs, cs = zip(*cells)
-    r0, c0 = min(rs), min(cs)
-    in_bbox = f"{scan} AND row BETWEEN {r0} AND {max(rs)} AND col BETWEEN {c0} AND {max(cs)}"
     n_rows = len(cells) * sum(b.lte - b.gte + 1 for b in bands)
     if len(picks) == 1 and len(cells) <= ONE_TASK_CELLS and n_rows <= ONE_TASK_ROWS:
-        # an int key per cell of the bounding box: below the box's cell
-        # count, so it cannot overflow
-        w = max(cs) - c0 + 1
-        offsets = ", ".join(str((r - r0) * w + c - c0) for r, c in cells)
         selected = (
-            cube.where(f"{in_bbox} AND (row - {r0}) * {w} + (col - {c0}) IN ({offsets})")
+            cube.where(f"{scan} AND {_cell_filter(cells)}")
             # a single partition needs no exchange to aggregate
             .coalesce(1)
             .withColumn("query_id", F.lit(0))
@@ -277,7 +328,7 @@ def zonal_picks(
             "query_id int, row int, col int, bgte int, blte int",
         )
         selected = (
-            cube.where(in_bbox)
+            cube.where(scan)
             .join(F.broadcast(mask), ["row", "col"])
             .where("band BETWEEN bgte AND blte")
         )

@@ -5,24 +5,22 @@ The reference rasterizes the selected geometry over the raster grid with
 a numpy boolean mask (reference ``timeseries/app/schemas/geometry.py:87-94``
 point, ``:174-209`` polygon). Spark-first, the same semantics become:
 
-- **point** → affine-inverse cell index (``point_cell``) → a literal
-  ``row = r AND col = c`` predicate on the materialized (row, col)
-  columns — pure pushdown, no join (P5/S2);
+- **point** → affine-inverse cell index (``point_cell``) → a one-cell
+  predicate on the materialized (row, col) columns — no join (P5/S2);
 - **polygon / multipolygon / feature collection** → driver-side
   rasterization to the (tiny) set of touched (row, col) cells
-  (``rasterize_all_touched``) → a literal cell predicate for a lone
-  polygon within the service's bounds, else a broadcast mask frame
+  (``rasterize_all_touched``) → a cell-set predicate for a lone polygon
+  within the service's bounds, else a broadcast mask frame
   (``mask_df``). Either is O(bbox cells), never O(data).
 
 ``api/service.py::zonal_picks`` is the one plan that applies a
 selection, for the API service and the registry's SKOPE queries alike: a
-lone one-cell pick becomes that literal predicate; a lone pick of several
-cells, within ``ONE_TASK_CELLS`` cells and ``ONE_TASK_ROWS`` selected
-rows, a literal ``IN`` over the cells' offsets in their bounding box (the
-spatial semi-join, J1, as a filter); and anything else ONE tagged inner
-broadcast join of a ``(query_id, row, col, bgte, blte)`` mask, so a batch
-of picks shares one scan. For one pick of distinct cells the inner join
-is the semi-join too.
+lone pick, of one cell or, within ``ONE_TASK_CELLS`` cells and
+``ONE_TASK_ROWS`` selected rows, of several, is a filter on a set of
+cell keys (the spatial semi-join, J1, as a filter); anything else is ONE
+tagged inner broadcast join of a ``(query_id, row, col, bgte, blte)``
+mask, so a batch of picks shares one scan. For one pick of distinct
+cells the inner join is the semi-join too.
 
 rasterio/shapely are unavailable in this environment, so the rasterizer is
 implemented here in pure Python with the same ``all_touched=True`` contract:

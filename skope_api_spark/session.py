@@ -121,6 +121,12 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # an int/date IN list of more than 10 values (an InSet) becomes a
+        # hash set the generated code holds by reference, never an inline
+        # `switch` over its values: code that holds no value is compiled
+        # once per plan shape, not once per request (api/service.py
+        # zonal_picks), and a set probe costs one hash per row
+        .config("spark.sql.optimizer.inSetSwitchThreshold", "0")
         # events.parquet stores timestamp[ns]; Spark 4 refuses INT64(TIMESTAMP_NANOS)
         # unless read as raw longs — tables.load() converts to a µs timestamp.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -7,8 +7,9 @@ lat, cell_area, value, tile)`` partitioned by ``(dataset_id, variable_id,
 tile)``, ``tile`` being the cell's 16x16-cell tile (``TILE_SQL``), and
 sorted within each tile's file by ``(band, row, col)`` (``write_lake``).
 The planner keeps only the files of a request's tiles, before any task
-starts, and the Parquet page indexes let a ``band BETWEEN`` predicate skip
-the pages of every other band (SURVEY.md §1.1, §4).
+starts, and the Parquet page indexes let the service's ``band IN`` sets,
+pushed as ``In(band, ...)`` and bounded by their least and greatest band,
+skip the pages of every other band (SURVEY.md §1.1, §4).
 
 ``analytic_cube`` regenerates the reference's dev fixtures exactly from
 their analytic construction rule (value = band·100 + row·10 + col·1.1

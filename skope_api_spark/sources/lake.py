@@ -7,8 +7,9 @@ scan, in order: the partition filters of the service's slice
 (``TimeseriesService.cube``, a directory per variable) and
 ``zonal_picks``'s ``tile IN (...)``, so the scan lists only the files of
 the request's tiles; then the Parquet page indexes of those files, which
-the ``band BETWEEN`` predicate uses to skip every page outside the
-request's band range.
+skip every page outside the request's band intervals: ``zonal_picks``
+hands the reader its ``band IN`` sets as ``In(band, ...)``, each bounded
+by its least and greatest band.
 """
 
 from __future__ import annotations

@@ -126,7 +126,7 @@ class TestRasterize:
 
 class TestSemiJoin:
     """J1 through the service plan: a lone pick selects its distinct cells
-    with a literal predicate, and for a batch of picks the tagged inner
+    by a set of cell keys, and for a batch of picks the tagged inner
     mask join is the spatial semi-join of each pick."""
 
     def test_polygon_zonal_mean_matches_manual(self, spark):

@@ -148,6 +148,10 @@ HOSTILE = {
         [*SQUARE_RING[:2], [float("inf"), 44.1], *SQUARE_RING[3:]]
     ]}),
     "year_past_a_c_long": ("v2", "time_range", {"gte": 10**20}),
+    # a JSON boolean or a fractional number is no date component
+    "year_of_true": ("v2", "time_range", {"gte": {"year": True}, "lte": 4}),
+    "month_of_true": ("v2", "time_range", {"gte": {"year": 2, "month": True}, "lte": 4}),
+    "year_fractional": ("v2", "time_range", {"gte": {"year": 2.7}, "lte": 4}),
     "v1_point_of_null": ("v1", "boundaryGeometry", {"type": "Point", "coordinates": None}),
     **{f"v1_start_{s}": ("v1", "start", s)
        for s in ("abc", "2000-13", "0", "-5", "99999999999999999999")},
@@ -283,6 +287,12 @@ class TestMalformedPayloads422:
             },
         )
         assert status == 200  # null month means "not specified" -> Jan
+
+    def test_integral_float_year_is_that_year(self):
+        """``{"year": 2.0}`` is year 2, as ``{"year": 2}`` is: many JSON
+        encoders write a whole number that way."""
+        tr = M.TimeRangeModel(gte={"year": 2.0, "month": 3.0}, lte={"year": 4})
+        assert (tr.gte, tr.lte) == (date(2, 3, 1), date(4, 1, 1))
 
     def test_non_numeric_month_is_422(self, service):
         status, body = H.handle_timeseries_v2(

@@ -44,6 +44,35 @@ def req(**kw):
     return M.TimeseriesV2Request(**base)
 
 
+MONTHLY = DEV_CATALOG["monthly_5x5x60_dataset"]
+
+
+def _band_date(b: int) -> date:
+    """The monthly dev dataset's date of band ``b`` (band 1 = 0001-01)."""
+    return date(1 + (b - 1) // 12, (b - 1) % 12 + 1, 1)
+
+
+def _monthly(area: dict, b0: int, b1: int, **kw) -> M.TimeseriesV2Request:
+    return M.TimeseriesV2Request(
+        dataset_id=MONTHLY.dataset_id, variable_id="float32_variable", selected_area=area,
+        time_range=M.OptionalTimeRangeModel(gte=_band_date(b0), lte=_band_date(b1)),
+        **kw,
+    )
+
+
+def _ring(*cells: tuple[float, float]) -> dict:
+    """A polygon through the given (row, col) positions of a dev grid,
+    in cell units (cell centers at +0.5), closed."""
+    ring = [[MONTHLY.origin_lon + c * MONTHLY.pixel_deg, MONTHLY.origin_lat - r * MONTHLY.pixel_deg]
+            for r, c in cells]
+    return {"type": "Polygon", "coordinates": [[*ring, ring[0]]]}
+
+
+# through cell centers: rows 0-1 x cols 0-4 (10 cells), and that block
+# plus cell (2, 0) (11 cells)
+TEN_CELLS = _ring((0.5, 0.5), (0.5, 4.5), (1.5, 4.5), (1.5, 0.5))
+ELEVEN_CELLS = _ring((0.5, 0.5), (0.5, 4.5), (1.5, 4.5), (1.5, 0.7), (2.5, 0.7), (2.5, 0.5))
+
 SQUARE = {
     "type": "Polygon",
     "coordinates": [[[-121.9, 43.9], [-120.1, 43.9], [-120.1, 42.1],
@@ -93,12 +122,35 @@ class TestLakeService:
         assert "dataset_id" in pf and "variable_id" in pf
 
     def test_batched_scan_pushes_the_band_filter(self, spark, lake, monkeypatch):
+        """Each plan shape hands its bands to the Parquet reader, which
+        prunes pages by them: one ``In(band, ...)`` per disjoint interval
+        of more than 10 bands, two for a shorter one (each set a hash set
+        in the generated code)."""
         collected = _collected(monkeypatch)
-        lake_service(spark, lake).execute_many([req(), req(selected_area=SQUARE)])
-        (df,) = collected
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        pushed = plan.split("PushedFilters")[1][:300]
-        assert "GreaterThanOrEqual(band," in pushed and "LessThanOrEqual(ban" in pushed
+        svc = lake_service(spark, lake)
+        reference = M.ZScoreFixedInterval(
+            time_range=M.TimeRangeModel(gte=_band_date(40), lte=_band_date(55))
+        )
+        shapes = {  # name: (requests, pushed band sets)
+            "point": ([_monthly(POINT, 3, 20)], 1),
+            "short point": ([_monthly(POINT, 3, 5)], 2),
+            "polygon": ([_monthly(SQUARE, 3, 20)], 1),
+            "short polygon": ([_monthly(SQUARE, 7, 7)], 2),
+            "batch": ([_monthly(POINT, 3, 20), _monthly(SQUARE, 10, 30)], 1),
+            "gapped polygon": ([_monthly(SQUARE, 3, 20, transform=reference)], 2),
+        }
+        # the plan string cuts a scan's pushed filters at this length
+        spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+        try:
+            for name, (reqs, sets) in shapes.items():
+                collected.clear()
+                svc.execute_many(reqs)
+                (df,) = collected
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                pushed = plan.split("PushedFilters")[1].split("ReadSchema")[0]
+                assert pushed.count("In(band,") == sets, (name, pushed)
+        finally:
+            spark.conf.unset("spark.sql.maxMetadataStringLength")
 
     @pytest.mark.parametrize("source", ["dev", "parquet"])
     def test_two_requests_build_the_slice_once(self, spark, lake, monkeypatch, source):
@@ -122,6 +174,37 @@ class TestLakeService:
         assert len(slices) == 1
         meta = DEV_CATALOG["annual_5x5x5_dataset"]
         assert svc.cube(meta, "float32_variable") is svc.cube(meta, "float32_variable")
+
+
+class TestInListEdges:
+    """The dev cube and the lake agree where the service changes how it
+    writes a set, at Catalyst's edges (an ``IN`` of one value becomes
+    ``=``, one of at most 10 stays ``In``, a longer one is an ``InSet``):
+    a band interval of at most 10 bands is the intersection of two
+    11-band sets, a longer one is one set; a cell set of at most 10 keys
+    is a literal array."""
+
+    CASES = {  # name: (requests, series lengths, cell counts)
+        "point_1_band": ([_monthly(POINT, 7, 7)], [1], [1]),
+        "point_10_bands": ([_monthly(POINT, 7, 16)], [10], [1]),
+        "point_11_bands": ([_monthly(POINT, 7, 17)], [11], [1]),
+        "polygon_10_cells": ([_monthly(TEN_CELLS, 3, 20)], [18], [10]),
+        "polygon_11_cells": ([_monthly(ELEVEN_CELLS, 3, 20)], [18], [11]),
+        # the union of the batch's bands is 1..10
+        "batch_10_bands": ([_monthly(POINT, 1, 6), _monthly(ELEVEN_CELLS, 4, 10)], [6, 7], [1, 11]),
+    }
+
+    @pytest.mark.parametrize("case", sorted(CASES))
+    def test_dev_cube_and_lake_agree(self, spark, dev_service, lake, case):
+        reqs, lengths, n_cells = self.CASES[case]
+        a = dev_service.execute_many(reqs)
+        b = lake_service(spark, lake).execute_many(reqs)
+        assert [len(r.series[0].values) for r in b] == lengths
+        assert [r.n_cells for r in b] == n_cells
+        for x, y in zip(a, b):
+            dx, dy = x.model_dump(), y.model_dump()
+            dx.pop("processing_time_ms"), dy.pop("processing_time_ms")
+            assert dx == dy
 
 
 # A grid of 6x6 tiles, 100 bands: large enough that a point's tile is a
@@ -180,6 +263,15 @@ def _tiled_point(r: int, c: int) -> dict:
     ]}
 
 
+def _tiled_box(r0: int, c0: int, r1: int, c1: int) -> dict:
+    """A rectangle through the centers of cells (r0, c0) and (r1, c1)."""
+    west, east = (TILED.origin_lon + (c + 0.5) * TILED.pixel_deg for c in (c0, c1))
+    north, south = (TILED.origin_lat - (r + 0.5) * TILED.pixel_deg for r in (r0, r1))
+    return {"type": "Polygon", "coordinates": [[
+        [west, north], [east, north], [east, south], [west, south], [west, north],
+    ]]}
+
+
 def _tiled_req(area: dict, b0: int, b1: int, **kw) -> M.TimeseriesV2Request:
     return M.TimeseriesV2Request(
         dataset_id=TILED.dataset_id, variable_id="v", selected_area=area,
@@ -223,16 +315,24 @@ class TestTiledLayout:
         run = TILE_CELLS**2 * (b1 - b0 + 1)  # the tile's rows for the band range
         assert _scan_metric(df, "numOutputRows") <= math.ceil(run / page) * page
 
+    @pytest.mark.parametrize("b1", [30, 32, 39])
+    def test_short_window_reads_one_page(self, spark, tiled_lake, monkeypatch, b1):
+        """A window of at most 10 bands still prunes pages: bands 30..39
+        of a tile file lie in its first page, and the file is longer."""
+        collected = _collected(monkeypatch)
+        r, c, b0 = 40, 50, 30
+        resp = lake_service(spark, str(tiled_lake)).execute(_tiled_req(_tiled_point(r, c), b0, b1))
+        assert resp.series[0].values == [b * 10000 + r * 100 + c for b in range(b0, b1 + 1)]
+        (df,) = collected
+        page = spark._jvm.org.apache.parquet.column.ParquetProperties.DEFAULT_PAGE_ROW_COUNT_LIMIT
+        assert TILE_CELLS**2 * 39 <= page < TILE_CELLS**2 * TILED.n_bands()
+        assert _scan_metric(df, "numOutputRows") <= page
+
     def test_polygon_scan_lists_its_tiles(self, spark, tiled_lake, monkeypatch):
         collected = _collected(monkeypatch)
         # cells rows 10..20 x cols 30..50: tiles rows 0-1 x cols 1-3
-        west, north = TILED.origin_lon + 30.5 * TILED.pixel_deg, TILED.origin_lat - 10.5 * TILED.pixel_deg
-        east, south = TILED.origin_lon + 50.5 * TILED.pixel_deg, TILED.origin_lat - 20.5 * TILED.pixel_deg
-        box = {"type": "Polygon", "coordinates": [[
-            [west, north], [east, north], [east, south], [west, south], [west, north],
-        ]]}
         svc = lake_service(spark, str(tiled_lake))
-        resp = svc.execute(_tiled_req(box, 1, 5))
+        resp = svc.execute(_tiled_req(_tiled_box(10, 30, 20, 50), 1, 5))
         assert resp.n_cells == 11 * 21
         mean_rc = 15 * 100 + 40
         assert resp.series[0].values == [pytest.approx(b * 10000 + mean_rc) for b in range(1, 6)]
@@ -257,3 +357,30 @@ class TestTiledLayout:
         stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
         assert len(jobs) == 1
         assert sum(tracker.getStageInfo(s).numTasks for s in stages) == 1
+
+
+class TestCompiledOnce:
+    """Requests of one plan shape share one compiled class: their cells
+    and bands are data that the generated code holds by reference."""
+
+    # (first window, second window): more than 10 bands each, and at
+    # most 10, which the service writes as two sets
+    WINDOWS = {"long": ((20, 45), (51, 90)), "short": ((20, 22), (51, 51))}
+
+    @pytest.mark.parametrize("window", sorted(WINDOWS))
+    @pytest.mark.parametrize("shape", ["cell", "polygon"])
+    def test_second_request_compiles_nothing(self, spark, tiled_lake, shape, window):
+        compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        svc = lake_service(spark, str(tiled_lake))
+        if shape == "cell":
+            first, second = _tiled_point(40, 50), _tiled_point(70, 5)
+            mean_rc = 70 * 100 + 5
+        else:  # 4 x 5 and 3 x 6 cells, each aggregated in its one scan task
+            first, second = _tiled_box(40, 50, 43, 54), _tiled_box(70, 5, 72, 10)
+            mean_rc = 71 * 100 + 7.5
+        (a0, a1), (b0, b1) = self.WINDOWS[window]
+        svc.execute(_tiled_req(first, a0, a1))
+        before = compilations.getCount()
+        resp = svc.execute(_tiled_req(second, b0, b1))
+        assert compilations.getCount() - before == 0
+        assert resp.series[0].values == [pytest.approx(b * 10000 + mean_rc) for b in range(b0, b1 + 1)]
