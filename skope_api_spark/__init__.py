@@ -23,8 +23,6 @@ Layout:
                    dedup (exact/MinHash/SimHash/clusters), similarity
                    (brute-force/LSH/IVF), text analysis, multimodal binary
                    stages, skew-safe aggregation, batched multi-query.
-- ``streaming``  — watermarked windows, native session_window sessions,
-                   exactly-once partitioned Parquet sink.
 - ``api``        — pydantic request façade compiling to DataFrame plans;
                    single and batched execution.
 - ``contract``   — the driver-contract query registry (queries + DuckDB

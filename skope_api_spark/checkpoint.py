@@ -11,8 +11,8 @@ At the 1000-executor design point it has one sharp edge:
 ``localCheckpoint`` is NOT fault-tolerant. Lineage is truncated, so
 when an executor holding checkpointed blocks is lost mid-job, those
 partitions are unrecoverable and the whole (long, iterative) job fails.
-Graceful decommissioning (``spark.storage.decommission.*``, see
-``session.CLUSTER_PROFILE``) migrates blocks off PLANNED departures,
+Graceful decommissioning (``spark.storage.decommission.*``, see the
+cluster profile in PERF.md) migrates blocks off PLANNED departures,
 but a crashed executor still kills the run.
 
 ``pin()`` is the policy seam: by default it delegates to

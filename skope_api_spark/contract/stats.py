@@ -1235,7 +1235,7 @@ FROM scaled
 def feature_robust_scale_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust scaling (x − median)/IQR — the outlier-immune companion of
     z-scoring, completing the transform trio with rank_normalize and
-    winsorize. Median and IQR are carried as EXACT integers in
+    winsorize_ticks. Median and IQR are carried as EXACT integers in
     quarter-cent-tick units (stats.py:exact_quantile_brackets: 4·q =
     4·vlo + rem·(vhi − vlo) is an integer for quartiles of an integer
     column), so the scaled numerator zn = 4·t − med4 is BIGINT, the

@@ -335,11 +335,8 @@ def sessionize_native_session_window(spark: SparkSession, sf_dir: str) -> DataFr
     """Spark's native ``session_window`` (the streaming-capable session
     operator, incremental merge state) must reproduce the lag-based batch
     sessionization — same gap, same boundaries. Oracle = the explicit
-    gap-flag SQL. See ``skope_api_spark.streaming.events`` for the
-    streaming form of the identical code."""
-    from skope_api_spark.streaming.events import sessionized_events
-
-    return sessionized_events(_events(spark, sf_dir), gap="30 minutes").orderBy(
+    gap-flag SQL."""
+    return ops.sessionized_events(_events(spark, sf_dir), gap="30 minutes").orderBy(
         "user_id", "session_start"
     )
 
@@ -492,10 +489,7 @@ def interval_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine level); the Spark side runs the bucketed range join: clicks
     become [ts, ts+30min] intervals, purchases are point intervals, the
     equi-key is the 30-minute bucket index (+ user equality as an extra
-    predicate). Same rows, no BroadcastNestedLoopJoin. The streaming form
-    of this exact join (watermarked stream-stream, state bounded by the
-    time condition) is `streaming.events.click_purchase_stream_join`,
-    proven stream≡batch in tests/test_streaming.py."""
+    predicate). Same rows, no BroadcastNestedLoopJoin."""
     from skope_api_spark.operators.rangejoin import interval_overlap_join
 
     ev = _events(spark, sf_dir)

@@ -102,66 +102,3 @@ def holt_forecast(
             f"forecast_{h}", F.col("level") + F.lit(float(h)) * F.col("trend")
         )
     return out
-
-
-def lttb_downsample(
-    df: DataFrame,
-    *,
-    key_cols: Sequence[str],
-    order_col: str,
-    value_col: str,
-    n_out: int,
-) -> DataFrame:
-    """Largest-Triangle-Three-Buckets downsampling (Steinarsson 2013,
-    public) per key — the visually-faithful reduction a dashboard runs
-    before plotting a million-point series.
-
-    Sequential per series (each bucket's pick depends on the previous
-    pick), so it runs as Arrow-batched ``applyInPandas`` per key — the
-    legitimate per-key-Python seam, same contract as the stateful
-    streaming kernels: one series must fit a worker, which a plotting
-    reduction target guarantees in practice (pre-aggregate first
-    otherwise). Always keeps the first and last points; deterministic
-    (ties resolve to the earliest candidate via strict > comparison).
-
-    Returns key cols + (order_col, value_col) for the selected points.
-    """
-    import numpy as np
-
-    if n_out < 3:
-        raise ValueError("n_out must be >= 3")
-    keys = list(key_cols)
-    if not keys:
-        raise ValueError("key_cols must be non-empty")
-    out_schema = df.select(*keys, order_col, value_col).schema
-
-    def pick(pdf):
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        n = len(pdf)
-        if n <= n_out:
-            return pdf[[*keys, order_col, value_col]]
-        x = pdf[order_col].astype("int64" if pdf[order_col].dtype.kind in "iu" else "float64").to_numpy(dtype=np.float64)
-        y = pdf[value_col].to_numpy(dtype=np.float64)
-        idx = [0]
-        # n_out-2 interior buckets over points 1..n-2
-        bounds = np.linspace(1, n - 1, n_out - 1).astype(int)
-        a = 0
-        for b in range(n_out - 2):
-            lo, hi = bounds[b], bounds[b + 1]
-            nxt_lo, nxt_hi = hi, (bounds[b + 2] if b + 2 < len(bounds) else n)
-            avg_x = x[nxt_lo:nxt_hi].mean() if nxt_hi > nxt_lo else x[-1]
-            avg_y = y[nxt_lo:nxt_hi].mean() if nxt_hi > nxt_lo else y[-1]
-            seg_x, seg_y = x[lo:hi], y[lo:hi]
-            area = np.abs(
-                (x[a] - avg_x) * (seg_y - y[a]) - (x[a] - seg_x) * (avg_y - y[a])
-            )
-            a = lo + int(np.argmax(area))
-            idx.append(a)
-        idx.append(n - 1)
-        return pdf.iloc[idx][[*keys, order_col, value_col]]
-
-    return (
-        df.select(*keys, order_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(pick, schema=out_schema)
-    )

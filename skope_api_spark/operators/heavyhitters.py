@@ -72,17 +72,3 @@ def mg_estimates(df: DataFrame, col: str, *, counters: int) -> DataFrame:
         .groupBy("item")
         .agg(F.sum("partial_count").alias("est_count"))
     )
-
-
-def approx_heavy_hitters(
-    df: DataFrame,
-    col: str,
-    *,
-    counters: int = 256,
-    top_k: int = 20,
-) -> DataFrame:
-    """Top-k items by merged Misra-Gries estimate: (item, est_count),
-    count-desc with an item tie-break (TakeOrderedAndProject over the
-    merged summary — never over the raw corpus)."""
-    merged = mg_estimates(df, col, counters=counters)
-    return merged.orderBy(F.desc("est_count"), "item").limit(top_k)

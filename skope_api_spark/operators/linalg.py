@@ -1,6 +1,5 @@
 """Distributed dense linear algebra over embedding columns: covariance /
-Gram accumulation and PCA projection (whitening / dimensionality reduction
-for the ANN + SemDeDup operators in ``operators/similarity.py``).
+Gram accumulation.
 
 Scale shape — the heavy computation is one tree-reducible aggregation:
 
@@ -35,12 +34,6 @@ Scale shape — the heavy computation is one tree-reducible aggregation:
   embedding column (column-pruned scan) and reduces to d values — at
   100 TB it is strictly cheaper than the product pass it precedes.
 
-- PCA itself is the textbook small-d split: the d×d covariance (4096
-  doubles at d=64) is collected to the driver, eigendecomposed with
-  numpy, and the top-k component matrix is broadcast back as a literal —
-  projection is then an in-scan ``zip_with``/``aggregate`` fold, no
-  shuffle, no Python.
-
 Population (ddof=0) covariance.
 """
 
@@ -48,13 +41,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _dim(df: DataFrame, col: str) -> int:
-    row = df.select(F.size(F.col(col)).alias("d")).first()
-    if row is None or row["d"] is None:
-        raise ValueError(f"cannot infer dimension of empty column {col!r}")
-    return int(row["d"])
 
 
 def column_means(df: DataFrame, col: str) -> list[float]:
@@ -205,79 +191,3 @@ def covariance(
         "j",
         (F.col("sum_cc") / F.col("n") + F.lit(0.0)).alias("cov"),
     )
-
-
-def pca_components(
-    df: DataFrame,
-    col: str = "embedding",
-    *,
-    k: int,
-    strategy: str = "explode",
-):
-    """Top-k principal components via distributed covariance + driver-side
-    eigendecomposition. Returns ``(mean, components, variances)`` numpy
-    arrays: components is d×k, columns ordered by descending eigenvalue
-    with a deterministic sign convention (largest-|coefficient| entry of
-    each component made positive, index tie-break lowest)."""
-    import numpy as np
-
-    d = _dim(df, col)
-    if not 1 <= k <= d:
-        raise ValueError(f"k must be in [1, {d}], got {k}")
-    mu = column_means(df, col)
-    if strategy == "explode":
-        parts = _explode_partials(df, col, mu)
-    elif strategy == "gram":
-        parts = _gram_partials(df, col, d, mu)
-    else:
-        raise ValueError(
-            f"unknown strategy {strategy!r}; use 'explode' or 'gram'"
-        )
-    tri = parts.select(
-        "i", "j", (F.col("sum_cc") / F.col("n")).alias("cov")
-    ).collect()
-    C = np.zeros((d, d))
-    for r in tri:
-        C[r["i"], r["j"]] = C[r["j"], r["i"]] = r["cov"]
-    mean = np.asarray(mu, dtype=np.float64)
-    vals, vecs = np.linalg.eigh(C)
-    order = np.argsort(vals)[::-1][:k]
-    comps = vecs[:, order]
-    # deterministic sign: flip so the max-|coeff| entry is positive
-    for c in range(comps.shape[1]):
-        j = int(np.argmax(np.abs(comps[:, c])))
-        if comps[j, c] < 0:
-            comps[:, c] = -comps[:, c]
-    return mean, comps, vals[order]
-
-
-def pca_project(
-    df: DataFrame,
-    col: str = "embedding",
-    *,
-    k: int,
-    out_col: str = "pca",
-    strategy: str = "explode",
-) -> DataFrame:
-    """Append a length-k ``array<double>`` of PCA scores. The component
-    matrix is a broadcast literal; projection is an in-scan zip_with fold
-    per output dim — zero extra shuffle over the input scan."""
-    mean, comps, _ = pca_components(df, col, k=k, strategy=strategy)
-    centered = F.zip_with(
-        F.transform(F.col(col), lambda v: v.cast("double")),
-        F.array([F.lit(float(m)) for m in mean]),
-        lambda x, m: x - m,
-    )
-    scores = [
-        F.aggregate(
-            F.zip_with(
-                centered,
-                F.array([F.lit(float(v)) for v in comps[:, c]]),
-                lambda x, w: x * w,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        for c in range(comps.shape[1])
-    ]
-    return df.withColumn(out_col, F.array(*scores))

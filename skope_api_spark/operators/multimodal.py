@@ -57,16 +57,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("content", BinaryType()),
-        StructField("content_type", StringType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
 IMAGE_META_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),

@@ -202,31 +202,6 @@ def equi_depth_histogram(
     )
 
 
-def observed_metrics(
-    df: DataFrame,
-    metrics: Sequence[tuple[str, Column]],
-):
-    """Attach single-pass QA metrics to a DataFrame via Spark's
-    ``Observation`` API: the metrics are computed DURING whatever action
-    consumes the returned DataFrame — no second scan, unlike running a
-    separate ``constraint_report`` pass after a write.
-
-    Returns (observed_df, observation); read ``observation.get`` AFTER an
-    action on ``observed_df``. The idiomatic write-path QA:
-
-        obs_df, obs = observed_metrics(df, [("n", F.count(F.lit(1)))])
-        obs_df.write.parquet(path)
-        assert obs.get["n"] > 0
-    """
-    from pyspark.sql import Observation
-
-    if not metrics:
-        raise ValueError("metrics must be non-empty")
-    obs = Observation()
-    named = [expr.alias(name) for name, expr in metrics]
-    return df.observe(obs, *named), obs
-
-
 def k_anonymity_report(
     df: DataFrame,
     quasi_identifiers: Sequence[str],

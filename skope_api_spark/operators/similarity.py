@@ -248,7 +248,6 @@ def _fold_nearest(
     cents: DataFrame | None = None,
     *,
     vec_col: str,
-    keep_centroid: bool = False,
     cb: DataFrame | None = None,
 ) -> DataFrame:
     """Nearest-centroid assignment as a MAP-ONLY fold over a broadcast
@@ -281,7 +280,7 @@ def _fold_nearest(
     form's collapse of duplicate ids was an artifact of the join shape,
     mirrored by the oracles' PARTITION BY id).
 
-    Adds ``__best`` = struct(cs, cell[, centroid]) to ``df``. Pass
+    Adds ``__best`` = struct(cs, cell) to ``df``. Pass
     either ``cents`` (builds the codebook row here) or a prebuilt
     ``cb`` from ``_codebook_row`` to share one build across sites.
     """
@@ -294,21 +293,12 @@ def _fold_nearest(
         cb = _codebook_row(cents)
 
     def score(c):
-        parts = [
+        return F.struct(
             cosine(F.col(vec_col), c.getField("centroid")).alias("cs"),
             (-c.getField("cell")).alias("nc"),
             c.getField("cell").alias("cell"),
-        ]
-        if keep_centroid:
-            parts.append(c.getField("centroid").alias("centroid"))
-        return F.struct(*parts)
+        )
 
-    best_parts = [
-        F.col("__bm.cs").alias("cs"),
-        F.col("__bm.cell").alias("cell"),
-    ]
-    if keep_centroid:
-        best_parts.append(F.col("__bm.centroid").alias("centroid"))
     return (
         df.crossJoin(cb)
         # separate projections (not one expression tree): CollapseProject
@@ -325,7 +315,10 @@ def _fold_nearest(
         # a null __bm: the scored structs themselves are non-null even
         # when every cosine inside is null.
         .where(F.col("__bm").isNotNull())
-        .withColumn("__best", F.struct(*best_parts))
+        .withColumn(
+            "__best",
+            F.struct(F.col("__bm.cs").alias("cs"), F.col("__bm.cell").alias("cell")),
+        )
         .drop("__cb", "__scored", "__bm")
     )
 
@@ -1193,152 +1186,6 @@ def pq_topk_rerank(
     nv = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv")
     )
-    rer = (
-        sl.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("cosine_sim", cosine(F.col("__qv"), F.col("__nv")))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), "neighbor_id")
-    return (
-        rer.withColumn("rk", F.row_number().over(w).cast("int"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rk")
-    )
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 3,
-    n_cells: int = 8,
-    nprobe: int = 2,
-    coarse_iters: int = 2,
-    m: int = 32,
-    pq_cells: int = 32,
-    pq_iters: int = 1,
-    shortlist: int = 50,
-    dim: int = DIM,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ (the FAISS IVFPQ architecture, Jégou et al. 2011): a coarse
-    k-means quantizer restricts candidates to the query's ``nprobe``
-    nearest cells, and RESIDUALS (vector − cell centroid) are PQ-encoded
-    so the in-cell scan reads m-byte codes, not raw vectors.
-
-    Composition of the two existing trained paths, end to end:
-
-    - coarse: ``kmeans_centroids`` (md5-seeded, 6-decimal-rounded Lloyd);
-      corpus rows assign to exactly ONE cell (max-cosine, min-cell ties);
-    - residual PQ: ``pq_kmeans_codebooks`` trained on residuals — the
-      quantization error of a residual is far smaller than of the raw
-      vector, the reason IVFPQ beats flat PQ at equal bytes;
-    - query: fan out to ``nprobe`` cells (bounded batch × nprobe rows),
-      build a per-(query, cell) residual LUT — m × pq_cells doubles,
-      broadcast — and ADC-score ONLY candidates in probed cells via the
-      (cell, j, code) equi-join;
-    - exact cosine re-rank of the per-query ``shortlist`` on raw vectors.
-
-    At 100 TB: candidate volume is |probed cells| / n_cells of the corpus,
-    scanned at m bytes/vector; raw vectors are touched for
-    |queries| × shortlist rows only. Recall measured in tests/PERF.md;
-    dials are nprobe (cell recall) and shortlist (ADC→exact headroom).
-    """
-    vecs = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("v"),
-    )
-    cents = kmeans_centroids(
-        corpus,
-        n_cells=n_cells,
-        iters=coarse_iters,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-
-    # one codebook row shared by every fold-assignment site
-    cbrow = _codebook_row(cents)
-
-    def nearest_cells(df: DataFrame, idc: str, n: int) -> DataFrame:
-        if n <= 1:
-            # map-only fold assignment (r16, _fold_nearest) — carries the
-            # winning centroid through for the residual computation
-            return _fold_nearest(
-                df, vec_col="v", keep_centroid=True, cb=cbrow
-            ).select(
-                idc,
-                F.col("__best.cell").alias("cell"),
-                "v",
-                F.col("__best.centroid").alias("centroid"),
-            )
-        scored = df.crossJoin(F.broadcast(cents)).withColumn(
-            "__csim", cosine(F.col("v"), F.col("centroid"))
-        )
-        w = W.partitionBy(idc).orderBy(F.desc("__csim"), "cell")
-        return (
-            scored.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= n)
-            .select(idc, "cell", "v", "centroid")
-        )
-
-    residual = F.zip_with("v", "centroid", lambda a, b: a - b)
-    assigned = nearest_cells(vecs, "vec_id", 1).withColumn("r", residual)
-    res_frame = assigned.select("vec_id", F.col("r").alias("res"))
-    cb = pq_kmeans_codebooks(
-        res_frame,
-        m=m,
-        n_cells=pq_cells,
-        iters=pq_iters,
-        dim=dim,
-        id_col="vec_id",
-        vec_col="res",
-    )
-    codes = (
-        pq_assign_codes(
-            res_frame, cb, m=m, dim=dim, id_col="vec_id", vec_col="res"
-        )
-        .withColumnRenamed("cell", "pq_cell")  # PQ code, per subspace
-        .join(assigned.select("vec_id", "cell"), "vec_id")  # coarse cell
-    )
-
-    q_vecs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("v"),
-    )
-    q_probed = nearest_cells(q_vecs, "query_id", nprobe).withColumn(
-        "r", residual
-    )
-    q_subs = q_probed.select(
-        "query_id",
-        "cell",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j"),
-        F.col("r"),
-    ).select(
-        "query_id", "cell", "j",
-        F.slice("r", F.col("j") * (dim // m) + 1, dim // m).alias("sv"),
-    )
-    lut = q_subs.join(F.broadcast(cb.withColumnRenamed("cell", "pq_cell")), "j").select(
-        "query_id",
-        "cell",
-        "j",
-        "pq_cell",
-        _ssd(F.col("sv"), F.col("centroid")).alias("part"),
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["cell", "j", "pq_cell"])
-        .where(F.col("query_id") != F.col("vec_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.round(F.sum("part"), 6).alias("ad"))
-    )
-    wsl = W.partitionBy("query_id").orderBy("ad", "neighbor_id")
-    sl = (
-        scored.withColumn("__rk", F.row_number().over(wsl))
-        .where(F.col("__rk") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    qv = q_vecs.select("query_id", F.col("v").alias("__qv"))
-    nv = vecs.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("__nv"))
     rer = (
         sl.join(F.broadcast(qv), "query_id")
         .join(nv, "neighbor_id")

@@ -7,10 +7,6 @@ Scale shapes (the point of each design):
   sums (n, Σx, Σy, Σxy, Σx², Σy²); ONE hash aggregate with map-side
   combine, closed-form slope/intercept/R² in the projection. No per-group
   solver, no second pass.
-- **multi-feature OLS** — the normal-equations sufficient statistics
-  (XᵀX, Xᵀy) are (k²+k) numbers independent of corpus size, accumulated
-  exactly like ``linalg.covariance`` and solved once on the driver; the
-  fitted coefficients broadcast back as literals for residual scoring.
 - **bootstrap** — B subsample replicates are B *conditional aggregates in
   one scan*: replicate b keeps a row iff the shared ``md5_long`` uniform
   of (id, b) clears the subsample threshold, so membership is
@@ -74,49 +70,6 @@ def grouped_ols(
     )
 
 
-def ols_fit(
-    df: DataFrame,
-    *,
-    y: str,
-    features: list[str] | tuple[str, ...],
-    intercept: bool = True,
-):
-    """Multi-feature OLS via distributed normal equations.
-
-    Accumulates XᵀX and Xᵀy in ONE aggregation (k²+k scalars), solves on
-    the driver with ``numpy.linalg.solve``. Returns a numpy coefficient
-    vector ordered [intercept?, *features]. Rank-deficient designs raise.
-    """
-    import numpy as np
-
-    if not features:
-        raise ValueError("features must be non-empty")
-    cols = [F.lit(1.0).alias("__c")] if intercept else []
-    cols += [F.col(f).cast("double") for f in features]
-    yc = F.col(y).cast("double")
-    k = len(features) + (1 if intercept else 0)
-    terms = []
-    names = []
-    xs = cols
-    for i in range(k):
-        for j in range(i, k):
-            names.append(f"__xtx_{i}_{j}")
-            terms.append(F.sum(xs[i] * xs[j]).alias(names[-1]))
-    for i in range(k):
-        names.append(f"__xty_{i}")
-        terms.append(F.sum(xs[i] * yc).alias(names[-1]))
-    row = df.agg(*terms).first()
-    XtX = np.zeros((k, k))
-    Xty = np.zeros(k)
-    for i in range(k):
-        for j in range(i, k):
-            XtX[i, j] = XtX[j, i] = row[f"__xtx_{i}_{j}"]
-        Xty[i] = row[f"__xty_{i}"]
-    if np.linalg.matrix_rank(XtX) < k:
-        raise ValueError("design matrix is rank-deficient")
-    return np.linalg.solve(XtX, Xty)
-
-
 def bootstrap_replicate_means(
     df: DataFrame,
     *,
@@ -177,36 +130,6 @@ def bootstrap_replicate_means(
     return wide.select(F.explode(pairs).alias("r")).select(
         "r.replicate", "r.n_rows", "r.mean"
     )
-
-
-def bootstrap_ci(
-    df: DataFrame,
-    *,
-    value_col: str,
-    id_col: str,
-    replicates: int = 32,
-    frac: float = 0.5,
-    alpha: float = 0.05,
-) -> DataFrame:
-    """Percentile bootstrap CI for mean(value): one corpus scan for the
-    replicates plus one B-row reduce. Returns a single row
-    (point_estimate, ci_lo, ci_hi, n_replicates)."""
-    reps = bootstrap_replicate_means(
-        df,
-        value_col=value_col,
-        id_col=id_col,
-        replicates=replicates,
-        frac=frac,
-    )
-    point = df.agg(
-        F.avg(F.col(value_col).cast("double")).alias("point_estimate")
-    )
-    ci = reps.agg(
-        F.percentile(F.col("mean"), F.lit(alpha / 2)).alias("ci_lo"),
-        F.percentile(F.col("mean"), F.lit(1 - alpha / 2)).alias("ci_hi"),
-        F.count(F.lit(1)).alias("n_replicates"),
-    )
-    return point.crossJoin(F.broadcast(ci))
 
 
 def _range_prefix_sum(
@@ -1137,42 +1060,6 @@ def calibration_table(
     )
 
 
-def winsorize(
-    df: DataFrame,
-    col: str,
-    *,
-    lower: float = 0.01,
-    upper: float = 0.99,
-    boundary_decimals: int = 2,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Winsorized (percentile-clipped) feature transform: values below
-    the exact ``lower`` quantile or above the ``upper`` quantile are
-    clamped to those bounds — the tail-taming companion of
-    ``rank_normalize`` that PRESERVES scale (unlike rank mapping).
-
-    Bounds come from the distributed exact-quantile operator, rounded to
-    ``boundary_decimals`` (cross-engine-stable interpolated doubles) and
-    broadcast as one scalar row; the clip itself is a pure in-scan
-    projection. NULLs pass through.
-    """
-    if not 0.0 <= lower < upper <= 1.0:
-        raise ValueError("need 0 <= lower < upper <= 1")
-    out_col = out_col or f"{col}_winsorized"
-    qs = exact_quantiles(df, col, [lower, upper])
-    bounds = qs.agg(
-        F.round(F.min("value"), boundary_decimals).alias("__lo"),
-        F.round(F.max("value"), boundary_decimals).alias("__hi"),
-    )
-    v = F.col(col).cast("double")
-    clipped = F.when(v < F.col("__lo"), F.col("__lo")).when(
-        v > F.col("__hi"), F.col("__hi")
-    ).otherwise(v)
-    return df.crossJoin(F.broadcast(bounds)).withColumn(
-        out_col, F.when(v.isNotNull(), clipped)
-    ).drop("__lo", "__hi")
-
-
 def winsorize_ticks(
     df: DataFrame,
     col: str,
@@ -1184,8 +1071,8 @@ def winsorize_ticks(
     partitions: int | None = None,
 ) -> DataFrame:
     """Winsorize a column that lives on a fixed 1/``tick_scale`` decimal
-    grid (money, counts) with INTEGER-EXACT interpolated bounds — the
-    engine-build-proof variant of ``winsorize`` (VERDICT r8 #1 class:
+    grid (money, counts) with INTEGER-EXACT interpolated bounds, so the
+    clip is engine-build-proof (VERDICT r8 #1 class:
     2-dp-rounded p01/p99 doubles can tie on a half-cent, where a
     last-ulp quantile_cont difference between engine builds flips the
     rounding and with it every comparison against the bound).

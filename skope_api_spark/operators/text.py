@@ -873,51 +873,3 @@ def keyness_llr(
     return out.orderBy(
         F.round("g2", 6).desc(), "token"
     ).limit(top_k)
-
-
-def compression_ratio(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    level: int = 6,
-) -> DataFrame:
-    """zlib compression ratio per document — the classic redundancy
-    quality signal (highly compressible text = boilerplate/repetition;
-    used by Gopher-family quality pipelines): ratio = deflate_bytes /
-    utf8_bytes, lower = more redundant.
-
-    zlib is DETERMINISTIC for a fixed level, so the signal is stable
-    across runs/machines, but no SQL engine exposes deflate — this is an
-    honest Arrow-batched mapInPandas Python stage (pytest-verified, no
-    oracle surface), like the multimodal codecs. Only (id, two ints,
-    ratio) cross the exchange."""
-    import zlib
-
-    import pandas as pd
-
-    schema = (
-        f"{id_col} long, n_bytes long, n_compressed long, "
-        "compression_ratio double"
-    )
-
-    def batches(it):
-        for pdf in it:
-            raw = [
-                t.encode("utf-8") if t is not None else b""
-                for t in pdf[text_col]
-            ]
-            nb = [len(b) for b in raw]
-            nc = [len(zlib.compress(b, level)) for b in raw]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": nb,
-                    "n_compressed": nc,
-                    "compression_ratio": [
-                        (c / b) if b else None for b, c in zip(nb, nc)
-                    ],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema=schema)

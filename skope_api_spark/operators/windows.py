@@ -253,8 +253,8 @@ def sessionize(
     out_col: str = "session_id",
 ) -> DataFrame:
     """Gap-based sessionization: a new session starts when the time since the
-    previous row exceeds ``gap``. Batch analogue of a streaming session window
-    (the streaming form lives in ``skope_api_spark.streaming``).
+    previous row exceeds ``gap``. Window-function form of Spark's native
+    session window (``sessionized_events`` below).
     """
     gap_ms = parse_gap_ms(gap)
     w = _ordered_window(partition_by, order_by)
@@ -266,6 +266,23 @@ def sessionize(
         W.unboundedPreceding, 0
     )
     return df.withColumn(out_col, F.sum(is_new).over(running))
+
+
+def sessionized_events(
+    events: DataFrame, *, gap: str = "30 minutes"
+) -> DataFrame:
+    """Native gap-based sessions via ``F.session_window`` (incremental
+    merge state in streaming; equals the batch window-function
+    sessionization in results)."""
+    return (
+        events.groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+        )
+        .select("user_id", "n_events", "session_start", "session_end")
+    )
 
 
 def gap_fill_interpolate(

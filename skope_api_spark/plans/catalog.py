@@ -2,13 +2,14 @@
 
 The reference loads two YAML files (slim extraction metadata and rich API
 metadata, reference ``timeseries/app/schemas/dataset.py:125-157``). Here the
-catalog is a plain dataclass registry plus an optional YAML loader with the
-same shape as the reference's ``deploy/metadata/*.yml``. The dev catalog
-(mirroring ``deploy/metadata/dev.yml:1-16``) ships as a constant so tests
-and the analytic fixtures need no files.
+catalog is a plain dataclass registry, and the dev catalog ``DEV_CATALOG``
+(mirroring ``deploy/metadata/dev.yml:1-16``, on the 5×5 dev grid that
+``DatasetMeta``'s grid fields default to) ships as a constant, so the
+service, tests and the analytic fixtures need no files.
 
 As a Spark-side dimension: ``catalog_df`` returns the catalog as a (tiny)
-DataFrame for broadcast joins when queries batch over many datasets.
+DataFrame for broadcast joins when queries batch over many datasets
+(``skope_catalog_metadata_join``).
 """
 
 from __future__ import annotations
@@ -80,33 +81,6 @@ class Catalog:
                 f"no variable {variable_id!r} in dataset {dataset_id!r}"
             )
         return meta
-
-
-def load_catalog_yaml(path: str) -> Catalog:
-    """Load a reference-shaped metadata YAML (deploy/metadata/*.yml)."""
-    import yaml
-
-    with open(path) as f:
-        raw = yaml.safe_load(f)
-    datasets = {}
-    for dataset_id, spec in raw.items():
-        tr = spec["time_range"]
-        datasets[dataset_id] = DatasetMeta(
-            dataset_id=dataset_id,
-            resolution=spec["resolution"],
-            time_range=TimeRange(_coerce(tr["gte"]), _coerce(tr["lte"])),
-            variables=tuple(spec["variables"]),
-        )
-    return Catalog(datasets)
-
-
-def _coerce(v) -> date:
-    if isinstance(v, date):
-        return v
-    parts = [int(p) for p in str(v).split("-")]
-    while len(parts) < 3:
-        parts.append(1)
-    return date(*parts)
 
 
 def catalog_df(spark, catalog: Catalog | None = None):

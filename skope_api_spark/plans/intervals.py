@@ -130,15 +130,6 @@ def time_for_band(origin: date, band: int, resolution: str) -> date:
     raise ValueError(f"unknown resolution {resolution!r}")
 
 
-def time_range_for_band_range(
-    bands: BandRange, origin: date, resolution: str
-) -> TimeRange:
-    return TimeRange(
-        time_for_band(origin, bands.gte, resolution),
-        time_for_band(origin, bands.lte, resolution),
-    )
-
-
 # --- padding planner (W6) ---------------------------------------------------
 
 Adjustment = tuple[int, int]

@@ -38,62 +38,13 @@ def default_driver_memory() -> str:
     return os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 
-# Documented (not auto-applied) configuration profile for a REAL
-# multi-executor cluster at the ~100 TB design point. local[N] shares one
-# JVM, so broadcast sizing, shuffle transport, and executor heap have
-# never been exercised with real executors in this sandbox — these are
-# the settings to start from when they are, with the reasoning recorded
-# so the first cluster deployment isn't guessing:
-CLUSTER_PROFILE: dict[str, str] = {
-    # 4-8 cores per executor: wide enough to amortize broadcast/JIT per
-    # JVM, narrow enough that one straggling task doesn't idle 15 cores
-    "spark.executor.cores": "5",
-    # ~6g/core heap + off-heap headroom for Arrow batches (pandas-UDF
-    # boundaries) and shuffle spill buffers
-    "spark.executor.memory": "24g",
-    "spark.executor.memoryOverhead": "6g",
-    # shuffle upper bound sized so a 100 TB scan's largest shuffle stage
-    # lands ~128-256 MB per partition pre-AQE; AQE coalesces the rest
-    "spark.sql.shuffle.partitions": "8192",
-    # the 10 MB default refuses most of this repo's dimension broadcasts
-    # (nation/region/catalog/alloc tables are KBs, but sf-scaled dims like
-    # part at sf1000 are ~100 MB); the explicit F.broadcast() hints in the
-    # operators stay authoritative — this only widens the auto threshold
-    "spark.sql.autoBroadcastJoinThreshold": "64m",
-    # executor loss is routine at 1000 executors; decommission gracefully
-    # (planned departures migrate blocks; for CRASH tolerance of long
-    # iterative jobs also set SPARK_GRAFT_RELIABLE_CHECKPOINT=1 — see
-    # skope_api_spark/checkpoint.py)
-    "spark.decommission.enabled": "true",
-    "spark.storage.decommission.shuffleBlocks.enabled": "true",
-    # at 1000 executors one slow disk/VM per stage is the norm, and a
-    # 100 TB scan stage has hours of straggler-tail exposure; once 75%
-    # of a stage is done, re-launch tasks running 3x beyond the median
-    # (safe here: every operator is a pure deterministic transform, and
-    # writes go through Spark's output-commit coordinator)
-    "spark.speculation": "true",
-    "spark.speculation.quantile": "0.75",
-    "spark.speculation.multiplier": "3",
-    # AQE skew handling is on in get_spark(); at cluster scale also bound
-    # the in-flight shuffle fetch so reducers over skewed maps don't OOM
-    "spark.reducer.maxSizeInFlight": "96m",
-    "spark.shuffle.file.buffer": "1m",
-}
-# Usage: get_spark(master="yarn"/"k8s://...", extra_conf=CLUSTER_PROFILE)
-# (plus site-specific dynamicAllocation / shuffle-service settings).
-
-
 def get_spark(
     app_name: str = "skope_api_spark",
     *,
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    fair_scheduling: bool = False,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """``fair_scheduling=True`` enables FAIR scheduler pools so concurrent
-    API requests on one session share executors instead of FIFO-queuing
-    (serving deployments; see api/service.py)."""
     cpus = default_parallelism()
     # SPARK_GRAFT_MASTER lets any entry point (checker, bench, tests) run
     # against a different master without code changes — the sandbox's
@@ -115,7 +66,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # applies only at JVM launch; a no-op if a session already exists
         .config("spark.driver.memory", default_driver_memory())
-        .config("spark.scheduler.mode", "FAIR" if fair_scheduling else "FIFO")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

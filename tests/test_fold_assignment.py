@@ -98,21 +98,6 @@ class TestFoldNearest:
         with pytest.raises(ValueError, match="cents"):
             _fold_nearest(df, vec_col="embedding")
 
-    def test_keep_centroid_returns_winning_centroid(self, spark):
-        df = spark.createDataFrame(
-            [(1, [0.0, 5.0])], "vec_id long, embedding array<double>"
-        )
-        cents = spark.createDataFrame(
-            [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
-            "cell int, centroid array<double>",
-        )
-        r = (
-            _fold_nearest(df, cents, vec_col="embedding", keep_centroid=True)
-            .select("__best.cell", "__best.centroid")
-            .first()
-        )
-        assert r.cell == 1 and r.centroid == [0.0, 1.0]
-
 
 class TestFoldNearestCode:
     def test_matches_minby_on_ties_and_null(self, spark):

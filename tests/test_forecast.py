@@ -101,51 +101,3 @@ def test_holt_null_values_dropped(spark):
     level, trend = _holt_ref([10.0, 12.0], 0.5, 0.3)
     assert row["n_points"] == 2
     assert abs(row["level"] - level) < 1e-12
-
-
-class TestLTTB:
-    def _series(self, spark, ys):
-        rows = [("a", i, float(v)) for i, v in enumerate(ys)]
-        return spark.createDataFrame(rows, "k string, t int, v double")
-
-    def test_keeps_endpoints_and_size(self, spark):
-        from skope_api_spark.operators.forecast import lttb_downsample
-
-        df = self._series(spark, [float(i % 13) for i in range(500)])
-        out = lttb_downsample(
-            df, key_cols=("k",), order_col="t", value_col="v", n_out=20
-        ).collect()
-        ts = sorted(r["t"] for r in out)
-        assert len(ts) == 20
-        assert ts[0] == 0 and ts[-1] == 499
-
-    def test_preserves_spike(self, spark):
-        from skope_api_spark.operators.forecast import lttb_downsample
-
-        ys = [0.0] * 1000
-        ys[700] = 500.0  # a single visually-critical spike
-        df = self._series(spark, ys)
-        out = lttb_downsample(
-            df, key_cols=("k",), order_col="t", value_col="v", n_out=25
-        ).collect()
-        assert any(r["t"] == 700 for r in out)
-
-    def test_short_series_passthrough(self, spark):
-        from skope_api_spark.operators.forecast import lttb_downsample
-
-        df = self._series(spark, [1.0, 2.0, 3.0])
-        out = lttb_downsample(
-            df, key_cols=("k",), order_col="t", value_col="v", n_out=10
-        ).collect()
-        assert sorted(r["t"] for r in out) == [0, 1, 2]
-
-    def test_validation(self, spark):
-        import pytest as _pytest
-
-        from skope_api_spark.operators.forecast import lttb_downsample
-
-        df = self._series(spark, [1.0])
-        with _pytest.raises(ValueError, match="n_out"):
-            lttb_downsample(
-                df, key_cols=("k",), order_col="t", value_col="v", n_out=2
-            )

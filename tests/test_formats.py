@@ -1,5 +1,5 @@
-"""Bucketed co-located joins, a parquet streaming sink, broadcast
-degradation and Arrow/JVM cosine-kernel parity."""
+"""Bucketed co-located joins, broadcast degradation and Arrow/JVM
+cosine-kernel parity."""
 
 from __future__ import annotations
 
@@ -32,34 +32,6 @@ class TestBucketedJoin:
         assert j.count() == orders.join(cust, orders.o_custkey == cust.c_custkey).count()
         spark.sql("DROP TABLE orders_bkt")
         spark.sql("DROP TABLE cust_bkt")
-
-
-class TestParquetStreamingSink:
-    def test_stream_to_parquet_sink(self, spark, tmp_path):
-        """File-to-file streaming: events landing dir → watermarked counts
-        is not file-sink-able (complete mode), so sink the raw enriched
-        stream append-only and verify contents."""
-        import os
-
-        landing = tmp_path / "landing"
-        landing.mkdir()
-        os.symlink(f"{SF_DIR}/events.parquet", landing / "events.parquet")
-        from skope_api_spark.streaming.events import stream_events
-
-        stream = stream_events(spark, str(landing), with_watermark=None)
-        enriched = stream.withColumn("value_x2", F.col("value") * 2)
-        out = str(tmp_path / "sink")
-        q = (
-            enriched.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        back = spark.read.parquet(out)
-        assert back.count() == load(spark, SF_DIR, "events").count()
-        assert "value_x2" in back.columns
 
 
 class TestBroadcastDegradation:

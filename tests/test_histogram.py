@@ -164,36 +164,6 @@ def test_winsorize_ticks_nulls_and_validation(spark):
         winsorize_ticks(df, "x", lower=(2, 3), upper=(1, 3))
 
 
-def test_observed_metrics_single_pass(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from skope_api_spark.operators.quality import observed_metrics
-
-    df = spark.range(100).withColumn("v", F.col("id") * 2.0)
-    obs_df, obs = observed_metrics(
-        df,
-        [
-            ("n", F.count(F.lit(1))),
-            ("n_null", F.count(F.when(F.col("v").isNull(), 1))),
-            ("max_v", F.max("v")),
-        ],
-    )
-    out = str(tmp_path / "obs_out")
-    obs_df.write.parquet(out)  # the metrics piggyback on the write scan
-    got = obs.get
-    assert got["n"] == 100 and got["n_null"] == 0 and got["max_v"] == 198.0
-    assert spark.read.parquet(out).count() == 100
-
-
-def test_observed_metrics_validation(spark):
-    import pytest as _pytest
-
-    from skope_api_spark.operators.quality import observed_metrics
-
-    with _pytest.raises(ValueError, match="metrics"):
-        observed_metrics(spark.range(1), [])
-
-
 def test_k_anonymity_report(spark):
     from skope_api_spark.operators.quality import k_anonymity_report
 

@@ -244,34 +244,6 @@ class TestBuildApp:
         }
 
 
-class TestYamlCatalog:
-    def test_load_reference_shaped_yaml(self, tmp_path):
-        from datetime import date
-
-        from skope_api_spark.plans.catalog import load_catalog_yaml
-
-        p = tmp_path / "meta.yml"
-        p.write_text(
-            """
-annual_5x5x5_dataset:
-  resolution: year
-  time_range: {gte: "0001", lte: "0005"}
-  variables: [float32_variable, uint16_variable]
-monthly_5x5x60_dataset:
-  resolution: month
-  time_range: {gte: "0001-01", lte: "0005-12"}
-  variables: [float32_variable]
-"""
-        )
-        cat = load_catalog_yaml(str(p))
-        m = cat.variable("annual_5x5x5_dataset", "float32_variable")
-        assert m.resolution == "year"
-        assert m.time_range.gte == date(1, 1, 1)
-        assert m.time_range.lte == date(5, 1, 1)
-        mm = cat.variable("monthly_5x5x60_dataset", "float32_variable")
-        assert mm.time_range.lte == date(5, 12, 1)
-
-
 class TestMalformedPayloads422:
     """Malformed client input must map to 422, never an unhandled error
     (the reference returns FastAPI 422s for all of these)."""

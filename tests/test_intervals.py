@@ -24,7 +24,6 @@ from skope_api_spark.plans.intervals import (
     normalize_time_range,
     output_band_range,
     time_for_band,
-    time_range_for_band_range,
     trailing_adjustment,
 )
 
@@ -82,7 +81,10 @@ class TestTimeToBand:
 
     def test_round_trip_annual(self):
         br = BandRange(2, 4)
-        tr = time_range_for_band_range(br, ANNUAL_SPAN.gte, YEAR)
+        tr = TimeRange(
+            time_for_band(ANNUAL_SPAN.gte, br.gte, YEAR),
+            time_for_band(ANNUAL_SPAN.gte, br.lte, YEAR),
+        )
         assert tr == TimeRange(date(2, 1, 1), date(4, 1, 1))
         assert band_range_for_time_range(tr, ANNUAL_SPAN, YEAR) == br
 

@@ -1,16 +1,12 @@
-"""Distributed covariance / PCA (operators/linalg.py): strategy parity,
-numpy ground truth, projection contracts."""
+"""Distributed covariance (operators/linalg.py): strategy parity and
+numpy ground truth."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from skope_api_spark.operators.linalg import (
-    covariance,
-    pca_components,
-    pca_project,
-)
+from skope_api_spark.operators.linalg import covariance
 
 
 @pytest.fixture(scope="module")
@@ -55,84 +51,6 @@ def test_covariance_rejects_unknown_strategy(data):
     _, df = data
     with pytest.raises(ValueError, match="strategy"):
         covariance(df, strategy="magic")
-
-
-def test_pca_components_contract(data):
-    X, df = data
-    mean, comps, vars_ = pca_components(df, k=3)
-    assert np.abs(mean - X.mean(axis=0)).max() < 1e-10
-    # orthonormal, descending variance, eigenvalues of the true covariance
-    assert np.abs(comps.T @ comps - np.eye(3)).max() < 1e-9
-    assert vars_[0] >= vars_[1] >= vars_[2]
-    true_vals = np.sort(np.linalg.eigvalsh(np.cov(X.T, bias=True)))[::-1][:3]
-    assert np.abs(vars_ - true_vals).max() < 1e-10
-    # deterministic sign: the max-|coeff| entry of each component positive
-    for c in range(comps.shape[1]):
-        assert comps[np.argmax(np.abs(comps[:, c])), c] > 0
-
-
-def test_pca_components_k_validation(data):
-    _, df = data
-    with pytest.raises(ValueError, match="k must be"):
-        pca_components(df, k=0)
-    with pytest.raises(ValueError, match="k must be"):
-        pca_components(df, k=7)
-
-
-def test_pca_project_variance_equals_eigenvalues(data):
-    X, df = data
-    _, _, vars_ = pca_components(df, k=2)
-    rows = pca_project(df, k=2).select("id", "pca").collect()
-    P = np.array([r["pca"] for r in sorted(rows, key=lambda r: r["id"])])
-    assert P.shape == (X.shape[0], 2)
-    assert np.abs(P.var(axis=0, ddof=0) - vars_).max() < 1e-9
-    # scores are centered and decorrelated
-    assert np.abs(P.mean(axis=0)).max() < 1e-9
-    assert abs(np.cov(P.T, bias=True)[0, 1]) < 1e-9
-
-
-def test_pca_project_float_input(spark):
-    # array<float> input (the real embeddings schema) casts cleanly
-    rows = [(0, [1.0, 2.0]), (1, [3.0, 4.0]), (2, [5.0, 0.0])]
-    df = spark.createDataFrame(rows, "id long, embedding array<float>")
-    out = pca_project(df, k=1).select("pca").collect()
-    assert all(len(r["pca"]) == 1 for r in out)
-
-
-def test_pca_projection_preserves_neighbors(spark):
-    """Composition contract: PCA to the true signal dimensionality keeps
-    cosine top-k neighbors — the whitening step ANN pipelines put before
-    bucketing. Data: 3 well-separated clusters embedded in 16 dims with
-    small isotropic noise; k=4 components must keep every point's top-5
-    neighbor set dominated by its own cluster."""
-    import numpy as np
-
-    from skope_api_spark.operators.linalg import pca_project
-
-    rng = np.random.default_rng(21)
-    centers = rng.normal(size=(3, 16)) * 5
-    X = np.vstack(
-        [c + rng.normal(scale=0.3, size=(20, 16)) for c in centers]
-    )
-    labels = np.repeat([0, 1, 2], 20)
-    df = spark.createDataFrame(
-        [(i, x.tolist()) for i, x in enumerate(X)],
-        "id long, embedding array<double>",
-    )
-    rows = pca_project(df, k=4).select("id", "pca").collect()
-    P = np.array([r["pca"] for r in sorted(rows, key=lambda r: r["id"])])
-
-    def top5_same_cluster(M):
-        Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-        sims = Mn @ Mn.T
-        np.fill_diagonal(sims, -2)
-        hits = 0
-        for i in range(len(M)):
-            nn = np.argsort(sims[i])[::-1][:5]
-            hits += int(np.sum(labels[nn] == labels[i]) >= 4)
-        return hits / len(M)
-
-    assert top5_same_cluster(P) >= 0.95
 
 
 def test_covariance_null_rows_skipped_both_strategies(spark):

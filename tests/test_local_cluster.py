@@ -73,46 +73,6 @@ def test_shuffle_and_broadcast_cross_jvm(lc_spark):
     assert len(e.entry(lc_spark).collect()) >= 1
 
 
-def test_streaming_windowed_counts_cross_jvm(lc_spark, tmp_path):
-    # Structured Streaming with watermarked window state held on REAL
-    # executors: stream a small event directory availableNow and check
-    # the windowed counts equal the batch computation of the same input
-    import shutil
-
-    from skope_api_spark.streaming.events import (
-        run_available_now,
-        stream_events,
-        windowed_event_counts,
-    )
-
-    src = str(tmp_path / "events_src")
-    shutil.copytree("/root/testdata/sf0.001", src, ignore=shutil.ignore_patterns("*"))
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src + "/events.parquet")
-    stream = windowed_event_counts(stream_events(lc_spark, src))
-    # complete mode: parity wants ALL windows incl. the watermark tail
-    # (same reasoning as tests/test_streaming.py's batch-parity tests)
-    run_available_now(
-        stream,
-        query_name="lc_win",
-        checkpoint=str(tmp_path / "ckpt"),
-        output_mode="complete",
-    )
-    key = lambda r: (  # noqa: E731
-        r["window_start"],
-        r["event_type"],
-        r["n_events"],
-        r["sum_value"],
-    )
-    got = {key(r) for r in lc_spark.sql("SELECT * FROM lc_win").collect()}
-    from skope_api_spark.tables import load
-
-    want = {
-        key(r)
-        for r in windowed_event_counts(load(lc_spark, src, "events")).collect()
-    }
-    assert got == want and len(want) > 0
-
-
 def test_pandas_udf_worker_on_real_executor(lc_spark):
     # mapInPandas path: executor JVMs launch their own Python workers,
     # which must import skope_api_spark by reference (the

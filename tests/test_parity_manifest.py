@@ -134,11 +134,10 @@ MANIFEST: dict[str, list[tuple]] = {
     "2.7 json scalars": [("query", "json_variant_battery")],
     "2.8 streaming extension": [
         ("query", "sessionize_events"),
-        ("attr", "skope_api_spark.streaming.events", "sessionized_events"),
-        ("attr", "skope_api_spark.streaming.sink",
-         "write_stream_exactly_once"),
-        ("test", "tests/test_local_cluster.py",
-         "test_streaming_windowed_counts_cross_jvm"),
+        ("query", "sessionize_native_session_window"),
+        ("attr", "skope_api_spark.operators.windows", "sessionized_events"),
+        ("test", "tests/test_streaming.py",
+         "test_session_window_stream_equals_batch"),
     ],
 }
 

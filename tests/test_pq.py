@@ -106,42 +106,3 @@ class TestPQRecall:
             for r in pq_topk_rerank(emb, queries, k=1, shortlist=50).collect()
         }
         assert len(exact & approx) / len(exact) >= 0.9
-
-
-class TestIVFPQ:
-    def test_recall_rises_with_nprobe(self, spark, emb):
-        """IVF-PQ: candidates restricted to probed cells, residual-PQ ADC
-        within, exact re-rank. Recall must climb with nprobe (the IVF
-        dial) and clear a floor at nprobe=4 of 8 cells."""
-        from skope_api_spark.operators.similarity import ivfpq_topk
-
-        queries = emb.where(F.col("vec_id") < 10)
-        exact = {
-            (r.query_id, r.neighbor_id)
-            for r in brute_force_topk(emb, queries, k=10).collect()
-        }
-
-        def recall(nprobe):
-            approx = {
-                (r.query_id, r.neighbor_id)
-                for r in ivfpq_topk(
-                    emb, queries, k=10, nprobe=nprobe
-                ).collect()
-            }
-            return len(exact & approx) / len(exact)
-
-        r1, r4 = recall(1), recall(4)
-        assert r4 > r1
-        assert r4 >= 0.6, (r1, r4)
-
-    def test_every_query_gets_k_rows(self, spark, emb):
-        from skope_api_spark.operators.similarity import ivfpq_topk
-
-        out = ivfpq_topk(
-            emb, emb.where(F.col("vec_id") < 10), k=3, nprobe=2
-        ).collect()
-        per_q = {}
-        for r in out:
-            per_q.setdefault(r.query_id, []).append(r.rk)
-        assert set(per_q) == set(range(10))
-        assert all(sorted(v) == [1, 2, 3] for v in per_q.values())

@@ -1,13 +1,15 @@
-"""Structured Streaming tests: the same operators run in batch and stream,
-and the streaming (availableNow) result equals the batch result."""
+"""Structured Streaming parity: the batch operators run unchanged on a
+file-source stream, and the drained (availableNow) result equals the batch
+result."""
 
 from __future__ import annotations
 
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
-from skope_api_spark.streaming import events as se
+from skope_api_spark.operators.windows import sessionized_events
 from skope_api_spark.tables import load
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -26,37 +28,42 @@ def events_dir(tmp_path_factory):
     return str(d)
 
 
-class TestBatchStreamParity:
-    def test_windowed_counts_stream_equals_batch(self, spark, batch_events, events_dir):
-        batch = {
-            (r.window_start, r.event_type): (r.n_events, r.sum_value)
-            for r in se.windowed_event_counts(batch_events).collect()
-        }
-        stream = se.stream_events(spark, events_dir)
-        agg = se.windowed_event_counts(stream)
-        with tempfile.TemporaryDirectory() as ckpt:
-            # complete mode: the parity check wants ALL windows, including
-            # those still inside the watermark at end-of-drain (append mode
-            # would withhold the tail — correct for production, wrong here)
-            se.run_available_now(
-                agg, query_name="wc_test", checkpoint=ckpt, output_mode="complete"
-            )
-            got = {
-                (r.window_start, r.event_type): (r.n_events, r.sum_value)
-                for r in spark.sql("SELECT * FROM wc_test").collect()
-            }
-        assert got == batch
-        assert len(got) > 0
+def _event_stream(spark, landing):
+    """The landing dir as a watermarked stream, ``ts`` converted as
+    ``tables.load`` converts it (raw ns longs or a naive timestamp)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = spark.readStream.schema(spark.read.parquet(landing).schema).parquet(landing)
+    ts = (
+        F.expr("timestamp_micros(ts div 1000)")
+        if dict(raw.dtypes)["ts"] == "bigint"
+        else F.col("ts").cast("timestamp")
+    )
+    return raw.withColumn("ts", ts).withWatermark("ts", "2 hours")
 
+
+def _drain(stream_df, *, query_name, checkpoint, output_mode="append"):
+    """Run everything available into a memory table, then stop."""
+    (
+        stream_df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+class TestBatchStreamParity:
     def test_session_window_stream_equals_batch(self, spark, batch_events, events_dir):
         batch = {
             (r.user_id, r.session_start): (r.n_events, r.session_end)
-            for r in se.sessionized_events(batch_events).collect()
+            for r in sessionized_events(batch_events).collect()
         }
-        stream = se.stream_events(spark, events_dir)
-        sess = se.sessionized_events(stream)
+        stream = _event_stream(spark, events_dir)
+        sess = sessionized_events(stream)
         with tempfile.TemporaryDirectory() as ckpt:
-            se.run_available_now(
+            _drain(
                 sess, query_name="sess_test", checkpoint=ckpt, output_mode="complete"
             )
             got = {
@@ -71,13 +78,11 @@ class TestSessionWindowSemantics:
     def test_native_sessions_match_window_function_sessionize(self, spark, batch_events):
         """F.session_window must agree with the lag-based batch sessionizer
         (operators.windows.sessionize) on session boundaries."""
-        from pyspark.sql import functions as F
-
         from skope_api_spark.operators.windows import sessionize
 
         native = {
             (r.user_id, r.session_start, r.session_end): r.n_events
-            for r in se.sessionized_events(batch_events, gap="30 minutes").collect()
+            for r in sessionized_events(batch_events, gap="30 minutes").collect()
         }
         lagged = (
             sessionize(
@@ -101,35 +106,6 @@ class TestSessionWindowSemantics:
         assert native == derived
 
 
-class TestStreamingDedup:
-    def test_duplicated_stream_dedups_to_batch_distinct(self, spark, tmp_path_factory):
-        """A landing dir containing the same events file TWICE (replayed
-        upload) streams through dropDuplicatesWithinWatermark down to the
-        distinct event set."""
-        import shutil
-
-        d = tmp_path_factory.mktemp("events_dup")
-        shutil.copy(f"{SF_DIR}/events.parquet", d / "events_a.parquet")
-        shutil.copy(f"{SF_DIR}/events.parquet", d / "events_b.parquet")
-
-        stream = se.stream_events(spark, str(d), with_watermark="10 minutes")
-        deduped = se.dedup_events_within_watermark(stream)
-        import tempfile
-
-        with tempfile.TemporaryDirectory() as ckpt:
-            se.run_available_now(
-                deduped, query_name="dedup_stream_test", checkpoint=ckpt
-            )
-            got = spark.sql("SELECT COUNT(*) AS n, COUNT(DISTINCT event_id) AS d FROM dedup_stream_test").first()
-        expected = load(spark, SF_DIR, "events").count()
-        assert got.n == got.d == expected
-
-    def test_batch_fallback(self, spark, batch_events):
-        doubled = batch_events.unionByName(batch_events)
-        out = se.dedup_events_within_watermark(doubled)
-        assert out.count() == batch_events.count()
-
-
 class TestStatelessOpsOnStreams:
     def test_chunk_documents_stream_equals_batch(self, spark, tmp_path_factory):
         """chunk_documents is a pure projection (sequence/slice/posexplode),
@@ -149,7 +125,7 @@ class TestStatelessOpsOnStreams:
         stream_docs = spark.readStream.schema(batch_docs.schema).parquet(str(d))
         chunks = chunk_documents(stream_docs)
         with tempfile.TemporaryDirectory() as ckpt:
-            se.run_available_now(
+            _drain(
                 chunks, query_name="chunk_stream_test", checkpoint=ckpt
             )
             got = {
@@ -158,267 +134,3 @@ class TestStatelessOpsOnStreams:
             }
         assert got == batch
         assert len(got) > 0
-
-
-class TestStreamStreamJoin:
-    def test_click_purchase_join_stream_equals_batch(
-        self, spark, batch_events, events_dir
-    ):
-        """Stream-stream interval join (watermarks both sides, time-bound
-        condition) drains to exactly the batch range-join result."""
-        batch = se.click_purchase_stream_join(
-            batch_events, batch_events, within="30 minutes"
-        )
-        expected = sorted(
-            (r.purchase_id, r.click_id) for r in batch.collect()
-        )
-        assert len(expected) > 0
-
-        s1 = se.stream_events(spark, events_dir, with_watermark="2 hours")
-        s2 = se.stream_events(spark, events_dir, with_watermark="2 hours")
-        joined = se.click_purchase_stream_join(s1, s2, within="30 minutes")
-        assert joined.isStreaming
-        with tempfile.TemporaryDirectory() as ckpt:
-            se.run_available_now(
-                joined, query_name="ss_join_test", checkpoint=ckpt
-            )
-            got = sorted(
-                (r.purchase_id, r.click_id)
-                for r in spark.sql("SELECT * FROM ss_join_test").collect()
-            )
-        assert got == expected
-
-
-class TestExactlyOnceSink:
-    """batchId-keyed idempotent foreachBatch sink: a replayed micro-batch
-    (crash between sink write and checkpoint commit) must not duplicate."""
-
-    def _rows(self, spark, path):
-        from skope_api_spark.streaming.sink import read_sink
-
-        return sorted(
-            (r.event_id, r.ts, r.user_id)
-            for r in read_sink(spark, path)
-            .select("event_id", "ts", "user_id")
-            .collect()
-        )
-
-    def test_kill_and_replay_no_duplicates(self, spark, tmp_path_factory):
-        """Run the sink, then delete the checkpoint's last commit marker —
-        exactly the crash-before-commit state — and restart. Spark replays
-        the final batch from its offsets; the sink must hash identical."""
-        import os
-        import shutil
-
-        from skope_api_spark.streaming.sink import write_stream_exactly_once
-
-        base = tmp_path_factory.mktemp("eo_sink")
-        landing, sink, ckpt = (
-            str(base / "landing"),
-            str(base / "sink"),
-            str(base / "ckpt"),
-        )
-        os.makedirs(landing)
-        shutil.copy(
-            f"{SF_DIR}/events.parquet", f"{landing}/events_a.parquet"
-        )
-        stream = se.stream_events(spark, landing, with_watermark=None)
-        write_stream_exactly_once(
-            stream, path=sink, checkpoint=ckpt, query_name="eo_run1"
-        )
-        first = self._rows(spark, sink)
-        n_input = spark.read.parquet(landing).count()
-        assert len(first) == n_input > 0
-
-        # crash-before-commit: offsets for the last batch exist, its commit
-        # marker does not -> restart MUST replay that batch
-        commits = sorted(
-            f
-            for f in os.listdir(f"{ckpt}/commits")
-            if not f.startswith(".")
-        )
-        os.remove(f"{ckpt}/commits/{commits[-1]}")
-        # the local checksum FS keeps a .crc sidecar per file; a leftover
-        # sidecar makes the replayed commit's rename fail
-        crc = f"{ckpt}/commits/.{commits[-1]}.crc"
-        if os.path.exists(crc):
-            os.remove(crc)
-        stream = se.stream_events(spark, landing, with_watermark=None)
-        write_stream_exactly_once(
-            stream, path=sink, checkpoint=ckpt, query_name="eo_replay"
-        )
-        assert self._rows(spark, sink) == first  # replay, not append
-
-    def test_new_data_lands_once_after_replay(self, spark, tmp_path_factory):
-        """After recovery, later files land as later batches — every input
-        row exactly once across the whole kill/replay/continue sequence."""
-        import os
-        import shutil
-
-        from skope_api_spark.streaming.sink import write_stream_exactly_once
-
-        base = tmp_path_factory.mktemp("eo_sink2")
-        landing, sink, ckpt = (
-            str(base / "landing"),
-            str(base / "sink"),
-            str(base / "ckpt"),
-        )
-        os.makedirs(landing)
-        shutil.copy(
-            f"{SF_DIR}/events.parquet", f"{landing}/events_a.parquet"
-        )
-        stream = se.stream_events(spark, landing, with_watermark=None)
-        write_stream_exactly_once(stream, path=sink, checkpoint=ckpt)
-        commits = sorted(
-            f
-            for f in os.listdir(f"{ckpt}/commits")
-            if not f.startswith(".")
-        )
-        os.remove(f"{ckpt}/commits/{commits[-1]}")
-        # the local checksum FS keeps a .crc sidecar per file; a leftover
-        # sidecar makes the replayed commit's rename fail
-        crc = f"{ckpt}/commits/.{commits[-1]}.crc"
-        if os.path.exists(crc):
-            os.remove(crc)
-
-        # second input file arrives while the first batch is uncommitted
-        df = spark.read.parquet(f"{SF_DIR}/events.parquet")
-        df.withColumn(
-            "event_id", df.event_id + 1_000_000
-        ).write.parquet(f"{landing}/events_b.parquet", mode="overwrite")
-
-        stream = se.stream_events(spark, landing, with_watermark=None)
-        write_stream_exactly_once(stream, path=sink, checkpoint=ckpt)
-        got = self._rows(spark, sink)
-        n_input = spark.read.parquet(landing).count()
-        assert len(got) == len(set(got)) == n_input
-
-    def test_writer_is_idempotent_per_batch(self, spark, batch_events, tmp_path_factory):
-        """The foreachBatch function itself: same (batchId, data) twice ==
-        once (the property the recovery guarantee rests on)."""
-        from skope_api_spark.streaming.sink import (
-            idempotent_batch_writer,
-            read_sink,
-        )
-
-        sink = str(tmp_path_factory.mktemp("eo_sink3") / "out")
-        write = idempotent_batch_writer(sink)
-        sample = batch_events.limit(100)
-        write(sample, 0)
-        write(sample, 0)  # replay of the same micro-batch
-        assert read_sink(spark, sink).count() == 100
-        write(sample, 1)  # a NEW batch appends
-        assert read_sink(spark, sink).count() == 200
-
-
-class TestStreamStreamLeftOuter:
-    def test_unmatched_clicks_emit_nulls_after_watermark(
-        self, spark, tmp_path
-    ):
-        """LEFT OUTER stream-stream interval join: the converted click
-        joins its purchase; the never-converted click emits a NULL-padded
-        row once the watermark passes its window. A far-future sentinel
-        event advances the watermark so the bounded test drain flushes
-        outer state; batch left-outer on the same frames is the oracle."""
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        t0 = pd.Timestamp("2024-05-01 12:00:00")
-        rows = pd.DataFrame(
-            {
-                "event_id": [1, 2, 3, 4, 5, 6, 7, 8],
-                # sentinels must survive BOTH event-type filters: Spark
-                # pushes the click/purchase filters BELOW the watermark
-                # operator, so a 'view' sentinel would never advance
-                # either side's watermark (verified against the planned
-                # query). User 99's click+purchase pairs at +2d/+3d do.
-                "ts": [
-                    t0,
-                    t0 + pd.Timedelta(minutes=10),
-                    t0,
-                    t0 + pd.Timedelta(minutes=5),
-                    t0 + pd.Timedelta(days=2),
-                    t0 + pd.Timedelta(days=2),
-                    t0 + pd.Timedelta(days=3),
-                    t0 + pd.Timedelta(days=3),
-                ],
-                "user_id": [1, 1, 2, 3, 99, 99, 99, 99],
-                "event_type": [
-                    "click", "purchase", "click", "purchase",
-                    "click", "purchase", "click", "purchase",
-                ],
-                "value": [0.0, 42.0, 0.0, 7.0, 0.0, 0.0, 0.0, 0.0],
-                "props": ["{}"] * 8,
-            }
-        )
-        land = tmp_path / "landing"
-        land.mkdir()
-        schema = pa.schema(
-            [
-                ("event_id", pa.int64()),
-                ("ts", pa.timestamp("us")),  # µs so a plain read gets timestamps
-                ("user_id", pa.int64()),
-                ("event_type", pa.string()),
-                ("value", pa.float64()),
-                ("props", pa.string()),
-            ]
-        )
-        # sentinels land as their OWN files: with maxFilesPerTrigger=1
-        # each forms a micro-batch. The watermark a batch COMPUTES only
-        # gates the NEXT batch, so flushing outer state needs two trailing
-        # batches — sentinel 1 raises the watermark, sentinel 2's batch
-        # runs with it and emits the NULL-padded rows before termination.
-        for i, part in enumerate(
-            (rows.iloc[:4], rows.iloc[4:6], rows.iloc[6:])
-        ):
-            pq.write_table(
-                pa.Table.from_pandas(
-                    part, schema=schema, preserve_index=False
-                ),
-                str(land / f"events_{i}.parquet"),
-            )
-        batch = spark.read.parquet(str(land))
-        key = lambda t: tuple((x is None, x if x is not None else 0) for x in t)  # noqa: E731
-        # user 99 exists only to advance the watermark; its final click's
-        # window never closes before the drain ends, so compare without it
-        expected = sorted(
-            (
-                (r.user_id, r.click_id, r.purchase_id, r.purchase_value)
-                for r in se.click_purchase_stream_join(
-                    batch, batch, within="30 minutes", how="left_outer"
-                ).collect()
-                if r.user_id != 99
-            ),
-            key=key,
-        )
-        # sanity on the fixture itself: one match + one NULL-padded click
-        assert (1, 1, 2, 42.0) in expected
-        assert (2, 3, None, None) in expected
-
-        s1 = se.stream_events(
-            spark, str(land), with_watermark="2 hours",
-            max_files_per_trigger=1,
-        )
-        s2 = se.stream_events(
-            spark, str(land), with_watermark="2 hours",
-            max_files_per_trigger=1,
-        )
-        joined = se.click_purchase_stream_join(
-            s1, s2, within="30 minutes", how="left_outer"
-        )
-        with tempfile.TemporaryDirectory() as ckpt:
-            se.run_available_now(
-                joined, query_name="ss_left_outer_test", checkpoint=ckpt
-            )
-            got = sorted(
-                (
-                    (r.user_id, r.click_id, r.purchase_id, r.purchase_value)
-                    for r in spark.sql(
-                        "SELECT * FROM ss_left_outer_test"
-                    ).collect()
-                    if r.user_id != 99
-                ),
-                key=key,
-            )
-        assert got == expected

@@ -402,28 +402,6 @@ class TestKeynessLLR:
         assert "rare" not in toks and "common" in toks
 
 
-class TestCompressionRatio:
-    def test_redundant_text_compresses_harder(self, spark):
-        from skope_api_spark.operators.text import compression_ratio
-
-        rows = [
-            (1, "spam " * 200),  # highly redundant
-            (2, " ".join(f"w{i}x{i * 7 % 13}" for i in range(200))),
-            (3, None),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = {r["doc_id"]: r for r in compression_ratio(df).collect()}
-        assert out[1]["compression_ratio"] < 0.05  # boilerplate signal
-        assert out[2]["compression_ratio"] > out[1]["compression_ratio"]
-        assert out[3]["n_bytes"] == 0 and out[3]["compression_ratio"] is None
-        # deterministic across runs
-        again = {
-            r["doc_id"]: r["compression_ratio"]
-            for r in compression_ratio(df).collect()
-        }
-        assert again[1] == out[1]["compression_ratio"]
-
-
 class TestPiiAdjacency:
     def test_adjacent_emails_match_re2_boundary_semantics(self, spark):
         """r14 ADVICE: the lookbehind form silently skipped an email
